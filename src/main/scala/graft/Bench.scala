@@ -40,9 +40,36 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** The reference ETL's name in the headline set. */
+  val EtlWorkload = "etl_reference_workload"
+
+  /** The headline workload names, in run order: the bench-flagged queries,
+    * then the reference ETL; `only` narrows them.
+    */
+  def headline(only: Option[Set[String]] = None): Seq[String] =
+    (GraftQuery.all.filter(_.bench).map(_.name) :+ EtlWorkload)
+      .filter(n => only.forall(_.contains(n)))
+
+  private lazy val programs = GraftQuery.all.map(q => q.name -> q).toMap
+
+  /** Runs one workload by name: a query fully materialized through the
+    * `noop` sink, or the reference ETL end to end into a fresh temp dir.
+    */
+  def run(spark: SparkSession, sfDir: String, name: String): Unit =
+    if (name == EtlWorkload) {
+      val out = Files.createTempDirectory("graft_bench_etl").toString
+      val cfg = etl.ConfigLoader.load("config",
+        env = Some("nonexistent"), overrides = Seq(s"paths.output_base=$out"))
+      new etl.EntregasEtl(cfg, spark).run()
+    } else {
+      val q = programs.getOrElse(name, sys.error(s"no such query: $name"))
+      q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache() // queries may cache internally; no leakage
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = obs.BenchSession.cpus("32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "2.0").toDouble
     def loadAvg: Double = java.lang.management.ManagementFactory
@@ -66,15 +93,7 @@ object Bench {
       System.err.println(f"NOISY-HOST: 1-min load $loadStart%.2f > $maxLoad%.2f " +
         f"after a ${waitedSec}%.0f s idle-wait cap — wall-clock in this " +
         "artifact is not comparison-grade")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft_bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = obs.BenchSession("graft_bench", cpus)
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -101,55 +120,24 @@ object Bench {
     // (e.g. SPARK_GRAFT_BENCH_ONLY=dd_jaccard_ppjoin); unset = all
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val headline = GraftQuery.all.filter(_.bench)
-      .filter(q => only.forall(_.contains(q.name)))
+    val names = headline(only)
 
     // one measured execution: wall seconds + summed executor task time +
     // shuffle bytes written, all from the same run
     final case class Meas(wall: Double, taskSec: Double, shuffleMb: Double)
     def measure(body: => Unit): Meas = {
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        val bytes = new java.util.concurrent.atomic.AtomicLong
-        val taskMs = new java.util.concurrent.atomic.AtomicLong
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          taskMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val w = time(body)
-        org.apache.spark.sql.graft.GraftPlans.drainListenerBus(spark)
-        Meas(w, listener.taskMs.get() / 1e3, listener.bytes.get() / 1e6)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val r = obs.StageRecorder.record(spark)(body)
+      Meas(r.wallSec, r.taskMs / 1e3, r.shuffleBytes / 1e6)
     }
-
-    def runQuery(q: GraftQuery): Unit = {
-      q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache() // queries may cache internally; no leakage
-    }
-    def runEtl(): Unit = {
-      val out = Files.createTempDirectory("graft_bench_etl").toString
-      val cfg = etl.ConfigLoader.load("/root/repo/config",
-        env = Some("nonexistent"), overrides = Seq(s"paths.output_base=$out"))
-      new etl.EntregasEtl(cfg, spark).run()
-    }
-    val includeEtl = only.forall(_.contains("etl_reference_workload"))
-    val names: Seq[String] =
-      headline.map(_.name) ++ (if (includeEtl) Seq("etl_reference_workload") else Nil)
-    def runByName(n: String): Unit =
-      if (n == "etl_reference_workload") runEtl()
-      else runQuery(headline.find(_.name == n).get)
 
     // warmup round (pays per-plan Janino + JIT; recorded to stderr, never
     // reported), then `reps` timed rounds INTERLEAVED across queries
-    val warm = names.map(n => n -> time(runByName(n))).toMap
+    val warm = names.map(n => n -> time(run(spark, sfDir, n))).toMap
     val samples = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[Meas]](
       names.map(n => n -> scala.collection.mutable.ArrayBuffer.empty[Meas]): _*)
     (1 to reps).foreach { r =>
-      names.foreach { n => samples(n) += measure(runByName(n)) }
+      names.foreach { n => samples(n) += measure(run(spark, sfDir, n)) }
       System.err.println(s"ROUND $r/$reps done (load ${f"$loadAvg%.2f"})")
     }
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -197,7 +185,7 @@ object Bench {
   private def driftReport(results: collection.Map[String, Double],
       taskSec: collection.Map[String, Double],
       shuffleMb: collection.Map[String, Double]): Unit = try {
-    val repo = java.nio.file.Paths.get("/root/repo")
+    val repo = java.nio.file.Paths.get("").toAbsolutePath
     val prev = sys.env.get("SPARK_GRAFT_PREV_BENCH").map(java.nio.file.Paths.get(_))
       .orElse {
         val base = repo.resolve("bench/DRIFT_BASE")

@@ -93,20 +93,8 @@ object ScaleSmoke {
     // shuffle bytes written while `body` runs — the metric that scales
     // with cluster cost (local wall-clock hides network motion entirely)
     def shuffleBytes(body: => Long): (Double, Long, Long) = {
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        val bytes = new java.util.concurrent.atomic.AtomicLong
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val (t, n) = time(body)
-        // deterministic barrier: wait for every queued stage-completed
-        // event, not a fixed sleep that undercounts under load
-        org.apache.spark.sql.graft.GraftPlans.drainListenerBus(spark)
-        (t, n, listener.bytes.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val r = obs.StageRecorder.record(spark)(body)
+      (r.wallSec, r.value, r.shuffleBytes)
     }
 
     // min-of-2 at <= 2M docs for every LSH/ppjoin line, same methodology
@@ -307,7 +295,7 @@ object ScaleSmoke {
     // (first invocation — what one cold daily-crawl batch pays, including
     // the serve probe and first-touch of the band artifact) and
     // steady-state (min of the two repeat invocations — the per-batch
-    // cost once artifacts are page-cached, ServeProbe's regime)
+    // cost once artifacts are page-cached; bench/drift_probe_r11.md)
     val incRuns = (1 to 3).map(_ => time {
       operators.NearDupLsh.pairsAgainstIndexAt(spark, incBatch, lshIdxDir, 0.8d).count()
     })
@@ -470,10 +458,11 @@ object ScaleSmoke {
     // same shape anyway) so this measures exactly the shipped plan.
     //
     // Methodology (the r8 artifact showed hash 2.6x SLOWER at 1M while
-    // 3x faster at 10M — diagnosed with SpanProbe as run-order + GC
-    // noise, not an algorithmic crossover): the hashed variant runs
-    // FIRST, and at <= 2M docs each variant is min-of-2 so one noisy
-    // run inside this long-lived 8 GB JVM can't invert the comparison.
+    // 3x faster at 10M — diagnosed as run-order + GC noise, not an
+    // algorithmic crossover, in bench/span_crossover.md): the hashed
+    // variant runs FIRST, and at <= 2M docs each variant is min-of-2 so
+    // one noisy run inside this long-lived 8 GB JVM can't invert the
+    // comparison.
     // Per-stage metrics show the residual 15-24 GB memory spill lives
     // in the 32 reduce-side aggregate tasks sharing the harness's small
     // execution pool (~150 MB/task) — a harness-heap constraint, not a
@@ -531,17 +520,11 @@ object ScaleSmoke {
         size(split(col("text"), " ")).cast("int").as("n_tokens"))
       .repartitionByRange(64, col("doc_id"))
       .writeTo("smokecat.s.docs").append()
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case b: BatchScanExec => b.inputPartitions.size
-        case o => o.children.map(walk).sum
-      }
-      walk(df.queryExecution.executedPlan)
-    }
+    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
+      obs.PlanWalk.nodes(df.queryExecution.executedPlan).collect {
+        case (_, b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec) =>
+          b.inputPartitions.size
+      }.sum
     val lo = nDocs / 2
     val hi = lo + math.max(1L, nDocs / 64) - 1
     def skipQuery = spark.table("smokecat.s.docs")
@@ -553,20 +536,7 @@ object ScaleSmoke {
     // summed task time is the metric that scales with cluster cost, so
     // measure both.
     spark.table("smokecat.s.docs").count()
-    def taskMillis(body: => Unit): Long = {
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        val ms = new java.util.concurrent.atomic.AtomicLong
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          ms.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        org.apache.spark.sql.graft.GraftPlans.drainListenerBus(spark)
-        listener.ms.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def taskMillis(body: => Unit): Long = obs.StageRecorder.record(spark)(body).taskMs
     val t0Skip = System.nanoTime()
     val msSkip = taskMillis { skipQuery.head() }
     val tSkip = (System.nanoTime() - t0Skip) / 1e9
@@ -710,21 +680,7 @@ object ScaleSmoke {
     // AQE slices the hot partition against replicated matching rows —
     // same result, bounded per-task work. Max task time is the metric
     // a straggler-bound cluster job bills.
-    def maxTaskMs(body: => Unit): Long = {
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        val ms = new java.util.concurrent.atomic.AtomicLong
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            ms.getAndUpdate(m => math.max(m, te.taskMetrics.executorRunTime))
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        org.apache.spark.sql.graft.GraftPlans.drainListenerBus(spark)
-        listener.ms.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def maxTaskMs(body: => Unit): Long = obs.StageRecorder.record(spark)(body).maxTaskMs
     val skewFacts = spark.range(nDocs * 32).select(
       when(col("id") % 4 =!= 0, lit(7L)).otherwise(col("id")).as("k"),
       col("id").as("payload"))

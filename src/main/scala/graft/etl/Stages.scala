@@ -1,5 +1,10 @@
 package graft.etl
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -236,6 +241,16 @@ object Standardize {
   */
 object Load {
 
+  /** Job-group prefix of the concurrent counts job; each call appends a
+    * unique suffix, so cancelling one load never touches another.
+    */
+  val CountsGroupPrefix = "graft.etl.load.counts."
+
+  /** How long the counts job may outlast the write, or wind down after
+    * the write failed, before `Load` gives up on it.
+    */
+  val CountsTimeout: FiniteDuration = 30.minutes
+
   /** Writes and returns per-partition row counts (the reference's
     * `partitions_created` metric), computed as one aggregate.
     *
@@ -249,6 +264,14 @@ object Load {
     * depends on the other, and the counts job back-fills cores the
     * write's tail leaves idle. Values are unchanged — the aggregate
     * reads the DataFrame, not the sink.
+    *
+    * Failure paths: the counts job runs in its own job group. If the
+    * write throws, that group is cancelled (jobs already running and any
+    * it has yet to submit), the counts job is given up to
+    * `CountsTimeout` to wind down, and the write's exception is rethrown.
+    * If the counts do not finish within `CountsTimeout` after a
+    * successful write, the group is cancelled and a `TimeoutException`
+    * names the output.
     */
   def apply(df: DataFrame, outputBase: String, format: String = "csv"): Map[String, Long] = {
     val writer = df.write
@@ -260,14 +283,32 @@ object Load {
       case other => throw new IllegalArgumentException(
         s"unsupported output format: $other (csv | parquet)")
     }
-    val countsF = scala.concurrent.Future {
-      df.groupBy("fecha_proceso").agg(count(lit(1)).as("n"))
+    val sc = df.sparkSession.sparkContext
+    val group = CountsGroupPrefix + java.util.UUID.randomUUID()
+    val countsF = Future {
+      sc.setJobGroup(group, s"ETL Load: partition counts for $outputBase",
+        interruptOnCancel = true)
+      try df.groupBy("fecha_proceso").agg(count(lit(1)).as("n"))
         .collect()
         .map(r => r.getString(0) -> r.getLong(1))
         .toMap
-    }(scala.concurrent.ExecutionContext.global)
-    doWrite()
-    scala.concurrent.Await.result(countsF,
-      scala.concurrent.duration.Duration.Inf)
+      finally sc.clearJobGroup()
+    }(ExecutionContext.global)
+    def cancelCounts(reason: String): Unit =
+      sc.cancelJobGroupAndFutureJobs(group, reason)
+    try doWrite()
+    catch { case writeError: Throwable =>
+      cancelCounts(s"the write to $outputBase failed")
+      try Await.ready(countsF, CountsTimeout)
+      catch { case t: TimeoutException => writeError.addSuppressed(t) }
+      throw writeError
+    }
+    try Await.result(countsF, CountsTimeout)
+    catch { case _: TimeoutException =>
+      cancelCounts(s"counts for $outputBase exceeded $CountsTimeout")
+      throw new TimeoutException(
+        s"ETL Load: partition counts for $outputBase did not finish within " +
+          s"$CountsTimeout of a completed write")
+    }
   }
 }

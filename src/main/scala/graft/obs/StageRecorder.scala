@@ -1,0 +1,96 @@
+package graft.obs
+
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.GraftPlans
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** One completed stage attempt, from its aggregated task metrics. Times
+  * are milliseconds; `spillBytes` is the in-memory size of what spilled;
+  * `maxTaskMs` is the slowest task's run time.
+  */
+final case class StageRow(
+    stageId: Int,
+    name: String,
+    tasks: Int,
+    runMs: Long,
+    cpuMs: Long,
+    gcMs: Long,
+    fetchWaitMs: Long,
+    spillBytes: Long,
+    shuffleWriteBytes: Long,
+    maxTaskMs: Long)
+
+/** What [[StageRecorder.record]] saw while its body ran: the body's value,
+  * its wall time, every stage that completed, and every query execution
+  * that finished (each carries its planning tracker and final plan).
+  */
+final case class Recording[T](
+    value: T,
+    wallSec: Double,
+    stages: Seq[StageRow],
+    executions: Seq[QueryExecution]) {
+  def taskMs: Long = stages.map(_.runMs).sum
+  def shuffleBytes: Long = stages.map(_.shuffleWriteBytes).sum
+  def maxTaskMs: Long = stages.map(_.maxTaskMs).foldLeft(0L)(math.max)
+}
+
+/** The one listener behind every stage-level number the measurement mains
+  * report. It is registered only while the body runs, and the listener bus
+  * is drained before reading, so late stage-completed events are counted
+  * instead of lost.
+  */
+object StageRecorder {
+
+  def record[T](spark: SparkSession)(body: => T): Recording[T] = {
+    val completed = new ConcurrentLinkedQueue[StageRow]
+    val maxTask = new ConcurrentHashMap[Int, java.lang.Long]
+    val executions = new ConcurrentLinkedQueue[QueryExecution]
+    val stageListener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          maxTask.merge(te.stageId, te.taskMetrics.executorRunTime,
+            (a, b) => math.max(a.longValue, b.longValue))
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        val tm = si.taskMetrics
+        completed.add(StageRow(
+          stageId = si.stageId,
+          name = si.name.takeWhile(_ != '\n').take(80),
+          tasks = si.numTasks,
+          runMs = tm.executorRunTime,
+          cpuMs = tm.executorCpuTime / 1000000L,
+          gcMs = tm.jvmGCTime,
+          fetchWaitMs = tm.shuffleReadMetrics.fetchWaitTime,
+          spillBytes = tm.memoryBytesSpilled,
+          shuffleWriteBytes = tm.shuffleWriteMetrics.bytesWritten,
+          maxTaskMs = 0L))
+      }
+    }
+    val queryListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(stageListener)
+    spark.listenerManager.register(queryListener)
+    try {
+      val t0 = System.nanoTime()
+      val value = body
+      val wall = (System.nanoTime() - t0) / 1e9
+      GraftPlans.drainListenerBus(spark)
+      val stages = completed.asScala.toSeq.sortBy(_.stageId).map { s =>
+        s.copy(maxTaskMs = Option(maxTask.get(s.stageId)).fold(0L)(_.longValue))
+      }
+      Recording(value, wall, stages, executions.asScala.toSeq)
+    } finally {
+      spark.listenerManager.unregister(queryListener)
+      spark.sparkContext.removeSparkListener(stageListener)
+    }
+  }
+}

@@ -81,8 +81,9 @@ object PqEncoder {
   // ~6100-node expression tree. Eager analysis (every select/withColumn
   // re-analyzes the full tree), each optimizer batch, and every AQE
   // re-plan walk all of it — for sim_pq_adc the driver measured ~1.0 s
-  // of wall on 0.3 s of task time, and a phase probe (PqAdcProbe)
-  // attributed it to build/analysis + planning, not execution.
+  // of wall on 0.3 s of task time, and a phase breakdown
+  // (OPTIMIZATION_r18.md §3) attributed it to build/analysis + planning,
+  // not execution.
   //
   // These builders land the shared subexpressions as NAMED COLUMNS in
   // staged projections instead: slices once, their self-dots once, each
@@ -128,21 +129,6 @@ object PqEncoder {
       array((0 until sub).map { sp =>
         array_position(col(ds(sp)), array_min(col(ds(sp)))).cast("int")
       }: _*).as(out): _*)
-  }
-
-  /** Appends `out` = the flattened sub×|codebook| ADC lookup table
-    * (exactly [[adcLut]]'s values) via staged projections.
-    */
-  def withAdcLut(df: DataFrame, q: Column, codebook: IndexedSeq[Seq[Double]],
-      sub: Int, dim: Int, out: String): DataFrame = {
-    val keep = df.columns.toSeq
-    val qs = (0 until sub).map(tempName("qs", _))
-    val s1 = df.select(keep.map(col) ++
-      (0 until sub).map(sp => slice(q, sp * dim + 1, dim).as(qs(sp))): _*)
-    s1.select(keep.map(col) :+
-      array((for (sp <- 0 until sub; c <- codebook.indices) yield
-        dot(col(qs(sp)),
-          typedlit(codebook(c).slice(sp * dim, (sp + 1) * dim)))): _*).as(out): _*)
   }
 
   /** Codebook lookup + concat: the reconstruction. ADC serve paths

@@ -366,7 +366,8 @@ object PrefixFilterJoin {
 
   /** Runs `body` under a Spark job description — phase attribution for
     * the index lifecycle's multi-job cascades (visible in the UI and to
-    * stage-level probes like PpBuildProbe; zero effect on the plans).
+    * stage tables like bench/ppjoin_build_probe_r14.md's; zero effect on
+    * the plans).
     */
   private def withPhase[T](s: SparkSession, name: String)(body: => T): T = {
     val sc = s.sparkContext

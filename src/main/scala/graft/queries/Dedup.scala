@@ -900,7 +900,7 @@ object Dedup {
         // distributions (HashPartitioning(span_b) clusters (span_b,
         // doc_id) too), so the (span, doc) occ-count layer and the
         // per-span doc layer run back-to-back in the post-shuffle stage
-        // with no second exchange. Measured at sf0.1 (ExchangeProbe):
+        // with no second exchange. Measured at sf0.1 (OPTIMIZATION_r18.md §4):
         // the old exchanges shipped 5.6 MB + 5.9 MB with near-zero
         // partial-agg compression between them (235,704 window rows →
         // 233,351 (span, doc) groups — within-doc repeat spans are

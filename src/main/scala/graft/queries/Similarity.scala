@@ -466,8 +466,9 @@ object Similarity {
     // vec_id-chosen basis dim, comparable to the fixture's ~1.2 vector
     // norms so the regions OVERLAP the original cloud and the frozen
     // quantizer SCATTERS their members across cells (larger offsets
-    // crowd one cell instead and cost serve time, never recall —
-    // IvfDriftProbe's grid) — then checks the whole response loop:
+    // crowd one cell instead and cost serve time, never recall — the
+    // offset grid in SURVEY.md's IVF drift note) — then checks the whole
+    // response loop:
     //   1. driftReport FIRES on the append (distortion_ratio 2.50–2.57
     //      vs the 2.0 default; the sim_ivf_stream-style representative
     //      split posts 1.03–1.07 — the negative control, spec'd in
@@ -785,8 +786,8 @@ object Similarity {
         // staged builder (withCodes): bit-identical values to the Column
         // builder, ~1/4 the expression nodes — this query is rebuilt per
         // run and its wall was dominated by analysis/planning of the
-        // inlined tree (PqAdcProbe: ~1.0 s driver-side on 0.3 s of task
-        // time), not by execution
+        // inlined tree (~1.0 s of wall on 0.3 s of task time,
+        // OPTIMIZATION_r18.md §3), not by execution
         val coded = pq.withCodes(
             e.select(col("vec_id").as("neighbor_id"), col("v")),
             col("v"), cb, sub, dim, out = "codes")

@@ -103,7 +103,7 @@ object GraftFormat {
   /** One parsed Hadoop configuration per JVM: `new Configuration()`
     * re-parses the default XML resources PER INSTANCE (~tens of ms), and
     * a per-data-file scan paid that per file — at 64 files it dwarfed
-    * the page decode itself (CatalogScanProbe attributed ~39 ms/file of
+    * the page decode itself (bench/catalog_scan_probe_r13.md: ~39 ms/file of
     * setup on a one-column scan whose decode is sub-millisecond). Reads
     * of a loaded Configuration are thread-safe; writers that need
     * scan-specific keys take a cheap property-map copy via [[confCopy]].
@@ -273,7 +273,7 @@ case object ParquetFormat extends GraftFormat {
 
   /** Writes [[InternalRow]]s through Spark's own parquet WriteSupport —
     * no intermediate Group objects (the example API allocates an
-    * ArrayList per FIELD per row; CatalogScanProbe measured the Group
+    * ArrayList per FIELD per row; bench/catalog_scan_probe_r13.md has the Group
     * path at 1.5× the JSON renderer's ingest task time at 1M rows).
     * `messageType` still runs first as the 5-type contract check, and
     * Spark's converter emits the identical physical schema for these

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ConfigLoaderSpec extends AnyFunSuite {
 
-  private val dir = "/root/repo/config"
+  private val dir = "config"
 
   test("base config binds the full tree") {
     val cfg = ConfigLoader.load(dir, env = Some("nonexistent"))

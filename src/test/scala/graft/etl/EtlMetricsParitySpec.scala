@@ -20,7 +20,7 @@ class EtlMetricsParitySpec extends AnyFunSuite {
 
   test("execution_metrics.json matches the reference dict field for field") {
     val out = Files.createTempDirectory("graft_etl_par").toString
-    val cfg = ConfigLoader.load("/root/repo/config", env = Some("nonexistent"),
+    val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out"))
     val json = EntregasEtl(cfg, Some(spark)).run().toJson
     val root = new ObjectMapper().readTree(json)

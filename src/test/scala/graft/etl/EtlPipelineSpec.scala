@@ -15,7 +15,7 @@ class EtlPipelineSpec extends AnyFunSuite {
 
   private def config = {
     val out = Files.createTempDirectory("graft_etl_e2e").toString
-    ConfigLoader.load("/root/repo/config", env = Some("nonexistent"),
+    ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out"))
   }
 
@@ -50,7 +50,7 @@ class EtlPipelineSpec extends AnyFunSuite {
 
   test("parquet sink: same layout and rows, columnar files") {
     val out = Files.createTempDirectory("graft_etl_parquet").toString
-    val cfg = ConfigLoader.load("/root/repo/config", env = Some("nonexistent"),
+    val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out", "paths.output_format=parquet"))
     val metrics = EntregasEtl(cfg, Some(spark)).run()
     assert(metrics.finalRows == 123)
@@ -63,7 +63,7 @@ class EtlPipelineSpec extends AnyFunSuite {
 
   test("country override narrows the run (CLI dotlist path)") {
     val out = Files.createTempDirectory("graft_etl_gt").toString
-    val cfg = ConfigLoader.load("/root/repo/config", env = Some("nonexistent"),
+    val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out", "filters.country=GT"))
     val metrics = EntregasEtl(cfg, Some(spark)).run()
     // GT pairs 1:1 with fecha 20250513 (SURVEY.md §5 pairing)

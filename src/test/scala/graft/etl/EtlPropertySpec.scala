@@ -13,7 +13,7 @@ import graft.SparkTestSession
 class EtlPropertySpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
-  private lazy val config = ConfigLoader.load("/root/repo/config", env = Some("nonexistent"))
+  private lazy val config = ConfigLoader.load("config", env = Some("nonexistent"))
 
   private val rowGen: Gen[Row] = for {
     pais <- Gen.oneOf("GT", "SV", "HN", "EC", "PE", "JM", "xx", "GT ")

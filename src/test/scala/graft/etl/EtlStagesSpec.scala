@@ -13,7 +13,7 @@ import graft.SparkTestSession
 class EtlStagesSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
-  private lazy val config = ConfigLoader.load("/root/repo/config", env = Some("nonexistent"))
+  private lazy val config = ConfigLoader.load("config", env = Some("nonexistent"))
 
   // The reference test fixture builds precio/cantidad as doubles (the
   // transform casts are no-ops there); we mirror with an all-string schema
