@@ -19,7 +19,9 @@ import graft.obs.{BenchSession, PlanWalk, Recording, StageRecorder}
   * `sfDir` defaults to `$SPARK_GRAFT_SF_DIR`. `all` is Bench's headline set. Each workload runs once untimed (codegen
   * and JIT), then `reps` times (default 3) through the same runner Bench
   * times. For each workload it prints one JSON line: the wall time, task
-  * time and shuffle bytes of every rep, and for the last rep the planning
+  * time and shuffle bytes of every rep, the host's forks over the reps
+  * (`spawned_processes`: processes and threads, omitted off Linux; a
+  * process per written file shows here), and for the last rep the planning
   * phase times, the stage table and the per-operator SQL metrics of the
   * final plan. With `planOutDir`, the final plan's `explain("formatted")`
   * text goes to `<planOutDir>/<name>.txt`.
@@ -87,7 +89,7 @@ object Profile {
     val operators = last.executions.flatMap(qe => PlanWalk.operators(qe.executedPlan))
       .map(o => obj("depth" -> o.depth, "node" -> o.node,
         "metrics" -> obj(o.metrics: _*)))
-    new ObjectMapper().writeValueAsString(obj(
+    val json = obj(
       "query" -> name,
       "sf" -> sfDir,
       "wall_s" -> recs.map(_.wallSec).asJava,
@@ -95,6 +97,9 @@ object Profile {
       "shuffle_bytes" -> recs.map(_.shuffleBytes).asJava,
       "phases_ms" -> obj(phasesMs(last): _*),
       "stages" -> stages.asJava,
-      "operators" -> operators.asJava))
+      "operators" -> operators.asJava)
+    val spawned = recs.map(_.spawnedProcesses)
+    if (spawned.forall(_.isDefined)) json.put("spawned_processes", spawned.flatten.sum)
+    new ObjectMapper().writeValueAsString(json)
   }
 }

@@ -67,7 +67,7 @@ final case class RunMetrics(
   *
   * Unlike the reference — which re-reads the CSV ~15 times because every
   * metric is an eager `count()` — the run caches the parsed input once,
-  * computes all quality counters in two jobs, and writes with the native
+  * computes all quality counters in one job, and writes with the native
   * partitioned sink: same numbers, O(1) scans.
   */
 final class EntregasEtl(val config: EtlConfig, val spark: SparkSession) {

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
 /** Quality-stage counters, defined exactly as the reference's sequential
   * count deltas (`/root/reference/src/etl_entregas.py:127-170`): each
   * counter is "rows removed by this filter given everything before it ran".
-  * The engine computes them in a single aggregate pass over the input plus
-  * one distinct-count — two jobs total instead of the reference's ~10
-  * full rescans — but the values are identical by construction.
+  * The engine computes them in one job (`DataQuality.metrics`) instead of
+  * the reference's ~10 full rescans, but the values are identical by
+  * construction.
   */
 final case class QualityMetrics(
     inputRows: Long,
@@ -61,61 +61,48 @@ object DataQuality {
     out
   }
 
-  /** Sequential-delta counters in ONE aggregate job (r18; previously one
-    * aggregate pass + a separate dedup-count job). Order matters: the
+  /** Sequential-delta counters in ONE job. Order matters: the
     * null-material filter runs before the type whitelist, so a row
     * failing both counts against null-material only (same double-count
     * semantics as the reference's eager counts).
     *
-    * The dedup layers ride the same aggregate as exact
-    * `count(DISTINCT when(pred, struct(*)))` cells: the struct is null
-    * unless the row survives the preceding filters, so the distinct
-    * count equals `filter(pred).dropDuplicates().count()` exactly
-    * (distinct-then-filter ≡ filter-then-distinct for a row-local
-    * predicate, and both group null fields null-safely). Every
-    * `sum(...)` is coalesced to 0 — over an empty relation sum() is
-    * NULL and getLong would NPE (the r17 empty-input edge). Trade-off,
-    * noted for scale: the two distinct cells plan through one Expand
-    * (×3 row multiplier before the exchange), which is the standard
-    * Spark shape for mixed distinct aggregates — the same full-row
-    * shuffle the dropDuplicates variant paid, one job instead of two.
+    * With dedup on, the input is first grouped by all its columns with a
+    * multiplicity `n` — a map-side partial aggregate and one hash exchange,
+    * and grouping is null-safe exactly like `dropDuplicates`. Every
+    * predicate is row-local, so one global aggregate then gets the row
+    * counters as `sum(n)` over the groups that pass, and each distinct
+    * counter (`filter(pred).dropDuplicates().count()`) as the number of
+    * groups that pass. Every `sum(...)` is coalesced to 0 — over an empty
+    * relation sum() is NULL and getLong would NPE (the r17 empty-input
+    * edge).
     */
   def metrics(df: DataFrame, cfg: EtlConfig): QualityMetrics = {
     val dq = cfg.dataQuality
     val f1 = if (dq.removeNullMaterial) materialOk else lit(true)
     val f2 = typeOk(cfg.businessRules.validTypes)
     val f4 = if (dq.validateCountryCodes) countryOk(dq.validCountries) else lit(true)
-    def cnt(pred: Column): Column = coalesce(
-      sum(when(pred, 1L).otherwise(0L)), lit(0L))
-    val allCols = struct(df.columns.map(col): _*)
+    val (rows, n) =
+      if (dq.removeDuplicates)
+        (df.groupBy(df.columns.toSeq.map(col): _*).agg(count(lit(1)).as("__dq_n")), col("__dq_n"))
+      else (df, lit(1L))
+    def cnt(pred: Column, weight: Column = n): Column = coalesce(
+      sum(when(pred, weight).otherwise(0L)), lit(0L))
 
-    val aggs = Seq(
-      count(lit(1)).as("n_input"),
+    val row = rows.agg(
+      cnt(lit(true)).as("n_input"),
       cnt(!f1).as("n_f1_removed"),
       cnt(f1 && !f2).as("n_f2_removed"),
-      cnt(f1 && f2).as("n_after_f2")) ++
-      (if (dq.removeDuplicates)
-        Seq(countDistinct(when(f1 && f2, allCols)).as("n_distinct"),
-          countDistinct(when(f1 && f2 && f4, allCols)).as("n_distinct_country"))
-      else
-        Seq(cnt(f1 && f2 && f4).as("n_after_country")))
-    val row = df.agg(aggs.head, aggs.tail: _*)
+      cnt(f1 && f2).as("n_after_f2"),
+      // distinct rows when grouped, else the same row count as n_after_f2
+      cnt(f1 && f2, lit(1L)).as("n_distinct"),
+      cnt(f1 && f2 && f4, lit(1L)).as("n_after_country"))
       .head()
-
-    val (nDistinct, nAfterCountry) =
-      if (dq.removeDuplicates)
-        (row.getLong(4),
-          if (dq.validateCountryCodes) row.getLong(5) else row.getLong(4))
-      else
-        (row.getLong(3),
-          if (dq.validateCountryCodes) row.getLong(4) else row.getLong(3))
-
     QualityMetrics(
       inputRows = row.getLong(0),
       removedNullMaterial = row.getLong(1),
       removedInvalidType = row.getLong(2),
-      removedDuplicates = row.getLong(3) - nDistinct,
-      removedInvalidCountry = nDistinct - nAfterCountry)
+      removedDuplicates = row.getLong(3) - row.getLong(4),
+      removedInvalidCountry = row.getLong(4) - row.getLong(5))
   }
 }
 
@@ -260,10 +247,16 @@ object Load {
     *
     * The counts aggregate is submitted CONCURRENTLY with the write
     * (guide §2.6 — actions are only sequential because the driver calls
-    * them sequentially): both read the same cached upstream, neither
-    * depends on the other, and the counts job back-fills cores the
-    * write's tail leaves idle. Values are unchanged — the aggregate
-    * reads the DataFrame, not the sink.
+    * them sequentially): neither depends on the other, and the counts job
+    * back-fills cores the write's tail leaves idle. Each job runs the
+    * upstream plan itself, dedup exchange included; persisting it to
+    * share that work was measured slower (the cache kept too few
+    * partitions and the write's file count quadrupled). Values are
+    * unchanged — the aggregate reads the DataFrame, not the sink.
+    *
+    * The write goes through [[NioLocalFileSystem]], selected by writer
+    * options for this write only, so a host without native Hadoop does
+    * not fork a `chmod` per created file and directory.
     *
     * Failure paths: the counts job runs in its own job group. If the
     * write throws, that group is cancelled (jobs already running and any
@@ -275,6 +268,7 @@ object Load {
     */
   def apply(df: DataFrame, outputBase: String, format: String = "csv"): Map[String, Long] = {
     val writer = df.write
+      .options(NioLocalFileSystem.WriterOptions)
       .partitionBy("fecha_proceso")
       .mode("overwrite")
     val doWrite: () => Unit = format match {

@@ -1,8 +1,10 @@
 package graft.obs
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -27,14 +29,17 @@ final case class StageRow(
     maxTaskMs: Long)
 
 /** What [[StageRecorder.record]] saw while its body ran: the body's value,
-  * its wall time, every stage that completed, and every query execution
-  * that finished (each carries its planning tracker and final plan).
+  * its wall time, every stage that completed, every query execution
+  * that finished (each carries its planning tracker and final plan), and
+  * the host's forks meanwhile (`processes` in `/proc/stat`, which counts
+  * new threads as well as new processes; None off Linux).
   */
 final case class Recording[T](
     value: T,
     wallSec: Double,
     stages: Seq[StageRow],
-    executions: Seq[QueryExecution]) {
+    executions: Seq[QueryExecution],
+    spawnedProcesses: Option[Long]) {
   def taskMs: Long = stages.map(_.runMs).sum
   def shuffleBytes: Long = stages.map(_.shuffleWriteBytes).sum
   def maxTaskMs: Long = stages.map(_.maxTaskMs).foldLeft(0L)(math.max)
@@ -80,17 +85,25 @@ object StageRecorder {
     spark.sparkContext.addSparkListener(stageListener)
     spark.listenerManager.register(queryListener)
     try {
+      val forks0 = forkCount()
       val t0 = System.nanoTime()
       val value = body
       val wall = (System.nanoTime() - t0) / 1e9
+      val spawned = for (a <- forks0; b <- forkCount()) yield b - a
       GraftPlans.drainListenerBus(spark)
       val stages = completed.asScala.toSeq.sortBy(_.stageId).map { s =>
         s.copy(maxTaskMs = Option(maxTask.get(s.stageId)).fold(0L)(_.longValue))
       }
-      Recording(value, wall, stages, executions.asScala.toSeq)
+      Recording(value, wall, stages, executions.asScala.toSeq, spawned)
     } finally {
       spark.listenerManager.unregister(queryListener)
       spark.sparkContext.removeSparkListener(stageListener)
     }
   }
+
+  /** The host's forks since boot, or None where there is no `/proc/stat`. */
+  private def forkCount(): Option[Long] =
+    Try(Files.readAllLines(Paths.get("/proc/stat")).asScala
+      .collectFirst { case l if l.startsWith("processes ") => l.drop(10).trim.toLong })
+      .toOption.flatten
 }

@@ -65,6 +65,19 @@ class ProfileSpec extends AnyFunSuite {
     assert(ops(bx).get("metrics").get("numOutputRows").asLong() > 0)
   }
 
+  test("spawned_processes sums the processes forked over the reps") {
+    val rec = StageRecorder.record(spark) {
+      (1 to 3).foreach(_ => assert(new ProcessBuilder("true").start().waitFor() == 0))
+    }
+    assert(rec.spawnedProcesses.exists(_ >= 3L), rec.spawnedProcesses)
+    val json = new ObjectMapper().readTree(Profile.toJson("forks", dir, Seq(rec, rec)))
+    assert(json.get("spawned_processes").asLong() == 2 * rec.spawnedProcesses.get)
+    // a rep without the host counter (off Linux) drops the field
+    val partial = Seq(rec, rec.copy(spawnedProcesses = None))
+    assert(!new ObjectMapper().readTree(Profile.toJson("forks", dir, partial))
+      .has("spawned_processes"))
+  }
+
   test("all four planning phases are reported") {
     val phases = profiled("q1_pricing_summary").get("phases_ms")
     assert(phases.fieldNames.asScala.toSeq ==
