@@ -5,13 +5,13 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** The `file:` filesystem `Load` writes through. Without native
   * `libhadoop`, Hadoop's `RawLocalFileSystem.setPermission` forks a
   * `chmod` for every file, `.crc` file and directory a write creates; this
-  * one sets the same POSIX mode in-process. Native hosts, sticky-bit modes
-  * and file stores without a POSIX view keep Hadoop's own path.
+  * one sets the same POSIX mode in-process. Sticky-bit modes, which
+  * `java.nio` cannot set, and file stores without a POSIX view keep
+  * Hadoop's own path.
   */
 final class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
@@ -27,7 +27,7 @@ object NioLocalFileSystem {
 
   final class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
-      if (NativeIO.isAvailable || permission.getStickyBit) super.setPermission(p, permission)
+      if (permission.getStickyBit) super.setPermission(p, permission)
       else {
         val mode = permission.getUserAction.SYMBOL + permission.getGroupAction.SYMBOL +
           permission.getOtherAction.SYMBOL
