@@ -361,20 +361,20 @@ object ScaleSmoke {
       .select((col("doc_id") + nDocs * 20).as("doc_id"), col("text"))
       .write.mode("overwrite").parquet(bigBatchDir)
     val bigBatch = spark.read.parquet(bigBatchDir)
-    spark.conf.set("spark.graft.lsh.serveBroadcastMaxRows", "100000")
+    spark.conf.set("spark.graft.index.serveBroadcastMaxRows", "100000")
     System.err.println("[smoke] start lsh_inc_big")
     val (tIncBig, nIncBig) = time {
       operators.NearDupLsh.pairsAgainstIndexAt(
         spark, bigBatch, lshIdxDir, 0.8d, Some(hotKeys)).count()
     }
-    spark.conf.unset("spark.graft.lsh.serveBroadcastMaxRows")
+    spark.conf.unset("spark.graft.index.serveBroadcastMaxRows")
     require(nIncBig >= nDocs / 10,
       s"oversized-batch serve lost standing twins: $nIncBig")
     reclaim(lshIdxDir, operators.NearDupLsh.statsPath(lshIdxDir),
       operators.NearDupLsh.hotStatsPath(lshIdxDir),
       operators.NearDupLsh.bandsPath(lshIdxDir), incBatchDir, bigBatchDir)
     // streaming near-dup ingest: the corpus arrives as k micro-batches
-    // through NearDupIndexStream.applyBatch against a growing index —
+    // through NearDupIngest.applyBatch against a growing index —
     // per-batch wall clock exposes how serve cost grows with standing
     // history (the flat band artifact keeps the constant small; the
     // scan itself is O(index) by the pruning math documented in
@@ -382,6 +382,8 @@ object ScaleSmoke {
     val streamRoot = java.nio.file.Files
       .createTempDirectory("graft_stream_smoke").toString
     val kBatches = 5
+    val streamIngest = streaming.NearDupIngest(s"$streamRoot/log",
+      threshold = 0.8, maxBucket = 4096)
     System.err.println("[smoke] start stream_lsh")
     // per-batch seconds AND the standing-index doc count after each
     // append (VERDICT r10 #3): the pair exposes the measured ingest
@@ -394,9 +396,8 @@ object ScaleSmoke {
         .write.mode("overwrite").parquet(s"$streamRoot/feed")
       val b = spark.read.parquet(s"$streamRoot/feed")
       val (t, _) = time {
-        streaming.NearDupIndexStream.applyBatch(
-          spark, s"$streamRoot/idx", s"$streamRoot/log",
-          threshold = 0.8, maxBucket = 4096, batchId = i.toLong, batch = b)
+        streamIngest.applyBatch(
+          spark, s"$streamRoot/idx", batchId = i.toLong, batch = b)
         0L
       }
       // footer-only count of the appended index — off-clock, metadata read
@@ -406,8 +407,7 @@ object ScaleSmoke {
     }
     val streamSecs = streamBatches.map(_._1)
     val streamIdxDocs = streamBatches.map(_._2)
-    val streamAccepted = streaming.NearDupIndexStream
-      .acceptedLog(spark, s"$streamRoot/log").count()
+    val streamAccepted = streamIngest.acceptedLog(spark).count()
     require(streamAccepted <= nDocs && streamAccepted >= nDocs / 2,
       s"stream accepted count implausible: $streamAccepted of $nDocs")
     val (tStreamCompact, _) = time {

@@ -48,14 +48,6 @@ object Bm25Index {
 
   private val dec6 = DecimalType(38, 6)
 
-  /** Serve-side cap on the pushed term-In-list; query batches beyond it
-    * (bulk re-scoring jobs, not interactive retrieval) join the term
-    * dimension as a broadcast semi-join instead — no correctness change,
-    * the prune just moves from the scan to the first join. Tunable via
-    * `spark.graft.bm25.serveTermPruneLimit`.
-    */
-  val DefaultServeTermPruneLimit: Int = 10000
-
   /** Full postings for a (doc_id, text) frame: one row per (doc, term)
     * with the doc length and term frequency. Whitespace tokenization,
     * exactly the inline query's `split(text, ' ')` — a doc with empty
@@ -168,7 +160,7 @@ object Bm25Index {
     * batch partitions — the filter a serve running WHILE a stream
     * ingests uses to keep a half-landed (index written, checkpoint
     * commit missed) micro-batch invisible: pass the last
-    * checkpoint-COMMITTED batch id + 1 (see Bm25IndexStream). The cut
+    * checkpoint-COMMITTED batch id + 1 (see IndexStream). The cut
     * applies to all three artifacts, so (tf, df, N, Σdl) stay mutually
     * consistent — scores equal a fresh index built on exactly the
     * earlier batches. None serves everything.
@@ -180,13 +172,13 @@ object Bm25Index {
     import spark.implicits._
     val qdf = queries.toDF("query_id", "term")
     val terms = queries.map(_._2).distinct
-    val pruneLimit = spark.conf
-      .getOption("spark.graft.bm25.serveTermPruneLimit")
-      .map(_.toInt).getOrElse(DefaultServeTermPruneLimit)
+    val pruneLimit = IndexLifecycle.serveKeyPruneLimit(spark)
     def cut(df: DataFrame): DataFrame =
       IndexLifecycle.cutBatches(df, maxBatchExclusive)
     // scan-pushed In prune for human-scale query batches; bulk batches
-    // prune via a broadcast semi-join on the same sorted scan
+    // (re-scoring jobs beyond the shared In-list cap) prune via a
+    // broadcast semi-join on the same sorted scan — no correctness
+    // change, the prune just moves from the scan to the first join
     def pruned(df: DataFrame): DataFrame =
       if (terms.size <= pruneLimit) df.filter(col("term").isInCollection(terms))
       else df.join(broadcast(qdf.select(col("term")).distinct()),

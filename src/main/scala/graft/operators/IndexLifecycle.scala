@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** The shared mechanics of the four persisted-index lifecycles
   * (PrefixFilterJoin, NearDupLsh, Bm25Index, IvfIndex). All four use the
@@ -28,6 +28,9 @@ import org.apache.spark.sql.functions.col
   *  - [[cutBatches]]: the strictly-earlier serve cut that keeps a
   *    half-landed (artifacts written, checkpoint commit missed)
   *    micro-batch invisible to serves running during ingest.
+  *  - [[serveGuard]] / [[serveKeyPruneLimit]]: the batch-size guards of
+  *    the LSH, ppjoin and BM25 serves, under one knob family
+  *    (`spark.graft.index.*`).
   */
 object IndexLifecycle {
 
@@ -151,4 +154,61 @@ object IndexLifecycle {
       case Some(b) if df.columns.contains("batch") => df.filter(col("batch") < b)
       case _ => df
     }
+
+  /** Row budget for the serve paths' forced broadcasts (LSH and ppjoin):
+    * when the BATCH exceeds this many documents, the serve joins fall
+    * back to `shuffle_hash` hints on the same keys instead of
+    * broadcasting — the plan degrades to a (pruned-column) corpus
+    * shuffle rather than dying at Spark's 8 GB broadcast ceiling when a
+    * crawl batch arrives oversized. Measured with a limit-bounded count
+    * (one O(min(batch, budget)) probe job per serve call) because
+    * plan-stat estimates don't discount filters with CBO off: a batch
+    * carved from a large relation by a filter LOOKS relation-sized and
+    * would misroute the common small-batch case onto the corpus-shuffle
+    * path (observed: a 1% batch of a 10M corpus shuffling 5.4 GB of
+    * corpus sh for nothing). 2M docs ⇒ ~16M band rows (or ~16 prefix
+    * rows per doc at t = 0.8), comfortably inside the ceiling. Tunable
+    * via `spark.graft.index.serveBroadcastMaxRows`.
+    */
+  val DefaultServeBroadcastMaxRows: Long = 2000000L
+
+  /** Largest key In-list a serve pushes into an index scan: the LSH band
+    * keys, the ppjoin prefix shingles and the BM25 query terms of a
+    * batch are collected (bounded) and pushed into the sorted artifact
+    * scans as an `isInCollection` filter only while they number at most
+    * this many; bigger batches skip the prune (or, in BM25, move it to a
+    * broadcast semi-join). Tunable via
+    * `spark.graft.index.serveKeyPruneLimit`.
+    */
+  val DefaultServeKeyPruneLimit: Int = 10000
+
+  def serveKeyPruneLimit(spark: SparkSession): Int =
+    spark.conf.getOption("spark.graft.index.serveKeyPruneLimit")
+      .map(_.toInt).getOrElse(DefaultServeKeyPruneLimit)
+
+  /** A serve's broadcast decision: `probedRows` (the batch row count,
+    * capped at `maxRows` + 1) against the row budget `maxRows`. Under
+    * budget, [[side]] broadcasts a serve-side relation; over it, the
+    * same join takes `shuffle_hash`, which trades a pruned-column corpus
+    * shuffle for completing at all.
+    */
+  final case class ServeGuard(maxRows: Long, probedRows: Long) {
+    def oversized: Boolean = probedRows > maxRows
+    def side(df: DataFrame): DataFrame =
+      if (!oversized) broadcast(df) else df.hint("shuffle_hash")
+  }
+
+  /** The guard for serving `batch`: a limit-bounded row probe against
+    * [[DefaultServeBroadcastMaxRows]] (conf'd), skipped when the caller
+    * already knows the batch size (`batchRows`, e.g. a stream that
+    * materialized and counted the batch).
+    */
+  def serveGuard(spark: SparkSession, batch: DataFrame,
+      batchRows: Option[Long]): ServeGuard = {
+    val maxRows = spark.conf
+      .getOption("spark.graft.index.serveBroadcastMaxRows")
+      .map(_.toLong).getOrElse(DefaultServeBroadcastMaxRows)
+    val probeCap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
+    ServeGuard(maxRows, batchRows.getOrElse(batch.limit(probeCap).count()))
+  }
 }

@@ -95,32 +95,6 @@ object NearDupLsh {
     */
   val DefaultSampledTierMinBytes: Long = 256L << 20
 
-  /** Row budget for the serve path's forced broadcasts: when the BATCH
-    * exceeds this many documents, the serve joins fall back to
-    * `shuffle_hash` hints on the same keys instead of broadcasting —
-    * the plan degrades to a (pruned-column) corpus shuffle rather than
-    * dying at Spark's 8 GB broadcast ceiling when a crawl batch
-    * arrives oversized. Measured with a limit-bounded count (one
-    * O(min(batch, budget)) probe job per serve call) because plan-stat
-    * estimates don't discount filters with CBO off: a batch carved
-    * from a large relation by a filter LOOKS relation-sized and would
-    * misroute the common small-batch case onto the corpus-shuffle path
-    * (observed: a 1% batch of a 10M corpus shuffling 5.4 GB of corpus
-    * sh for nothing). 2M docs ⇒ ~16M band rows, comfortably inside the
-    * ceiling. Tunable via `spark.graft.lsh.serveBroadcastMaxRows`.
-    */
-  val DefaultServeBroadcastMaxRows: Long = 2000000L
-
-  /** Serve-time key-prune cap: when the batch lands at most this many
-    * distinct band keys, the key list is collected (bounded: 8 bytes
-    * per key) and pushed into the band-artifact scan as an InSet
-    * filter — candidate rows die at the scan instead of riding to the
-    * join, and for trickle-sized lookups (keys fewer than row groups)
-    * parquet min/max stats on the sorted `bk` column skip whole row
-    * groups. Tunable via `spark.graft.lsh.serveKeyPruneLimit`.
-    */
-  val DefaultServeKeyPruneLimit: Int = 10000
-
   /** Word-3-gram shingle array of a text column. */
   def shingles(text: Column): Column = {
     val toks = split(text, " ")
@@ -569,10 +543,10 @@ object NearDupLsh {
     * production entry point: the candidate stage scans the flat sorted
     * band artifact (`bandsPath`) instead of re-exploding the signature
     * relation's arrays, and trickle-sized batches push their collected
-    * key set into that scan (see DefaultServeKeyPruneLimit). Falls
-    * back to the array-explode path for indexes written before the
-    * artifact existed. `maxBatchExclusive` restricts the served corpus
-    * to strictly-earlier batch partitions (the stream's replay filter);
+    * key set into that scan (see IndexLifecycle.serveKeyPruneLimit).
+    * Falls back to the array-explode path for indexes written before
+    * the artifact existed. `maxBatchExclusive` restricts the served
+    * corpus to strictly-earlier batch partitions (the stream's replay filter);
     * None serves the whole index. Construction is EAGER unless
     * `batchRows` is supplied — see [[pairsAgainstIndex]]'s probe note.
     */
@@ -628,19 +602,13 @@ object NearDupLsh {
     // overrides autoBroadcastJoinThreshold unconditionally, so one
     // oversized crawl batch would die at Spark's 8 GB broadcast ceiling
     // instead of degrading. Decide with a limit-bounded ROW COUNT of
-    // the batch (see DefaultServeBroadcastMaxRows for why plan stats
-    // can't be trusted here; the candidate relation scales with the
-    // batch in every non-degenerate corpus, and the degenerate ones are
-    // exactly what `skipBuckets` bounds): under the budget → broadcast,
-    // over it → shuffle_hash on the same keys, which trades a
-    // pruned-column corpus shuffle for completing at all.
-    val maxRows = spark.conf.getOption("spark.graft.lsh.serveBroadcastMaxRows")
-      .map(_.toLong).getOrElse(DefaultServeBroadcastMaxRows)
-    val probeCap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    val probedRows = batchRows.getOrElse(newDocs.limit(probeCap).count())
-    val oversized = probedRows > maxRows
-    def serveSide(df: DataFrame): DataFrame =
-      if (!oversized) broadcast(df) else df.hint("shuffle_hash")
+    // the batch (see IndexLifecycle.DefaultServeBroadcastMaxRows for
+    // why plan stats can't be trusted here; the candidate relation
+    // scales with the batch in every non-degenerate corpus, and the
+    // degenerate ones are exactly what `skipBuckets` bounds): under the
+    // budget → broadcast, over it → shuffle_hash on the same keys,
+    // which trades a pruned-column corpus shuffle for completing at all.
+    val guard = IndexLifecycle.serveGuard(spark, newDocs, batchRows)
     // the batch side recomputes from scan per consumer (bands + rescore)
     // — O(batch) compute twice beats materializing on the serve path
     val allNewBands = bandRows(newDocs)
@@ -657,10 +625,9 @@ object NearDupLsh {
     // beyond pruneLimit/8 docs cannot fit under the limit, and the
     // distinct() behind the collect is a FULL batch-bands aggregation
     // (limit doesn't short-circuit it) that a big batch shouldn't pay.
-    val pruneLimit = spark.conf.getOption("spark.graft.lsh.serveKeyPruneLimit")
-      .map(_.toInt).getOrElse(DefaultServeKeyPruneLimit)
+    val pruneLimit = IndexLifecycle.serveKeyPruneLimit(spark)
     val prunedCorpusBands =
-      if (oversized || probedRows * Bands > pruneLimit) corpusBands
+      if (guard.oversized || guard.probedRows * Bands > pruneLimit) corpusBands
       else {
         val keys = newBands.select(col("bk")).distinct()
           .limit(pruneLimit + 1).collect().map(_.getLong(0))
@@ -669,11 +636,11 @@ object NearDupLsh {
         else corpusBands
       }
     val candidates = prunedCorpusBands
-      .join(serveSide(newBands), Seq("bk"))
+      .join(guard.side(newBands), Seq("bk"))
       .select(col("new_id"), col("old_id"))
       .dropDuplicates("new_id", "old_id")
     val withOld = corpusSets
-      .join(serveSide(candidates), Seq("old_id"))
+      .join(guard.side(candidates), Seq("old_id"))
     withOld
       .join(sigRelation(newDocs).select(col("doc_id").as("new_id"), col("sh").as("sh_a")),
         Seq("new_id"))

@@ -256,15 +256,6 @@ object PrefixFilterJoin {
   // fat, exactly like recompacting the LSH index.
   // ------------------------------------------------------------------
 
-  /** Serve-side broadcast budget (docs) and trickle key-prune cap
-    * (distinct prefix shingles), mirroring the LSH serve guards — see
-    * docs/TUNABLES.md. Tunable via
-    * `spark.graft.ppjoin.serveBroadcastMaxRows` /
-    * `spark.graft.ppjoin.serveKeyPruneLimit`.
-    */
-  val DefaultServeBroadcastMaxRows: Long = 2000000L
-  val DefaultServeKeyPruneLimit: Int = 10000
-
   /** Broadcast budget for the serve path's CANDIDATE relation. Candidate
     * cardinality is batch-size × prefix-collision fanout — unbounded by
     * batch size (a boilerplate-heavy corpus can fan a tiny batch into
@@ -337,8 +328,9 @@ object PrefixFilterJoin {
 
   /** One isolated split-pinned session per PARENT SparkSession, cached:
     * the pstats derivation runs per micro-batch on a streaming ingest
-    * (PpJoinIndexStream), and a fresh `newSession()` per call accrues
-    * session state and listener-bus registrations reclaimed only on GC.
+    * (IndexStream over PpJoinIngest), and a fresh `newSession()` per
+    * call accrues session state and listener-bus registrations
+    * reclaimed only on GC.
     * Weak keys release the child when a parent (tests spin up many) is
     * discarded; the child holds the shared SparkContext, not the parent
     * session, so no value→key cycle pins the entry. The 1 PiB split
@@ -724,15 +716,8 @@ object PrefixFilterJoin {
         col("sz").as("sz_o"), col("p").as("p_o"))
     val freq = spark.read.parquet(s"$path/freq")
     def batchSets = setsOf(newDocs) // recompute per consumer — zero caches
-    val maxRows = spark.conf.getOption("spark.graft.ppjoin.serveBroadcastMaxRows")
-      .map(_.toLong).getOrElse(DefaultServeBroadcastMaxRows)
-    val probeCap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    val probedRows = batchRows.getOrElse(newDocs.limit(probeCap).count())
-    val oversized = probedRows > maxRows
-    def serveSide(df: DataFrame): DataFrame =
-      if (!oversized) broadcast(df) else df.hint("shuffle_hash")
-    val pruneLimit = spark.conf.getOption("spark.graft.ppjoin.serveKeyPruneLimit")
-      .map(_.toInt).getOrElse(DefaultServeKeyPruneLimit)
+    val guard = IndexLifecycle.serveGuard(spark, newDocs, batchRows)
+    val pruneLimit = IndexLifecycle.serveKeyPruneLimit(spark)
     // Ranking the batch needs corpus frequencies, but joining the batch
     // against the FULL freq relation shuffles O(corpus vocabulary) rows
     // per serve (measured: the 1M-corpus serve spent ~5 of its 7 s
@@ -746,9 +731,10 @@ object PrefixFilterJoin {
     //    join, and the batch-sized survivor set broadcasts back into the
     //    rank join — freq is scanned once, never shuffled;
     //  - OVERSIZED: plain shuffle join (completing beats the ceiling).
-    val freqBroadcastable = !oversized && probedRows <= math.max(1L, maxRows / 8)
+    val freqBroadcastable =
+      !guard.oversized && guard.probedRows <= math.max(1L, guard.maxRows / 8)
     val batchShingleKeys: Option[Array[Long]] =
-      if (oversized || probedRows * 64 > pruneLimit) None
+      if (guard.oversized || guard.probedRows * 64 > pruneLimit) None
       else {
         val ks = batchSets.select(explode(col("sh")).as("h")).distinct()
           .limit(pruneLimit + 1).collect().map(_.getLong(0))
@@ -769,7 +755,7 @@ object PrefixFilterJoin {
     // under pruneLimit keys is a few hundred docs — collect the keys and
     // let the sorted postings (and pstats, below) scans skip row groups
     val batchPrefixKeys: Option[Array[Long]] =
-      if (oversized || probedRows * 16 > pruneLimit) None
+      if (guard.oversized || guard.probedRows * 16 > pruneLimit) None
       else {
         val keys = batchPrefix.select(col("h")).distinct()
           .limit(pruneLimit + 1).collect().map(_.getLong(0))
@@ -823,7 +809,7 @@ object PrefixFilterJoin {
     def batchDirIds(sub: String): Option[Set[Long]] =
       IndexLifecycle.batchDirIds(spark, s"$path/$sub", maxBatchExclusive)
     val candBound: Long =
-      if (oversized || !freqBroadcastable) Long.MaxValue
+      if (guard.oversized || !freqBroadcastable) Long.MaxValue
       else if (!hasPstats) 0L
       else {
         (batchDirIds("prefix"), batchDirIds("pstats")) match {
@@ -834,8 +820,9 @@ object PrefixFilterJoin {
         val hot = batchShingleKeys.fold(hot0)(ks =>
           hot0.filter(col("h").isInCollection(ks)))
         val hotProbe = hot.select(col("h"))
-          .limit(math.min(maxRows + 1, Int.MaxValue.toLong).toInt).count()
-        if (hotProbe > maxRows) Long.MaxValue
+          .limit(math.min(guard.maxRows + 1, Int.MaxValue.toLong).toInt)
+          .count()
+        if (hotProbe > guard.maxRows) Long.MaxValue
         else {
           // Per-shingle partition-aware bound in ONE job. pstats holds
           // one row per (batch partition, h), so the hot aggregate's
@@ -872,7 +859,7 @@ object PrefixFilterJoin {
     spark.conf.set("spark.graft.ppjoin.debug.lastServeCandidateBound",
       if (candBound == Long.MaxValue) "inf" else candBound.toString)
     def candSide(df: DataFrame): DataFrame =
-      if (!oversized && candBound <= candCap) broadcast(df)
+      if (!guard.oversized && candBound <= candCap) broadcast(df)
       else df.hint("shuffle_hash")
     // length-ratio + PPJoin positional filter, exactly as in `pairs`
     val oReq = expr(
@@ -880,7 +867,7 @@ object PrefixFilterJoin {
     val uBound =
       least(col("sz_n") - (col("p_n") + 1), col("sz_o") - (col("p_o") + 1)) + 1
     val candidates = prunedCorpusPrefix
-      .join(serveSide(batchPrefix), Seq("h"))
+      .join(guard.side(batchPrefix), Seq("h"))
       .filter(col("sz_o") * den >= col("sz_n") * num &&
         col("sz_n") * den >= col("sz_o") * num &&
         uBound >= oReq)

@@ -785,9 +785,9 @@ object Dedup {
         "(SELECT doc_id, md5(text) AS h FROM documents) GROUP BY h)")),
 
     // Streaming NEAR-dup dedup against the persisted LSH signature
-    // index (NearDupIndexStream) — the cross-batch greedy-accept
-    // pipeline: 4 deterministic micro-batches (doc_id % 4, in order),
-    // each batch exact-deduped within itself, near-dup-rejected
+    // index (IndexStream over NearDupIngest) — the cross-batch
+    // greedy-accept pipeline: 4 deterministic micro-batches (doc_id % 4,
+    // in order), each batch exact-deduped within itself, near-dup-rejected
     // (jaccard >= 0.8) against every EARLIER batch's accepted docs via
     // the index, survivors' signatures appended idempotently. The
     // oracle replays the same greedy sequence as chained CTEs over
@@ -809,13 +809,13 @@ object Dedup {
       (s, dir) => {
         val root = java.nio.file.Files
           .createTempDirectory("graft_ndis_gate").toString
-        graft.streaming.NearDupIndexStream.runToCompletion(
-            s, Tables.table(s, dir, "documents")
-              .select(col("doc_id"), col("text")),
-            k = 4, indexPath = s"$root/idx", logPath = s"$root/log",
-            threshold = 0.8,
-            maxBucket = graft.operators.NearDupLsh.DefaultMaxBucket,
-            checkpoint = s"$root/ckpt")
+        val ingest = graft.streaming.NearDupIngest(s"$root/log",
+          threshold = 0.8,
+          maxBucket = graft.operators.NearDupLsh.DefaultMaxBucket)
+        graft.streaming.IndexStream.runToCompletion(
+          s, Tables.table(s, dir, "documents"), k = 4, ingest,
+          indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
+        ingest.acceptedLog(s)
           .groupBy(col("batch").cast("long").as("batch"))
           .agg(count(lit(1)).as("n_accepted"),
             sum(col("doc_id")).as("id_sum"))
@@ -836,15 +836,15 @@ object Dedup {
         val docs = Tables.table(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         def part(i: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === i)
-        val mb = graft.operators.NearDupLsh.DefaultMaxBucket
-        val st = graft.streaming.NearDupIndexStream
-        st.applyBatch(s, s"$root/idx", s"$root/log", 0.8, mb, 0L, part(0))
-        st.applyBatch(s, s"$root/idx", s"$root/log", 0.8, mb, 1L, part(1))
+        val st = graft.streaming.NearDupIngest(s"$root/log", 0.8,
+          graft.operators.NearDupLsh.DefaultMaxBucket)
+        st.applyBatch(s, s"$root/idx", 0L, part(0))
+        st.applyBatch(s, s"$root/idx", 1L, part(1))
         graft.operators.NearDupLsh.compactIndex(
           s, s"$root/idx", s"$root/idx2", width = 4, throughBatch = 1L)
-        st.applyBatch(s, s"$root/idx2", s"$root/log", 0.8, mb, 2L, part(2))
-        st.applyBatch(s, s"$root/idx2", s"$root/log", 0.8, mb, 3L, part(3))
-        st.acceptedLog(s, s"$root/log")
+        st.applyBatch(s, s"$root/idx2", 2L, part(2))
+        st.applyBatch(s, s"$root/idx2", 3L, part(3))
+        st.acceptedLog(s)
           .groupBy(col("batch").cast("long").as("batch"))
           .agg(count(lit(1)).as("n_accepted"),
             sum(col("doc_id")).as("id_sum"))
@@ -853,9 +853,9 @@ object Dedup {
 
     // The EXACT-index flavor of the streaming ingest: the same greedy
     // cross-batch accept lifecycle driven through the persisted PPJoin
-    // index (PpJoinIndexStream: serve strictly-earlier partitions →
-    // accept → appendIndex OVERWRITE into batch=<id>). The oracle is
-    // dd_stream_lsh_index's greedy replay over exact shingle sets — and
+    // index (IndexStream over PpJoinIngest: serve strictly-earlier
+    // partitions → accept → appendIndex OVERWRITE into batch=<id>). The
+    // oracle is dd_stream_lsh_index's greedy replay over exact shingle sets — and
     // unlike the LSH row there is NO hot-bucket divergence caveat: the
     // exact serve is zero-false-negative AND zero-false-positive by the
     // prefix-filter theorem, so the gate must hash-match on ANY corpus.
@@ -864,12 +864,11 @@ object Dedup {
       (s, dir) => {
         val root = java.nio.file.Files
           .createTempDirectory("graft_ppis_gate").toString
-        graft.streaming.PpJoinIndexStream.runToCompletion(
-            s, Tables.table(s, dir, "documents")
-              .select(col("doc_id"), col("text")),
-            k = 4, indexPath = s"$root/idx", logPath = s"$root/log",
-            num = 4, den = 5,
-            checkpoint = s"$root/ckpt")
+        val ingest = graft.streaming.PpJoinIngest(s"$root/log", num = 4, den = 5)
+        graft.streaming.IndexStream.runToCompletion(
+          s, Tables.table(s, dir, "documents"), k = 4, ingest,
+          indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
+        ingest.acceptedLog(s)
           .groupBy(col("batch").cast("long").as("batch"))
           .agg(count(lit(1)).as("n_accepted"),
             sum(col("doc_id")).as("id_sum"))

@@ -108,8 +108,8 @@ object Retrieval {
       Some(bm25Oracle)),
 
     // The full MAINTENANCE lifecycle: build on half the corpus, stream
-    // the other half in as 3 micro-batches (Bm25IndexStream: foreachBatch
-    // → appendIndex OVERWRITE into batch=<id>), compact the committed
+    // the other half in as 3 micro-batches (IndexStream over Bm25Ingest:
+    // foreachBatch → appendIndex OVERWRITE into batch=<id>), compact the committed
     // history into batch=-1 at a fresh path (watermark = last committed
     // batch), then serve from the COMPACTED index. The oracle is the
     // INLINE full-corpus BM25, so a green row proves the whole
@@ -125,9 +125,10 @@ object Retrieval {
         val root = java.nio.file.Files
           .createTempDirectory("graft_bm25_stream_gate").toString
         Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$root/idx")
-        graft.streaming.Bm25IndexStream.runToCompletion(
+        graft.streaming.IndexStream.runToCompletion(
           s, docs.filter(col("doc_id") % 2 =!= 0), k = 3,
-          indexPath = s"$root/idx", checkpoint = s"$root/ckpt")
+          graft.streaming.Bm25Ingest,
+          indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
         Bm25Index.compactIndex(s, s"$root/idx", s"$root/idx2",
           width = 4, throughBatch = 2L)
         Bm25Index.topK(s, s"$root/idx2", queryTerms, k = 5)

@@ -420,8 +420,8 @@ object Similarity {
 
     // The IVF index's full MAINTENANCE lifecycle: train+build on the
     // standing 90% (the quantizer FREEZES here), stream today's 10% in
-    // as 3 micro-batches (IvfIndexStream: foreachBatch → appendIndex
-    // OVERWRITE into cell-partitioned batch=<id> dirs), compact the
+    // as 3 micro-batches (IndexStream over IvfIngest: foreachBatch →
+    // appendIndex OVERWRITE into cell-partitioned batch=<id> dirs), compact the
     // committed history into batch=-1 (watermark = last committed
     // batch; centroids copy verbatim — compaction never retrains), then
     // serve from the COMPACTED index. Same recall verdict as
@@ -443,9 +443,10 @@ object Similarity {
           .createTempDirectory("graft_ivf_stream_gate").toString
         graft.operators.IvfIndex.writeIndex(
           e.filter(col("vec_id") % 10 =!= 7), s"$root/idx", nlist = 16, iters = 2)
-        graft.streaming.IvfIndexStream.runToCompletion(
+        graft.streaming.IndexStream.runToCompletion(
           s, e.filter(col("vec_id") % 10 === 7), k = 3,
-          indexPath = s"$root/idx", checkpoint = s"$root/ckpt")
+          graft.streaming.IvfIngest,
+          indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
         graft.operators.IvfIndex.compactIndex(
           s, s"$root/idx", s"$root/idx2", throughBatch = 2L)
         val q = e.filter(col("vec_id") < 10)

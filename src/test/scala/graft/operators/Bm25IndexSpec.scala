@@ -140,11 +140,11 @@ class Bm25IndexSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft_bm25_semi").toString
     Bm25Index.writeIndex(docs, idx)
     val expected = served(idx, k = 5)
-    spark.conf.set("spark.graft.bm25.serveTermPruneLimit", "1")
+    spark.conf.set("spark.graft.index.serveKeyPruneLimit", "1")
     try {
       assert(served(idx, k = 5).sameElements(expected),
         "the semi-join prune path must serve the identical answer")
-    } finally spark.conf.unset("spark.graft.bm25.serveTermPruneLimit")
+    } finally spark.conf.unset("spark.graft.index.serveKeyPruneLimit")
   }
 
   test("postings carry every doc, so stats are recoverable and df is exact") {

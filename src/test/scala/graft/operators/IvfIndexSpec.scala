@@ -296,9 +296,10 @@ class IvfIndexSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_str").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$root/a", nlist = 16, iters = 2)
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$root/b", nlist = 16, iters = 2)
-    graft.streaming.IvfIndexStream.runToCompletion(
+    graft.streaming.IndexStream.runToCompletion(
       spark, e.filter(col("vec_id") % 2 =!= 0), k = 3,
-      indexPath = s"$root/a", checkpoint = s"$root/ckpt")
+      graft.streaming.IvfIngest,
+      indexRoot = s"$root/a", checkpoint = s"$root/ckpt")
     IvfIndex.appendIndex(e.filter(col("vec_id") % 2 =!= 0), s"$root/b", batchId = 9L)
     assert(rows(IvfIndex.topK(spark, s"$root/a", queries(e), 4, 5))
       == rows(IvfIndex.topK(spark, s"$root/b", queries(e), 4, 5)),

@@ -202,14 +202,14 @@ class NearDupLshSpec extends AnyFunSuite {
       .contains("BroadcastHashJoin"))
     // zero budget = every batch is "oversized": same keys, hash join —
     // completes (no 8 GB broadcast ceiling) with the identical pair set
-    spark.conf.set("spark.graft.lsh.serveBroadcastMaxRows", "0")
+    spark.conf.set("spark.graft.index.serveBroadcastMaxRows", "0")
     try {
       val plan = planOf(NearDupLsh.pairsAgainstIndex(newDocs, index, 0.5d))
       assert(plan.contains("ShuffledHashJoin"), plan.take(2000))
       val big = pairSet(NearDupLsh.pairsAgainstIndex(newDocs, index, 0.5d))
       assert(big == small,
         s"shuffle_hash fallback diverged: missing=${small -- big}, extra=${big -- small}")
-    } finally spark.conf.unset("spark.graft.lsh.serveBroadcastMaxRows")
+    } finally spark.conf.unset("spark.graft.index.serveBroadcastMaxRows")
   }
 
   test("path-based serve (flat band artifact) matches the DataFrame serve") {
@@ -228,12 +228,12 @@ class NearDupLshSpec extends AnyFunSuite {
     assert(viaPath == viaDf,
       s"artifact serve diverged: missing=${viaDf -- viaPath}, extra=${viaPath -- viaDf}")
     // and with the key prune disabled (limit 0 → no isin filter)
-    spark.conf.set("spark.graft.lsh.serveKeyPruneLimit", "0")
+    spark.conf.set("spark.graft.index.serveKeyPruneLimit", "0")
     try {
       val unpruned = pairSet(NearDupLsh.pairsAgainstIndexAt(
         spark, newDocs, idx, 0.5d))
       assert(unpruned == viaDf)
-    } finally spark.conf.unset("spark.graft.lsh.serveKeyPruneLimit")
+    } finally spark.conf.unset("spark.graft.index.serveKeyPruneLimit")
   }
 
   test("sampled catastrophe tier honors the minimum-sample floor at low caps") {

@@ -390,12 +390,12 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
     val broadcastAnswer = pairSet(
       PrefixFilterJoin.pairsAgainstIndex(spark, newDocs, idx, 4, 5))
-    spark.conf.set("spark.graft.ppjoin.serveBroadcastMaxRows", "1")
+    spark.conf.set("spark.graft.index.serveBroadcastMaxRows", "1")
     try {
       val fallback = pairSet(
         PrefixFilterJoin.pairsAgainstIndex(spark, newDocs, idx, 4, 5))
       assert(fallback == broadcastAnswer)
-    } finally spark.conf.unset("spark.graft.ppjoin.serveBroadcastMaxRows")
+    } finally spark.conf.unset("spark.graft.index.serveBroadcastMaxRows")
     // candidate-fanout guard: with the candidate broadcast budget forced
     // to 1 row, the pstats bound exceeds it and the candidates join must
     // degrade to shuffle_hash — identical answer, no broadcast

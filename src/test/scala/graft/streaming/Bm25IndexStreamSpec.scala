@@ -31,9 +31,9 @@ class Bm25IndexStreamSpec extends AnyFunSuite {
   test("streamed ingest serves identically to a one-shot build") {
     val root = java.nio.file.Files.createTempDirectory("graft_bm25s").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$root/idx")
-    Bm25IndexStream.runToCompletion(
-      spark, docs.filter(col("doc_id") % 2 =!= 0), k = 3,
-      indexPath = s"$root/idx", checkpoint = s"$root/ckpt")
+    IndexStream.runToCompletion(
+      spark, docs.filter(col("doc_id") % 2 =!= 0), k = 3, Bm25Ingest,
+      indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
     Bm25Index.writeIndex(docs, s"$root/one")
     assert(served(s"$root/idx").sameElements(served(s"$root/one")),
       "bootstrap + streamed appends must equal the one-shot index")
@@ -44,11 +44,11 @@ class Bm25IndexStreamSpec extends AnyFunSuite {
     val idx = s"$root/idx"
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), idx)
     val b0 = docs.filter(col("doc_id") % 4 === 1)
-    Bm25IndexStream.applyBatch(spark, idx, 0L, b0)
+    Bm25Ingest.applyBatch(spark, idx, 0L, b0)
     val once = served(idx)
     // crash after the index write, before the checkpoint commit: the
     // engine redelivers the SAME batch under the SAME id
-    Bm25IndexStream.applyBatch(spark, idx, 0L, b0)
+    Bm25Ingest.applyBatch(spark, idx, 0L, b0)
     assert(served(idx).sameElements(once),
       "redelivery must overwrite, not double-append")
   }
@@ -57,10 +57,10 @@ class Bm25IndexStreamSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_bm25s_cut").toString
     val idx = s"$root/idx"
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), idx)
-    Bm25IndexStream.applyBatch(spark, idx, 0L, docs.filter(col("doc_id") % 4 === 1))
+    Bm25Ingest.applyBatch(spark, idx, 0L, docs.filter(col("doc_id") % 4 === 1))
     // batch 1 has landed in the index but its checkpoint commit hasn't:
     // a concurrent serve must not see it
-    Bm25IndexStream.applyBatch(spark, idx, 1L, docs.filter(col("doc_id") % 4 === 2))
+    Bm25Ingest.applyBatch(spark, idx, 1L, docs.filter(col("doc_id") % 4 === 2))
     val committed = java.nio.file.Files.createTempDirectory("graft_bm25s_ref").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), committed)
     Bm25Index.appendIndex(docs.filter(col("doc_id") % 4 === 1), committed, 0L)

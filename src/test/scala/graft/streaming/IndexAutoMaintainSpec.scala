@@ -44,14 +44,14 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
 
   test("LSH stream: auto-maintained accepts ≡ unmaintained; generations adopted") {
     val plain = Files.createTempDirectory("graft_am_lsh_p").toString
-    NearDupIndexStream.runToCompletion(spark, docs, k = 6,
-      indexPath = s"$plain/idx", logPath = s"$plain/log",
-      threshold = 0.8, maxBucket = 4096, checkpoint = s"$plain/ckpt")
+    IndexStream.runToCompletion(spark, docs, k = 6,
+      NearDupIngest(s"$plain/log", threshold = 0.8, maxBucket = 4096),
+      indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
     val auto = Files.createTempDirectory("graft_am_lsh_a").toString
     withAutoMaintain(trigger = 2) {
-      NearDupIndexStream.runToCompletion(spark, docs, k = 6,
-        indexPath = s"$auto/idx", logPath = s"$auto/log",
-        threshold = 0.8, maxBucket = 4096, checkpoint = s"$auto/ckpt")
+      IndexStream.runToCompletion(spark, docs, k = 6,
+        NearDupIngest(s"$auto/log", threshold = 0.8, maxBucket = 4096),
+        indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
     }
     assert(acceptedSet(s"$auto/log") == acceptedSet(s"$plain/log"),
       "accept decisions must be byte-identical across adopted swaps")
@@ -75,14 +75,14 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
 
   test("ppjoin stream: auto-maintained accepts ≡ unmaintained") {
     val plain = Files.createTempDirectory("graft_am_pp_p").toString
-    PpJoinIndexStream.runToCompletion(spark, docs, k = 5,
-      indexPath = s"$plain/idx", logPath = s"$plain/log",
-      num = 4, den = 5, checkpoint = s"$plain/ckpt")
+    IndexStream.runToCompletion(spark, docs, k = 5,
+      PpJoinIngest(s"$plain/log", num = 4, den = 5),
+      indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
     val auto = Files.createTempDirectory("graft_am_pp_a").toString
     withAutoMaintain(trigger = 2) {
-      PpJoinIndexStream.runToCompletion(spark, docs, k = 5,
-        indexPath = s"$auto/idx", logPath = s"$auto/log",
-        num = 4, den = 5, checkpoint = s"$auto/ckpt")
+      IndexStream.runToCompletion(spark, docs, k = 5,
+        PpJoinIngest(s"$auto/log", num = 4, den = 5),
+        indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
     }
     assert(acceptedSet(s"$auto/log") == acceptedSet(s"$plain/log"))
     assert(IndexGenerations.generations(spark, s"$auto/idx").nonEmpty)
@@ -98,15 +98,15 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
         .sortBy(t => (t._1, t._4))
     val plain = Files.createTempDirectory("graft_am_bm_p").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$plain/idx")
-    Bm25IndexStream.runToCompletion(spark,
-      docs.filter(col("doc_id") % 2 =!= 0), k = 5,
-      indexPath = s"$plain/idx", checkpoint = s"$plain/ckpt")
+    IndexStream.runToCompletion(spark,
+      docs.filter(col("doc_id") % 2 =!= 0), k = 5, Bm25Ingest,
+      indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
     val auto = Files.createTempDirectory("graft_am_bm_a").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$auto/idx")
     withAutoMaintain(trigger = 2) {
-      Bm25IndexStream.runToCompletion(spark,
-        docs.filter(col("doc_id") % 2 =!= 0), k = 5,
-        indexPath = s"$auto/idx", checkpoint = s"$auto/ckpt")
+      IndexStream.runToCompletion(spark,
+        docs.filter(col("doc_id") % 2 =!= 0), k = 5, Bm25Ingest,
+        indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
     }
     val gens = IndexGenerations.generations(spark, s"$auto/idx")
     assert(gens.nonEmpty)
@@ -132,14 +132,14 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
     val plain = Files.createTempDirectory("graft_am_ivf_p").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$plain/idx",
       nlist = 16, iters = 2)
-    IvfIndexStream.runToCompletion(spark, e.filter(col("vec_id") % 2 =!= 0),
-      k = 5, indexPath = s"$plain/idx", checkpoint = s"$plain/ckpt")
+    IndexStream.runToCompletion(spark, e.filter(col("vec_id") % 2 =!= 0),
+      k = 5, IvfIngest, indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
     val auto = Files.createTempDirectory("graft_am_ivf_a").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$auto/idx",
       nlist = 16, iters = 2)
     withAutoMaintain(trigger = 2) {
-      IvfIndexStream.runToCompletion(spark, e.filter(col("vec_id") % 2 =!= 0),
-        k = 5, indexPath = s"$auto/idx", checkpoint = s"$auto/ckpt")
+      IndexStream.runToCompletion(spark, e.filter(col("vec_id") % 2 =!= 0),
+        k = 5, IvfIngest, indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
     }
     val gens = IndexGenerations.generations(spark, s"$auto/idx")
     assert(gens.nonEmpty)
@@ -184,8 +184,8 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
     val crashed = Files.createTempDirectory("graft_am_cr_c").toString
     def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(6)) === i)
     def tick(root: String, id: Long, b: org.apache.spark.sql.DataFrame): Unit =
-      NearDupIndexStream.applyBatchMaintained(spark, s"$root/idx",
-        s"$root/log", 0.8, 4096, id, b)
+      IndexStream.applyBatchMaintained(spark,
+        NearDupIngest(s"$root/log", 0.8, 4096), s"$root/idx", id, b)
     withAutoMaintain(trigger = 2) {
       (0 until 6).foreach(i => tick(uncrashed, i.toLong, batch(i)))
       // crashed twin: ticks 0..2, then tick 3 adopts _gen=3 (committed

@@ -13,16 +13,18 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
   private def docs = graft.Tables.table(spark, dir, "documents")
     .select(col("doc_id"), col("text"))
 
+  private def ingest(logPath: String) = NearDupIngest(logPath, 0.8, 4096)
+
   private def accepted(logPath: String): Set[(Long, Int)] =
-    NearDupIndexStream.acceptedLog(spark, logPath)
+    ingest(logPath).acceptedLog(spark)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
   test("greedy accept across batches equals the oracle replay") {
     val root = Files.createTempDirectory("graft_ndis_spec").toString
-    val log = NearDupIndexStream.runToCompletion(
-      spark, docs, k = 3, indexPath = s"$root/idx", logPath = s"$root/log",
-      threshold = 0.8, maxBucket = 4096, checkpoint = s"$root/ckpt")
-    val got = log.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    IndexStream.runToCompletion(
+      spark, docs, k = 3, ingest(s"$root/log"), indexRoot = s"$root/idx",
+      checkpoint = s"$root/ckpt")
+    val got = ingest(s"$root/log").acceptedLog(spark).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
     // reference replay with batch-at-a-time exact machinery
     graft.functions.GraftFunctions.register(spark)
@@ -58,8 +60,8 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
     val b2 = docs.filter(col("doc_id") % 3 === 2)
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 0L, b0)
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 1L, b1)
+    ingest(log).applyBatch(spark, idx, 0L, b0)
+    ingest(log).applyBatch(spark, idx, 1L, b1)
     // consolidate batches 0..1 into a fresh path, swap, continue
     val idx2 = s"$root/idx_compacted"
     NearDupLsh.compactIndex(spark, idx, idx2, width = 2)
@@ -73,8 +75,8 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
     assert(statsAfter == statsBefore)
     // batch 2 decided against the compacted path equals the uncompacted one
     val log2 = s"$root/log2"
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 2L, b2)
-    NearDupIndexStream.applyBatch(spark, idx2, log2, 0.8, 4096, 2L, b2)
+    ingest(log).applyBatch(spark, idx, 2L, b2)
+    ingest(log2).applyBatch(spark, idx2, 2L, b2)
     val viaOld = accepted(log).filter(_._2 == 2)
     val viaNew = accepted(log2)
     assert(viaNew.map(_._1) == viaOld.map(_._1),
@@ -88,8 +90,8 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
     val b2 = docs.filter(col("doc_id") % 3 === 2)
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 0L, b0)
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 1L, b1)
+    ingest(log).applyBatch(spark, idx, 0L, b0)
+    ingest(log).applyBatch(spark, idx, 1L, b1)
     // batch 1's index partition exists but its checkpoint commit was
     // "lost": compact only through batch 0. Batch 1 must survive the
     // compaction under its own id, NOT folded into batch=-1 — folded,
@@ -103,9 +105,9 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
     // redeliver batch 1 against the compacted index, then run batch 2:
     // decisions equal the uncompacted lifecycle's
     val log2 = s"$root/log_wm"
-    NearDupIndexStream.applyBatch(spark, idx2, log2, 0.8, 4096, 1L, b1)
-    NearDupIndexStream.applyBatch(spark, idx2, log2, 0.8, 4096, 2L, b2)
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 2L, b2)
+    ingest(log2).applyBatch(spark, idx2, 1L, b1)
+    ingest(log2).applyBatch(spark, idx2, 2L, b2)
+    ingest(log).applyBatch(spark, idx, 2L, b2)
     val viaOld = accepted(log).filter(_._2 >= 1).map(_._1)
     val viaNew = accepted(log2).map(_._1)
     assert(viaNew == viaOld,
@@ -117,17 +119,17 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
     val (idx, log) = (s"$root/idx", s"$root/log")
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 =!= 0)
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 0L, b0)
+    ingest(log).applyBatch(spark, idx, 0L, b0)
     val after0 = accepted(log)
     // crash-redelivery of batch 0: its own partition already exists;
     // unguarded it would self-reject everything on replay
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 0L, b0)
+    ingest(log).applyBatch(spark, idx, 0L, b0)
     assert(accepted(log) == after0, "replay of batch 0 must be a no-op")
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 1L, b1)
+    ingest(log).applyBatch(spark, idx, 1L, b1)
     val after1 = accepted(log)
     assert((after1 -- after0).forall(_._2 == 1))
     // and replaying batch 1 changes nothing either
-    NearDupIndexStream.applyBatch(spark, idx, log, 0.8, 4096, 1L, b1)
+    ingest(log).applyBatch(spark, idx, 1L, b1)
     assert(accepted(log) == after1, "replay of batch 1 must be a no-op")
   }
 }
