@@ -41,59 +41,70 @@ object Extract {
 }
 
 /** F1–F4 — data-quality filters (`/root/reference/src/etl_entregas.py:127-170`).
-  * Pure `DataFrame => DataFrame`; the metric computation is a separate
-  * method so callers that don't need counters pay zero extra jobs.
+  * Both the filtered rows and the counters derive from one relation,
+  * [[grouped]]: the input with dedup's grouping already done, so a run
+  * that caches it pays for the dedup exchange once.
   */
 object DataQuality {
+
+  /** The multiplicity column [[grouped]] adds. */
+  private val N = "__dq_n"
 
   def materialOk: Column = col("material").isNotNull && trim(col("material")) =!= ""
   def typeOk(validTypes: Seq[String]): Column = col("tipo_entrega").isin(validTypes: _*)
   def countryOk(validCountries: Seq[String]): Column =
     upper(col("pais")).isin(validCountries: _*)
 
-  def apply(df: DataFrame, cfg: EtlConfig): DataFrame = {
+  /** The enabled F1, F2 and F4 predicates, `lit(true)` where disabled. */
+  private def predicates(cfg: EtlConfig): (Column, Column, Column) = {
     val dq = cfg.dataQuality
-    var out = df
-    if (dq.removeNullMaterial) out = out.filter(materialOk)
-    out = out.filter(typeOk(cfg.businessRules.validTypes))
-    if (dq.removeDuplicates) out = out.dropDuplicates()
-    if (dq.validateCountryCodes) out = out.filter(countryOk(dq.validCountries))
-    out
+    (if (dq.removeNullMaterial) materialOk else lit(true),
+      typeOk(cfg.businessRules.validTypes),
+      if (dq.validateCountryCodes) countryOk(dq.validCountries) else lit(true))
   }
 
-  /** Sequential-delta counters in ONE job. Order matters: the
-    * null-material filter runs before the type whitelist, so a row
-    * failing both counts against null-material only (same double-count
-    * semantics as the reference's eager counts).
-    *
-    * With dedup on, the input is first grouped by all its columns with a
-    * multiplicity `n` — a map-side partial aggregate and one hash exchange,
-    * and grouping is null-safe exactly like `dropDuplicates`. Every
-    * predicate is row-local, so one global aggregate then gets the row
-    * counters as `sum(n)` over the groups that pass, and each distinct
-    * counter (`filter(pred).dropDuplicates().count()`) as the number of
-    * groups that pass. Every `sum(...)` is coalesced to 0 — over an empty
-    * relation sum() is NULL and getLong would NPE (the r17 empty-input
-    * edge).
+  /** With dedup on, the input's distinct rows with their multiplicity
+    * `__dq_n`: grouped by all columns, null-safe exactly like
+    * `dropDuplicates`, with a map-side partial aggregate and one hash
+    * exchange unless `df` is already clustered on a subset of them. With
+    * dedup off, the input with `__dq_n = 1` and no exchange.
     */
-  def metrics(df: DataFrame, cfg: EtlConfig): QualityMetrics = {
-    val dq = cfg.dataQuality
-    val f1 = if (dq.removeNullMaterial) materialOk else lit(true)
-    val f2 = typeOk(cfg.businessRules.validTypes)
-    val f4 = if (dq.validateCountryCodes) countryOk(dq.validCountries) else lit(true)
-    val (rows, n) =
-      if (dq.removeDuplicates)
-        (df.groupBy(df.columns.toSeq.map(col): _*).agg(count(lit(1)).as("__dq_n")), col("__dq_n"))
-      else (df, lit(1L))
-    def cnt(pred: Column, weight: Column = n): Column = coalesce(
+  def grouped(df: DataFrame, cfg: EtlConfig): DataFrame =
+    if (cfg.dataQuality.removeDuplicates)
+      df.groupBy(df.columns.toSeq.map(col): _*).agg(count(lit(1)).as(N))
+    else df.withColumn(N, lit(1L))
+
+  /** The rows that pass every enabled filter, one per group. Every
+    * predicate is row-local, so a group passes if and only if its rows
+    * pass: the same rows as filter → `dropDuplicates` → filter.
+    */
+  def keep(g: DataFrame, cfg: EtlConfig): DataFrame = {
+    val (f1, f2, f4) = predicates(cfg)
+    g.filter(f1 && f2 && f4).drop(N)
+  }
+
+  /** Sequential-delta counters in ONE global aggregate over [[grouped]].
+    * Order matters: the null-material filter runs before the type
+    * whitelist, so a row failing both counts against null-material only
+    * (same double-count semantics as the reference's eager counts).
+    *
+    * The row counters are `sum(__dq_n)` over the groups that pass, and
+    * each distinct counter (`filter(pred).dropDuplicates().count()`) is
+    * the number of groups that pass; without dedup every group is one
+    * row, so the two coincide and `removedDuplicates` is 0. Every
+    * `sum(...)` is coalesced to 0 — over an empty relation sum() is NULL
+    * and getLong would NPE (the r17 empty-input edge).
+    */
+  def counters(g: DataFrame, cfg: EtlConfig): QualityMetrics = {
+    val (f1, f2, f4) = predicates(cfg)
+    def cnt(pred: Column, weight: Column = col(N)): Column = coalesce(
       sum(when(pred, weight).otherwise(0L)), lit(0L))
 
-    val row = rows.agg(
+    val row = g.agg(
       cnt(lit(true)).as("n_input"),
       cnt(!f1).as("n_f1_removed"),
       cnt(f1 && !f2).as("n_f2_removed"),
       cnt(f1 && f2).as("n_after_f2"),
-      // distinct rows when grouped, else the same row count as n_after_f2
       cnt(f1 && f2, lit(1L)).as("n_distinct"),
       cnt(f1 && f2 && f4, lit(1L)).as("n_after_country"))
       .head()
@@ -104,6 +115,14 @@ object DataQuality {
       removedDuplicates = row.getLong(3) - row.getLong(4),
       removedInvalidCountry = row.getLong(4) - row.getLong(5))
   }
+
+  /** The filtered rows of `df`. Pure `DataFrame => DataFrame`; callers
+    * that don't need counters pay zero extra jobs.
+    */
+  def apply(df: DataFrame, cfg: EtlConfig): DataFrame = keep(grouped(df, cfg), cfg)
+
+  /** The quality counters of `df`, in one job. */
+  def metrics(df: DataFrame, cfg: EtlConfig): QualityMetrics = counters(grouped(df, cfg), cfg)
 }
 
 /** F5/F6 — parameterized filters (`/root/reference/src/etl_entregas.py:184-208`).
@@ -248,11 +267,18 @@ object Load {
     * The counts aggregate is submitted CONCURRENTLY with the write
     * (guide §2.6 — actions are only sequential because the driver calls
     * them sequentially): neither depends on the other, and the counts job
-    * back-fills cores the write's tail leaves idle. Each job runs the
-    * upstream plan itself, dedup exchange included; persisting it to
-    * share that work was measured slower (the cache kept too few
-    * partitions and the write's file count quadrupled). Values are
+    * back-fills cores the write's tail leaves idle. Values are
     * unchanged — the aggregate reads the DataFrame, not the sink.
+    *
+    * In `EntregasEtl.run()` both jobs read one cached upstream: the
+    * input hash-partitioned by `fecha_proceso`, then `DataQuality.grouped`.
+    * The write gets one file per date directory and the counts aggregate
+    * is already clustered on its key, so neither job shuffles. A cache
+    * hashed on all nine columns lost: Spark does not AQE-coalesce a
+    * cached plan, so it kept `spark.sql.shuffle.partitions` partitions,
+    * every task wrote every date, and the file count quadrupled. For the
+    * same reason `run()` caps the cache's width at the scan's split
+    * count. The trade-off: a hot date is one task's work.
     *
     * The write goes through [[NioLocalFileSystem]], selected by writer
     * options for this write only, so a host without native Hadoop does

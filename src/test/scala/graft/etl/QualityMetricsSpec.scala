@@ -47,26 +47,11 @@ class QualityMetricsSpec extends AnyFunSuite {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), Schemas.raw)
   }
 
-  /** The reference's definition: one eager count after each filter. */
-  private def sequential(df: DataFrame, cfg: EtlConfig): QualityMetrics = {
-    val dq = cfg.dataQuality
-    val n0 = df.count()
-    val f1 = if (dq.removeNullMaterial) df.filter(DataQuality.materialOk) else df
-    val n1 = f1.count()
-    val f2 = f1.filter(DataQuality.typeOk(cfg.businessRules.validTypes))
-    val n2 = f2.count()
-    val f3 = if (dq.removeDuplicates) f2.dropDuplicates() else f2
-    val n3 = f3.count()
-    val f4 = if (dq.validateCountryCodes) f3.filter(DataQuality.countryOk(dq.validCountries)) else f3
-    val n4 = f4.count()
-    QualityMetrics(n0, n0 - n1, n1 - n2, n2 - n3, n3 - n4)
-  }
-
   for (dedup <- Seq(true, false); country <- Seq(true, false))
     test(s"counters equal the sequential deltas (removeDuplicates=$dedup, " +
       s"validateCountryCodes=$country)") {
       val cfg = config(dedup, country)
-      val expected = sequential(input, cfg)
+      val expected = SequentialEtl.counters(input, cfg)
       assert(DataQuality.metrics(input, cfg) == expected)
       assert(expected.outputRows == DataQuality(input, cfg).count())
       // the fixture exercises every enabled counter
