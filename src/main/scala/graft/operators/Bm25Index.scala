@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * batch (`batch=<id>`, build owns -1) and written with OVERWRITE into
   * their own partitions, so a redelivered append (crash anywhere in the
   * cascade, then retry) REPLACES its partitions instead of
-  * double-appending — the same crash-idempotent layout as
-  * PrefixFilterJoin.writeIndex / NearDupLsh.writeIndexBatch:
+  * double-appending — the crash-idempotent layout of every
+  * [[PersistedIndex]]:
   *
   *   postings/batch=<id>/ (term, doc_id, dl, tf) — term-sorted (range
   *                        layout), so a query batch's term list pushes
@@ -44,7 +44,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * making the total independent of addition order (partial aggregation
   * and batch layout can never change a rank).
   */
-object Bm25Index {
+object Bm25Index extends PersistedIndex {
 
   private val dec6 = DecimalType(38, 6)
 
@@ -110,7 +110,10 @@ object Bm25Index {
     sp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(sp, true)
   }
 
-  private def writeBatch(docs: DataFrame, path: String, batchId: Long): Unit = {
+  def batchedDirs(path: String): Seq[String] =
+    Seq("postings", "df", "stats").map(a => s"$path/$a")
+
+  protected def writeBatch(docs: DataFrame, path: String, batchId: Long): Unit = {
     val s = docs.sparkSession
     // postings land first (one tokenize per ingest); df derives from the
     // postings READ-BACK — a narrow two-column on-disk scan — never from
@@ -135,15 +138,6 @@ object Bm25Index {
     */
   def writeIndex(docs: DataFrame, path: String): Unit =
     writeBatch(docs, path, batchId = -1L)
-
-  /** Append an ingest batch (doc ids disjoint from the standing corpus,
-    * batch ids >= 0 and unique per DELIVERY — a redelivered batch reuses
-    * its id and OVERWRITES its own partitions: crash-idempotent).
-    */
-  def appendIndex(docs: DataFrame, path: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"append batch ids are >= 0 (build owns -1): $batchId")
-    writeBatch(docs, path, batchId)
-  }
 
   /** Serve a query batch against the persisted index: BM25 top-k per
     * query over the WHOLE indexed corpus (all batch partitions), scores
@@ -193,36 +187,20 @@ object Bm25Index {
     scoreTopK(tf, dfreq, stats, qdf, k)
   }
 
-  /** Consolidate an append-only index into a fresh directory: batches up
-    * to `throughBatch` fold into ONE `batch=-1` partition set per
+  /** The compaction fold (see [[PersistedIndex.compactIndex]]): batches
+    * up to `throughBatch` fold into ONE `batch=-1` partition set per
     * artifact (postings re-range-sorted at `width` output files, df
-    * deltas collapsed to per-term sums, stats to one row); batches
-    * beyond the watermark are carried over unchanged, partition for
-    * partition — the same maintenance shape as NearDupLsh.compactIndex.
-    * A long-running ingest stream otherwise accumulates one
-    * postings/df/stats partition triple per micro-batch forever, and the
-    * serve's per-partition listing + df re-aggregation cost grows
-    * without bound.
-    *
-    * Crash-safe by construction: the source index is never mutated; the
-    * caller swaps the serve/stream path to `targetPath` after the write
-    * completes. `batch=-1` sorts before every real micro-batch id, so a
-    * stream resuming from its existing checkpoint keeps appending under
-    * its own ids, and a serve's `maxBatchExclusive` filter behaves
-    * identically on the compacted index.
-    *
-    * `throughBatch` MUST be the last checkpoint-COMMITTED batch when a
-    * stream feeds this index (the default folds everything — safe only
-    * after a clean stop): folding a crashed batch's partial partitions
-    * into `batch=-1` would bake a half-landed batch into the committed
-    * bootstrap, where no strictly-earlier filter can exclude it. With
-    * the watermark, uncommitted partitions carry over under their own
-    * ids — each artifact's own tail, so a crash window that landed
-    * postings but not df/stats carries exactly what exists — and the
-    * redelivered batch still OVERWRITES them at the new path.
+    * deltas collapsed to per-term sums, stats to one row); later batches
+    * carry over unchanged, partition for partition. A long-running
+    * ingest stream otherwise accumulates one postings/df/stats partition
+    * triple per micro-batch forever, and the serve's per-partition
+    * listing + df re-aggregation cost grows without bound. Each artifact
+    * carries its OWN tail, so a crash window that landed postings but
+    * not df/stats carries exactly what exists, and the redelivered batch
+    * still OVERWRITES them at the new path.
     */
-  def compactIndex(spark: SparkSession, path: String, targetPath: String,
-      width: Int = 0, throughBatch: Long = Long.MaxValue): Unit = {
+  protected def fold(spark: SparkSession, path: String, targetPath: String,
+      width: Int, throughBatch: Long, tails: Map[String, Seq[Long]]): Unit = {
     // compaction sources are already-on-disk narrow scans, so the range
     // partitioner's sampling pass re-reading them is cheap — no staging
     // (unlike writeSortedByTerm, whose input is a tokenize+aggregate)
@@ -233,16 +211,6 @@ object Bm25Index {
       ranged.sortWithinPartitions(col("term"))
         .write.mode("overwrite").parquet(targetDir)
     }
-    // per-artifact tails from an O(1) DIRECTORY LISTING (see
-    // IndexLifecycle.tailIds — shared by all four index lifecycles): a
-    // crash window can leave a batch with postings landed but df/stats
-    // missing — each artifact carries exactly its own dirs. Listed
-    // BEFORE any write so an off-contract file-bearing dir fails the
-    // whole compaction fast instead of silently dropping its rows from
-    // the folds below.
-    val tails = Seq("postings", "df", "stats")
-      .map(sub => sub -> IndexLifecycle.tailIds(spark, s"$path/$sub", throughBatch))
-      .toMap
     val postings = spark.read.parquet(s"$path/postings")
     val dfreq = spark.read.parquet(s"$path/df")
     val stats = spark.read.parquet(s"$path/stats")
@@ -256,33 +224,20 @@ object Bm25Index {
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         sum(col("dl_sum")).as("dl_sum"))
       .write.mode("overwrite").parquet(s"$targetPath/stats/batch=-1")
-    tails("postings").foreach { b =>
+    tails(s"$path/postings").foreach { b =>
       sortedWrite(postings.filter(col("batch") === b)
         .select(col("term"), col("doc_id"), col("dl"), col("tf")),
         s"$targetPath/postings/batch=$b")
     }
-    tails("df").foreach { b =>
+    tails(s"$path/df").foreach { b =>
       sortedWrite(dfreq.filter(col("batch") === b)
         .select(col("term"), col("df")),
         s"$targetPath/df/batch=$b")
     }
-    tails("stats").foreach { b =>
+    tails(s"$path/stats").foreach { b =>
       stats.filter(col("batch") === b).select(col("n"), col("dl_sum"))
         .write.mode("overwrite").parquet(s"$targetPath/stats/batch=$b")
     }
   }
 
-  /** Auto-maintenance trigger — compacts only when the committed
-    * batch-dir count under `postings/` exceeds
-    * `spark.graft.index.compactMinBatches` (not-due = one directory
-    * listing). Returns true when a compacted index was written at
-    * `targetPath` (caller swaps paths); false = not due, `targetPath`
-    * untouched.
-    */
-  def maintain(spark: SparkSession, path: String, targetPath: String,
-      width: Int = 0, throughBatch: Long = Long.MaxValue): Boolean = {
-    val due = IndexLifecycle.compactDue(spark, s"$path/postings", throughBatch)
-    if (due) compactIndex(spark, path, targetPath, width, throughBatch)
-    due
-  }
 }

@@ -143,14 +143,13 @@ object IndexGenerations {
   }
 
   /** One auto-maintenance tick, run by a stream driver AFTER appending
-    * micro-batch `batchId` to `active`. `maintainFn(active, target,
-    * throughBatch)` is the operator's `maintain` — it returns true only
-    * when it compacted into `target`. Returns the adopted generation
-    * path, or None (conf off / not due / redelivery-after-adoption).
+    * micro-batch `batchId` to `active`: `index.maintain(active, target,
+    * batchId - 1)` returns true only when it compacted into `target`.
+    * Returns the adopted generation path, or None (conf off / not due /
+    * redelivery-after-adoption).
     */
   def maintainTick(spark: SparkSession, root: String, active: String,
-      batchId: Long,
-      maintainFn: (String, String, Long) => Boolean): Option[String] = {
+      batchId: Long, index: PersistedIndex): Option[String] = {
     if (!enabled(spark)) None
     else {
       val target = genPath(root, batchId)
@@ -163,7 +162,7 @@ object IndexGenerations {
         // scratch, not patched by overwrite alignment
         if (!fs.exists(new org.apache.hadoop.fs.Path(t, Marker)))
           deleteGeneration(spark, root, batchId)
-        if (maintainFn(active, target, batchId - 1)) {
+        if (index.maintain(spark, active, target, batchId - 1)) {
           adopt(spark, root, batchId)
           Some(target)
         } else None

@@ -4,14 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{broadcast, col}
 
-/** The shared mechanics of the four persisted-index lifecycles
-  * (PrefixFilterJoin, NearDupLsh, Bm25Index, IvfIndex). All four use the
-  * same crash-idempotent layout — per-artifact `batch=<id>` partition
+/** The shared mechanics of the five persisted-index lifecycles
+  * (PrefixFilterJoin, NearDupLsh, Bm25Index, IvfIndex, LshAnnIndex —
+  * the [[PersistedIndex]] implementations). All five use the same
+  * crash-idempotent layout — per-artifact `batch=<id>` partition
   * directories written with OVERWRITE (build owns -1, appends own
-  * unique ids per delivery) — and therefore share three mechanics that
-  * were previously hand-mirrored per operator (a divergence bug waiting
-  * to happen; per-artifact column sets and derivations stay with each
-  * operator):
+  * unique ids per delivery) — and therefore share these mechanics
+  * instead of hand-mirroring them per operator (per-artifact column
+  * sets and derivations stay with each operator):
   *
   *  - [[batchDirIds]]: the serve-side O(1) directory listing used by
   *    layout-consistency checks (LSH hot-sidecar completeness, ppjoin
@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *  - [[cutBatches]]: the strictly-earlier serve cut that keeps a
   *    half-landed (artifacts written, checkpoint commit missed)
   *    micro-batch invisible to serves running during ingest.
+  *  - [[compactDue]]: the compaction trigger [[PersistedIndex.maintain]]
+  *    gates on.
   *  - [[serveGuard]] / [[serveKeyPruneLimit]]: the batch-size guards of
   *    the LSH, ppjoin and BM25 serves, under one knob family
-  *    (`spark.graft.index.*`).
+  *    (`spark.graft.index.*`, every numeric knob parsed by `knob`).
   */
 object IndexLifecycle {
 
@@ -87,59 +89,46 @@ object IndexLifecycle {
     * the target. Empty off-contract dirs are skipped (partition
     * discovery skips them too, so they cannot affect the fold).
     */
-  def tailIds(spark: SparkSession, dir: String, throughBatch: Long): Seq[Long] = {
+  def tailIds(spark: SparkSession, dir: String, throughBatch: Long): Seq[Long] =
+    checkedIds(spark, dir).filter(_ > throughBatch).toSeq.sorted
+
+  /** The batch ids under `dir`, failing fast on a file-bearing
+    * off-contract dir (see [[tailIds]]).
+    */
+  private def checkedIds(spark: SparkSession, dir: String): Set[Long] = {
     val (ids, bad) = listBatchDirs(spark, dir)
-    val fileBearing = bad.filter { p =>
-      val fs = fsOf(spark, p)
-      fs.getContentSummary(p).getFileCount > 0
-    }
+    val fileBearing = bad.filter(p =>
+      fsOf(spark, p).getContentSummary(p).getFileCount > 0)
     require(fileBearing.isEmpty,
       s"off-contract batch directories with data under $dir: " +
         s"${fileBearing.mkString(", ")} — their names don't parse as batch " +
         "ids, so a compaction fold would silently drop rows (the inferred " +
         "batch partition column becomes a string and numeric ids cast to " +
         "null); rename or remove them before compacting")
-    ids.filter(_ > throughBatch).toSeq.sorted
+    ids
   }
 
-  /** Compaction trigger for the auto-maintenance layer (each index's
-    * `maintain`): fold only when the committed batch-dir count under a
-    * long-running ingest exceeds this, so directory-listing cost per
-    * serve stays bounded without an operator remembering to compact.
-    * Tunable via `spark.graft.index.compactMinBatches`.
+  /** Compaction trigger for the auto-maintenance layer
+    * ([[PersistedIndex.maintain]]): fold only when the committed
+    * batch-dir count under a long-running ingest exceeds this, so
+    * directory-listing cost per serve stays bounded without an operator
+    * remembering to compact. Tunable via
+    * `spark.graft.index.compactMinBatches`.
     */
   val DefaultCompactMinBatches: Int = 16
 
   /** True when `dir` holds more than the conf'd number of committed
     * (id ≤ `throughBatch`, bootstrap included) batch directories — the
-    * cheap (one listing, no data read) check each index's `maintain`
-    * gates its compaction on. Off-contract file-bearing dirs fail fast
-    * exactly like [[tailIds]]: a maintenance decision must not silently
-    * miscount the layout it is about to rewrite.
+    * cheap (one listing, no data read) check `maintain` gates its
+    * compaction on. Off-contract file-bearing dirs fail fast exactly
+    * like [[tailIds]]: a maintenance decision must not silently miscount
+    * the layout it is about to rewrite.
     */
   def compactDue(spark: SparkSession, dir: String,
       throughBatch: Long): Boolean = {
-    val key = "spark.graft.index.compactMinBatches"
-    val threshold = spark.conf.getOption(key).map { raw =>
-      // fail-fast parse, same pattern as the rowGroupBytes knob: a
-      // malformed value must not surface as a bare NumberFormatException
-      // with no hint of WHICH conf broke the maintenance tick
-      val n =
-        try raw.toInt
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be a plain integer batch count, got '$raw'")
-        }
-      require(n > 0, s"$key must be positive, got $n")
-      n
-    }.getOrElse(DefaultCompactMinBatches)
-    val (ids, bad) = listBatchDirs(spark, dir)
-    val fileBearing = bad.filter(p =>
-      fsOf(spark, p).getContentSummary(p).getFileCount > 0)
-    require(fileBearing.isEmpty,
-      s"off-contract batch directories with data under $dir: " +
-        s"${fileBearing.mkString(", ")} — fix the layout before maintenance")
-    ids.count(_ <= throughBatch) > threshold
+    val threshold = knob(spark, "spark.graft.index.compactMinBatches",
+      DefaultCompactMinBatches, min = 1, max = Int.MaxValue)
+    checkedIds(spark, dir).count(_ <= throughBatch) > threshold
   }
 
   /** The strictly-earlier serve cut on the `batch` partition column —
@@ -183,8 +172,22 @@ object IndexLifecycle {
   val DefaultServeKeyPruneLimit: Int = 10000
 
   def serveKeyPruneLimit(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.index.serveKeyPruneLimit")
-      .map(_.toInt).getOrElse(DefaultServeKeyPruneLimit)
+    knob(spark, "spark.graft.index.serveKeyPruneLimit",
+      DefaultServeKeyPruneLimit, min = 0, max = Int.MaxValue).toInt
+
+  /** A numeric `spark.graft.index.*` knob: `default` when unset, else
+    * the value parsed as an integer in [`min`, `max`]. A malformed or
+    * out-of-range value fails fast with a message naming the key — not
+    * a bare NumberFormatException, nor a negative value reaching a
+    * `limit` or a count comparison.
+    */
+  private def knob(spark: SparkSession, key: String, default: Long,
+      min: Long, max: Long): Long =
+    spark.conf.getOption(key).fold(default) { raw =>
+      scala.util.Try(raw.toLong).toOption.filter(n => n >= min && n <= max)
+        .getOrElse(throw new IllegalArgumentException(
+          s"$key must be an integer in [$min, $max], got '$raw'"))
+    }
 
   /** A serve's broadcast decision: `probedRows` (the batch row count,
     * capped at `maxRows` + 1) against the row budget `maxRows`. Under
@@ -205,9 +208,9 @@ object IndexLifecycle {
     */
   def serveGuard(spark: SparkSession, batch: DataFrame,
       batchRows: Option[Long]): ServeGuard = {
-    val maxRows = spark.conf
-      .getOption("spark.graft.index.serveBroadcastMaxRows")
-      .map(_.toLong).getOrElse(DefaultServeBroadcastMaxRows)
+    // max leaves room for the probe's + 1
+    val maxRows = knob(spark, "spark.graft.index.serveBroadcastMaxRows",
+      DefaultServeBroadcastMaxRows, min = 0, max = Long.MaxValue - 1)
     val probeCap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
     ServeGuard(maxRows, batchRows.getOrElse(batch.limit(probeCap).count()))
   }

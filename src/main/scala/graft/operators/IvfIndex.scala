@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * distance ties broken by centroid id — same result on any cluster
   * layout.
   */
-object IvfIndex {
+object IvfIndex extends PersistedIndex {
 
   // native fused-loop vector ops (bit-identical fold order to the
   // aggregate(zip_with(...)) composition, minus per-row allocation)
@@ -276,13 +276,12 @@ object IvfIndex {
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(targetDir)
 
-  /** Append an ingest batch under the FROZEN quantizer (vec ids disjoint
-    * from the standing corpus, batch ids >= 0 and unique per DELIVERY —
-    * a redelivered batch reuses its id and OVERWRITES its own
-    * partitions: crash-idempotent, no transaction log).
-    */
-  def appendIndex(vectors: DataFrame, path: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"append batch ids are >= 0 (build owns -1): $batchId")
+  def batchedDirs(path: String): Seq[String] =
+    Seq(s"$path/corpus", s"$path/drift")
+
+  /** Append under the FROZEN quantizer. */
+  protected def writeBatch(vectors: DataFrame, path: String,
+      batchId: Long): Unit = {
     val centroids = readCentroids(vectors.sparkSession, path)
     writeCells(
       assign(vectors.select(col("vec_id"), col("v"), col("norm2")), "v", centroids),
@@ -441,26 +440,16 @@ object IvfIndex {
     searchAssigned(indexed, readCentroids(spark, path), queries, nprobe, k)
   }
 
-  /** Consolidate an append-only index into a fresh directory: batches up
-    * to `throughBatch` fold into ONE `batch=-1` partition set (still
-    * cell-partitioned); later batches carry over unchanged under their
-    * own ids. The centroid table copies verbatim — compaction never
-    * retrains, so every serve (whole or strictly-earlier-cut) is
-    * identical on the compacted index. Source index never mutated; the
-    * caller swaps paths after the write completes. `throughBatch` MUST
-    * be the last checkpoint-COMMITTED batch when a stream feeds this
-    * index (default folds everything — clean-stop only), for the same
-    * reason as the other three indexes: a crashed batch folded into
-    * `batch=-1` could never again be excluded by the strictly-earlier
-    * serve filter.
+  /** The compaction fold: committed batches land in ONE `batch=-1`
+    * partition set (still cell-partitioned). The centroid table copies
+    * verbatim — compaction never retrains, so every serve (whole or
+    * strictly-earlier-cut) is identical on the compacted index, and
+    * maintenance never retrains: when `driftReport` fires, the response
+    * is `rebuildIndex`, a deliberate operator act.
     */
-  def compactIndex(spark: SparkSession, path: String, targetPath: String,
-      throughBatch: Long = Long.MaxValue): Unit = {
-    // tail ids from a directory listing, not a corpus scan (the fold
-    // below is the only full read compaction should pay) — listed FIRST
-    // so an off-contract file-bearing batch dir fails fast instead of
-    // silently dropping rows from the fold (IndexLifecycle.tailIds)
-    val tail = IndexLifecycle.tailIds(spark, s"$path/corpus", throughBatch)
+  protected def fold(spark: SparkSession, path: String, targetPath: String,
+      width: Int, throughBatch: Long, tails: Map[String, Seq[Long]]): Unit = {
+    val tail = tails(s"$path/corpus")
     readCentroids(spark, path)
       .write.mode("overwrite").parquet(s"$targetPath/centroids")
     val all = spark.read.parquet(s"$path/corpus")
@@ -500,7 +489,7 @@ object IvfIndex {
         .filter(col("drifted") && col("batch") <= throughBatch)
         .select(col("batch").cast("long")).collect()
         .map(_.getLong(0)).foreach(carry)
-      IndexLifecycle.tailIds(spark, s"$path/drift", throughBatch).foreach(carry)
+      tails(s"$path/drift").foreach(carry)
     } else if (dfs.exists(driftDir)) {
       // appends-only legacy (sidecars without a reference): the original
       // build bootstrap is still intact at the SOURCE's corpus/batch=-1
@@ -554,20 +543,5 @@ object IvfIndex {
           .as("cosine"))
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= k)
-  }
-
-  /** Auto-maintenance trigger — compacts only when the committed
-    * batch-dir count under `corpus/` exceeds
-    * `spark.graft.index.compactMinBatches` (not-due = one directory
-    * listing). Returns true when a compacted index was written at
-    * `targetPath` (caller swaps paths); false = not due, `targetPath`
-    * untouched. Maintenance never retrains — when `driftReport` fires,
-    * the response is `rebuildIndex`, a deliberate operator act.
-    */
-  def maintain(spark: SparkSession, path: String, targetPath: String,
-      throughBatch: Long = Long.MaxValue): Boolean = {
-    val due = IndexLifecycle.compactDue(spark, s"$path/corpus", throughBatch)
-    if (due) compactIndex(spark, path, targetPath, throughBatch)
-    due
   }
 }

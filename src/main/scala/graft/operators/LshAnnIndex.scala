@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * lives under `corpus/`, so generation dirs never collide with a
   * flat parquet root).
   */
-object LshAnnIndex {
+object LshAnnIndex extends PersistedIndex {
 
   private def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dot_product(a, b)
@@ -129,12 +129,11 @@ object LshAnnIndex {
     (r.getInt(0), r.getInt(1))
   }
 
-  /** Append an ingest batch under the FROZEN plane table (vec ids
-    * disjoint from the standing corpus, batch ids >= 0, unique per
-    * delivery — a redelivered batch OVERWRITES its own partitions).
-    */
-  def appendIndex(vectors: DataFrame, path: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"append batch ids are >= 0 (build owns -1): $batchId")
+  def batchedDirs(path: String): Seq[String] = Seq(s"$path/corpus")
+
+  /** Append under the FROZEN plane table. */
+  protected def writeBatch(vectors: DataFrame, path: String,
+      batchId: Long): Unit = {
     val spark = vectors.sparkSession
     val (bands, _) = readMeta(spark, path)
     writeBuckets(
@@ -180,16 +179,12 @@ object LshAnnIndex {
       .filter(col("rank") <= k)
   }
 
-  /** Consolidate: batches up to `throughBatch` fold into ONE `batch=-1`
-    * partition set (still bucket-partitioned); later batches carry
-    * unchanged; planes/meta copy VERBATIM (compaction never re-hashes,
-    * so every serve is identical). `throughBatch` MUST be the last
-    * checkpoint-committed batch when a stream feeds this index — the
-    * shared lifecycle rule.
+  /** The compaction fold: committed batches land in ONE `batch=-1`
+    * partition set (still bucket-partitioned); planes/meta copy VERBATIM
+    * (compaction never re-hashes, so every serve is identical).
     */
-  def compactIndex(spark: SparkSession, path: String, targetPath: String,
-      throughBatch: Long = Long.MaxValue): Unit = {
-    val tail = IndexLifecycle.tailIds(spark, s"$path/corpus", throughBatch)
+  protected def fold(spark: SparkSession, path: String, targetPath: String,
+      width: Int, throughBatch: Long, tails: Map[String, Seq[Long]]): Unit = {
     spark.read.parquet(s"$path/planes")
       .write.mode("overwrite").parquet(s"$targetPath/planes")
     spark.read.parquet(s"$path/meta")
@@ -199,20 +194,9 @@ object LshAnnIndex {
       col("norm2"), col("band"), col("band_val"))
     writeBuckets(cols(all.filter(col("batch") <= throughBatch)),
       s"$targetPath/corpus/batch=-1")
-    tail.foreach { b =>
+    tails(s"$path/corpus").foreach { b =>
       writeBuckets(cols(all.filter(col("batch") === b)),
         s"$targetPath/corpus/batch=$b")
     }
-  }
-
-  /** Auto-maintenance trigger — the shared compactDue policy; returns
-    * true when a compacted index was written at `targetPath` (the
-    * caller — or an IndexGenerations tick — swaps paths).
-    */
-  def maintain(spark: SparkSession, path: String, targetPath: String,
-      throughBatch: Long = Long.MaxValue): Boolean = {
-    val due = IndexLifecycle.compactDue(spark, s"$path/corpus", throughBatch)
-    if (due) compactIndex(spark, path, targetPath, throughBatch)
-    due
   }
 }

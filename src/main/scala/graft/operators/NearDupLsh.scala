@@ -28,7 +28,7 @@ import graft.functions.GraftFunctions
   * new batch against it with O(batch) compute — the corpus is only ever
   * re-read as pruned columns, never re-shingled, and never reshuffled.
   */
-object NearDupLsh {
+object NearDupLsh extends PersistedIndex {
 
   val Bands = 8
   val RowsPerBand: Int = graft.functions.MinHashSig.K / Bands
@@ -210,12 +210,12 @@ object NearDupLsh {
     */
   def writeIndex(docs: DataFrame, path: String): Unit = {
     // flat appends land in the batch=-1 partition so the layout is the
-    // SAME as writeIndexBatch's: a stream pointed at a flat-bootstrapped
+    // SAME as appendIndex's: a stream pointed at a flat-bootstrapped
     // index sees a real `batch` column (-1 sorts before every micro-batch
     // id, so the strictly-earlier replay filter admits the bootstrap)
     // instead of failing at runtime on a missing column.
     //
-    // One signature compute per ingest (writeIndexBatch's contract): the
+    // One signature compute per ingest (appendIndex's contract): the
     // signatures land in a hidden staging dir (dot-prefixed — invisible
     // to partition discovery, so a concurrent reader never sees a
     // half-ingest), the sidecars derive from a READ-BACK of the staged
@@ -248,18 +248,21 @@ object NearDupLsh {
     fs.delete(src, true)
   }
 
-  /** The idempotent flavor of `writeIndex` for exactly-once streaming
-    * appends: batch `batchId`'s signatures, stats deltas, and flat band
-    * rows land in their own `batch=<id>` partition directories with
-    * OVERWRITE, so a redelivered micro-batch (crash between the index
-    * write and the checkpoint commit) replaces its own partitions
-    * instead of double-appending. `readIndex`/`readBucketStats` discover
-    * the partition layout transparently (the extra `batch` column is
-    * pruned by every consumer's column selection). The sidecars derive
-    * from a READ-BACK of the just-written partition — one signature
-    * compute per micro-batch instead of three.
+  def batchedDirs(path: String): Seq[String] =
+    Seq(path, statsPath(path), bandsPath(path), hotStatsPath(path))
+
+  /** The idempotent flavor of `writeIndex` behind `appendIndex`, for
+    * exactly-once streaming appends: batch `batchId`'s signatures, stats
+    * deltas, and flat band rows land in their own `batch=<id>` partition
+    * directories with OVERWRITE, so a redelivered micro-batch (crash
+    * between the index write and the checkpoint commit) replaces its own
+    * partitions instead of double-appending. `readIndex`/`readBucketStats`
+    * discover the partition layout transparently (the extra `batch`
+    * column is pruned by every consumer's column selection). The
+    * sidecars derive from a READ-BACK of the just-written partition —
+    * one signature compute per micro-batch instead of three.
     */
-  def writeIndexBatch(docs: DataFrame, path: String, batchId: Long): Unit = {
+  protected def writeBatch(docs: DataFrame, path: String, batchId: Long): Unit = {
     signatures(docs).write.mode("overwrite")
       .parquet(s"$path/batch=$batchId")
     val written = docs.sparkSession.read.parquet(s"$path/batch=$batchId")
@@ -334,34 +337,23 @@ object NearDupLsh {
     */
   def hotStatsPath(path: String): String = path + "_stats_hot"
 
-  /** Consolidate an append-only index into a fresh directory: batches
-    * up to `throughBatch` land in ONE `batch=-1` partition set
-    * (`width` output files) with their stats deltas collapsed to sums;
-    * batches beyond the watermark are carried over unchanged, partition
-    * for partition. A year of daily `batch=<id>` appends is thousands
-    * of partition dirs whose listing cost eventually rivals the read —
-    * compaction bounds it, exactly like GraftOptimize's small-file
-    * compaction for catalog tables.
+  /** The compaction fold: batches up to `throughBatch` land in ONE
+    * `batch=-1` partition set (`width` output files) with their stats
+    * deltas collapsed to sums; later batches carry over unchanged,
+    * partition for partition. A year of daily `batch=<id>` appends is
+    * thousands of partition dirs whose listing cost eventually rivals
+    * the read — compaction bounds it, exactly like GraftOptimize's
+    * small-file compaction for catalog tables.
     *
-    * Crash-safe by construction: the source index is never mutated.
-    * The caller swaps the serve/stream path to `targetPath` after the
-    * write completes; `batch=-1` sorts before every real micro-batch
-    * id, so a stream resuming from its existing checkpoint keeps its
-    * strictly-earlier-batch replay filter intact.
-    *
-    * `throughBatch` MUST be the last checkpoint-COMMITTED batch when a
-    * stream feeds this index (default folds everything — safe only
-    * when checkpoint and index are known in sync, e.g. after a clean
-    * stop): a crashed batch's partition (index written, checkpoint
-    * commit missed) folded into `batch=-1` would pass the redelivered
-    * batch's strictly-earlier filter, self-match at jaccard 1.0, and
-    * permanently reject every document of that batch on replay. With
-    * the watermark, the uncommitted partition is carried over under
-    * its own batch id and the replay filter excludes it, exactly as on
-    * the uncompacted index.
+    * The watermark matters most here: a crashed batch's partition
+    * (index written, checkpoint commit missed) folded into `batch=-1`
+    * would pass the redelivered batch's strictly-earlier filter,
+    * self-match at jaccard 1.0, and permanently reject every document
+    * of that batch on replay. Carried under its own id, it stays
+    * excluded, exactly as on the uncompacted index.
     */
-  def compactIndex(spark: SparkSession, path: String, targetPath: String,
-      width: Int = 0, throughBatch: Long = Long.MaxValue): Unit = {
+  protected def fold(spark: SparkSession, path: String, targetPath: String,
+      width: Int, throughBatch: Long, tails: Map[String, Seq[Long]]): Unit = {
     // Legacy-index migration (compaction is the natural migration step):
     // a pre-partition-layout index has no `batch` column — treat it all
     // as the committed bootstrap (batch=-1 semantics) — and a
@@ -372,12 +364,10 @@ object NearDupLsh {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
-    // uncommitted tail ids listed FIRST — an off-contract file-bearing
-    // batch dir fails the compaction before any target write
-    // (IndexLifecycle.tailIds, shared by all four index lifecycles); a
-    // legacy flat layout has no batch dirs and an empty tail, exactly
-    // as the old distinct over the synthesized batch=-1 column gave.
-    val tail = IndexLifecycle.tailIds(spark, path, throughBatch)
+    // the signatures' tail drives every artifact's carry; a legacy flat
+    // layout has no batch dirs and an empty tail, exactly as the old
+    // distinct over the synthesized batch=-1 column gave.
+    val tail = tails(path)
     val all0 = readIndex(spark, path)
     val all =
       if (all0.columns.contains("batch")) all0
@@ -429,19 +419,6 @@ object NearDupLsh {
       bands.filter(col("batch") === b).select(col("doc_id"), col("bk"))
         .write.mode("overwrite").parquet(s"${bandsPath(targetPath)}/batch=$b")
     }
-  }
-
-  /** Auto-maintenance trigger — compacts only when the committed
-    * batch-dir count exceeds `spark.graft.index.compactMinBatches`
-    * (not-due = one directory listing). Returns true when a compacted
-    * index was written at `targetPath` (caller swaps paths); false =
-    * not due, `targetPath` untouched.
-    */
-  def maintain(spark: SparkSession, path: String, targetPath: String,
-      width: Int = 0, throughBatch: Long = Long.MaxValue): Boolean = {
-    val due = IndexLifecycle.compactDue(spark, path, throughBatch)
-    if (due) compactIndex(spark, path, targetPath, width, throughBatch)
-    due
   }
 
   /** Summed per-bucket counts across all appended batches. */

@@ -32,7 +32,7 @@ import graft.functions.{GraftFunctions, NGramHashes}
   * and cheap. This also means repeated invocations leak nothing in the
   * block manager.
   */
-object PrefixFilterJoin {
+object PrefixFilterJoin extends PersistedIndex {
 
   /** Exact jaccard-threshold pairs (doc_a < doc_b, jaccard >= num/den)
     * over `docs` with columns (doc_id, text).
@@ -228,8 +228,8 @@ object PrefixFilterJoin {
   // partitioned by ingest batch (`batch=<id>`, build = -1) and written
   // with OVERWRITE into its own partition, so a redelivered append
   // (crash between any two writes, then retry) REPLACES its partitions
-  // instead of double-appending — the same crash-idempotent layout as
-  // NearDupLsh.writeIndexBatch, and the reason this lifecycle needs no
+  // instead of double-appending — the crash-idempotent layout of every
+  // PersistedIndex, and the reason this lifecycle needs no
   // file renames at all:
   //   sets/batch=<id>/    (doc_id, sz, sh)  — sorted hashed shingle sets
   //   prefix/batch=<id>/  (h, doc_id, sz, p) — prefix postings, range-
@@ -545,17 +545,18 @@ object PrefixFilterJoin {
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
+  def batchedDirs(path: String): Seq[String] =
+    Seq("sets", "prefix", "pstats").map(a => s"$path/$a")
+
   /** Append batch `batchId`'s accepted docs under the FROZEN build-time
-    * order (ids must be disjoint from the standing corpus, batch ids
-    * >= 0 and unique per DELIVERY — a redelivered batch reuses its id).
-    * freq/ is deliberately NOT updated — see the frozen-order note
-    * above. CRASH-IDEMPOTENT: all three artifacts land with OVERWRITE
-    * in the batch's own partitions, so a retry after a crash anywhere
-    * in the cascade replaces partial state; duplicate serve pairs from
-    * a redelivered append are impossible by layout, not by cleanup.
+    * order (behind `appendIndex`). freq/ is deliberately NOT updated —
+    * see the frozen-order note above. CRASH-IDEMPOTENT: all three
+    * artifacts land with OVERWRITE in the batch's own partitions, so a
+    * retry after a crash anywhere in the cascade replaces partial
+    * state; duplicate serve pairs from a redelivered append are
+    * impossible by layout, not by cleanup.
     */
-  def appendIndex(docs: DataFrame, path: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"append batch ids are >= 0 (build owns -1): $batchId")
+  protected def writeBatch(docs: DataFrame, path: String, batchId: Long): Unit = {
     val s = docs.sparkSession
     GraftFunctions.register(s)
     val (num, den) = readMeta(s, path)
@@ -570,12 +571,12 @@ object PrefixFilterJoin {
     (r.getAs[Int]("num"), r.getAs[Int]("den"))
   }
 
-  /** Consolidate an append-only exact-similarity index into a fresh
-    * directory: committed batches (≤ `throughBatch`) fold into ONE
-    * `batch=-1` partition set per artifact — sets re-sharded at `width`,
-    * prefix rows UNIONED and re-range-sorted on h (ranks FROZE at build
-    * time, so the unioned rows are row-for-row what a fresh derivation
-    * over the folded sets would produce — compaction never re-ranks;
+  /** The compaction fold of the exact-similarity index: committed
+    * batches (≤ `throughBatch`) fold into ONE `batch=-1` partition set
+    * per artifact — sets re-sharded at `width`, prefix rows UNIONED and
+    * re-range-sorted on h (ranks FROZE at build time, so the unioned
+    * rows are row-for-row what a fresh derivation over the folded sets
+    * would produce — compaction never re-ranks;
     * re-ranking is rebuild's job), and pstats RE-DERIVED from the
     * folded prefix artifact via the build's run-length walk (the
     * per-batch sidecars are hot-floor-TRUNCATED per partition, so their
@@ -587,18 +588,10 @@ object PrefixFilterJoin {
     * Uncommitted tails carry over per-ARTIFACT (a crash window that
     * landed sets but not prefix/pstats carries exactly what exists —
     * the serve's bound check voids on the mismatch exactly as on the
-    * uncompacted index); the source is never mutated and the caller
-    * swaps the serve path after the write. `throughBatch` MUST be the
-    * last checkpoint-COMMITTED batch when a stream feeds this index,
-    * for the same reason as the other three lifecycles.
+    * uncompacted index).
     */
-  def compactIndex(spark: SparkSession, path: String, targetPath: String,
-      width: Int = 0, throughBatch: Long = Long.MaxValue): Unit = {
-    // per-artifact tails listed FIRST: an off-contract file-bearing
-    // batch dir fails the compaction before any target write
-    val tails = Seq("sets", "prefix", "pstats")
-      .map(a => a -> IndexLifecycle.tailIds(spark, s"$path/$a", throughBatch))
-      .toMap
+  protected def fold(spark: SparkSession, path: String, targetPath: String,
+      width: Int, throughBatch: Long, tails: Map[String, Seq[Long]]): Unit = {
     def sortedByH(rows: DataFrame, w: Int): DataFrame = {
       val ranged =
         if (w > 0) rows.repartitionByRange(w, col("h"))
@@ -620,36 +613,21 @@ object PrefixFilterJoin {
       .select(col("h"), col("doc_id"), col("sz"), col("p")), width)
       .write.mode("overwrite").parquet(s"$targetPath/prefix/batch=-1")
     writePstatsFromPrefix(spark, targetPath, -1L)
-    tails("sets").foreach { b =>
+    tails(s"$path/sets").foreach { b =>
       sets.filter(col("batch") === b)
         .select(col("doc_id"), col("sh"), col("sz"))
         .write.mode("overwrite").parquet(s"$targetPath/sets/batch=$b")
     }
-    tails("prefix").foreach { b =>
+    tails(s"$path/prefix").foreach { b =>
       sortedByH(prefix.filter(col("batch") === b)
         .select(col("h"), col("doc_id"), col("sz"), col("p")), 0)
         .write.mode("overwrite").parquet(s"$targetPath/prefix/batch=$b")
     }
-    tails("pstats").foreach { b =>
+    tails(s"$path/pstats").foreach { b =>
       sortedByH(pstats.filter(col("batch") === b)
         .select(col("h"), col("n")), 0)
         .write.mode("overwrite").parquet(s"$targetPath/pstats/batch=$b")
     }
-  }
-
-  /** Auto-maintenance trigger — the call a long-running ingest makes
-    * per maintenance tick: compacts only when the committed batch-dir
-    * count exceeds `spark.graft.index.compactMinBatches` (not-due =
-    * one directory listing, no reads or writes, so calling this every
-    * micro-batch is free). Returns true when a compacted index was
-    * written at `targetPath` (the caller swaps the serve/stream path);
-    * false = not due, `targetPath` untouched.
-    */
-  def maintain(spark: SparkSession, path: String, targetPath: String,
-      width: Int = 0, throughBatch: Long = Long.MaxValue): Boolean = {
-    val due = IndexLifecycle.compactDue(spark, s"$path/sets", throughBatch)
-    if (due) compactIndex(spark, path, targetPath, width, throughBatch)
-    due
   }
 
   /** EXACT incremental pairs (new_id, old_id, jaccard >= num/den) of a

@@ -5,12 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{Bm25Index, IndexGenerations, IvfIndex, NearDupLsh,
-  PrefixFilterJoin}
+  PersistedIndex, PrefixFilterJoin}
 
 /** What the stream driver needs from one persisted index: the feed's
-  * columns, the idempotent per-batch apply, and the operator's
-  * `maintain` (compact `src` into `tgt` through the committed batch when
-  * due; true when it compacted).
+  * columns, the idempotent per-batch apply, and the index itself, whose
+  * `maintain` the auto-maintenance tick runs.
   *
   * Every index shares the crash-idempotent layout: a micro-batch lands
   * with OVERWRITE in its own `batch=<id>` partitions, so a redelivered
@@ -27,50 +26,36 @@ trait IndexIngest {
     */
   def columns: Seq[String]
 
+  def index: PersistedIndex
+
   /** Apply one micro-batch to the index at `path`. Idempotent per
     * `batchId`.
     */
   def applyBatch(spark: SparkSession, path: String, batchId: Long,
       batch: DataFrame): Unit
-
-  def maintain(spark: SparkSession, src: String, tgt: String,
-      throughBatch: Long): Boolean
 }
 
-/** BM25 ingest: append postings/df/stats. Ingest never reads the index,
-  * so the strictly-earlier discipline lives on the READ side: a serve
-  * running during ingest passes the last committed batch id + 1 as
-  * `Bm25Index.topK(maxBatchExclusive = ...)`.
+/** An ingest that appends every micro-batch to its index as is. Ingest
+  * never reads the index, so the strictly-earlier discipline lives on
+  * the READ side: a serve running during ingest passes the last
+  * committed batch id + 1 as its `maxBatchExclusive`.
   */
-object Bm25Ingest extends IndexIngest {
-  val columns: Seq[String] = Seq("doc_id", "text")
-
+class AppendIngest(val index: PersistedIndex, val columns: Seq[String])
+    extends IndexIngest {
   def applyBatch(spark: SparkSession, path: String, batchId: Long,
       batch: DataFrame): Unit =
-    Bm25Index.appendIndex(batch.select(columns.map(col): _*), path, batchId)
-
-  def maintain(spark: SparkSession, src: String, tgt: String,
-      throughBatch: Long): Boolean =
-    Bm25Index.maintain(spark, src, tgt, throughBatch = throughBatch)
+    index.appendIndex(batch.select(columns.map(col): _*), path, batchId)
 }
 
-/** IVF ingest: assign under the FROZEN build-time quantizer and append
-  * to `corpus/batch=<id>`. The maintenance tick only ever compacts; a
-  * standing drift alarm survives it by `IvfIndex.compactIndex`'s carry
-  * contract, so auto-maintenance never silently re-baselines a drifted
-  * quantizer.
+/** BM25 ingest: postings/df/stats per micro-batch. */
+object Bm25Ingest extends AppendIngest(Bm25Index, Seq("doc_id", "text"))
+
+/** IVF ingest: assign under the FROZEN build-time quantizer. The
+  * maintenance tick only ever compacts; a standing drift alarm survives
+  * it by IvfIndex's compaction carry, so auto-maintenance never silently
+  * re-baselines a drifted quantizer.
   */
-object IvfIngest extends IndexIngest {
-  val columns: Seq[String] = Seq("vec_id", "v", "norm2")
-
-  def applyBatch(spark: SparkSession, path: String, batchId: Long,
-      batch: DataFrame): Unit =
-    IvfIndex.appendIndex(batch.select(columns.map(col): _*), path, batchId)
-
-  def maintain(spark: SparkSession, src: String, tgt: String,
-      throughBatch: Long): Boolean =
-    IvfIndex.maintain(spark, src, tgt, throughBatch = throughBatch)
-}
+object IvfIngest extends AppendIngest(IvfIndex, Seq("vec_id", "v", "norm2"))
 
 /** Streaming near-duplicate dedup against a persisted index. Each batch
   * keeps only documents with no near-duplicate among the documents
@@ -87,14 +72,15 @@ object IvfIngest extends IndexIngest {
   *      partitions already written and must not near-dup against itself
   *      at jaccard 1.0; earlier partitions are immutable, so the
   *      decision replays identically;
-  *   3. survivors are appended ([[append]]) and logged.
+  *   3. survivors are appended to the index and logged.
   *
   * Documents with fewer than 3 tokens carry no shingles, can never clear
   * a Jaccard threshold, and are accepted without entering the index
   * (exact-dup control for those belongs to DedupStoreStream's md5
   * store).
   */
-sealed abstract class DedupIngest(val logPath: String) extends IndexIngest {
+sealed abstract class DedupIngest(val logPath: String,
+    val index: PersistedIndex) extends IndexIngest {
   final val columns: Seq[String] = Seq("doc_id", "text")
 
   /** Serve the exact-deduped batch against the index at `path`: pairs
@@ -104,8 +90,6 @@ sealed abstract class DedupIngest(val logPath: String) extends IndexIngest {
     */
   protected def duplicates(spark: SparkSession, path: String, batchId: Long,
       exact: DataFrame, exactRows: Long): Option[DataFrame]
-
-  protected def append(accepted: DataFrame, path: String, batchId: Long): Unit
 
   final def applyBatch(spark: SparkSession, path: String, batchId: Long,
       batch: DataFrame): Unit = {
@@ -131,7 +115,7 @@ sealed abstract class DedupIngest(val logPath: String) extends IndexIngest {
       // the full-corpus-cache anti-pattern.
       accepted.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        append(accepted, path, batchId)
+        index.appendIndex(accepted, path, batchId)
         accepted.select(col("doc_id")).write.mode("overwrite")
           .parquet(s"$logPath/batch=$batchId")
       } finally accepted.unpersist()
@@ -156,7 +140,8 @@ sealed abstract class DedupIngest(val logPath: String) extends IndexIngest {
   * Before the index exists, the first batch is accepted whole.
   */
 final case class NearDupIngest(override val logPath: String,
-    threshold: Double, maxBucket: Int) extends DedupIngest(logPath) {
+    threshold: Double, maxBucket: Int)
+    extends DedupIngest(logPath, NearDupLsh) {
 
   protected def duplicates(spark: SparkSession, path: String, batchId: Long,
       exact: DataFrame, exactRows: Long): Option[DataFrame] =
@@ -165,7 +150,7 @@ final case class NearDupIngest(override val logPath: String,
       require(NearDupLsh.readIndex(spark, path).columns.contains("batch"),
         s"index at $path has no `batch` partition column — it was " +
           "written with a pre-unification flat layout. Rebuild it with " +
-          "writeIndex/writeIndexBatch (both write batch=<id> partitions; " +
+          "writeIndex/appendIndex (both write batch=<id> partitions; " +
           "a bootstrap lands in batch=-1), or move the old files under a " +
           "batch=-1 subdirectory.")
       // O(hot tail) when the truncated sidecar covers every served batch
@@ -177,13 +162,6 @@ final case class NearDupIngest(override val logPath: String,
         Some(hot), maxBatchExclusive = Some(batchId),
         batchRows = Some(exactRows)))
     }
-
-  protected def append(accepted: DataFrame, path: String, batchId: Long): Unit =
-    NearDupLsh.writeIndexBatch(accepted, path, batchId)
-
-  def maintain(spark: SparkSession, src: String, tgt: String,
-      throughBatch: Long): Boolean =
-    NearDupLsh.maintain(spark, src, tgt, throughBatch = throughBatch)
 }
 
 /** EXACT near-dup dedup against the persisted prefix-filter (PPJoin)
@@ -196,7 +174,7 @@ final case class NearDupIngest(override val logPath: String,
   * efficiency and is preferred in production.
   */
 final case class PpJoinIngest(override val logPath: String, num: Int, den: Int)
-    extends DedupIngest(logPath) {
+    extends DedupIngest(logPath, PrefixFilterJoin) {
 
   protected def duplicates(spark: SparkSession, path: String, batchId: Long,
       exact: DataFrame, exactRows: Long): Option[DataFrame] = {
@@ -205,13 +183,6 @@ final case class PpJoinIngest(override val logPath: String, num: Int, den: Int)
     Some(PrefixFilterJoin.pairsAgainstIndex(spark, exact, path, num, den,
       batchRows = Some(exactRows), maxBatchExclusive = Some(batchId)))
   }
-
-  protected def append(accepted: DataFrame, path: String, batchId: Long): Unit =
-    PrefixFilterJoin.appendIndex(accepted, path, batchId)
-
-  def maintain(spark: SparkSession, src: String, tgt: String,
-      throughBatch: Long): Boolean =
-    PrefixFilterJoin.maintain(spark, src, tgt, throughBatch = throughBatch)
 }
 
 /** The one stream driver over the persisted indexes: `foreachBatch`
@@ -228,7 +199,7 @@ object IndexStream {
     val active = IndexGenerations.activePath(spark, indexRoot)
     ingest.applyBatch(spark, active, batchId, batch)
     IndexGenerations.maintainTick(spark, indexRoot, active, batchId,
-      (src, tgt, w) => ingest.maintain(spark, src, tgt, w))
+      ingest.index)
   }
 
   def start(source: DataFrame, ingest: IndexIngest, indexRoot: String,

@@ -4,12 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** Contracts for the shared `batch=<id>` lifecycle mechanics all four
-  * persisted indexes (ppjoin / LSH / BM25 / IVF) build on: serve-side
-  * listing falls back (`None`) on off-contract names, the compaction
-  * tail FAILS FAST on file-bearing off-contract dirs (a silent string
-  * flip of the inferred partition column would drop committed rows),
-  * and the strictly-earlier serve cut tolerates legacy layouts.
+/** Contracts for the shared `batch=<id>` lifecycle mechanics all five
+  * persisted indexes (ppjoin / LSH / BM25 / IVF / LSH-ANN) build on:
+  * serve-side listing falls back (`None`) on off-contract names, the
+  * compaction tail FAILS FAST on file-bearing off-contract dirs under
+  * every batched artifact (a silent string flip of the inferred
+  * partition column would drop committed rows), appends never touch the
+  * build's `batch=-1`, the numeric knobs fail fast naming their key, and
+  * the strictly-earlier serve cut tolerates legacy layouts.
   */
 class IndexLifecycleSpec extends AnyFunSuite {
 
@@ -103,6 +105,108 @@ class IndexLifecycleSpec extends AnyFunSuite {
     assert(!fs(new org.apache.hadoop.fs.Path(s"$ivf/idx2"))
       .exists(new org.apache.hadoop.fs.Path(s"$ivf/idx2")),
       "fail-fast must precede any target write")
+  }
+
+  private def exists(p: String): Boolean =
+    fs(new org.apache.hadoop.fs.Path(p)).exists(new org.apache.hadoop.fs.Path(p))
+
+  private def tinyDocs = {
+    import spark.implicits._
+    Seq((1L, "the quick brown fox jumps"), (2L, "over the lazy dog today"),
+      (3L, "a b c d e f")).toDF("doc_id", "text")
+  }
+
+  private def tinyVecs = {
+    import spark.implicits._
+    Seq((1L, Seq(1.0, 0.0), 1.0), (2L, Seq(0.0, 1.0), 1.0),
+      (3L, Seq(1.0, 1.0), 2.0), (4L, Seq(0.5, 0.5), 0.5))
+      .toDF("vec_id", "v", "norm2")
+  }
+
+  test("appendIndex rejects batch id -1 on all five indexes; the " +
+      "bootstrap is unchanged") {
+    val planes = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 1.0), Seq(1.0, -1.0))
+    val cases: Seq[(PersistedIndex, String => Unit, () => org.apache.spark.sql.DataFrame)] = Seq(
+      (NearDupLsh, p => NearDupLsh.writeIndex(tinyDocs, p), () => tinyDocs.limit(1)),
+      (PrefixFilterJoin, p => PrefixFilterJoin.writeIndex(tinyDocs, p, 4, 5),
+        () => tinyDocs.limit(1)),
+      (Bm25Index, p => Bm25Index.writeIndex(tinyDocs, p), () => tinyDocs.limit(1)),
+      (IvfIndex, p => IvfIndex.writeIndex(tinyVecs, p, nlist = 2, iters = 1),
+        () => tinyVecs.limit(1)),
+      (LshAnnIndex, p => LshAnnIndex.writeIndex(tinyVecs, p, planes, bands = 2),
+        () => tinyVecs.limit(1)))
+    cases.foreach { case (index, bootstrap, rows) =>
+      withClue(s"$index: ") {
+        val idx = s"${tmp()}/idx"
+        bootstrap(idx)
+        def bootstrapRows = spark.read.parquet(index.batchedDirs(idx).head)
+          .filter(col("batch") === -1).count()
+        val before = bootstrapRows
+        val ex = intercept[IllegalArgumentException] {
+          index.appendIndex(rows(), idx, -1L)
+        }
+        assert(ex.getMessage.contains("build owns -1"))
+        assert(bootstrapRows === before, "the bootstrap must be untouched")
+      }
+    }
+  }
+
+  test("compactIndex fails fast on a file-bearing off-contract dir under " +
+      "an LSH sidecar and IVF drift/, before any target write") {
+    import spark.implicits._
+    val lsh = tmp()
+    NearDupLsh.writeIndex(tinyDocs, s"$lsh/idx")
+    NearDupLsh.appendIndex(tinyDocs.limit(1), s"$lsh/idx", 0L)
+    Seq((0, 1L, 1L)).toDF("band", "band_hash", "n").coalesce(1)
+      .write.mode("overwrite")
+      .parquet(s"${NearDupLsh.statsPath(s"$lsh/idx")}/batch=0.bak")
+    val lshEx = intercept[IllegalArgumentException] {
+      NearDupLsh.compactIndex(spark, s"$lsh/idx", s"$lsh/idx2")
+    }
+    assert(lshEx.getMessage.contains(
+      s"${NearDupLsh.statsPath(s"$lsh/idx")}/batch=0.bak"))
+    assert(NearDupLsh.batchedDirs(s"$lsh/idx2").forall(!exists(_)),
+      "fail-fast must precede any target write, sidecars included")
+
+    val ivf = tmp()
+    IvfIndex.writeIndex(tinyVecs, s"$ivf/idx", nlist = 2, iters = 1)
+    Seq((0, 1L, BigDecimal(1))).toDF("centroid_id", "n", "d2_sum").coalesce(1)
+      .write.mode("overwrite").parquet(s"$ivf/idx/drift/batch=0.bak")
+    val ivfEx = intercept[IllegalArgumentException] {
+      IvfIndex.compactIndex(spark, s"$ivf/idx", s"$ivf/idx2")
+    }
+    assert(ivfEx.getMessage.contains(s"$ivf/idx/drift/batch=0.bak"))
+    assert(!exists(s"$ivf/idx2"), "fail-fast must precede any target write")
+  }
+
+  test("numeric spark.graft.index knobs: malformed or out-of-range values " +
+      "fail naming the key") {
+    import spark.implicits._
+    val root = tmp()
+    writeBatch(root, -1, 1)
+    val batch = Seq(1L).toDF("doc_id")
+    // (key, smallest legal value, first value above the range, reader)
+    val readers: Seq[(String, Long, BigInt, () => Any)] = Seq(
+      ("spark.graft.index.compactMinBatches", 1L, BigInt(Int.MaxValue) + 1,
+        () => IndexLifecycle.compactDue(spark, root, 0L)),
+      // Long.MaxValue would overflow the guard's limit-bounded probe
+      ("spark.graft.index.serveBroadcastMaxRows", 0L, BigInt(Long.MaxValue),
+        () => IndexLifecycle.serveGuard(spark, batch, Some(1L))),
+      ("spark.graft.index.serveKeyPruneLimit", 0L, BigInt(Int.MaxValue) + 1,
+        () => IndexLifecycle.serveKeyPruneLimit(spark)))
+    readers.foreach { case (key, min, above, read) =>
+      try {
+        val bads = Seq("abc", "1.5", "-1", (min - 1).toString, above.toString)
+        bads.foreach { bad =>
+          spark.conf.set(key, bad)
+          val ex = intercept[IllegalArgumentException](read())
+          assert(ex.getMessage.contains(key) && ex.getMessage.contains(bad),
+            s"$key=$bad: ${ex.getMessage}")
+        }
+        spark.conf.set(key, min.toString)
+        read() // the smallest allowed value parses
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("cutBatches: strictly-earlier filter; legacy frame without the column serves whole") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** The auto-maintenance policy layer: each index's `maintain` compacts
+/** The auto-maintenance policy layer: `PersistedIndex.maintain` compacts
   * ONLY when the committed batch-dir count exceeds
   * `spark.graft.index.compactMinBatches` (a long-running ingest calls
   * it per micro-batch; not-due = one directory listing), and the
@@ -13,7 +13,7 @@ import graft.SparkTestSession
   * and expires snapshots at the retention horizon. Serve decisions must
   * be unchanged through a triggered maintenance — the compaction
   * equivalence itself is pinned per index by the compactIndex specs;
-  * here the POLICY is under test.
+  * here the POLICY is under test, once per index through the contract.
   */
 class IndexMaintenanceSpec extends AnyFunSuite {
 
@@ -33,94 +33,78 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
 
-  test("LSH maintain: fires past the threshold, no-op below, serve unchanged") {
-    withTrigger(3) {
-      val root = java.nio.file.Files.createTempDirectory("graft_mt_lsh").toString
-      val idx = s"$root/idx"
-      NearDupLsh.writeIndex(docs.filter(col("doc_id") % 5 === 0), idx)
-      (0 until 2).foreach(i => NearDupLsh.writeIndexBatch(
-        docs.filter(col("doc_id") % 5 === i + 1), idx, batchId = i.toLong))
-      // 3 committed dirs (bootstrap + 2): not over the threshold
-      assert(!NearDupLsh.maintain(spark, idx, s"$root/idx2"))
-      assert(!new java.io.File(s"$root/idx2").exists,
-        "not-due maintenance must not touch the target")
-      NearDupLsh.writeIndexBatch(
-        docs.filter(col("doc_id") % 5 === 3), idx, batchId = 2L)
-      val batch = docs.filter(col("doc_id") % 5 === 4)
-      def serve(p: String): Set[(Long, Long)] =
-        NearDupLsh.pairsAgainstIndexAt(spark, batch, p, 0.5)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val before = serve(idx)
-      assert(NearDupLsh.maintain(spark, idx, s"$root/idx2"), "4 dirs > 3: due")
-      assert(batchDirs(s"$root/idx2") == Set("batch=-1"))
-      assert(serve(s"$root/idx2") == before,
-        "a triggered maintenance must not change a serve decision")
-      // freshly compacted index: one dir, not due again
-      assert(!NearDupLsh.maintain(spark, s"$root/idx2", s"$root/idx3"))
-    }
-  }
+  private lazy val embeddings: DataFrame = graft.Tables.table(spark, dir, "embeddings")
+    .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    .withColumn("norm2",
+      graft.functions.GraftFunctions.dot_product(col("v"), col("v")))
 
-  test("BM25 maintain: threshold on postings dirs, ranking unchanged") {
-    withTrigger(2) {
-      val root = java.nio.file.Files.createTempDirectory("graft_mt_bm").toString
-      val idx = s"$root/idx"
-      Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), idx)
-      Bm25Index.appendIndex(docs.filter(col("doc_id") % 4 === 1), idx, 0L)
-      assert(!Bm25Index.maintain(spark, idx, s"$root/idx2"))
-      Bm25Index.appendIndex(docs.filter(col("doc_id") % 4 === 2), idx, 1L)
-      val qs = Seq(1L -> "customer", 1L -> "join", 2L -> "batch")
-      def serve(p: String) = Bm25Index.topK(spark, p, qs, k = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-      val before = serve(idx)
-      assert(Bm25Index.maintain(spark, idx, s"$root/idx2"))
-      assert(batchDirs(s"$root/idx2/postings") == Set("batch=-1"))
-      assert(serve(s"$root/idx2") == before)
-      assert(!Bm25Index.maintain(spark, s"$root/idx2", s"$root/idx3"))
-    }
-  }
+  /** One index's policy case: the bootstrap at a path, the appends (the
+    * trigger sits at their count, so all but the last leave maintenance
+    * not due), and a serve that a triggered maintenance must not change.
+    */
+  private case class Policy(name: String, index: PersistedIndex,
+      bootstrap: String => Unit, appends: () => Seq[DataFrame],
+      serve: String => Any)
 
-  test("IVF maintain: threshold on corpus dirs, ANN serve unchanged") {
-    withTrigger(2) {
-      val e = graft.Tables.table(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("norm2",
-          graft.functions.GraftFunctions.dot_product(col("v"), col("v")))
-      val root = java.nio.file.Files.createTempDirectory("graft_mt_ivf").toString
-      val idx = s"$root/idx"
-      IvfIndex.writeIndex(e.filter(col("vec_id") % 3 === 0), idx, nlist = 8, iters = 1)
-      IvfIndex.appendIndex(e.filter(col("vec_id") % 3 === 1), idx, 0L)
-      assert(!IvfIndex.maintain(spark, idx, s"$root/idx2"))
-      IvfIndex.appendIndex(e.filter(col("vec_id") % 3 === 2), idx, 1L)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn"))
-      def serve(p: String) = IvfIndex.topK(spark, p, q, nprobe = 3, k = 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-      val before = serve(idx)
-      assert(IvfIndex.maintain(spark, idx, s"$root/idx2"))
-      assert(batchDirs(s"$root/idx2/corpus") == Set("batch=-1"))
-      assert(serve(s"$root/idx2") == before)
-      assert(!IvfIndex.maintain(spark, s"$root/idx2", s"$root/idx3"))
-    }
-  }
+  private def ppStanding = docs.filter(col("doc_id") % 10 =!= 7)
 
-  test("ppjoin maintain: threshold on sets dirs, exact serve unchanged") {
-    withTrigger(2) {
-      val root = java.nio.file.Files.createTempDirectory("graft_mt_pp").toString
-      val idx = s"$root/idx"
-      val standing = docs.filter(col("doc_id") % 10 =!= 7)
-      PrefixFilterJoin.writeIndex(standing.filter(col("doc_id") % 3 === 0), idx, 4, 5)
-      PrefixFilterJoin.appendIndex(standing.filter(col("doc_id") % 3 === 1), idx, 0L)
-      assert(!PrefixFilterJoin.maintain(spark, idx, s"$root/idx2"))
-      PrefixFilterJoin.appendIndex(standing.filter(col("doc_id") % 3 === 2), idx, 1L)
-      val batch = docs.filter(col("doc_id") % 10 === 7)
-      def serve(p: String): Set[(Long, Long)] =
-        PrefixFilterJoin.pairsAgainstIndex(spark, batch, p, 4, 5)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val before = serve(idx)
-      assert(PrefixFilterJoin.maintain(spark, idx, s"$root/idx2"))
-      assert(batchDirs(s"$root/idx2/sets") == Set("batch=-1"))
-      assert(serve(s"$root/idx2") == before)
-      assert(!PrefixFilterJoin.maintain(spark, s"$root/idx2", s"$root/idx3"))
+  private val policies = Seq(
+    Policy("LSH maintain: fires past the threshold, no-op below, serve unchanged",
+      NearDupLsh,
+      idx => NearDupLsh.writeIndex(docs.filter(col("doc_id") % 5 === 0), idx),
+      () => (1 to 3).map(i => docs.filter(col("doc_id") % 5 === i)),
+      p => NearDupLsh.pairsAgainstIndexAt(spark,
+        docs.filter(col("doc_id") % 5 === 4), p, 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet),
+    Policy("BM25 maintain: threshold on postings dirs, ranking unchanged",
+      Bm25Index,
+      idx => Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), idx),
+      () => (1 to 2).map(i => docs.filter(col("doc_id") % 4 === i)),
+      p => Bm25Index.topK(spark, p,
+        Seq(1L -> "customer", 1L -> "join", 2L -> "batch"), k = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet),
+    Policy("IVF maintain: threshold on corpus dirs, ANN serve unchanged",
+      IvfIndex,
+      idx => IvfIndex.writeIndex(embeddings.filter(col("vec_id") % 3 === 0),
+        idx, nlist = 8, iters = 1),
+      () => (1 to 2).map(i => embeddings.filter(col("vec_id") % 3 === i)),
+      p => IvfIndex.topK(spark, p, embeddings.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("v").as("qv"),
+          col("norm2").as("qn")), nprobe = 3, k = 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet),
+    Policy("ppjoin maintain: threshold on sets dirs, exact serve unchanged",
+      PrefixFilterJoin,
+      idx => PrefixFilterJoin.writeIndex(
+        ppStanding.filter(col("doc_id") % 3 === 0), idx, 4, 5),
+      () => (1 to 2).map(i => ppStanding.filter(col("doc_id") % 3 === i)),
+      p => PrefixFilterJoin.pairsAgainstIndex(spark,
+        docs.filter(col("doc_id") % 10 === 7), p, 4, 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
+
+  policies.foreach { c =>
+    test(c.name) {
+      val appends = c.appends()
+      withTrigger(appends.size) {
+        val root = java.nio.file.Files.createTempDirectory("graft_mt").toString
+        val idx = s"$root/idx"
+        c.bootstrap(idx)
+        appends.init.zipWithIndex.foreach { case (b, i) =>
+          c.index.appendIndex(b, idx, i.toLong)
+        }
+        // bootstrap + all but the last append: not over the threshold
+        assert(!c.index.maintain(spark, idx, s"$root/idx2"))
+        assert(!new java.io.File(s"$root/idx2").exists,
+          "not-due maintenance must not touch the target")
+        c.index.appendIndex(appends.last, idx, appends.size - 1L)
+        val before = c.serve(idx)
+        assert(c.index.maintain(spark, idx, s"$root/idx2"), "one dir past: due")
+        assert(batchDirs(c.index.batchedDirs(s"$root/idx2").head) ==
+          Set("batch=-1"))
+        assert(c.serve(s"$root/idx2") == before,
+          "a triggered maintenance must not change a serve decision")
+        // freshly compacted index: one dir, not due again
+        assert(!c.index.maintain(spark, s"$root/idx2", s"$root/idx3"))
+      }
     }
   }
 
@@ -129,8 +113,8 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       val root = java.nio.file.Files.createTempDirectory("graft_mt_wm").toString
       val idx = s"$root/idx"
       NearDupLsh.writeIndex(docs.filter(col("doc_id") % 3 === 0), idx)
-      NearDupLsh.writeIndexBatch(docs.filter(col("doc_id") % 3 === 1), idx, 0L)
-      NearDupLsh.writeIndexBatch(docs.filter(col("doc_id") % 3 === 2), idx, 1L)
+      NearDupLsh.appendIndex(docs.filter(col("doc_id") % 3 === 1), idx, 0L)
+      NearDupLsh.appendIndex(docs.filter(col("doc_id") % 3 === 2), idx, 1L)
       // only batches <= 0 count toward the trigger AND fold; batch 1
       // (uncommitted) carries under its own id
       assert(NearDupLsh.maintain(spark, idx, s"$root/idx2", throughBatch = 0L))

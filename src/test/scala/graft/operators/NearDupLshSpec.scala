@@ -103,8 +103,8 @@ class NearDupLshSpec extends AnyFunSuite {
       lit("identical boilerplate footer with terms of service and a " +
         "copyright notice repeated on every crawled page of the site").as("text"))
     val idx = java.nio.file.Files.createTempDirectory("graft_lsh_hotside").toString
-    NearDupLsh.writeIndexBatch(docs.unionByName(boiler), idx, batchId = 0L)
-    NearDupLsh.writeIndexBatch(
+    NearDupLsh.appendIndex(docs.unionByName(boiler), idx, batchId = 0L)
+    NearDupLsh.appendIndex(
       boiler.select((col("doc_id") + 1000L).as("doc_id"), col("text")),
       idx, batchId = 1L)
     // truncation: the sidecar stores ONLY deltas over the floor — the
@@ -152,9 +152,9 @@ class NearDupLshSpec extends AnyFunSuite {
         "a copyright notice repeated on every crawled page of the site")
     }.toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("graft_lsh_gray").toString
-    NearDupLsh.writeIndexBatch(clique(100L), idx, batchId = 0L)
-    NearDupLsh.writeIndexBatch(clique(200L), idx, batchId = 1L)
-    NearDupLsh.writeIndexBatch(clique(300L), idx, batchId = 2L)
+    NearDupLsh.appendIndex(clique(100L), idx, batchId = 0L)
+    NearDupLsh.appendIndex(clique(200L), idx, batchId = 1L)
+    NearDupLsh.appendIndex(clique(300L), idx, batchId = 2L)
     val exact = NearDupLsh.readBucketStats(spark, idx)
       .filter(col("n") > 10).count()
     assert(exact >= 8, "the summed clique must be over-cap in every band")

@@ -1,16 +1,17 @@
 package graft.streaming
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.operators.{Bm25Index, IndexGenerations, IvfIndex, NearDupLsh, PrefixFilterJoin}
 
-/** Auto-maintenance WIRED INTO the four ingest streams: with
-  * `spark.graft.index.autoMaintain` on, each micro-batch tick appends to
-  * the active generation and — when the compaction trigger is due —
-  * compacts into `_gen=<batchId>` and adopts it atomically
-  * (IndexGenerations). The contracts under test:
+/** Auto-maintenance WIRED INTO the four ingest streams, specified once
+  * over a table of them: with `spark.graft.index.autoMaintain` on, each
+  * micro-batch tick appends to the active generation and — when the
+  * compaction trigger is due — compacts into `_gen=<batchId>` and adopts
+  * it atomically (IndexGenerations). The contracts under test:
   *
   *  - accept/serve decisions across a triggered, adopted swap are
   *    byte-identical to the untriggered run (the serve-invariance of
@@ -42,114 +43,117 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
     spark.read.parquet(logPath).select(col("doc_id"), col("batch"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
-  test("LSH stream: auto-maintained accepts ≡ unmaintained; generations adopted") {
-    val plain = Files.createTempDirectory("graft_am_lsh_p").toString
-    IndexStream.runToCompletion(spark, docs, k = 6,
-      NearDupIngest(s"$plain/log", threshold = 0.8, maxBucket = 4096),
-      indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
-    val auto = Files.createTempDirectory("graft_am_lsh_a").toString
-    withAutoMaintain(trigger = 2) {
-      IndexStream.runToCompletion(spark, docs, k = 6,
-        NearDupIngest(s"$auto/log", threshold = 0.8, maxBucket = 4096),
-        indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
-    }
-    assert(acceptedSet(s"$auto/log") == acceptedSet(s"$plain/log"),
-      "accept decisions must be byte-identical across adopted swaps")
-    val gens = IndexGenerations.generations(spark, s"$auto/idx")
-    assert(gens.size >= 2,
-      s"6 batches over trigger 2 must adopt repeatedly, got $gens")
-    // the standing signatures are the same corpus either way
-    val active = IndexGenerations.activePath(spark, s"$auto/idx")
-    assert(active == s"$auto/idx/_gen=${gens.last}")
-    assert(NearDupLsh.readIndex(spark, active)
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq ==
-      NearDupLsh.readIndex(spark, s"$plain/idx")
-        .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq)
-    // retention is explicit, never the tick's job: all gens still exist
-    val pruned = IndexGenerations.pruneGenerations(spark, s"$auto/idx",
-      keepLatest = 1)
-    assert(pruned == gens.dropRight(1))
-    assert(IndexGenerations.activePath(spark, s"$auto/idx") == active,
-      "pruning old generations must not move the active index")
-  }
-
-  test("ppjoin stream: auto-maintained accepts ≡ unmaintained") {
-    val plain = Files.createTempDirectory("graft_am_pp_p").toString
-    IndexStream.runToCompletion(spark, docs, k = 5,
-      PpJoinIngest(s"$plain/log", num = 4, den = 5),
-      indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
-    val auto = Files.createTempDirectory("graft_am_pp_a").toString
-    withAutoMaintain(trigger = 2) {
-      IndexStream.runToCompletion(spark, docs, k = 5,
-        PpJoinIngest(s"$auto/log", num = 4, den = 5),
-        indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
-    }
-    assert(acceptedSet(s"$auto/log") == acceptedSet(s"$plain/log"))
-    assert(IndexGenerations.generations(spark, s"$auto/idx").nonEmpty)
-  }
-
-  test("BM25 stream: auto-maintained retrieval ≡ unmaintained") {
-    def topk(path: String): Seq[(Long, Long, Any, Int)] =
-      Bm25Index.topK(spark, path,
-        Seq((1L, "table"), (1L, "scan"), (2L, "row"), (2L, "query")), k = 5)
-        .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.get(2), r.getInt(3))).toSeq
-        .sortBy(t => (t._1, t._4))
-    val plain = Files.createTempDirectory("graft_am_bm_p").toString
-    Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$plain/idx")
-    IndexStream.runToCompletion(spark,
-      docs.filter(col("doc_id") % 2 =!= 0), k = 5, Bm25Ingest,
-      indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
-    val auto = Files.createTempDirectory("graft_am_bm_a").toString
-    Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$auto/idx")
-    withAutoMaintain(trigger = 2) {
-      IndexStream.runToCompletion(spark,
-        docs.filter(col("doc_id") % 2 =!= 0), k = 5, Bm25Ingest,
-        indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
-    }
-    val gens = IndexGenerations.generations(spark, s"$auto/idx")
-    assert(gens.nonEmpty)
-    assert(topk(IndexGenerations.activePath(spark, s"$auto/idx"))
-      == topk(s"$plain/idx"),
-      "retrieval must be identical on the adopted generation")
-  }
-
-  test("IVF stream: auto-maintained ANN serve ≡ unmaintained; drift " +
-      "sidecars survive the adopted compactions") {
+  private def embeddings = {
     graft.functions.GraftFunctions.register(spark)
-    val e = graft.Tables.table(spark, dir, "embeddings")
+    graft.Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm2",
         graft.functions.GraftFunctions.dot_product(col("v"), col("v")))
-    val q = e.filter(col("vec_id") < 10)
+  }
+
+  /** One stream under auto-maintenance: its feed (`k` micro-batches), the
+    * index bootstrap, the ingest writing under a run root, the decisions
+    * observed at a run root (which must not move across adopted swaps),
+    * and the stream's own checks on the (plain, auto) run roots.
+    */
+  private case class StreamCase(name: String, k: Int, rows: () => DataFrame,
+      bootstrap: String => Unit, ingest: String => IndexIngest,
+      decisions: String => Any, extra: (String, String) => Unit)
+
+  private def run(c: StreamCase): String = {
+    val root = Files.createTempDirectory("graft_am").toString
+    c.bootstrap(s"$root/idx")
+    IndexStream.runToCompletion(spark, c.rows(), c.k, c.ingest(root),
+      indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
+    root
+  }
+
+  /** Each stream's auto-maintained run, made once per suite: the LSH one
+    * also serves as the crash-window test's uncrashed twin (the same
+    * pmod(doc_id, 6) batches at trigger 2).
+    */
+  private val autoRuns = scala.collection.mutable.Map.empty[String, String]
+  private def autoRun(c: StreamCase): String =
+    autoRuns.getOrElseUpdate(c.name, withAutoMaintain(trigger = 2)(run(c)))
+
+  private def served(topk: String => Seq[_]): String => Any =
+    root => topk(IndexGenerations.activePath(spark, s"$root/idx"))
+
+  private def bm25TopK(path: String): Seq[(Long, Long, Any, Int)] =
+    Bm25Index.topK(spark, path,
+      Seq((1L, "table"), (1L, "scan"), (2L, "row"), (2L, "query")), k = 5)
+      .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.get(2), r.getInt(3))).toSeq
+      .sortBy(t => (t._1, t._4))
+
+  private def ivfTopK(path: String): Seq[(Long, Long)] = {
+    val q = embeddings.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm2").as("qn"))
-    def topk(path: String): Seq[(Long, Long)] =
-      IvfIndex.topK(spark, path, q, nprobe = 4, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val plain = Files.createTempDirectory("graft_am_ivf_p").toString
-    IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$plain/idx",
-      nlist = 16, iters = 2)
-    IndexStream.runToCompletion(spark, e.filter(col("vec_id") % 2 =!= 0),
-      k = 5, IvfIngest, indexRoot = s"$plain/idx", checkpoint = s"$plain/ckpt")
-    val auto = Files.createTempDirectory("graft_am_ivf_a").toString
-    IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$auto/idx",
-      nlist = 16, iters = 2)
-    withAutoMaintain(trigger = 2) {
-      IndexStream.runToCompletion(spark, e.filter(col("vec_id") % 2 =!= 0),
-        k = 5, IvfIngest, indexRoot = s"$auto/idx", checkpoint = s"$auto/ckpt")
+    IvfIndex.topK(spark, path, q, nprobe = 4, k = 5)
+      .select(col("query_id"), col("neighbor_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+  }
+
+  private val lshStream = StreamCase(
+    "LSH stream: auto-maintained accepts ≡ unmaintained; generations adopted",
+    k = 6, () => docs, _ => (),
+    root => NearDupIngest(s"$root/log", threshold = 0.8, maxBucket = 4096),
+    root => acceptedSet(s"$root/log"),
+    { (plain, auto) =>
+      val gens = IndexGenerations.generations(spark, s"$auto/idx")
+      assert(gens.size >= 2,
+        s"6 batches over trigger 2 must adopt repeatedly, got $gens")
+      // the standing signatures are the same corpus either way
+      val active = IndexGenerations.activePath(spark, s"$auto/idx")
+      assert(active == s"$auto/idx/_gen=${gens.last}")
+      assert(NearDupLsh.readIndex(spark, active)
+        .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq ==
+        NearDupLsh.readIndex(spark, s"$plain/idx")
+          .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq)
+      // retention is explicit, never the tick's job: all gens still exist
+      val pruned = IndexGenerations.pruneGenerations(spark, s"$auto/idx",
+        keepLatest = 1)
+      assert(pruned == gens.dropRight(1))
+      assert(IndexGenerations.activePath(spark, s"$auto/idx") == active,
+        "pruning old generations must not move the active index")
+    })
+
+  private val streams = Seq(
+    lshStream,
+    StreamCase("ppjoin stream: auto-maintained accepts ≡ unmaintained",
+      k = 5, () => docs, _ => (),
+      root => PpJoinIngest(s"$root/log", num = 4, den = 5),
+      root => acceptedSet(s"$root/log"), (_, _) => ()),
+    StreamCase("BM25 stream: auto-maintained retrieval ≡ unmaintained",
+      k = 5, () => docs.filter(col("doc_id") % 2 =!= 0),
+      idx => Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), idx),
+      _ => Bm25Ingest, served(bm25TopK), (_, _) => ()),
+    StreamCase("IVF stream: auto-maintained ANN serve ≡ unmaintained; drift " +
+        "sidecars survive the adopted compactions",
+      k = 5, () => embeddings.filter(col("vec_id") % 2 =!= 0),
+      idx => IvfIndex.writeIndex(embeddings.filter(col("vec_id") % 2 === 0),
+        idx, nlist = 16, iters = 2),
+      _ => IvfIngest, served(ivfTopK),
+      { (_, auto) =>
+        // the adopted generation still adjudicates drift: the build-time
+        // reference was carried (never folded), so the report stays armed
+        assert(IvfIndex.driftReport(spark,
+          IndexGenerations.activePath(spark, s"$auto/idx")).collect()
+          .forall(!_.getAs[Boolean]("drifted")),
+          "representative stream appends must not read as drift")
+      }))
+
+  streams.foreach { c =>
+    test(c.name) {
+      val plain = run(c)
+      val auto = autoRun(c)
+      assert(c.decisions(auto) == c.decisions(plain),
+        "accept/serve decisions must be byte-identical across adopted swaps")
+      assert(IndexGenerations.generations(spark, s"$auto/idx").nonEmpty)
+      c.extra(plain, auto)
     }
-    val gens = IndexGenerations.generations(spark, s"$auto/idx")
-    assert(gens.nonEmpty)
-    val active = IndexGenerations.activePath(spark, s"$auto/idx")
-    assert(topk(active) == topk(s"$plain/idx"))
-    // the adopted generation still adjudicates drift: the build-time
-    // reference was carried (never folded), so the report stays armed
-    assert(IvfIndex.driftReport(spark, active).collect()
-      .forall(!_.getAs[Boolean]("drifted")),
-      "representative stream appends must not read as drift")
   }
 
   test("pruneGenerations sweeps abandoned unadopted targets below the " +
@@ -180,14 +184,15 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
 
   test("crash windows across the swap: redelivery after adoption no-ops; " +
       "a never-adopted half-written target is swept and rebuilt") {
-    val uncrashed = Files.createTempDirectory("graft_am_cr_u").toString
+    // the uncrashed twin is the LSH stream's auto-maintained run: ticks
+    // 0..5 over the same pmod(doc_id, 6) batches at trigger 2
+    val uncrashed = autoRun(lshStream)
     val crashed = Files.createTempDirectory("graft_am_cr_c").toString
     def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(6)) === i)
     def tick(root: String, id: Long, b: org.apache.spark.sql.DataFrame): Unit =
       IndexStream.applyBatchMaintained(spark,
         NearDupIngest(s"$root/log", 0.8, 4096), s"$root/idx", id, b)
     withAutoMaintain(trigger = 2) {
-      (0 until 6).foreach(i => tick(uncrashed, i.toLong, batch(i)))
       // crashed twin: ticks 0..2, then tick 3 adopts _gen=3 (committed
       // dirs {0,1,2} > trigger) ... and the checkpoint commit is "lost"
       // — batch 3 redelivers
