@@ -57,10 +57,14 @@ object PlanFingerprint {
 
   val BaselinePath = "src/test/resources/plan_fingerprints.json"
 
-  def digestAll(spark: SparkSession, dir: String): Seq[(String, Digest)] =
-    GraftQuery.all.sortBy(_.name).map { q =>
-      q.name -> of(q.fn(spark, dir))
-    }
+  /** Every query built against `dir`, in name order. Building runs jobs:
+    * some queries write their index artifacts at construction.
+    */
+  def buildAll(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
+    GraftQuery.all.sortBy(_.name).map(q => q.name -> q.fn(spark, dir))
+
+  def digestAll(built: Seq[(String, DataFrame)]): Seq[(String, Digest)] =
+    built.map { case (name, df) => name -> of(df) }
 
   def renderAll(ds: Seq[(String, Digest)]): String =
     ds.map { case (n, d) => s"""  "$n": ${d.render}""" }
@@ -90,16 +94,11 @@ object PlanFingerprint {
 object PlanFingerprintDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = PlanFingerprint.pin(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft_plan_fingerprints")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = PlanFingerprint.pin(obs.BenchSession("graft_plan_fingerprints", "4"))
     val out = java.nio.file.Paths.get(PlanFingerprint.BaselinePath)
     java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.writeString(out,
-      PlanFingerprint.renderAll(PlanFingerprint.digestAll(spark, dir)))
+    java.nio.file.Files.writeString(out, PlanFingerprint.renderAll(
+      PlanFingerprint.digestAll(PlanFingerprint.buildAll(spark, dir))))
     println(s"[plan-fingerprints] wrote ${out.toAbsolutePath}")
     spark.stop()
   }

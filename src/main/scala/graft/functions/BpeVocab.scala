@@ -118,13 +118,7 @@ object BpeVocab {
 object BpeVocabDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("graft_bpe_vocab_dump")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.obs.BenchSession("graft_bpe_vocab_dump", "8")
     val t0 = System.nanoTime()
     // minCount=1: the Big artifact trains to a fixed MERGE BUDGET with
     // the rare-pair floor disabled — how production BPE fills a vocab

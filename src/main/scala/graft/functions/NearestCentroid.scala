@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * (vectors × broadcast centroids → row_number window → rn = 1) is
   * semantically identical but materializes corpus × nlist rows into the
   * window machinery; Spark's partial group-limit prunes the exchange,
-  * yet each task still SORTS its joined slice — at the 10M ScaleSmoke
+  * yet each task still SORTS its joined slice — at the 10M ivf_lifecycle
   * (9M vectors × 256 cells × ~1 KB joined rows) the per-task sorter
   * spills overflowed a 252 GB disk twice. Assignment is per-row
   * arithmetic against a table k-means has ALREADY collected (bounded by

@@ -2,9 +2,10 @@ package graft.obs
 
 import org.apache.spark.sql.SparkSession
 
-/** The session every measurement main runs in: `local[cpus]`, one shuffle
-  * partition per core, AQE on, UTC, no UI. Bench, Verify and Profile build
-  * it here so their numbers come from the same configuration.
+/** The session the measurement and artifact mains run in: `local[cpus]`,
+  * one shuffle partition per core, AQE on, UTC, no UI. Bench, Verify, Profile and the artifact
+  * dumps (PlanFingerprintDump, BpeVocabDump) build it here so their
+  * numbers come from the same configuration.
   */
 object BenchSession {
 

@@ -14,7 +14,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One completed stage attempt, from its aggregated task metrics. Times
   * are milliseconds; `spillBytes` is the in-memory size of what spilled;
-  * `maxTaskMs` is the slowest task's run time.
+  * `maxTaskMs` is the slowest task's run time and `peakExecMemBytes` the
+  * largest peak execution memory (sort, aggregation and join buffers) of
+  * any one task.
   */
 final case class StageRow(
     stageId: Int,
@@ -26,7 +28,8 @@ final case class StageRow(
     fetchWaitMs: Long,
     spillBytes: Long,
     shuffleWriteBytes: Long,
-    maxTaskMs: Long)
+    maxTaskMs: Long,
+    peakExecMemBytes: Long)
 
 /** What [[StageRecorder.record]] saw while its body ran: the body's value,
   * its wall time, every stage that completed, every query execution
@@ -54,13 +57,15 @@ object StageRecorder {
 
   def record[T](spark: SparkSession)(body: => T): Recording[T] = {
     val completed = new ConcurrentLinkedQueue[StageRow]
-    val maxTask = new ConcurrentHashMap[Int, java.lang.Long]
+    // per stage: (slowest task's run ms, largest task peak execution memory)
+    val perTask = new ConcurrentHashMap[Int, (Long, Long)]
     val executions = new ConcurrentLinkedQueue[QueryExecution]
     val stageListener = new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskMetrics != null)
-          maxTask.merge(te.stageId, te.taskMetrics.executorRunTime,
-            (a, b) => math.max(a.longValue, b.longValue))
+          perTask.merge(te.stageId,
+            (te.taskMetrics.executorRunTime, te.taskMetrics.peakExecutionMemory),
+            (a, b) => (math.max(a._1, b._1), math.max(a._2, b._2)))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val tm = si.taskMetrics
@@ -74,7 +79,8 @@ object StageRecorder {
           fetchWaitMs = tm.shuffleReadMetrics.fetchWaitTime,
           spillBytes = tm.memoryBytesSpilled,
           shuffleWriteBytes = tm.shuffleWriteMetrics.bytesWritten,
-          maxTaskMs = 0L))
+          maxTaskMs = 0L,
+          peakExecMemBytes = 0L))
       }
     }
     val queryListener = new QueryExecutionListener {
@@ -92,7 +98,8 @@ object StageRecorder {
       val spawned = for (a <- forks0; b <- forkCount()) yield b - a
       GraftPlans.drainListenerBus(spark)
       val stages = completed.asScala.toSeq.sortBy(_.stageId).map { s =>
-        s.copy(maxTaskMs = Option(maxTask.get(s.stageId)).fold(0L)(_.longValue))
+        val (ms, peak) = Option(perTask.get(s.stageId)).getOrElse((0L, 0L))
+        s.copy(maxTaskMs = ms, peakExecMemBytes = peak)
       }
       Recording(value, wall, stages, executions.asScala.toSeq, spawned)
     } finally {

@@ -26,7 +26,7 @@ import org.apache.spark.sql.DataFrame
   * The 8 MB default keeps the SCALE behavior byte-identical to the old
   * constants: any corpus at or above 256 MB (= 8 MB × 32, exactly the
   * sampled-tier floor in NearDupLsh) clamps back to the old width on a
-  * 32-core session, so ScaleSmoke-sized runs keep their measured plans
+  * 32-core session, so scale-workload-sized runs keep their measured plans
   * — only the small-corpus regime sheds the fixed overhead. Relations
   * whose sources report no statistics default to Long.MaxValue bytes and
   * take the old full-width path — the conservative direction.

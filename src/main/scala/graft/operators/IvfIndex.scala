@@ -124,8 +124,8 @@ object IvfIndex extends PersistedIndex {
     * [[graft.functions.NearestCentroid]]): one codegen'd argmin loop
     * per row, zero join fan-out, zero shuffle. The former
     * join-window-filter formulation materialized corpus × nlist rows
-    * into per-task window sorts and overflowed the 10M ScaleSmoke's
-    * disk; the quantizer is nlist ≤ 65536 rows that k-means already
+    * into per-task window sorts and overflowed the disk of the 10M
+    * ivf_lifecycle scale run; the quantizer is nlist ≤ 65536 rows that k-means already
     * collects, so baking it into the expression is the
     * broadcast-small-side shape, not a new collect.
     */

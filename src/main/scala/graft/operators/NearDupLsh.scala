@@ -6,7 +6,8 @@ import graft.functions.GraftFunctions
 
 /** MinHash+LSH near-duplicate mining over any (doc_id, text) frame — the
   * reusable operator behind the `dd_minhash_lsh` query and the
-  * ScaleSmoke harness.
+  * `minhash_lsh`, `lsh` and `stream_lsh` scale workloads
+  * (graft.ScaleWorkloads).
   *
   * Pipeline: 3-gram shingles → k=32 native MinHash signature → b=8/r=4
   * banding → candidate pairs generated INSIDE each (band, band_hash)
@@ -656,7 +657,7 @@ object NearDupLsh extends PersistedIndex {
     //      rows reach the shuffle funnels them into single reduce
     //      tasks whose sort/spill machinery OOMs an 8 GB heap at 10M
     //      docs (observed: UnsafeSorterSpillReader allocation failure
-    //      in the ScaleSmoke minhash line). A key that big cannot hide
+    //      in the 10M minhash_lsh scale run). A key that big cannot hide
     //      from a 1% sample (est > 5x cap needs a true size >~ 5x cap;
     //      Poisson tails make a false positive on an under-cap bucket
     //      ~1e-60 at the default cap), and the sample pass costs 1% of

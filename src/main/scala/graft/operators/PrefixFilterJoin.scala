@@ -60,7 +60,7 @@ object PrefixFilterJoin extends PersistedIndex {
     // sort-merges ~38 exploded rows per doc — at 10M docs that is
     // 380M sorted rows, and the extra column tipped the unwindowed
     // join from heavy-spill-but-completes into executor OOM on the
-    // 8 GB ScaleSmoke heap. The windowed variant pays for exactly what
+    // 8 GB heap of the 10M ppjoin scale run. The windowed variant pays for exactly what
     // it uses.
     val windowed = charWindow >= 0
     val ncCols: Seq[org.apache.spark.sql.Column] =

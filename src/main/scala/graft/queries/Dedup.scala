@@ -549,7 +549,7 @@ object Dedup {
       Some(sliceOracle(clusterCanonicalOracle))),
 
     // MinHash + LSH near-dup pairs, rescored with exact Jaccard — the
-    // graft.operators.NearDupLsh pipeline (shared with ScaleSmoke).
+    // graft.operators.NearDupLsh pipeline (shared with graft.ScaleWorkloads).
     // Oracled via the HUGEINT replay (minhashLshOracle); recall vs brute
     // force is additionally asserted in DedupSpec.
     GraftQuery(
@@ -877,9 +877,10 @@ object Dedup {
 
     // The hash-keyed flavor of dd_span_dupes — the 100 TB shape: the
     // span-keyed shuffle carries a fixed 16-byte digest instead of the
-    // span text (ScaleSmoke measures 3.9-9.7× less shuffle at 1M-10M
-    // docs with xxhash64; here md5 so BOTH engines compute the identical
-    // key and the gate hash-checks the whole pipeline). Span text is
+    // span text (the span_dupes scale workload measured 3.9-9.7× less
+    // shuffle at 1M-10M docs with xxhash64; here md5 so BOTH engines
+    // compute the identical key and the gate hash-checks the whole
+    // pipeline). Span text is
     // recoverable by re-scanning with a digest filter when a hit needs
     // inspection — the scan is cheaper than shipping every span.
     GraftQuery(

@@ -245,7 +245,7 @@ object GraftJsonSink {
     }
   }
 
-  private[sources] def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)
       try s.iterator().asScala.foreach(deleteRecursively)

@@ -48,7 +48,7 @@ object GraftPlans {
 
   /** Block until the SparkContext's async listener bus has delivered
     * every queued event (bounded by `timeoutMillis`). Measurement code
-    * that reads SparkListener-accumulated metrics (e.g. ScaleSmoke's
+    * that reads SparkListener-accumulated metrics (e.g. StageRecorder's
     * shuffle-byte counters) needs this barrier — a fixed sleep
     * undercounts whenever stage-completed events arrive late under
     * load. `SparkContext.listenerBus` is `private[spark]`, hence this

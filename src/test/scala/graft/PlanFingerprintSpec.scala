@@ -17,17 +17,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanFingerprintSpec extends AnyFunSuite {
 
   test("physical-plan digests match the committed baseline") {
-    // fresh session state so another suite's conf/catalog changes can't
-    // leak into the digests; pinned to the baseline's config (AQE off,
-    // 4 shuffle partitions)
-    val spark = PlanFingerprint.pin(SparkTestSession.spark.newSession())
-    val dir = "/root/testdata/sf0.001"
     val baselineFile = java.nio.file.Paths.get(PlanFingerprint.BaselinePath)
     assert(java.nio.file.Files.exists(baselineFile),
       s"missing $baselineFile — generate it with `sbt \"runMain graft.PlanFingerprintDump\"`")
     val baseline = PlanFingerprint.parseBaseline(
       java.nio.file.Files.readString(baselineFile))
-    val current = PlanFingerprint.digestAll(spark, dir)
+    val current = PlanFingerprint.digestAll(BuiltQueries.all)
     val problems = scala.collection.mutable.Buffer.empty[String]
     current.foreach { case (name, d) =>
       baseline.get(name) match {

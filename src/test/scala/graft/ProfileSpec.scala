@@ -1,11 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.GraftPlans
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,6 +51,34 @@ class ProfileSpec extends AnyFunSuite {
     assert(stageTaskMs == taskMs.get())
     assert(stageShuffle == shuffle.get())
     assert(stageShuffle > 0, "q5 shuffles its final aggregate")
+  }
+
+  test("peak_exec_mem_bytes is each stage's largest task peak, > 0 where q5 aggregates") {
+    val peaks = new ConcurrentHashMap[Int, Long]
+    val plain = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          peaks.merge(te.stageId, te.taskMetrics.peakExecutionMemory, (a, b) => math.max(a, b))
+    }
+    Bench.run(spark, dir, "q5_region_revenue")
+    spark.sparkContext.addSparkListener(plain)
+    val stages = try {
+      val rec = StageRecorder.record(spark)(Bench.run(spark, dir, "q5_region_revenue"))
+      GraftPlans.drainListenerBus(spark)
+      new ObjectMapper().readTree(Profile.toJson("q5_region_revenue", dir, Seq(rec)))
+        .get("stages").elements().asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(plain)
+
+    assert(stages.nonEmpty)
+    stages.foreach { st =>
+      assert(st.get("peak_exec_mem_bytes").asLong() == peaks.get(st.get("stage").asInt()),
+        st.toString)
+    }
+    // the partial aggregate's hash map: the stage that writes the final
+    // aggregate's shuffle holds execution memory
+    val aggregating = stages.filter(_.get("shuffle_write_bytes").asLong() > 0)
+    assert(aggregating.nonEmpty)
+    assert(aggregating.forall(_.get("peak_exec_mem_bytes").asLong() > 0), aggregating.mkString("\n"))
   }
 
   test("the operator walk descends below a broadcast exchange inside a subquery") {
