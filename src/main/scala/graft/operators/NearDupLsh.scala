@@ -12,7 +12,8 @@ import graft.functions.GraftFunctions
   * Pipeline: 3-gram shingles → k=32 native MinHash signature → b=8/r=4
   * banding → candidate pairs generated INSIDE each (band, band_hash)
   * bucket → exact Jaccard rescoring (sorted hashed shingles, merge-walk
-  * expression) only on candidates. The only shuffles are on narrow
+  * expression) only on candidates, through the rescore PrefixFilterJoin
+  * shares (ExactPairs.rescore). The only shuffles are on narrow
   * (band, band_hash) int keys and the candidate ids; document payloads
   * never fan out.
   *
@@ -645,7 +646,6 @@ object NearDupLsh extends PersistedIndex {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = docs.sparkSession
     GraftFunctions.register(spark)
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // Three-tier bucket build — one FULL signature pass, bounded memory
     // at every tier:
     //
@@ -715,49 +715,7 @@ object NearDupLsh extends PersistedIndex {
       // only partners later in doc order: halves the fan-out pre-explode
       .select(col("doc_a"),
         explode(filter(col("ds"), b => b > col("doc_a"))).as("doc_b"))
-      // explicit width: the candidate set is bytes-small but
-      // compute-heavy, and AQE would coalesce it to ~1 partition,
-      // serializing the rescoring. The repartition's hash partitioning
-      // is reused by dropDuplicates — one exchange, not two. Width is
-      // derived from the corpus plan-stat size (see AdaptiveWidth): a
-      // one-partition-worth corpus skips the pin entirely — at bench
-      // scale the 32-wide REPARTITION_BY_NUM cost ~10× the rescore
-      // compute in per-task fixed overhead — while 256 MB+ corpora keep
-      // the old shuffle-partitions width exactly.
-      .transform { cand =>
-        // r18 (VERDICT r17 #5): width = max(corpus derivation, candidate
-        // subtree derivation) — see PrefixFilterJoin.pairs for the
-        // rationale and the limits of static stats here
-        val w = math.max(AdaptiveWidth.of(docs, shufflePartitions),
-          AdaptiveWidth.of(cand, shufflePartitions))
-        cand.sparkSession.conf.set(
-          "spark.graft.debug.lastCandidateWidth", w.toString)
-        if (w > 1) cand.repartition(w, col("doc_a"), col("doc_b")) else cand
-      }
-      .dropDuplicates("doc_a", "doc_b")
-    // stacked rescore: the two pair sides become (pair, role, doc_id)
-    // rows so ONE join against the shingle relation attaches both
-    // arrays — one corpus scan + ngram pass instead of two, and the
-    // arrays regroup on the tiny pair key, never on a corpus-sized one
-    val sets = docs.select(col("doc_id"),
-      shExpr.as("sh"))
-    val stacked = candidates
-      .select(explode(array(
-        struct(struct(col("doc_a"), col("doc_b")).as("pair"),
-          lit(0).as("role"), col("doc_a").as("doc_id")),
-        struct(struct(col("doc_a"), col("doc_b")).as("pair"),
-          lit(1).as("role"), col("doc_b").as("doc_id")))).as("x"))
-      .select(col("x.pair").as("pair"), col("x.role").as("role"),
-        col("x.doc_id").as("doc_id"))
-    stacked.join(sets, Seq("doc_id"))
-      .groupBy(col("pair"))
-      // exactly one non-null per role within a pair, so first() is
-      // deterministic in value
-      .agg(
-        first(when(col("role") === 0, col("sh")), ignoreNulls = true).as("sh_a"),
-        first(when(col("role") === 1, col("sh")), ignoreNulls = true).as("sh_b"))
-      .select(col("pair.doc_a").as("doc_a"), col("pair.doc_b").as("doc_b"),
-        GraftFunctions.sorted_set_jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    ExactPairs.rescore(candidates, docs,
+      docs.select(col("doc_id"), shExpr.as("sh")), threshold)
   }
 }

@@ -18,16 +18,17 @@ import graft.functions.{GraftFunctions, NGramHashes}
   * INSIDE each bucket (so the prefix relation is computed exactly once —
   * no self-join, no cache, no eager materialization on the timed path),
   * a length-ratio filter plus PPJoin's positional filter prune further,
-  * and the merge-walk Jaccard expression rescores exactly. No false
-  * negatives: the result is identical to the all-pairs join at any scale.
+  * and the merge-walk Jaccard expression rescores exactly (ExactPairs,
+  * shared with NearDupLsh). No false negatives: the result is identical
+  * to the all-pairs join at any scale.
   *
   * The threshold is a rational num/den so the prefix length is computed
   * in exact integer arithmetic — ceil(0.8·|d|) in double is off by one
   * for |d| divisible by 5.
   *
   * Nothing is cached: the shingle relation is recomputed per consumer
-  * (one ranked pass + two rescore sides). At 100 TB the shingle arrays
-  * would never fit in cache anyway — recompute-from-scan is the shape
+  * (one ranked pass + one stacked rescore lookup). At 100 TB the shingle
+  * arrays would never fit in cache anyway — recompute-from-scan is the shape
   * that survives scale, and at bench scale the ngram pass is scan-bound
   * and cheap. This also means repeated invocations leak nothing in the
   * block manager.
@@ -138,7 +139,6 @@ object PrefixFilterJoin extends PersistedIndex {
       s"($num * (sz_a + sz_b) + ${num + den - 1}) div ${num + den}")
     val uBound =
       least(col("sz_a") - (col("p_a") + 1), col("sz_b") - (col("p_b") + 1)) + 1
-    val shufflePartitions = s.conf.get("spark.sql.shuffle.partitions").toInt
     val candidates = buckets
       .select(explode(col("ds")).as("a"), col("ds"))
       // only partners later in doc order: halves the fan-out pre-explode
@@ -160,61 +160,7 @@ object PrefixFilterJoin extends PersistedIndex {
         (if (windowed) abs(col("nc_b") - col("nc_a")) <= charWindow
          else lit(true)))
       .select(col("doc_a"), col("doc_b"))
-      // one exchange, not two: an explicit-width repartition on the pair key
-      // followed by dropDuplicates reuses that partitioning for the dedup
-      // aggregate (no second shuffle), and the explicit numPartitions keeps
-      // AQE from coalescing the bytes-small but compute-heavy candidate set
-      // to ~1 partition, which would serialize the rescoring. Width caps at
-      // spark.sql.shuffle.partitions — a data/deployment-tunable knob —
-      // not defaultParallelism (a fixed cluster-shaped constant that stops
-      // scaling when the candidate set needs more partitions than cores) —
-      // and is derived from the CORPUS plan-stat size (candidate volume
-      // scales with the corpus): at bench scale the explicit 32-wide pin
-      // cost ~10× the rescore compute in per-task fixed overhead, so a
-      // one-partition-worth corpus skips the pin and lets dropDuplicates'
-      // ENSURE_REQUIREMENTS exchange coalesce under AQE instead.
-      .transform { cand =>
-        // r18 (VERDICT r17 #5): the pin width is the MAX of the corpus
-        // derivation (r17's) and the CANDIDATE subtree's own plan-stat
-        // derivation. The candidate subtree embeds the shingle-explosion
-        // and bucket-pairing operators, so its estimate is the closest
-        // thing static stats offer to pair volume — but Catalyst's
-        // width-ratio scaling can also shrink it BELOW the corpus bytes
-        // (candidates project to two longs), so the corpus term stays as
-        // the floor: never looser than r17, tighter whenever the
-        // candidate estimate is larger. True pair volume is
-        // data-dependent and invisible to any static stat — the guard
-        // below the pin remains AQE's byte-based sizing of every
-        // downstream exchange. A breadcrumb conf records the width for
-        // probes; it never feeds planning.
-        val w = math.max(AdaptiveWidth.of(docs, shufflePartitions),
-          AdaptiveWidth.of(cand, shufflePartitions))
-        cand.sparkSession.conf.set(
-          "spark.graft.debug.lastCandidateWidth", w.toString)
-        if (w > 1) cand.repartition(w, col("doc_a"), col("doc_b")) else cand
-      }
-      .dropDuplicates("doc_a", "doc_b")
-    // rescore: stack the two pair sides into (pair, role, doc_id) rows so
-    // ONE join against `sets` attaches both shingle arrays — one corpus
-    // scan + ngram pass instead of two (the arrays regroup on the tiny
-    // pair key, never on a corpus-sized one).
-    val stacked = candidates
-      .select(explode(array(
-        struct(struct(col("doc_a"), col("doc_b")).as("pair"),
-          lit(0).as("role"), col("doc_a").as("doc_id")),
-        struct(struct(col("doc_a"), col("doc_b")).as("pair"),
-          lit(1).as("role"), col("doc_b").as("doc_id")))).as("x"))
-      .select(col("x.pair").as("pair"), col("x.role").as("role"), col("x.doc_id").as("doc_id"))
-    stacked.join(sets.select(col("doc_id"), col("sh")), Seq("doc_id"))
-      .groupBy(col("pair"))
-      // exactly one non-null per role within a pair, so first() is
-      // deterministic in value
-      .agg(
-        first(when(col("role") === 0, col("sh")), ignoreNulls = true).as("sh_a"),
-        first(when(col("role") === 1, col("sh")), ignoreNulls = true).as("sh_b"))
-      .select(col("pair.doc_a").as("doc_a"), col("pair.doc_b").as("doc_b"),
-        GraftFunctions.sorted_set_jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= lit(threshold))
+    ExactPairs.rescore(candidates, docs, sets, threshold)
   }
 
   // ------------------------------------------------------------------

@@ -376,8 +376,7 @@ object Dedup {
     val standing = graft.operators.ConnectedComponents.run(
       graft.operators.PrefixFilterJoin.pairs(oldDocs, num = 4, den = 5)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_cc_inc_gate").toString
+    val idx = TempDirs("graft_cc_inc_gate")
     graft.operators.PrefixFilterJoin.writeIndex(oldDocs, idx, num = 4, den = 5)
     val mixed = graft.operators.PrefixFilterJoin
       .pairsAgainstIndex(s, newDocs, idx, num = 4, den = 5)
@@ -397,8 +396,7 @@ object Dedup {
     val docs = docs0
       .transform(graft.operators.AdaptiveWidth.spread) // scale-adaptive (was defaultParallelism)
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_ppjoin_idx_gate").toString
+    val idx = TempDirs("graft_ppjoin_idx_gate")
     graft.operators.PrefixFilterJoin.writeIndex(
       docs.filter(col("doc_id") % 10 =!= 7), idx, num = 4, den = 5)
     graft.operators.PrefixFilterJoin.pairsAgainstIndex(
@@ -613,8 +611,8 @@ object Dedup {
           .transform(graft.operators.AdaptiveWidth.spread) // scale-adaptive (was defaultParallelism)
           .select(col("doc_id"), col("text"))
         val newDocs = docs.filter(col("doc_id") % 10 === 7)
-        val idx = java.nio.file.Files
-          .createTempDirectory("graft_inc_idx_gate").toString
+        // a subdir: the index's _bands/_stats siblings stay inside the temp dir
+        val idx = s"${TempDirs("graft_inc_idx_gate")}/idx"
         graft.operators.NearDupLsh.writeIndex(
           docs.filter(col("doc_id") % 10 =!= 7), idx)
         val matches = graft.operators.NearDupLsh
@@ -765,7 +763,7 @@ object Dedup {
     GraftQuery(
       "dd_stream_store",
       (s, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_ds_gate").toString
+        val root = TempDirs("graft_ds_gate")
         val cat = s"ds${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -807,8 +805,7 @@ object Dedup {
     GraftQuery(
       "dd_stream_lsh_index",
       (s, dir) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ndis_gate").toString
+        val root = TempDirs("graft_ndis_gate")
         val ingest = graft.streaming.NearDupIngest(s"$root/log",
           threshold = 0.8,
           maxBucket = graft.operators.NearDupLsh.DefaultMaxBucket)
@@ -831,8 +828,7 @@ object Dedup {
     GraftQuery(
       "dd_stream_lsh_compact",
       (s, dir) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ndis_cpt").toString
+        val root = TempDirs("graft_ndis_cpt")
         val docs = Tables.table(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         def part(i: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === i)
@@ -862,8 +858,7 @@ object Dedup {
     GraftQuery(
       "dd_stream_ppjoin_index",
       (s, dir) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ppis_gate").toString
+        val root = TempDirs("graft_ppis_gate")
         val ingest = graft.streaming.PpJoinIngest(s"$root/log", num = 4, den = 5)
         graft.streaming.IndexStream.runToCompletion(
           s, Tables.table(s, dir, "documents"), k = 4, ingest,

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{GraftQuery, Tables}
@@ -472,7 +471,7 @@ object Pipeline {
         val proj = Tables.table(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
-        val tmp = Files.createTempDirectory("graft_orc_rt").toString
+        val tmp = TempDirs("graft_orc_rt")
         proj.write.mode("overwrite").orc(tmp)
         s.read.schema(proj.schema).orc(tmp)
           .groupBy(col("o_orderpriority"))

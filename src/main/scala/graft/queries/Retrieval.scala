@@ -98,8 +98,7 @@ object Retrieval {
       (s, dir) => {
         val docs = Tables.table(s, dir, "documents")
           .select(col("doc_id"), col("text"))
-        val idx = java.nio.file.Files
-          .createTempDirectory("graft_bm25_idx_gate").toString
+        val idx = TempDirs("graft_bm25_idx_gate")
         Bm25Index.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
         Bm25Index.appendIndex(docs.filter(col("doc_id") % 10 === 7), idx,
           batchId = 0L)
@@ -122,8 +121,7 @@ object Retrieval {
       (s, dir) => {
         val docs = Tables.table(s, dir, "documents")
           .select(col("doc_id"), col("text"))
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_bm25_stream_gate").toString
+        val root = TempDirs("graft_bm25_stream_gate")
         Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$root/idx")
         graft.streaming.IndexStream.runToCompletion(
           s, docs.filter(col("doc_id") % 2 =!= 0), k = 3,

@@ -218,7 +218,7 @@ object Similarity {
     // corpus in memory for a build that runs nightly is pure block-
     // manager pressure at scale
     val e = corpus(s, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val idx = TempDirs("graft_ivf_idx")
     val centroids = graft.operators.IvfIndex.train(
       e.select(col("vec_id"), col("v")), "v", nlist = 16, iters = 2)
     centroids.write.mode("overwrite").parquet(s"$idx/centroids")
@@ -272,7 +272,7 @@ object Similarity {
     // ivfPersistedAnn; the per-subspace codebook training collects
     // nlist-bounded aggregates, never the corpus
     val e = corpus(s, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
+    val idx = TempDirs("graft_ivfpq_idx")
     val centroids = graft.operators.IvfIndex.train(
       e.select(col("vec_id"), col("v")), "v", nlist = 16, iters = 2)
     centroids.write.mode("overwrite").parquet(s"$idx/centroids")
@@ -439,8 +439,7 @@ object Similarity {
       "sim_ivf_stream",
       (s, dir) => {
         val e = corpus(s, dir)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ivf_stream_gate").toString
+        val root = TempDirs("graft_ivf_stream_gate")
         graft.operators.IvfIndex.writeIndex(
           e.filter(col("vec_id") % 10 =!= 7), s"$root/idx", nlist = 16, iters = 2)
         graft.streaming.IndexStream.runToCompletion(
@@ -489,8 +488,7 @@ object Similarity {
       "sim_ivf_drift",
       (s, dir) => {
         val e = corpus(s, dir)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ivf_drift_gate").toString
+        val root = TempDirs("graft_ivf_drift_gate")
         val standing = e.select(col("vec_id"), col("v"), col("norm2"))
         val drifted = e.select(
           (col("vec_id") + 1000000L).as("vec_id"),
@@ -621,8 +619,7 @@ object Similarity {
       "sim_lsh_ann_persisted",
       (s, dir) => {
         val e = corpus(s, dir)
-        val idx = java.nio.file.Files
-          .createTempDirectory("graft_lshann_idx").toString
+        val idx = TempDirs("graft_lshann_idx")
         def slice(pred: Column) = e.filter(pred)
           .select(col("vec_id"), col("v"), col("norm2"))
         graft.operators.LshAnnIndex.writeIndex(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{GraftQuery, Tables}
@@ -26,7 +25,7 @@ object SourceRoundtrip {
         val proj = Tables.table(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderdate"))
-        val tmp = Files.createTempDirectory("graft_csv_rt").toString
+        val tmp = TempDirs("graft_csv_rt")
         proj.write.mode("overwrite")
           .option("header", "true")
           .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
@@ -55,7 +54,7 @@ object SourceRoundtrip {
       (s, dir) => {
         val proj = Tables.table(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
-        val tmp = Files.createTempDirectory("graft_json_rt").toString
+        val tmp = TempDirs("graft_json_rt")
         proj.write.mode("overwrite").json(tmp)
         s.read.schema(proj.schema).json(tmp)
           .groupBy(col("lang"))
@@ -80,7 +79,7 @@ object SourceRoundtrip {
         val proj = Tables.table(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
             col("l_discount"), col("l_returnflag"))
-        val tmp = Files.createTempDirectory("graft_orc_rt").toString
+        val tmp = TempDirs("graft_orc_rt")
         proj.write.mode("overwrite").partitionBy("l_returnflag").orc(tmp)
         s.read.orc(tmp)
           .filter(col("l_returnflag") === "A" && col("l_quantity") >= 25)
@@ -108,7 +107,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_catalog_roundtrip",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_cat_rt").toString
+        val root = TempDirs("graft_cat_rt")
         val cat = s"rt${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -147,7 +146,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_catalog_parquet_roundtrip",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_cat_pq_rt").toString
+        val root = TempDirs("graft_cat_pq_rt")
         val cat = s"rtp${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -188,7 +187,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_mor_delete",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_mor_gate").toString
+        val root = TempDirs("graft_mor_gate")
         val cat = s"mor${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -248,7 +247,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_type_widening",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_widen").toString
+        val root = TempDirs("graft_widen")
         val cat = s"tw${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -287,7 +286,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_expire_snapshots",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_exp_gate").toString
+        val root = TempDirs("graft_exp_gate")
         val cat = s"ex${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -333,7 +332,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_merge_lifecycle",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_mg_gate").toString
+        val root = TempDirs("graft_mg_gate")
         val cat = s"mg${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -396,7 +395,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_wap_publish",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_wap_gate").toString
+        val root = TempDirs("graft_wap_gate")
         val cat = s"wp${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -444,7 +443,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_update_lifecycle",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_upd_gate").toString
+        val root = TempDirs("graft_upd_gate")
         val cat = s"up${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -480,7 +479,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_compact_small",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_cs_gate").toString
+        val root = TempDirs("graft_cs_gate")
         val cat = s"cs${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -520,7 +519,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_timestamp_travel",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_ts_gate").toString
+        val root = TempDirs("graft_ts_gate")
         val cat = s"tt${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -554,7 +553,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_rename_column",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_rn_gate").toString
+        val root = TempDirs("graft_rn_gate")
         val cat = s"rn${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -589,7 +588,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_bucketed_join",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_bkt").toString
+        val root = TempDirs("graft_bkt")
         val db = s"bkt${System.nanoTime()}"
         s.sql(s"CREATE DATABASE $db LOCATION '$root'")
         Tables.table(s, dir, "orders")
@@ -627,7 +626,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_partitioned_join",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_spjq").toString
+        val root = TempDirs("graft_spjq")
         val cat = s"spj${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -686,7 +685,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_bloom_skip",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_bloom_gate").toString
+        val root = TempDirs("graft_bloom_gate")
         val cat = s"bl${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -744,7 +743,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_table_stream",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_tstr").toString
+        val root = TempDirs("graft_tstr")
         val cat = s"ts${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -764,8 +763,7 @@ object SourceRoundtrip {
             sum(col("o_totalprice").cast(dec6)).cast(DoubleType).as("total"),
             sum(col("o_orderkey")).as("key_sum"))
           .writeStream.outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_tstr_ckpt").toString)
+          .option("checkpointLocation", TempDirs("graft_tstr_ckpt"))
           .start()
         try q.processAllAvailable()
         finally q.stop()
@@ -790,7 +788,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_stats_broadcast",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_stats_bc").toString
+        val root = TempDirs("graft_stats_bc")
         val cat = s"sb${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -847,7 +845,7 @@ object SourceRoundtrip {
     GraftQuery(
       "src_agg_pushdown",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft_aggp_gate").toString
+        val root = TempDirs("graft_aggp_gate")
         val cat = s"ap${System.nanoTime()}"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root", root)

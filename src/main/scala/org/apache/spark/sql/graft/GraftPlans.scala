@@ -58,6 +58,13 @@ object GraftPlans {
   def drainListenerBus(spark: SparkSession, timeoutMillis: Long = 30000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
 
+  /** Delete `dir`, with everything under it, when the JVM exits: Spark's
+    * own temp-dir shutdown hook, whose `ShutdownHookManager` is
+    * `private[spark]`.
+    */
+  def deleteOnShutdown(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
   /** First k rows per key group under `order` (pass a total order for
     * deterministic results). Plans to the two-phase heap operator —
     * see graft.plans.TopKPerKey.
