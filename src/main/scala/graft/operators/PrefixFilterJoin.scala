@@ -11,27 +11,28 @@ import graft.functions.{GraftFunctions, NGramHashes}
   *
   * For Jaccard threshold t = num/den, any pair with jaccard >= t must
   * share at least one shingle within each document's first
-  * (|d| - ceil(t·|d|) + 1) shingles under a GLOBAL rarest-first order. So:
-  * one map-side-combinable frequency pass builds the order, prefix
-  * shingles are grouped into an inverted index (tiny buckets on Zipfian
-  * corpora — the prefix keeps only rare shingles), pairs are generated
-  * INSIDE each bucket (so the prefix relation is computed exactly once —
-  * no self-join, no cache, no eager materialization on the timed path),
-  * a length-ratio filter plus PPJoin's positional filter prune further,
-  * and the merge-walk Jaccard expression rescores exactly (ExactPairs,
-  * shared with NearDupLsh). No false negatives: the result is identical
-  * to the all-pairs join at any scale.
+  * (|d| - ceil(t·|d|) + 1) shingles under ANY total order both rank by.
+  * Here that is rarest-first by one broadcast frequency table, so each
+  * doc ranks its own shingles in place and the exploded shingle rows
+  * never cross a shuffle. Prefix shingles are grouped into an inverted
+  * index (tiny buckets on Zipfian corpora), pairs are generated INSIDE
+  * each bucket (the prefix relation is computed once — no self-join, no
+  * cache, no eager materialization on the timed path), a length-ratio
+  * filter plus PPJoin's positional filter prune further, and the
+  * merge-walk Jaccard expression rescores exactly (ExactPairs, shared
+  * with NearDupLsh). No false negatives: the result is identical to the
+  * all-pairs join at any scale.
   *
   * The threshold is a rational num/den so the prefix length is computed
   * in exact integer arithmetic — ceil(0.8·|d|) in double is off by one
   * for |d| divisible by 5.
   *
   * Nothing is cached: the shingle relation is recomputed per consumer
-  * (one ranked pass + one stacked rescore lookup). At 100 TB the shingle
-  * arrays would never fit in cache anyway — recompute-from-scan is the shape
-  * that survives scale, and at bench scale the ngram pass is scan-bound
-  * and cheap. This also means repeated invocations leak nothing in the
-  * block manager.
+  * (the frequency table, the ranked prefix and the rescore lookup). At
+  * 100 TB the shingle arrays would never fit in cache anyway —
+  * recompute-from-scan is the shape that survives scale, and at bench
+  * scale the ngram pass is scan-bound and cheap. This also means
+  * repeated invocations leak nothing in the block manager.
   */
 object PrefixFilterJoin extends PersistedIndex {
 
@@ -56,66 +57,47 @@ object PrefixFilterJoin extends PersistedIndex {
     GraftFunctions.register(s)
     val threshold = num.toDouble / den.toDouble
     // nc: the doc's char length, carried through the prefix machinery
-    // ONLY when a window is requested. Unconditionally widening the
-    // (doc_id, sz, h) rows by 8 bytes sounds free, but the freq join
-    // sort-merges ~38 exploded rows per doc — at 10M docs that is
-    // 380M sorted rows, and the extra column tipped the unwindowed
-    // join from heavy-spill-but-completes into executor OOM on the
-    // 8 GB heap of the 10M ppjoin scale run. The windowed variant pays for exactly what
-    // it uses.
+    // ONLY when a window is requested: every carried column widens each
+    // of the ~38 exploded rows per doc in the rank sort, and at 10M docs
+    // the extra 8 bytes tipped an earlier shape of the unwindowed join
+    // from heavy-spill-but-completes into executor OOM on an 8 GB heap.
+    // The windowed variant pays for exactly what it uses.
     val windowed = charWindow >= 0
-    val ncCols: Seq[org.apache.spark.sql.Column] =
-      if (windowed) Seq(col("nc")) else Nil
-    // The empty-set filter is the CHEAP token-count predicate, not
-    // `size(sh) > 0`: predicate pushdown substitutes aliases, so an
-    // sh-referencing filter lands on the scan as a SECOND full
-    // `ngram_hashes` evaluation per row (tokens >= 3 ⟺ at least one
-    // window ⟺ sz >= 1, so semantics match — the same rule as
-    // NearDupLsh.sigRelation). The coalesce makes sh non-nullable so no
-    // consumer ever infers an IsNotNull(ngram_hashes(...)) constraint
-    // that pushdown would re-evaluate at the scan.
-    def sets: DataFrame = {
-      val base = docs
-        .filter(size(split(col("text"), " ")) >= NGramHashes.N)
-        .select(
-          Seq(col("doc_id")) ++
-            (if (windowed) Seq(col("n_chars").as("nc")) else Nil) :+
-            GraftFunctions.ngram_hashes(
-              split(coalesce(col("text"), lit("")), " ")).as("sh"): _*)
-      base.withColumn("sz", size(col("sh")))
-    }
-    // global rarest-first order: frequency, ties by hash. r18: the
-    // frequency is a COUNT WINDOW over the one exploded relation, not a
-    // separate freq aggregate joined back — the old shape paid a second
-    // corpus scan + ngram pass to build freq and then clustered the
-    // exploded rows against it anyway (broadcast at small scale, SMJ on
-    // h at large scale, where both sides shuffled). The window clusters
-    // the exploded rows on h exactly once and the extra scan disappears
-    // at every scale; skew exposure is unchanged (the rank join always
-    // ended h-clustered in its non-broadcast regime). `sz` is re-derived
-    // as a count over the doc window, so the h-keyed exchange ships
-    // (doc_id[, nc], h) only — guide §2.3, project before the exchange.
-    // Same spill-safe window machinery as prefixRows (the
-    // collect_list+array_sort variant exhausted the unified pool at 10M
-    // docs); ranks and positions are value-identical: f counts the same
-    // (doc, h) rows the freq aggregate counted, and (f, h) stays a total
-    // order within a doc.
-    val exploded = docs
-      .filter(size(split(col("text"), " ")) >= NGramHashes.N)
-      .select(Seq(col("doc_id")) ++
-        (if (windowed) Seq(col("n_chars").as("nc")) else Nil) :+
-        explode(GraftFunctions.ngram_hashes(
-          split(coalesce(col("text"), lit("")), " "))).as("h"): _*)
-    val wH = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val wDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val wDocOrd = wDoc.orderBy(col("f"), col("h"))
-    val pref = exploded
-      .withColumn("f", count(lit(1)).over(wH))
-      .withColumn("sz", count(lit(1)).over(wDoc).cast("int"))
-      .withColumn("p", row_number().over(wDocOrd) - 1)
-      .filter(col("p") < prefixLenExpr(num, den))
-      .select(Seq(col("doc_id"), col("sz")) ++ ncCols ++
-        Seq(col("p"), col("h")): _*)
+    val carry = if (windowed) Seq("nc") else Nil
+    val ncCols = carry.map(col)
+    // Doc-local ranking: cluster the corpus by doc_id ONCE (the raw text,
+    // before the ngram pass), so the rank window below needs no exchange
+    // of the ~38 exploded rows per doc, and the rescore's `sets` lookup
+    // reuses the same exchange (null ids never join, so dropping them
+    // first keeps both reads of it identical). Width 1 (every
+    // bench-scale corpus) coalesces to one partition instead:
+    // SinglePartition satisfies every clustering downstream, so the whole
+    // join then plans no shuffle at all.
+    val w = AdaptiveWidth.of(docs, s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val sets = setsOf(
+      if (windowed) docs.withColumnRenamed("n_chars", "nc") else docs, carry,
+      d => if (w == 1) d.coalesce(1)
+        else d.filter(col("doc_id").isNotNull).repartition(w, col("doc_id")))
+    // The rarest-first order (coalesce(f, 0), h) ranks against ONE
+    // broadcast frequency table. At width 1 it counts every doc; dropping
+    // the f = 1 shingles (the bulk of a Zipfian vocabulary) maps them to
+    // 0, which keeps the exact (f, h) order. Above width 1 it counts the
+    // docs with pmod(xxhash64(doc_id), w) = 0 only. That sampled order is
+    // still one fixed total order, and the prefix, length and positional
+    // filters are lossless under any such order (as the frozen index
+    // order below), so no pair changes: a worse estimate only admits more
+    // candidates. It replaced a count window over the exploded rows
+    // clustered on h, then re-clustered on doc_id for the rank: two
+    // exchanges of every exploded row and a hot-key exposure on h
+    // (bench/PROFILE_r22_ppjoin.json). That window had replaced (r18) a
+    // freq aggregate joined back, see bench/ppjoin_windowf_ab_r18.md.
+    val sample =
+      if (w == 1) sets else sets.filter(pmod(xxhash64(col("doc_id")), lit(w)) === 0)
+    val freq = broadcast(sample
+      .select(explode(col("sh")).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("f"))
+      .filter(col("f") >= 2))
+    val pref = prefixRows(sets, freq, num, den, ncCols)
     // inverted index on prefix shingles: pairs are generated inside each
     // bucket, so the ranked-prefix subtree above is computed exactly once
     // (a prefix self-JOIN would read it twice, forcing a cache + eager
@@ -127,7 +109,7 @@ object PrefixFilterJoin extends PersistedIndex {
         Seq(col("doc_id"), col("sz")) ++ ncCols :+ col("p"): _*)).as("ds"))
       .filter(size(col("ds")) > 1)
     // positional filter (PPJoin's second pruning rule): a prefix shingle
-    // matching at 1-based positions (i, j) of the docs' globally-sorted
+    // matching at 1-based positions (i, j) of the docs' rank-sorted
     // shingle lists caps the possible overlap at min(|A|-i, |B|-j) + 1 —
     // everything shared sits at or after the match on both sides. A true
     // pair (jaccard >= t, i.e. overlap >= ceil(t/(1+t)·(|A|+|B|))) passes
@@ -227,14 +209,29 @@ object PrefixFilterJoin extends PersistedIndex {
     */
   val ServeCandidateHotFloor: Long = 8L
 
-  // cheap token-count filter + non-nullable sh — see `sets` in `pairs`
-  private def setsOf(docs: DataFrame): DataFrame =
+  /** (doc_id [, carry...], sh, sz) of the docs with a non-empty shingle
+    * set; `layout` repartitions their (doc_id [, carry...], text) rows
+    * before the ngram pass. The filter is the CHEAP token-count predicate,
+    * not `size(sh) > 0`: pushdown substitutes aliases, so an sh filter
+    * lands on the scan as a SECOND `ngram_hashes` evaluation per row
+    * (tokens >= 3 ⟺ sz >= 1 — the same rule as NearDupLsh.sigRelation).
+    * It counts the same `tokens` the ngram pass reads, so the guard an
+    * explode of `sh` infers folds into it (FoldKnownArraySizeGuards) and
+    * every consumer of one layout plans the same, reusable exchange. The
+    * coalesce makes sh non-nullable, so no IsNotNull(ngram_hashes(...))
+    * is ever inferred and re-evaluated at the scan.
+    */
+  private def setsOf(docs: DataFrame, carry: Seq[String] = Nil,
+      layout: DataFrame => DataFrame = identity): DataFrame = {
+    val keep = ("doc_id" +: carry).map(col)
+    val tokens = split(coalesce(col("text"), lit("")), " ")
     docs
-      .filter(size(split(col("text"), " ")) >= NGramHashes.N)
-      .select(col("doc_id"),
-        GraftFunctions.ngram_hashes(
-          split(coalesce(col("text"), lit("")), " ")).as("sh"))
+      .filter(size(tokens) >= NGramHashes.N)
+      .select(keep :+ col("text"): _*)
+      .transform(layout)
+      .select(keep :+ GraftFunctions.ngram_hashes(tokens).as("sh"): _*)
       .withColumn("sz", size(col("sh")))
+  }
 
   private def prefixLenExpr(num: Int, den: Int) =
     expr(s"sz - (($num * sz + ${den - 1}) div $den) + 1").cast("int")

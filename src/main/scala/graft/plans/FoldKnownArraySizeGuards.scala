@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, CreateArray, GreaterThan, GreaterThanOrEqual, Literal, PredicateHelper, Size}
+import org.apache.spark.sql.catalyst.expressions.{And, CreateArray, Expression, GreaterThan, GreaterThanOrEqual, Literal, PredicateHelper, Size}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions.NGramHashes
@@ -58,6 +58,10 @@ object FoldKnownArraySizeGuards extends Rule[LogicalPlan] with PredicateHelper {
           case Size(ca: CreateArray, _) => Literal(ca.children.length)
         }
         folded.foldable && folded.eval(null) == true
+      }.foldLeft(Seq.empty[Expression]) { (seen, c) =>
+        // a rewritten guard that repeats an explicit token-count filter
+        // is dropped, so the filter reads as if no guard was inferred
+        if (c.deterministic && seen.exists(_.semanticEquals(c))) seen else seen :+ c
       }
       if (kept.length == original.length && kept.corresponds(original)(_ eq _)) f
       else kept.reduceOption(And).map(Filter(_, child)).getOrElse(child)

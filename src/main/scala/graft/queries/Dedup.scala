@@ -255,9 +255,7 @@ object Dedup {
 
   private def ngramJaccardQ(s: SparkSession, documents: DataFrame): DataFrame =
     graft.operators.PrefixFilterJoin.pairs(
-      documents
-        .transform(graft.operators.AdaptiveWidth.spread) // scale-adaptive (was defaultParallelism)
-        .select(col("doc_id"), col("n_chars"), col("text")),
+      documents.select(col("doc_id"), col("n_chars"), col("text")),
       num = 4, den = 5, charWindow = 16)
 
   private val ngramJaccardOracle: String =
@@ -273,9 +271,7 @@ object Dedup {
 
   private def ppjoinQ(s: SparkSession, documents: DataFrame): DataFrame =
     graft.operators.PrefixFilterJoin.pairs(
-      documents
-        .transform(graft.operators.AdaptiveWidth.spread) // scale-adaptive (was defaultParallelism)
-        .select(col("doc_id"), col("text")),
+      documents.select(col("doc_id"), col("text")),
       num = 4, den = 5)
 
   private val ppjoinOracle: String =

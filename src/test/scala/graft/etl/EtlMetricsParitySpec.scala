@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -19,7 +17,7 @@ class EtlMetricsParitySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("execution_metrics.json matches the reference dict field for field") {
-    val out = Files.createTempDirectory("graft_etl_par").toString
+    val out = graft.TestDirs("graft_etl_par").toString
     val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out"))
     val json = EntregasEtl(cfg, Some(spark)).run().toJson

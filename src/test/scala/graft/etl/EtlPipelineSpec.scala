@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -14,7 +13,7 @@ class EtlPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def config = {
-    val out = Files.createTempDirectory("graft_etl_e2e").toString
+    val out = graft.TestDirs("graft_etl_e2e").toString
     ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out"))
   }
@@ -49,7 +48,7 @@ class EtlPipelineSpec extends AnyFunSuite {
   }
 
   test("parquet sink: same layout and rows, columnar files") {
-    val out = Files.createTempDirectory("graft_etl_parquet").toString
+    val out = graft.TestDirs("graft_etl_parquet").toString
     val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out", "paths.output_format=parquet"))
     val metrics = EntregasEtl(cfg, Some(spark)).run()
@@ -62,7 +61,7 @@ class EtlPipelineSpec extends AnyFunSuite {
   }
 
   test("country override narrows the run (CLI dotlist path)") {
-    val out = Files.createTempDirectory("graft_etl_gt").toString
+    val out = graft.TestDirs("graft_etl_gt").toString
     val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
       overrides = Seq(s"paths.output_base=$out", "filters.country=GT"))
     val metrics = EntregasEtl(cfg, Some(spark)).run()

@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -26,7 +24,7 @@ class EtlRunParitySpec extends AnyFunSuite {
 
   for ((name, overrides) <- cases)
     test(s"run() equals the sequential composition ($name)") {
-      val out = Files.createTempDirectory("graft_etl_parity").resolve("out").toString
+      val out = graft.TestDirs("graft_etl_parity").resolve("out").toString
       val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
         overrides = Seq(s"paths.input_file=$input", s"paths.output_base=$out") ++ overrides)
       val raw = Extract(spark, input)

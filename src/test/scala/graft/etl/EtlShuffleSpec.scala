@@ -1,7 +1,6 @@
 package graft.etl
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
@@ -25,7 +24,7 @@ class EtlShuffleSpec extends AnyFunSuite {
       s"and one file per date (shuffle partitions = $partitions)") {
       val session = spark.newSession()
       session.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
-      val out = Files.createTempDirectory("graft_etl_shuffle").resolve("out").toString
+      val out = graft.TestDirs("graft_etl_shuffle").resolve("out").toString
       val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
         overrides = Seq(s"paths.input_file=$input", s"paths.output_base=$out"))
       // each small part file is one scan split

@@ -22,7 +22,7 @@ class LoadFailureSpec extends AnyFunSuite {
   test("a failing write surfaces its own exception and leaves no counts job running") {
     // the output base sits below a regular file, so the write cannot
     // create its directory
-    val file = Files.createTempFile("graft_load_fail", ".txt")
+    val file = graft.TestDirs.file("graft_load_fail", ".txt")
     val outputBase = file.resolve("out").toString
     // slow rows keep the counts job busy long enough to need cancelling
     val slow = udf { (id: Long) => Thread.sleep(200); id }
@@ -57,7 +57,7 @@ class LoadFailureSpec extends AnyFunSuite {
   }
 
   test("the success path is unchanged") {
-    val out = Files.createTempDirectory("graft_load_ok").resolve("out").toString
+    val out = graft.TestDirs("graft_load_ok").resolve("out").toString
     val df = spark.range(0, 10).select(
       concat(lit("2025010"), (col("id") % 3).cast("string")).as("fecha_proceso"),
       col("id"))

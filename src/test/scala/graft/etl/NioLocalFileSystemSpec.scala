@@ -36,7 +36,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x0fff
 
   test("setPermission leaves the permissions chmod leaves, on files and directories") {
-    val dir = Files.createTempDirectory("graft_nio_fs")
+    val dir = graft.TestDirs("graft_nio_fs")
     try for (mode <- Seq("0644", "0755", "0600", "0750"); isDir <- Seq(false, true)) {
       def make(name: String) =
         if (isDir) Files.createDirectory(dir.resolve(name)) else Files.createFile(dir.resolve(name))
@@ -53,7 +53,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
 
   test("a sticky-bit mode goes through Hadoop's own setPermission") {
     // java.nio cannot set the sticky bit; only the delegated path sets it
-    val dir = Files.createTempDirectory("graft_nio_sticky")
+    val dir = graft.TestDirs("graft_nio_sticky")
     try {
       raw.setPermission(new Path(dir.toUri), new FsPermission(Integer.parseInt("1755", 8).toShort))
       assert(unixMode(dir) == Integer.parseInt("1755", 8))
@@ -73,7 +73,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     val df = spark.range(0, 300, 1, 4).select(
       concat(lit("2025010"), (col("id") % 5).cast("string")).as("fecha_proceso"),
       col("id"), (col("id") * 7).cast("string").as("v"))
-    val root = Files.createTempDirectory("graft_nio_load")
+    val root = graft.TestDirs("graft_nio_load")
     try {
       val (ours, theirs) = (root.resolve("load"), root.resolve("default"))
       val rec = StageRecorder.record(spark)(Load(df, ours.toString))

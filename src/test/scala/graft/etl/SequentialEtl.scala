@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The reference's composition of the quality stage, one step at a time:
@@ -58,7 +56,7 @@ object SequentialEtl {
       Row("gt", "20250513", "T010", null, "ZVE1", "MAT903", "0E-18", "3.0", "CS"),
       Row("SV", "20250815", "T011", "R011", "ZPRE", "MAT904", "7.0", "4.0", "ST"))
     val rows = fixture.union(spark.createDataFrame(spark.sparkContext.parallelize(extra), Schemas.raw))
-    val dir = Files.createTempDirectory("graft_etl_input").resolve("in").toString
+    val dir = graft.TestDirs("graft_etl_input").resolve("in").toString
     rows.repartition(4).write.option("header", "true").csv(dir)
     dir
   }

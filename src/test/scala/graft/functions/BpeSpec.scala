@@ -148,7 +148,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("vocab artifact round-trips") {
-    val path = java.nio.file.Files.createTempDirectory("bpe_vocab").toString
+    val path = graft.TestDirs("bpe_vocab").toString
     graft.operators.BpeTokenizer.writeVocab(spark, BpeVocab.Default, s"$path/v")
     assert(graft.operators.BpeTokenizer.readVocab(spark, s"$path/v")
       == BpeVocab.Default)

@@ -48,7 +48,7 @@ class Bm25IndexSpec extends AnyFunSuite {
       .orderBy(col("query_id"), col("rank")).collect()
 
   test("served top-k is bit-identical to inline over build + appends") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_spec").toString
+    val idx = graft.TestDirs("graft_bm25_spec").toString
     // three disjoint ingest batches covering the corpus
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 3 === 0), idx)
     Bm25Index.appendIndex(docs.filter(col("doc_id") % 3 === 1), idx, batchId = 0L)
@@ -60,7 +60,7 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("redelivered append overwrites its own partitions (crash-idempotent)") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_redeliver").toString
+    val idx = graft.TestDirs("graft_bm25_redeliver").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
     val batch = docs.filter(col("doc_id") % 10 === 7)
     Bm25Index.appendIndex(batch, idx, batchId = 0L)
@@ -74,7 +74,7 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("crash-window redelivery completes a partial batch (postings landed, df/stats missing)") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_crash").toString
+    val idx = graft.TestDirs("graft_bm25_crash").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
     val batch = docs.filter(col("doc_id") % 10 === 7)
     Bm25Index.appendIndex(batch, idx, batchId = 0L)
@@ -87,7 +87,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/stats/batch=0"), true)
     // the strictly-earlier filter keeps the half-landed batch invisible:
     // a serve cut at batch 0 equals a fresh index on the bootstrap alone
-    val bootIdx = java.nio.file.Files.createTempDirectory("graft_bm25_boot").toString
+    val bootIdx = graft.TestDirs("graft_bm25_boot").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), bootIdx)
     assert(Bm25Index.topK(spark, idx, queries, 5, maxBatchExclusive = Some(0L))
       .orderBy(col("query_id"), col("rank")).collect()
@@ -100,14 +100,14 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("compaction folds committed batches without changing any serve; the watermark carries the tail") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_cpt").toString
+    val idx = graft.TestDirs("graft_bm25_cpt").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 3 === 0), idx)
     Bm25Index.appendIndex(docs.filter(col("doc_id") % 3 === 1), idx, batchId = 0L)
     Bm25Index.appendIndex(docs.filter(col("doc_id") % 3 === 2), idx, batchId = 1L)
     val full = served(idx, k = 10)
     // full fold (clean stop): one batch=-1 partition set per artifact,
     // identical serve
-    val cptAll = java.nio.file.Files.createTempDirectory("graft_bm25_cpt_all").toString
+    val cptAll = graft.TestDirs("graft_bm25_cpt_all").toString
     Bm25Index.compactIndex(spark, idx, cptAll, width = 2)
     assert(served(cptAll, k = 10).sameElements(full),
       "full compaction changed the served answer")
@@ -121,7 +121,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     // watermarked fold (stream still running): batch 1 carries over
     // under its own id; serves — whole and strictly-earlier-cut — are
     // unchanged vs the uncompacted index
-    val cptW = java.nio.file.Files.createTempDirectory("graft_bm25_cpt_w").toString
+    val cptW = graft.TestDirs("graft_bm25_cpt_w").toString
     Bm25Index.compactIndex(spark, idx, cptW, width = 2, throughBatch = 0L)
     for (art <- Seq("postings", "df", "stats"))
       assert(batchDirs(cptW, art) == Set("batch=-1", "batch=1"),
@@ -137,7 +137,7 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("oversized query batches prune via semi-join, identically") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_semi").toString
+    val idx = graft.TestDirs("graft_bm25_semi").toString
     Bm25Index.writeIndex(docs, idx)
     val expected = served(idx, k = 5)
     spark.conf.set("spark.graft.index.serveKeyPruneLimit", "1")
@@ -148,7 +148,7 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("postings carry every doc, so stats are recoverable and df is exact") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_stats").toString
+    val idx = graft.TestDirs("graft_bm25_stats").toString
     Bm25Index.writeIndex(docs, idx)
     val n = docs.count()
     val stats = spark.read.parquet(s"$idx/stats").head()

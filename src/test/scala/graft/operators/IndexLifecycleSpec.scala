@@ -21,7 +21,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def tmp(): String = {
-    val d = java.nio.file.Files.createTempDirectory("idxlc").toString
+    val d = graft.TestDirs("idxlc").toString
     d
   }
 

@@ -85,7 +85,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     test(c.name) {
       val appends = c.appends()
       withTrigger(appends.size) {
-        val root = java.nio.file.Files.createTempDirectory("graft_mt").toString
+        val root = graft.TestDirs("graft_mt").toString
         val idx = s"$root/idx"
         c.bootstrap(idx)
         appends.init.zipWithIndex.foreach { case (b, i) =>
@@ -110,7 +110,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
   test("watermarked maintain carries the uncommitted tail") {
     withTrigger(1) {
-      val root = java.nio.file.Files.createTempDirectory("graft_mt_wm").toString
+      val root = graft.TestDirs("graft_mt_wm").toString
       val idx = s"$root/idx"
       NearDupLsh.writeIndex(docs.filter(col("doc_id") % 3 === 0), idx)
       NearDupLsh.appendIndex(docs.filter(col("doc_id") % 3 === 1), idx, 0L)
@@ -123,7 +123,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("catalog maintain: compacts past the file threshold, expires history") {
-    val root = java.nio.file.Files.createTempDirectory("graft_mt_cat").toString
+    val root = graft.TestDirs("graft_mt_cat").toString
     spark.conf.set("spark.sql.catalog.mtcat", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mtcat.root", root)
     spark.conf.set("spark.graft.catalog.maintainMaxFiles", "4")

@@ -32,7 +32,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("build + append serves exactly the frozen-quantizer inline search") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_lc").toString
+    val idx = graft.TestDirs("graft_ivf_lc").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(e.filter(col("vec_id") % 2 =!= 0), idx, batchId = 0L)
     val frozen = IvfIndex.readCentroids(spark, idx)
@@ -45,7 +45,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("redelivered / crash-window appends replace their partitions") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_rd").toString
+    val idx = graft.TestDirs("graft_ivf_rd").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), idx, nlist = 16, iters = 2)
     val batch = e.filter(col("vec_id") % 2 =!= 0)
     IvfIndex.appendIndex(batch, idx, batchId = 0L)
@@ -71,7 +71,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("compaction changes no serve; the watermark carries the uncommitted tail") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_cpt").toString
+    val idx = graft.TestDirs("graft_ivf_cpt").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 3 === 0), idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(e.filter(col("vec_id") % 3 === 1), idx, batchId = 0L)
     IvfIndex.appendIndex(e.filter(col("vec_id") % 3 === 2), idx, batchId = 1L)
@@ -79,7 +79,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val cut = rows(IvfIndex.topK(spark, idx, queries(e), 4, 5,
       maxBatchExclusive = Some(1L)))
     // clean-stop fold: everything into batch=-1
-    val cptAll = java.nio.file.Files.createTempDirectory("graft_ivf_cpt_all").toString
+    val cptAll = graft.TestDirs("graft_ivf_cpt_all").toString
     IvfIndex.compactIndex(spark, idx, cptAll)
     def batchDirs(root: String): Set[String] =
       new java.io.File(s"$root/corpus").listFiles()
@@ -88,7 +88,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(rows(IvfIndex.topK(spark, cptAll, queries(e), 4, 5)) == full)
     // watermarked fold: batch 1 carries under its own id; whole and
     // strictly-earlier serves both unchanged
-    val cptW = java.nio.file.Files.createTempDirectory("graft_ivf_cpt_w").toString
+    val cptW = graft.TestDirs("graft_ivf_cpt_w").toString
     IvfIndex.compactIndex(spark, idx, cptW, throughBatch = 0L)
     assert(batchDirs(cptW) == Set("batch=-1", "batch=1"))
     assert(rows(IvfIndex.topK(spark, cptW, queries(e), 4, 5)) == full)
@@ -110,7 +110,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("drift metric: fires on the planted shift, silent on a representative append") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dr").toString
+    val idx = graft.TestDirs("graft_ivf_dr").toString
     IvfIndex.writeIndex(e, s"$idx/p", nlist = 16, iters = 2)
     IvfIndex.appendIndex(plantedDrift(e), s"$idx/p", batchId = 0L)
     val planted = IvfIndex.driftReport(spark, s"$idx/p").collect()
@@ -132,7 +132,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("drift sidecar is redelivery-idempotent and honors the serve cut") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dri").toString
+    val idx = graft.TestDirs("graft_ivf_dri").toString
     IvfIndex.writeIndex(e, idx, nlist = 16, iters = 2)
     val batch = plantedDrift(e)
     IvfIndex.appendIndex(batch, idx, batchId = 0L)
@@ -147,13 +147,13 @@ class IvfIndexSpec extends AnyFunSuite {
   test("rebuild: retrain-and-swap restores the new-region serve; watermark " +
       "carries the uncommitted tail re-assigned under the new quantizer") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_rb").toString
+    val idx = graft.TestDirs("graft_ivf_rb").toString
     IvfIndex.writeIndex(e, idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(plantedDrift(e), idx, batchId = 0L) // committed
     IvfIndex.appendIndex(
       plantedDrift(e).withColumn("vec_id", col("vec_id") + 1000000L),
       idx, batchId = 1L) // uncommitted
-    val rb = java.nio.file.Files.createTempDirectory("graft_ivf_rb_t").toString
+    val rb = graft.TestDirs("graft_ivf_rb_t").toString
     IvfIndex.rebuildIndex(spark, idx, rb, nlist = 16, iters = 5,
       throughBatch = 0L)
     def dirs(root: String): Set[String] =
@@ -177,10 +177,10 @@ class IvfIndexSpec extends AnyFunSuite {
     // indistinguishable from a rebuild of a source that never had the
     // uncommitted batch (same standing corpus → same training → same
     // quantizer → identical serves on every replay)
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_ivf_rb_c").toString
+    val idx2 = graft.TestDirs("graft_ivf_rb_c").toString
     IvfIndex.writeIndex(e, idx2, nlist = 16, iters = 2)
     IvfIndex.appendIndex(plantedDrift(e), idx2, batchId = 0L)
-    val rb2 = java.nio.file.Files.createTempDirectory("graft_ivf_rb_c_t").toString
+    val rb2 = graft.TestDirs("graft_ivf_rb_c_t").toString
     IvfIndex.rebuildIndex(spark, idx2, rb2, nlist = 16, iters = 5)
     assert(rows(IvfIndex.topK(spark, rb, queries(e), 8, 5,
       maxBatchExclusive = Some(1L)))
@@ -199,11 +199,11 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("compaction carries the build reference verbatim and drops resolved history") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dcp").toString
+    val idx = graft.TestDirs("graft_ivf_dcp").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(e.filter(col("vec_id") % 2 =!= 0), idx, batchId = 0L)
     val buildRef = driftRows(idx)
-    val cpt = java.nio.file.Files.createTempDirectory("graft_ivf_dcp_a").toString
+    val cpt = graft.TestDirs("graft_ivf_dcp_a").toString
     IvfIndex.compactIndex(spark, idx, cpt)
     // the reference is the BUILD-TIME distribution, not the fold: a
     // reference that absorbed every committed append could never flag a
@@ -216,13 +216,13 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("compact-after-drift does NOT clear the alarm; rebuild does") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dal").toString
+    val idx = graft.TestDirs("graft_ivf_dal").toString
     IvfIndex.writeIndex(e, idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(plantedDrift(e), idx, batchId = 0L)
     assert(IvfIndex.driftReport(spark, idx).collect()
       .exists(_.getAs[Boolean]("drifted")))
     val full = rows(IvfIndex.topK(spark, idx, queries(e), 8, 5))
-    val cpt = java.nio.file.Files.createTempDirectory("graft_ivf_dal_c").toString
+    val cpt = graft.TestDirs("graft_ivf_dal_c").toString
     IvfIndex.compactIndex(spark, idx, cpt)
     // corpus rows fold (serve identical), but the flagged batch keeps
     // its sidecar under its own id — compaction must not silently
@@ -234,7 +234,7 @@ class IvfIndexSpec extends AnyFunSuite {
       standing.head.getAs[Boolean]("drifted"),
       s"standing alarm must survive the fold: ${standing.toSeq}")
     // the deliberate response — retrain — is what clears it
-    val rb = java.nio.file.Files.createTempDirectory("graft_ivf_dal_r").toString
+    val rb = graft.TestDirs("graft_ivf_dal_r").toString
     IvfIndex.rebuildIndex(spark, cpt, rb, nlist = 16, iters = 5)
     assert(!IvfIndex.driftReport(spark, rb).collect()
       .exists(_.getAs[Boolean]("drifted")))
@@ -243,7 +243,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("legacy migrations: no drift dir derives from the fold; a missing " +
       "reference derives from the SOURCE bootstrap and carries appends") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dcl").toString
+    val idx = graft.TestDirs("graft_ivf_dcl").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(e.filter(col("vec_id") % 2 =!= 0), idx, batchId = 0L)
     val buildRef = driftRows(idx)
@@ -255,7 +255,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // from the folded target, and must keep the never-adjudicated
     // append sidecar instead of dropping it as resolved
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/drift/batch=-1"), true)
-    val cptRef = java.nio.file.Files.createTempDirectory("graft_ivf_dcl_a").toString
+    val cptRef = graft.TestDirs("graft_ivf_dcl_a").toString
     IvfIndex.compactIndex(spark, idx, cptRef)
     assert(driftRows(cptRef) == buildRef,
       "migration must recover the build-time baseline, not bake in appends")
@@ -263,7 +263,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // fully legacy: no drift dir at all — the folded bootstrap is the
     // best available baseline; derive it there (and only there)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/drift"), true)
-    val cptNone = java.nio.file.Files.createTempDirectory("graft_ivf_dcl_b").toString
+    val cptNone = graft.TestDirs("graft_ivf_dcl_b").toString
     IvfIndex.compactIndex(spark, idx, cptNone)
     val derived = driftRows(cptNone)
     assert(derived.nonEmpty && derived.map(_._2).sum == e.count(),
@@ -272,7 +272,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("driftReport fails fast with a migration hint on unadjudicable layouts") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_dff").toString
+    val idx = graft.TestDirs("graft_ivf_dff").toString
     IvfIndex.writeIndex(e, idx, nlist = 16, iters = 2)
     IvfIndex.appendIndex(plantedDrift(e), idx, batchId = 0L)
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -293,7 +293,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("streamed ingest serves identically to one batch-append of the same docs") {
     val e = corpus
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_str").toString
+    val root = graft.TestDirs("graft_ivf_str").toString
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$root/a", nlist = 16, iters = 2)
     IvfIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$root/b", nlist = 16, iters = 2)
     graft.streaming.IndexStream.runToCompletion(

@@ -43,7 +43,7 @@ class LshAnnIndexSpec extends AnyFunSuite {
   test("build + append under the frozen planes ≡ one-shot build (lossless " +
       "lifecycle); bucket partitions exist") {
     val e = corpus
-    val root = java.nio.file.Files.createTempDirectory("graft_lsha_lc").toString
+    val root = graft.TestDirs("graft_lsha_lc").toString
     LshAnnIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), s"$root/a",
       planes, bands = 2)
     LshAnnIndex.appendIndex(e.filter(col("vec_id") % 2 =!= 0), s"$root/a", 0L)
@@ -62,7 +62,7 @@ class LshAnnIndexSpec extends AnyFunSuite {
   test("redelivered append replaces its partitions; serve cut hides a " +
       "half-landed batch") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsha_rd").toString
+    val idx = graft.TestDirs("graft_lsha_rd").toString
     LshAnnIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), idx,
       planes, bands = 2)
     val batch = e.filter(col("vec_id") % 2 =!= 0)
@@ -72,8 +72,7 @@ class LshAnnIndexSpec extends AnyFunSuite {
     assert(rows(LshAnnIndex.topK(spark, idx, queries(e), 2, 5)) == once)
     val committedOnly = rows(LshAnnIndex.topK(spark, idx, queries(e), 2, 5,
       maxBatchExclusive = Some(0L)))
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_lsha_rd_c").toString
+    val fresh = graft.TestDirs("graft_lsha_rd_c").toString
     LshAnnIndex.writeIndex(e.filter(col("vec_id") % 2 === 0), fresh,
       planes, bands = 2)
     assert(committedOnly ==
@@ -84,7 +83,7 @@ class LshAnnIndexSpec extends AnyFunSuite {
   test("compaction changes no serve; watermark carries the tail; maintain " +
       "triggers on the committed dir count") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsha_cpt").toString
+    val idx = graft.TestDirs("graft_lsha_cpt").toString
     LshAnnIndex.writeIndex(e.filter(col("vec_id") % 3 === 0), idx,
       planes, bands = 2)
     LshAnnIndex.appendIndex(e.filter(col("vec_id") % 3 === 1), idx, 0L)
@@ -95,13 +94,11 @@ class LshAnnIndexSpec extends AnyFunSuite {
     def dirs(root: String): Set[String] =
       new java.io.File(s"$root/corpus").listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
-    val cptAll = java.nio.file.Files
-      .createTempDirectory("graft_lsha_cpt_a").toString
+    val cptAll = graft.TestDirs("graft_lsha_cpt_a").toString
     LshAnnIndex.compactIndex(spark, idx, cptAll)
     assert(dirs(cptAll) == Set("batch=-1"))
     assert(rows(LshAnnIndex.topK(spark, cptAll, queries(e), 2, 5)) == full)
-    val cptW = java.nio.file.Files
-      .createTempDirectory("graft_lsha_cpt_w").toString
+    val cptW = graft.TestDirs("graft_lsha_cpt_w").toString
     LshAnnIndex.compactIndex(spark, idx, cptW, throughBatch = 0L)
     assert(dirs(cptW) == Set("batch=-1", "batch=1"))
     assert(rows(LshAnnIndex.topK(spark, cptW, queries(e), 2, 5)) == full)
@@ -110,13 +107,11 @@ class LshAnnIndexSpec extends AnyFunSuite {
     // maintain: 3 committed dirs vs trigger 3 → not due; trigger 2 → due
     spark.conf.set("spark.graft.index.compactMinBatches", "3")
     try {
-      val t1 = java.nio.file.Files
-        .createTempDirectory("graft_lsha_mt_a").toString
+      val t1 = graft.TestDirs("graft_lsha_mt_a").toString
       assert(!LshAnnIndex.maintain(spark, idx, s"$t1/x"))
       assert(!new java.io.File(s"$t1/x").exists)
       spark.conf.set("spark.graft.index.compactMinBatches", "2")
-      val t2 = java.nio.file.Files
-        .createTempDirectory("graft_lsha_mt_b").toString
+      val t2 = graft.TestDirs("graft_lsha_mt_b").toString
       assert(LshAnnIndex.maintain(spark, idx, s"$t2/x"))
       assert(rows(LshAnnIndex.topK(spark, s"$t2/x", queries(e), 2, 5)) == full)
     } finally spark.conf.unset("spark.graft.index.compactMinBatches")
@@ -125,7 +120,7 @@ class LshAnnIndexSpec extends AnyFunSuite {
   test("probe fan-out is query-side only: candidates grow with probeBits, " +
       "the indexed relation is byte-identical") {
     val e = corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsha_pb").toString
+    val idx = graft.TestDirs("graft_lsha_pb").toString
     LshAnnIndex.writeIndex(e, idx, planes, bands = 2)
     // recall is monotone in probeBits on the planted-cluster fixture
     def recall(pb: Int): Double = {

@@ -23,7 +23,7 @@ class NearDupLshSpec extends AnyFunSuite {
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
     val recompute = pairSet(NearDupLsh.pairsAgainst(newDocs, oldDocs, 0.5d))
     assert(recompute.nonEmpty, "fixture should contain mixed near-dups")
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_idx_spec").toString
+    val idx = graft.TestDirs("graft_lsh_idx_spec").toString
     // append-only lifecycle: the corpus lands in two separate appends
     NearDupLsh.writeIndex(oldDocs.filter(col("doc_id") % 2 === 0), idx)
     NearDupLsh.writeIndex(oldDocs.filter(col("doc_id") % 2 =!= 0), idx)
@@ -40,12 +40,12 @@ class NearDupLshSpec extends AnyFunSuite {
     assert(recompute.nonEmpty, "fixture should contain mixed near-dups")
     // a pre-partition-layout index: plain signature parquet at the root,
     // no `batch` column, no stats/bands sidecars
-    val legacy = java.nio.file.Files.createTempDirectory("graft_lsh_legacy").toString
+    val legacy = graft.TestDirs("graft_lsh_legacy").toString
     NearDupLsh.signatures(oldDocs).write.mode("overwrite").parquet(legacy)
     assert(!NearDupLsh.readIndex(spark, legacy).columns.contains("batch"))
     // compaction is the migration step: it must accept the legacy layout
     // (batch treated as the committed bootstrap) and DERIVE the sidecars
-    val target = java.nio.file.Files.createTempDirectory("graft_lsh_migrated").toString
+    val target = graft.TestDirs("graft_lsh_migrated").toString
     NearDupLsh.compactIndex(spark, legacy, target)
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -72,7 +72,7 @@ class NearDupLshSpec extends AnyFunSuite {
       lit(30000000L).as("doc_id"),
       lit("identical boilerplate footer with terms of service and a " +
         "copyright notice repeated on every crawled page of the site").as("text"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_hot_spec").toString
+    val idx = graft.TestDirs("graft_lsh_hot_spec").toString
     // two appends: stats deltas must SUM across batches
     NearDupLsh.writeIndex(oldDocs.unionByName(boiler.filter(col("doc_id") % 2 === 0)), idx)
     NearDupLsh.writeIndex(boiler.filter(col("doc_id") % 2 =!= 0), idx)
@@ -102,7 +102,7 @@ class NearDupLshSpec extends AnyFunSuite {
       (col("id") + 20000000L).as("doc_id"),
       lit("identical boilerplate footer with terms of service and a " +
         "copyright notice repeated on every crawled page of the site").as("text"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_hotside").toString
+    val idx = graft.TestDirs("graft_lsh_hotside").toString
     NearDupLsh.appendIndex(docs.unionByName(boiler), idx, batchId = 0L)
     NearDupLsh.appendIndex(
       boiler.select((col("doc_id") + 1000L).as("doc_id"), col("text")),
@@ -151,7 +151,7 @@ class NearDupLshSpec extends AnyFunSuite {
       (base + i, "identical boilerplate footer with terms of service and " +
         "a copyright notice repeated on every crawled page of the site")
     }.toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_gray").toString
+    val idx = graft.TestDirs("graft_lsh_gray").toString
     NearDupLsh.appendIndex(clique(100L), idx, batchId = 0L)
     NearDupLsh.appendIndex(clique(200L), idx, batchId = 1L)
     NearDupLsh.appendIndex(clique(300L), idx, batchId = 2L)
@@ -162,7 +162,7 @@ class NearDupLshSpec extends AnyFunSuite {
     assert(viaSidecar.count() == 0,
       "sub-floor deltas must evade the truncated sidecar (confident subset)")
     // compaction resets the drift: exact totals land in the folded sidecar
-    val cpt = java.nio.file.Files.createTempDirectory("graft_lsh_gray_cpt").toString
+    val cpt = graft.TestDirs("graft_lsh_gray_cpt").toString
     NearDupLsh.compactIndex(spark, idx, cpt)
     assert(NearDupLsh.hotBuckets(spark, cpt, maxBucket = 10).count() == exact,
       "compaction must fold exact totals into the hot sidecar")
@@ -191,7 +191,7 @@ class NearDupLshSpec extends AnyFunSuite {
   test("serve joins degrade to shuffle_hash when the batch outgrows the broadcast budget") {
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_guard_bc").toString
+    val idx = graft.TestDirs("graft_lsh_guard_bc").toString
     NearDupLsh.writeIndex(oldDocs, idx)
     val index = NearDupLsh.readIndex(spark, idx)
     val small = pairSet(NearDupLsh.pairsAgainstIndex(newDocs, index, 0.5d))
@@ -215,7 +215,7 @@ class NearDupLshSpec extends AnyFunSuite {
   test("path-based serve (flat band artifact) matches the DataFrame serve") {
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_at_spec").toString
+    val idx = graft.TestDirs("graft_lsh_at_spec").toString
     NearDupLsh.writeIndex(oldDocs, idx)
     val viaDf = pairSet(NearDupLsh.pairsAgainstIndex(
       newDocs, NearDupLsh.readIndex(spark, idx), 0.5d))

@@ -37,7 +37,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
   test("indexed serve equals the brute-force mixed pair set") {
     val truth = bruteMixed(4, 5)
     assert(truth.nonEmpty, "fixture should contain mixed near-dups")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_idx").toString
+    val idx = graft.TestDirs("graft_pp_idx").toString
     PrefixFilterJoin.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), idx, 4, 5)
     val served = pairSet(PrefixFilterJoin.pairsAgainstIndex(
       spark, docs.filter(col("doc_id") % 10 === 7), idx, 4, 5))
@@ -47,7 +47,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
 
   test("append under the frozen order stays lossless; thresholds guard") {
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_append").toString
+    val idx = graft.TestDirs("graft_pp_append").toString
     // build on HALF the corpus, append the other half: appended docs'
     // prefixes rank under build-time frequencies (some shingles unseen,
     // f=0) — the served answer must still be the exact ground truth
@@ -73,7 +73,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
       "pstats re-derive exactly over the folded prefix") {
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_cpt").toString
+    val idx = graft.TestDirs("graft_pp_cpt").toString
     PrefixFilterJoin.writeIndex(oldDocs.filter(col("doc_id") % 3 === 0), idx, 4, 5)
     PrefixFilterJoin.appendIndex(oldDocs.filter(col("doc_id") % 3 === 1), idx, batchId = 0L)
     PrefixFilterJoin.appendIndex(oldDocs.filter(col("doc_id") % 3 === 2), idx, batchId = 1L)
@@ -85,7 +85,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
       new java.io.File(s"$root/$artifact").listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
     // clean-stop fold: one bootstrap partition per artifact
-    val cptAll = java.nio.file.Files.createTempDirectory("graft_pp_cpt_a").toString
+    val cptAll = graft.TestDirs("graft_pp_cpt_a").toString
     PrefixFilterJoin.compactIndex(spark, idx, cptAll, width = 2)
     Seq("sets", "prefix", "pstats").foreach(a =>
       assert(batchDirs(cptAll, a) == Set("batch=-1"), a))
@@ -103,7 +103,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     assert(gotPstats == truthPstats)
     // watermarked fold: batch 1 carries per-artifact under its own id;
     // whole and strictly-earlier serves both unchanged
-    val cptW = java.nio.file.Files.createTempDirectory("graft_pp_cpt_w").toString
+    val cptW = graft.TestDirs("graft_pp_cpt_w").toString
     PrefixFilterJoin.compactIndex(spark, idx, cptW, width = 2, throughBatch = 0L)
     Seq("sets", "prefix", "pstats").foreach(a =>
       assert(batchDirs(cptW, a) == Set("batch=-1", "batch=1"), a))
@@ -116,7 +116,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
   test("redelivered / crash-window appends replace their partitions — no duplicate pairs") {
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_replay").toString
+    val idx = graft.TestDirs("graft_pp_replay").toString
     PrefixFilterJoin.writeIndex(oldDocs.filter(col("doc_id") % 2 === 0), idx, 4, 5)
     val b1 = oldDocs.filter(col("doc_id") % 2 =!= 0)
     PrefixFilterJoin.appendIndex(b1, idx, batchId = 1L)
@@ -173,7 +173,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     val boiler = (0 until 400).map { i =>
       (i.toLong, s"alpha beta gamma delta epsilon zeta eta theta tail$i")
     }.toDF("doc_id", "text")
-    val idx1 = java.nio.file.Files.createTempDirectory("graft_pp_pstats").toString
+    val idx1 = graft.TestDirs("graft_pp_pstats").toString
     PrefixFilterJoin.writeIndex(boiler, idx1, 1, 2)
     val truth = groundTruth(idx1)
     assert(truth.nonEmpty, "fixture must produce a hot tail")
@@ -184,7 +184,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     val oldOpen = spark.conf.get("spark.sql.files.openCostInBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     spark.conf.set("spark.sql.files.openCostInBytes", "256")
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_pp_pstats2").toString
+    val idx2 = graft.TestDirs("graft_pp_pstats2").toString
     try {
       PrefixFilterJoin.writeIndex(boiler, idx2, 1, 2)
       assert(stored(idx2) == truth,
@@ -206,7 +206,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
       val oldPage = Option(hc.get("parquet.page.size"))
       hc.setInt("parquet.block.size", 4096)
       hc.setInt("parquet.page.size", 1024)
-      val idx3 = java.nio.file.Files.createTempDirectory("graft_pp_pstats3").toString
+      val idx3 = graft.TestDirs("graft_pp_pstats3").toString
       try {
         val big = (0 until 3000).map { i =>
           (i.toLong,
@@ -259,7 +259,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     // must charge F per SERVED PARTITION (F·P·M = 48 here)
     def corpus(ids: Range) =
       ids.map(i => (i.toLong, s"x y z x u$i")).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_bound").toString
+    val idx = graft.TestDirs("graft_pp_bound").toString
     PrefixFilterJoin.writeIndex(corpus(0 until 8), idx, 1, 2)
     PrefixFilterJoin.appendIndex(corpus(8 until 16), idx, batchId = 1L)
     PrefixFilterJoin.appendIndex(corpus(16 until 24), idx, batchId = 2L)
@@ -300,7 +300,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     // serves off the broadcast — the regression this pins against.
     def corpus(ids: Range) =
       ids.map(i => (i.toLong, s"x y z x u$i")).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_hot").toString
+    val idx = graft.TestDirs("graft_pp_hot").toString
     PrefixFilterJoin.writeIndex(corpus(0 until 32), idx, 1, 2)
     PrefixFilterJoin.appendIndex(corpus(32 until 64), idx, batchId = 1L)
     PrefixFilterJoin.appendIndex(corpus(64 until 96), idx, batchId = 2L)
@@ -339,7 +339,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
   test("stray non-numeric batch dirs void the bound instead of crashing the serve") {
     val oldDocs = docs.filter(col("doc_id") % 10 =!= 7)
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_stray").toString
+    val idx = graft.TestDirs("graft_pp_stray").toString
     PrefixFilterJoin.writeIndex(oldDocs, idx, 4, 5)
     // a tooling leftover that is NOT a parquet partition (empty dir, so
     // spark's partition discovery ignores it) but used to throw
@@ -362,7 +362,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     // whole-index serve, batch-probe-only guard (bound 0 → broadcast) —
     // and return the identical answer
     val truth = bruteMixed(4, 5)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_legacy").toString
+    val idx = graft.TestDirs("graft_pp_legacy").toString
     PrefixFilterJoin.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), idx, 4, 5)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -385,7 +385,7 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
   }
 
   test("oversized batches degrade to shuffle_hash with the identical answer") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_pp_big").toString
+    val idx = graft.TestDirs("graft_pp_big").toString
     PrefixFilterJoin.writeIndex(docs.filter(col("doc_id") % 10 =!= 7), idx, 4, 5)
     val newDocs = docs.filter(col("doc_id") % 10 === 7)
     val broadcastAnswer = pairSet(

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -36,7 +35,7 @@ class ScalePatternsSpec extends AnyFunSuite {
   }
 
   test("bucketed tables co-locate the join: no shuffle in the plan") {
-    val warehouse = Files.createTempDirectory("graft_warehouse").toString
+    val warehouse = graft.TestDirs("graft_warehouse").toString
     val db = s"bkt_${System.nanoTime()}"
     spark.sql(s"CREATE DATABASE $db LOCATION '$warehouse'")
     try {
@@ -73,7 +72,7 @@ class ScalePatternsSpec extends AnyFunSuite {
     // filtered to 2 flags — the 100 TB date-partitioned-fact pattern:
     // the selective dim filter must reach the fact SCAN as a runtime
     // partition filter, not run as a post-scan join filter
-    val root = Files.createTempDirectory("graft_dpp")
+    val root = graft.TestDirs("graft_dpp")
     Tables.table(spark, dir, "lineitem")
       .write.partitionBy("l_returnflag").mode("overwrite")
       .parquet(root.resolve("li").toString)
@@ -109,7 +108,7 @@ class ScalePatternsSpec extends AnyFunSuite {
     // the small-file/giant-file control for a 100 TB sink: writers roll
     // to a new file at the cap instead of emitting one file per task
     // whatever its size
-    val out = Files.createTempDirectory("graft_sizing").resolve("li").toString
+    val out = graft.TestDirs("graft_sizing").resolve("li").toString
     val li = Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"))
     val total = li.count()

@@ -51,6 +51,23 @@ class FoldKnownArraySizeGuardsSpec extends AnyFunSuite {
     assert(rows.length === 3)
   }
 
+  test("a rewritten guard that repeats an explicit filter conjunct is dropped") {
+    GraftFunctions.register(spark)
+    // PrefixFilterJoin's sets shape over a scan (a local relation would
+    // fold the filter into its data): the explicit filter counts the same
+    // tokens the ngram pass reads, so the rewritten guard repeats it, and
+    // two reads of the relation only plan alike if one copy remains
+    val tokens = split(coalesce(col("text"), lit("")), " ")
+    val df = graft.Tables.table(spark, s"${graft.PathGuardSpec.TestDataRoot}/sf0.001", "documents")
+      .filter(size(tokens) >= 3)
+      .select(col("doc_id"), GraftFunctions.ngram_hashes(tokens).as("sh"))
+      .select(col("doc_id"), explode(col("sh")).as("h"))
+    val optimized = df.queryExecution.optimizedPlan.toString
+    val guards = optimized.linesIterator.filter(_.contains("Filter"))
+      .map("size\\(split\\(coalesce".r.findAllIn(_).size).sum
+    assert(guards == 1, s"token-count conjuncts:\n$optimized")
+  }
+
   test("real predicates on the same filter survive the fold") {
     GraftFunctions.register(spark)
     val df = Seq((1L, 2L), (5L, 6L)).toDF("a", "b")

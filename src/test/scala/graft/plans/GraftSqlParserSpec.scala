@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -15,7 +13,7 @@ import graft.SparkTestSession
   */
 class GraftSqlParserSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_sqlparser").toString
+  private lazy val root = graft.TestDirs("graft_sqlparser").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

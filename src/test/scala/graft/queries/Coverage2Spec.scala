@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Observation, functions => F}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,7 +52,7 @@ class Coverage2Spec extends AnyFunSuite {
   }
 
   test("partitioned parquet write prunes partitions on read") {
-    val out = Files.createTempDirectory("graft_part").toString
+    val out = graft.TestDirs("graft_part").toString
     Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)

@@ -18,7 +18,7 @@ class AggPushdownSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.aggcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.aggcat.root",
-      Files.createTempDirectory("graft_aggpush").toString)
+      graft.TestDirs("graft_aggpush").toString)
     s
   }
   private def root = spark.conf.get("spark.sql.catalog.aggcat.root")

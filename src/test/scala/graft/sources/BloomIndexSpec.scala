@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -19,7 +19,7 @@ import graft.SparkTestSession
   */
 class BloomIndexSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_bloom").toString
+  private lazy val root = graft.TestDirs("graft_bloom").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark
@@ -85,7 +85,7 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("sidecar write/read roundtrip preserves membership decisions") {
-    val dir = Files.createTempDirectory("bloom_rt")
+    val dir = graft.TestDirs("bloom_rt")
     val b = new GraftBloom.Builder(100, 12)
     val vals = (0L until 100L).map(_ * 7L)
     vals.foreach(v => GraftBloom.hashPair(v).foreach { case (x, y) => b.add(x, y) })

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import scala.jdk.CollectionConverters._
 
@@ -16,7 +16,7 @@ import graft.SparkTestSession
   */
 class CompactSmallSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_csspec").toString
+  private lazy val root = graft.TestDirs("graft_csspec").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -20,7 +18,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.conccat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.conccat.root",
-      Files.createTempDirectory("graft_conc").toString)
+      graft.TestDirs("graft_conc").toString)
     s
   }
 

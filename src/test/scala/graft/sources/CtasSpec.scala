@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -16,7 +14,7 @@ class CtasSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.ctascat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.ctascat.root",
-      Files.createTempDirectory("graft_ctas").toString)
+      graft.TestDirs("graft_ctas").toString)
     s
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -11,7 +11,7 @@ import graft.SparkTestSession
   */
 class DeleteWhereSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_delete").toString
+  private lazy val root = graft.TestDirs("graft_delete").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

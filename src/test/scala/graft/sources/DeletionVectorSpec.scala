@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -11,7 +11,7 @@ import graft.SparkTestSession
   */
 class DeletionVectorSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_dv").toString
+  private lazy val root = graft.TestDirs("graft_dv").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark
@@ -163,7 +163,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     val q = spark.readStream.table("dvcat.ns.m8")
       .writeStream.outputMode("append").format("memory").queryName(name)
       .option("checkpointLocation",
-        Files.createTempDirectory("dv_stream_ckpt").toString)
+        graft.TestDirs("dv_stream_ckpt").toString)
       .start()
     try {
       q.processAllAvailable()

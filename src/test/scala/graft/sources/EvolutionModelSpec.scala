@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 import scala.util.Random
 
@@ -18,7 +16,7 @@ import graft.SparkTestSession
   */
 class EvolutionModelSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_evomodel").toString
+  private lazy val root = graft.TestDirs("graft_evomodel").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

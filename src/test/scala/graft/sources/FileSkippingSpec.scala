@@ -17,7 +17,7 @@ import graft.SparkTestSession
   */
 class FileSkippingSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_skip").toString
+  private lazy val root = graft.TestDirs("graft_skip").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

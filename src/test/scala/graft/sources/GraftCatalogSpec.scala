@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -11,7 +9,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graftcat.root",
-      Files.createTempDirectory("graft_catalog").toString)
+      graft.TestDirs("graft_catalog").toString)
     s
   }
 
@@ -166,7 +164,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   test("streaming ingestion: each microbatch commit is a time-travelable snapshot") {
     import org.apache.spark.sql.DataFrame
     // stage the stream input as 3 files so the file source yields 3 batches
-    val staged = Files.createTempDirectory("graft_ing_src").toString
+    val staged = graft.TestDirs("graft_ing_src").toString
     graft.Tables.events(spark, "/root/testdata/sf0.001")
       .select(org.apache.spark.sql.functions.col("event_id"),
         org.apache.spark.sql.functions.col("user_id"),
@@ -175,7 +173,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val expected = spark.read.parquet(staged).count()
 
     spark.sql("CREATE TABLE graftcat.ns.ing (event_id BIGINT, user_id BIGINT, event_type STRING)")
-    val ckpt = Files.createTempDirectory("graft_ing_ckpt").toString
+    val ckpt = graft.TestDirs("graft_ing_ckpt").toString
     val q = spark.readStream
       .schema(spark.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", 1)

@@ -16,7 +16,7 @@ import graft.SparkTestSession
   */
 class GraftExpireSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_expspec").toString
+  private lazy val root = graft.TestDirs("graft_expspec").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

@@ -14,7 +14,7 @@ class GraftJsonSinkSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshOut(): String =
-    Files.createTempDirectory("graft_sink_spec").toString
+    graft.TestDirs("graft_sink_spec").toString
 
   private val schema = StructType(Seq(
     StructField("o_orderkey", LongType),

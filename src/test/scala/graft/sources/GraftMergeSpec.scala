@@ -15,7 +15,7 @@ class GraftMergeSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.graftmerge", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graftmerge.root",
-      Files.createTempDirectory("graft_merge").toString)
+      graft.TestDirs("graft_merge").toString)
     s
   }
 

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -20,7 +18,7 @@ class GraftOptimizeSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.optcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.optcat.root",
-      Files.createTempDirectory("graft_opt").toString)
+      graft.TestDirs("graft_opt").toString)
     s
   }
 

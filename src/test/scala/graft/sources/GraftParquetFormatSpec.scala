@@ -20,7 +20,7 @@ import graft.SparkTestSession
   */
 class GraftParquetFormatSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_pq_cat").toString
+  private lazy val root = graft.TestDirs("graft_pq_cat").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark
@@ -315,7 +315,7 @@ class GraftParquetFormatSpec extends AnyFunSuite {
       StructField("id", LongType), StructField("s", StringType),
       StructField("d", DoubleType), StructField("b", BooleanType),
       StructField("i", IntegerType)))
-    val dir = Files.createTempDirectory("graft_gen_mix")
+    val dir = graft.TestDirs("graft_gen_mix")
     val legacy = dir.resolve("legacy.parquet")
     val modern = dir.resolve("modern.parquet")
     // the r12-era writer, reproduced verbatim at the API level
@@ -384,8 +384,8 @@ class GraftParquetFormatSpec extends AnyFunSuite {
       "TBLPROPERTIES('format'='parquet')")
     Seq(1L, 2L).toDF("id").writeTo("pqcat.ns.tail").append()
     Seq(3L).toDF("id").writeTo("pqcat.ns.tail").append()
-    val out = Files.createTempDirectory("graft_pq_tail_out").toString
-    val ckpt = Files.createTempDirectory("graft_pq_tail_ckpt").toString
+    val out = graft.TestDirs("graft_pq_tail_out").toString
+    val ckpt = graft.TestDirs("graft_pq_tail_ckpt").toString
     val q = spark.readStream.table("pqcat.ns.tail")
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

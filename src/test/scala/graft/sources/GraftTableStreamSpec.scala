@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -16,7 +14,7 @@ class GraftTableStreamSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.tscat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.tscat.root",
-      Files.createTempDirectory("graft_ts").toString)
+      graft.TestDirs("graft_ts").toString)
     s
   }
 
@@ -28,7 +26,7 @@ class GraftTableStreamSpec extends AnyFunSuite {
     val q = spark.readStream.table("tscat.ns.log")
       .writeStream.outputMode("append").format("memory").queryName(name)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_ts_ckpt").toString)
+        graft.TestDirs("graft_ts_ckpt").toString)
       .start()
     try {
       q.processAllAvailable()
@@ -52,7 +50,7 @@ class GraftTableStreamSpec extends AnyFunSuite {
     val q = spark.readStream.table("tscat.ns.rw")
       .writeStream.outputMode("append").format("memory").queryName(name)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_ts_ckpt2").toString)
+        graft.TestDirs("graft_ts_ckpt2").toString)
       .start()
     try {
       q.processAllAvailable()

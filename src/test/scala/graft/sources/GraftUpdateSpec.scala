@@ -13,7 +13,7 @@ import graft.SparkTestSession
   */
 class GraftUpdateSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_updspec").toString
+  private lazy val root = graft.TestDirs("graft_updspec").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

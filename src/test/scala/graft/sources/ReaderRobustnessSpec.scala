@@ -17,7 +17,7 @@ class ReaderRobustnessSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("CSV modes: permissive captures, dropmalformed drops, failfast throws") {
-    val dir = Files.createTempDirectory("graft_badcsv")
+    val dir = graft.TestDirs("graft_badcsv")
     Files.write(dir.resolve("data.csv"),
       """id,name,v
         |1,a,1.5
@@ -55,7 +55,7 @@ class ReaderRobustnessSpec extends AnyFunSuite {
 
   test("parquet mergeSchema unifies evolving file schemas") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = graft.TestDirs("graft_evolve").toString
     Seq((1L, "x")).toDF("id", "a").write.parquet(s"$dir/one")
     Seq((2L, 9.5)).toDF("id", "b").write.parquet(s"$dir/two")
     val merged = spark.read.option("mergeSchema", "true")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
@@ -20,7 +18,7 @@ class ScanStatisticsSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.statcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.statcat.root",
-      Files.createTempDirectory("graft_scan_stats").toString)
+      graft.TestDirs("graft_scan_stats").toString)
     s
   }
 

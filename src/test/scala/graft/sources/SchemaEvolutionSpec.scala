@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -16,7 +14,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.evocat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.evocat.root",
-      Files.createTempDirectory("graft_evo").toString)
+      graft.TestDirs("graft_evo").toString)
     s
   }
 

@@ -18,7 +18,7 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.spjcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.spjcat.root",
-      Files.createTempDirectory("graft_spj").toString)
+      graft.TestDirs("graft_spj").toString)
     s
   }
 

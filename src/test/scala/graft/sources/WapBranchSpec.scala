@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -15,7 +15,7 @@ class WapBranchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def freshTable(): (String, java.nio.file.Path) = {
-    val root = Files.createTempDirectory("graft_wap").toString
+    val root = graft.TestDirs("graft_wap").toString
     val cat = s"wap${System.nanoTime()}"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import scala.collection.mutable
 import scala.util.Random
@@ -21,7 +21,7 @@ import graft.SparkTestSession
   */
 class WapModelSpec extends AnyFunSuite {
 
-  private lazy val root = Files.createTempDirectory("graft_wapmodel").toString
+  private lazy val root = graft.TestDirs("graft_wapmodel").toString
 
   private lazy val spark = {
     val s = SparkTestSession.spark

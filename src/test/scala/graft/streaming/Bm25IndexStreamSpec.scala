@@ -29,7 +29,7 @@ class Bm25IndexStreamSpec extends AnyFunSuite {
       .orderBy(col("query_id"), col("rank")).collect()
 
   test("streamed ingest serves identically to a one-shot build") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25s").toString
+    val root = graft.TestDirs("graft_bm25s").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 2 === 0), s"$root/idx")
     IndexStream.runToCompletion(
       spark, docs.filter(col("doc_id") % 2 =!= 0), k = 3, Bm25Ingest,
@@ -40,7 +40,7 @@ class Bm25IndexStreamSpec extends AnyFunSuite {
   }
 
   test("a redelivered micro-batch replaces its partitions — serve unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25s_rd").toString
+    val root = graft.TestDirs("graft_bm25s_rd").toString
     val idx = s"$root/idx"
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), idx)
     val b0 = docs.filter(col("doc_id") % 4 === 1)
@@ -54,14 +54,14 @@ class Bm25IndexStreamSpec extends AnyFunSuite {
   }
 
   test("serve-during-ingest under the committed watermark equals a fresh index on committed batches") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25s_cut").toString
+    val root = graft.TestDirs("graft_bm25s_cut").toString
     val idx = s"$root/idx"
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), idx)
     Bm25Ingest.applyBatch(spark, idx, 0L, docs.filter(col("doc_id") % 4 === 1))
     // batch 1 has landed in the index but its checkpoint commit hasn't:
     // a concurrent serve must not see it
     Bm25Ingest.applyBatch(spark, idx, 1L, docs.filter(col("doc_id") % 4 === 2))
-    val committed = java.nio.file.Files.createTempDirectory("graft_bm25s_ref").toString
+    val committed = graft.TestDirs("graft_bm25s_ref").toString
     Bm25Index.writeIndex(docs.filter(col("doc_id") % 4 === 0), committed)
     Bm25Index.appendIndex(docs.filter(col("doc_id") % 4 === 1), committed, 0L)
     assert(served(idx, cut = Some(1L)).sameElements(served(committed)),

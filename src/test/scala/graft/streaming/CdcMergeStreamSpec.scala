@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -18,7 +16,7 @@ class CdcMergeStreamSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.cdcm", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.cdcm.root",
-      Files.createTempDirectory("graft_cdcm").toString)
+      graft.TestDirs("graft_cdcm").toString)
     s
   }
 
@@ -33,7 +31,7 @@ class CdcMergeStreamSpec extends AnyFunSuite {
       "cdcm.ns.acct",
       feed.toDF().toDF("id", "bal", "op"),
       keyCols = Seq("id"),
-      checkpoint = Files.createTempDirectory("graft_cdcm_ckpt").toString)
+      checkpoint = graft.TestDirs("graft_cdcm_ckpt").toString)
 
     def state(sql: String): Set[(Long, Double)] =
       spark.sql(sql).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -115,7 +113,7 @@ class CdcMergeStreamSpec extends AnyFunSuite {
     import sp.implicits._
     spark.sql("CREATE TABLE cdcm.ns.restart (id BIGINT, bal DOUBLE)")
     spark.sql("INSERT INTO cdcm.ns.restart VALUES (1, 10.0)")
-    val ckpt = Files.createTempDirectory("graft_cdcm_restart").toString
+    val ckpt = graft.TestDirs("graft_cdcm_restart").toString
 
     def state(): Set[(Long, Double)] =
       spark.sql("SELECT id, bal FROM cdcm.ns.restart").collect()
@@ -162,7 +160,7 @@ class CdcMergeStreamSpec extends AnyFunSuite {
       "cdcm.ns.dup",
       feed.toDF().toDF("id", "bal", "op"),
       keyCols = Seq("id"),
-      checkpoint = Files.createTempDirectory("graft_cdcm_ckpt2").toString)
+      checkpoint = graft.TestDirs("graft_cdcm_ckpt2").toString)
     try {
       feed.addData((1L, 2.0, "U"), (1L, 0.0, "D"))
       val ex = intercept[Exception] { q.processAllAvailable() }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -18,7 +16,7 @@ class DedupStoreStreamSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.dscat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.dscat.root",
-      Files.createTempDirectory("graft_dsspec").toString)
+      graft.TestDirs("graft_dsspec").toString)
     s
   }
 
@@ -27,7 +25,7 @@ class DedupStoreStreamSpec extends AnyFunSuite {
     import sp.implicits._
     // 40 docs, every text duplicated once ACROSS the file split so the
     // second copy arrives in a later micro-batch
-    val feed = Files.createTempDirectory("graft_ds_feed").toString
+    val feed = graft.TestDirs("graft_ds_feed").toString
     val docs = (0 until 40).map { i =>
       (i.toLong, s"text of doc ${i % 20}", "en", "synth", 10L)
     }
@@ -36,7 +34,7 @@ class DedupStoreStreamSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(feed)
 
     spark.sql("CREATE TABLE dscat.ns.store (sig STRING, doc_id BIGINT, text STRING)")
-    val ckpt = Files.createTempDirectory("graft_ds_ckpt").toString
+    val ckpt = graft.TestDirs("graft_ds_ckpt").toString
     DedupStoreStream.runToCompletion(spark, feed, "dscat.ns.store",
       checkpoint = ckpt, maxFilesPerTrigger = Some(1), glob = "*.parquet")
 

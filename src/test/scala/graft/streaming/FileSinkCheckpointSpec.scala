@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -17,8 +16,8 @@ class FileSinkCheckpointSpec extends AnyFunSuite {
 
   test("checkpointed parquet sink is exactly-once across restarts") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val out = Files.createTempDirectory("graft_stream_sink").toString
-    val checkpoint = Files.createTempDirectory("graft_stream_ckpt").toString
+    val out = graft.TestDirs("graft_stream_sink").toString
+    val checkpoint = graft.TestDirs("graft_stream_ckpt").toString
 
     def runOnce(): Unit = {
       val q = EventStream.readRaw(spark, dir)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +11,7 @@ class ForeachBatchSinkSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("foreachBatch through the DSv2 sink equals the batch dedup result") {
-    val out = Files.createTempDirectory("graft_febatch").toString
+    val out = graft.TestDirs("graft_febatch").toString
     EventStream.dedupToJsonSink(spark, dir, out)
     val back = spark.read
       .schema(StructType(Seq(

@@ -61,7 +61,7 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
       decisions: String => Any, extra: (String, String) => Unit)
 
   private def run(c: StreamCase): String = {
-    val root = Files.createTempDirectory("graft_am").toString
+    val root = graft.TestDirs("graft_am").toString
     c.bootstrap(s"$root/idx")
     IndexStream.runToCompletion(spark, c.rows(), c.k, c.ingest(root),
       indexRoot = s"$root/idx", checkpoint = s"$root/ckpt")
@@ -158,7 +158,7 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
 
   test("pruneGenerations sweeps abandoned unadopted targets below the " +
       "adopted head, never at or above it") {
-    val root = Files.createTempDirectory("graft_am_prune").toString
+    val root = graft.TestDirs("graft_am_prune").toString
     def mk(id: Long, adopted: Boolean): Unit = {
       val d = new java.io.File(s"$root/_gen=$id"); d.mkdirs()
       java.nio.file.Files.writeString(d.toPath.resolve("x.parquet"), "x")
@@ -187,7 +187,7 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
     // the uncrashed twin is the LSH stream's auto-maintained run: ticks
     // 0..5 over the same pmod(doc_id, 6) batches at trigger 2
     val uncrashed = autoRun(lshStream)
-    val crashed = Files.createTempDirectory("graft_am_cr_c").toString
+    val crashed = graft.TestDirs("graft_am_cr_c").toString
     def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(6)) === i)
     def tick(root: String, id: Long, b: org.apache.spark.sql.DataFrame): Unit =
       IndexStream.applyBatchMaintained(spark,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -64,7 +63,7 @@ class IndexIngestSpec extends AnyFunSuite {
     cases.foreach { c =>
       withClue(s"${c.name}: ") {
         def deliver(times: Int): String = {
-          val root = Files.createTempDirectory("graft_ingest_rd").toString
+          val root = graft.TestDirs("graft_ingest_rd").toString
           c.bootstrap(root)
           val ingest = c.ingest(root)
           val rows = c.rows()
@@ -91,11 +90,11 @@ class IndexIngestSpec extends AnyFunSuite {
       .sharedState.cacheManager
     // LSH: an index written without the `batch` partition column fails
     // the layout check after the batch is pinned
-    val lsh = Files.createTempDirectory("graft_ingest_leak_lsh").toString
+    val lsh = graft.TestDirs("graft_ingest_leak_lsh").toString
     docs.limit(5).write.parquet(s"$lsh/idx")
     // ppjoin: a serve threshold below the build threshold fails the
     // lossless-prefix check after the batch is pinned
-    val pp = Files.createTempDirectory("graft_ingest_leak_pp").toString
+    val pp = graft.TestDirs("graft_ingest_leak_pp").toString
     PrefixFilterJoin.writeIndex(docs.limit(5), s"$pp/idx", 9, 10)
     Seq(NearDupIngest(s"$lsh/log", 0.8, 4096) -> s"$lsh/idx",
       PpJoinIngest(s"$pp/log", 4, 5) -> s"$pp/idx").foreach {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -20,7 +19,7 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
   test("greedy accept across batches equals the oracle replay") {
-    val root = Files.createTempDirectory("graft_ndis_spec").toString
+    val root = graft.TestDirs("graft_ndis_spec").toString
     IndexStream.runToCompletion(
       spark, docs, k = 3, ingest(s"$root/log"), indexRoot = s"$root/idx",
       checkpoint = s"$root/ckpt")
@@ -55,7 +54,7 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
 
   test("compacted index serves identical decisions and the stream continues on it") {
     import graft.operators.NearDupLsh
-    val root = Files.createTempDirectory("graft_ndis_compact").toString
+    val root = graft.TestDirs("graft_ndis_compact").toString
     val (idx, log) = (s"$root/idx", s"$root/log")
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
@@ -85,7 +84,7 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
 
   test("compaction watermark keeps a crashed batch's partition out of batch=-1") {
     import graft.operators.NearDupLsh
-    val root = Files.createTempDirectory("graft_ndis_wm").toString
+    val root = graft.TestDirs("graft_ndis_wm").toString
     val (idx, log) = (s"$root/idx", s"$root/log")
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
@@ -115,7 +114,7 @@ class NearDupIndexStreamSpec extends AnyFunSuite {
   }
 
   test("redelivered batch replaces its own partitions: replay-idempotent") {
-    val root = Files.createTempDirectory("graft_ndis_replay").toString
+    val root = graft.TestDirs("graft_ndis_replay").toString
     val (idx, log) = (s"$root/idx", s"$root/log")
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 =!= 0)
