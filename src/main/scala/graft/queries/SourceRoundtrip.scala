@@ -198,7 +198,7 @@ object SourceRoundtrip {
           .repartitionByRange(8, col("o_orderkey"))
           .writeTo(s"$cat.g.orders").append()
         val tdir = java.nio.file.Paths.get(root, "g", "orders")
-        val before = graft.sources.GraftJsonSink.readManifest(tdir)._2.toSet
+        val before = graft.sources.Manifest.read(tdir).files.toSet
         s.conf.set("spark.graft.delete.mode", "mor")
         try {
           s.sql(s"DELETE FROM $cat.g.orders " +
@@ -206,9 +206,9 @@ object SourceRoundtrip {
           s.sql(s"DELETE FROM $cat.g.orders " +
             "WHERE o_orderstatus = 'F' AND o_orderkey >= 4000 AND o_orderkey < 5000")
         } finally s.conf.set("spark.graft.delete.mode", "cow")
-        val after = graft.sources.GraftJsonSink.readManifest(tdir)._2.toSet
+        val after = graft.sources.Manifest.read(tdir).files.toSet
         val morOnly = after.subsetOf(before) &&
-          graft.sources.GraftDv.read(tdir).nonEmpty
+          graft.sources.Manifest.read(tdir).dvs.nonEmpty
         val viaVectors = s.table(s"$cat.g.orders")
           .groupBy(col("o_orderstatus"))
           .agg(
@@ -301,7 +301,7 @@ object SourceRoundtrip {
         val tableDir = java.nio.file.Paths.get(root, "g", "t")
         val (expired, swept) =
           graft.sources.GraftCatalog.expireSnapshots(tableDir, olderThanMillis = 0L)
-        val retained = graft.sources.GraftJsonSink.listSnapshots(tableDir)
+        val retained = graft.sources.Manifest.listSnapshots(tableDir)
         val latestRows = s.sql(
           s"SELECT count(*) FROM $cat.g.t VERSION AS OF ${retained.last}")
           .head().getLong(0)
@@ -491,7 +491,7 @@ object SourceRoundtrip {
             .coalesce(1).writeTo(s"$cat.g.t").append()
         }
         val tableDir = java.nio.file.Paths.get(root, "g", "t")
-        val preSnap = graft.sources.GraftJsonSink.listSnapshots(tableDir).last
+        val preSnap = graft.sources.Manifest.listSnapshots(tableDir).last
         val (nBefore, nAfter) = graft.sources.GraftCatalog.compactSmall(
           tableDir, s.table(s"$cat.g.t").schema,
           minBytes = 10L << 20, targetBytes = 64L << 20)

@@ -31,12 +31,12 @@ private[sources] object GraftAggPushdown {
       agg: Aggregation,
       dir: Path,
       tableSchema: StructType,
-      files: Seq[String],
-      dvs: Map[String, Array[Int]]): Option[Result] = {
+      state: Manifest): Option[Result] = {
     if (agg.groupByExpressions.nonEmpty) return None
+    val Manifest(_, files, dvs, _, _) = state
     val stats = GraftStats.read(dir, tableSchema)
     if (!files.forall(stats.contains)) return None
-    val noDvs = files.forall(f => dvs.getOrElse(f, Array.empty[Int]).isEmpty)
+    val noDvs = files.forall(f => !dvs.contains(f))
 
     def colName(e: V2Expression): Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -64,7 +64,7 @@ private[sources] object GraftAggPushdown {
       agg.aggregateExpressions().map {
         case _: CountStar =>
           val n = files.iterator
-            .map(f => stats(f).rows - dvs.getOrElse(f, Array.empty[Int]).length)
+            .map(f => stats(f).rows - dvs.get(f).fold(0)(_.length))
             .sum
           Some(StructField("count_star", LongType, nullable = false) -> (n: Any))
         case c: Count if !c.isDistinct && noDvs =>

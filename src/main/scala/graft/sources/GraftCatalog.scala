@@ -81,8 +81,8 @@ class GraftCatalog extends TableCatalog {
     if (!Files.exists(f)) throw new NoSuchTableException(ident)
     val schema = DataType.fromJson(
       new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).asInstanceOf[StructType]
-    new GraftCatalogTable(ident.toString, dirFor(ident), schema, None,
-      partitionColOf(ident), format = GraftFormat.at(dirFor(ident)))
+    new GraftCatalogTable(ident.toString, dirFor(ident), schema,
+      partitionCol = partitionColOf(ident), format = GraftFormat.at(dirFor(ident)))
   }
 
   /** Time travel: `SELECT ... FROM t VERSION AS OF n` reads the immutable
@@ -102,26 +102,26 @@ class GraftCatalog extends TableCatalog {
       new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).asInstanceOf[StructType]
     version.toLongOption match {
       case Some(v) =>
-        require(GraftJsonSink.listSnapshots(dir).contains(v),
+        require(Manifest.listSnapshots(dir).contains(v),
           s"table $ident has no version $v " +
-            s"(history: ${GraftJsonSink.listMainSnapshots(dir).mkString(", ")})")
+            s"(history: ${Manifest.listMainSnapshots(dir).mkString(", ")})")
         // a staged-but-unpublished branch snapshot is NOT main history —
         // serving it here would leak unaudited rows to a main reader
-        GraftJsonSink.snapshotRef(dir, v).foreach(b =>
+        Manifest.snapshotRef(dir, v).foreach(b =>
           throw new IllegalArgumentException(
             s"version $v of table $ident is a staged snapshot of branch " +
               s"'$b', not main history — read it with VERSION AS OF '$b'"))
-        new GraftCatalogTable(s"$ident@v$v", dir, schema, Some(v), partitionColOf(ident),
-          format = GraftFormat.at(dir))
+        new GraftCatalogTable(s"$ident@v$v", dir, schema, Manifest.Version(v),
+          partitionColOf(ident), format = GraftFormat.at(dir))
       case None =>
-        // validate BEFORE path-resolving: a version string with path
-        // separators must not escape the table directory
-        GraftJsonSink.requireBranchName(version)
-        require(Files.exists(dir.resolve(GraftJsonSink.branchManifest(version))),
+        // Branch validates the name BEFORE any path resolves: a version
+        // string with path separators must not escape the table directory
+        val b = Manifest.Branch(version)
+        require(Manifest.exists(dir, b),
           s"table $ident has no version or branch '$version' " +
-            s"(branches: ${GraftJsonSink.listBranches(dir).mkString(", ")})")
-        new GraftCatalogTable(s"$ident@$version", dir, schema, None,
-          partitionColOf(ident), branch = Some(version), format = GraftFormat.at(dir))
+            s"(branches: ${Manifest.listBranches(dir).mkString(", ")})")
+        new GraftCatalogTable(s"$ident@$version", dir, schema, b,
+          partitionColOf(ident), format = GraftFormat.at(dir))
     }
   }
 
@@ -136,15 +136,14 @@ class GraftCatalog extends TableCatalog {
     val tsMillis = timestamp / 1000L
     // main snapshots only: a concurrently staged branch state must never
     // satisfy a main reader's TIMESTAMP AS OF
-    val chosen = GraftJsonSink.listMainSnapshots(dir).filter { v =>
-      Files.getLastModifiedTime(
-        dir.resolve(s"${GraftJsonSink.SnapshotPrefix}$v.json")).toMillis <= tsMillis
-    }.lastOption.getOrElse(throw new IllegalArgumentException(
-      s"table $ident has no snapshot at or before timestamp $timestamp"))
+    val chosen = Manifest.listMainSnapshots(dir)
+      .filter(Manifest.committedAt(dir, _) <= tsMillis)
+      .lastOption.getOrElse(throw new IllegalArgumentException(
+        s"table $ident has no snapshot at or before timestamp $timestamp"))
     val schema = DataType.fromJson(
       new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).asInstanceOf[StructType]
-    new GraftCatalogTable(s"$ident@v$chosen", dir, schema, Some(chosen), partitionColOf(ident),
-      format = GraftFormat.at(dir))
+    new GraftCatalogTable(s"$ident@v$chosen", dir, schema, Manifest.Version(chosen),
+      partitionColOf(ident), format = GraftFormat.at(dir))
   }
 
   override def createTable(
@@ -187,8 +186,8 @@ class GraftCatalog extends TableCatalog {
     partitionCol.foreach(c => Files.write(
       dirFor(ident).resolve(GraftCatalog.PartitionFileName),
       c.getBytes(StandardCharsets.UTF_8)))
-    new GraftCatalogTable(ident.toString, dirFor(ident), schema, None, partitionCol,
-      format = format)
+    new GraftCatalogTable(ident.toString, dirFor(ident), schema,
+      partitionCol = partitionCol, format = format)
   }
 
   /** Metadata-only schema evolution, never rewriting a data file:
@@ -319,8 +318,8 @@ class GraftCatalog extends TableCatalog {
           s"ALTER COLUMN TYPE widening, got $other")
     }
     Files.write(f, schema.json.getBytes(StandardCharsets.UTF_8))
-    new GraftCatalogTable(ident.toString, dirFor(ident), schema, None,
-      partitionColOf(ident), format = GraftFormat.at(dirFor(ident)))
+    new GraftCatalogTable(ident.toString, dirFor(ident), schema,
+      partitionCol = partitionColOf(ident), format = GraftFormat.at(dirFor(ident)))
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -396,118 +395,69 @@ object GraftCatalog {
     }.orNull)
 
   /** Compaction — the OPTIMIZE-style maintenance op for tables grown
-    * many small files through repeated appends: concatenates all
-    * committed data files into one, swaps the manifest atomically, then
-    * removes the superseded files. Readers planned before the swap
-    * still reference the old file list — in this local-FS build they
-    * race with the deletes (single-process target); a production build
-    * keeps superseded files for a grace period and vacuums later, with
-    * the same manifest protocol.
+    * many small files through repeated appends: one bin of every
+    * committed data file (deletion vectors materialize), committed as a
+    * manifest swap, then a vacuum — history restarts at the compacted
+    * state and every superseded data file is deleted, except those a
+    * live branch head still references (an unpublished branch stays
+    * readable; its publish then fails as main advanced). Runs under the
+    * table commit lock, so an append cannot commit between the read and
+    * the sweep. Readers planned before the swap still reference the old
+    * file list — in this local-FS build they race with the deletes
+    * (single-process target); a production build keeps superseded files
+    * for a grace period and vacuums later, with the same manifest
+    * protocol.
     *
-    * Returns (files before, files after).
+    * `schema` (else the table's sidecar schema) is needed for columnar
+    * tables and for keeping the stats sidecar. Returns (files before,
+    * files after).
     */
   def compact(tableDir: Path): (Int, Int) = compact(tableDir, None)
 
-  def compact(tableDir: Path, schema: Option[StructType]): (Int, Int) = {
-    val (rows, files, dvs) = GraftJsonSink.readState(tableDir)
-    if (files.size <= 1 && dvs.isEmpty) return (files.size, files.size)
-    val format = GraftFormat.at(tableDir)
-    val target = tableDir.resolve(
-      s"part-compact-${java.util.UUID.randomUUID().toString.take(8)}.${format.ext}")
-    // deletion vectors materialize here: a file with a vector streams
-    // only its live rows into the compacted output
-    format match {
-      case JsonFormat =>
-        // byte-level concatenation: JSON-lines files concatenate to a
-        // JSON-lines file, no parse needed (and no schema required)
-        val out = Files.newOutputStream(target)
-        try files.foreach { f =>
-          dvs.get(f) match {
-            case None => out.write(Files.readAllBytes(tableDir.resolve(f)))
-            case Some(dv) =>
-              GraftDv.liveLines(tableDir, f, dv).foreach { l =>
-                out.write(l.getBytes(StandardCharsets.UTF_8)); out.write('\n')
-              }
+  def compact(tableDir: Path, schema: Option[StructType]): (Int, Int) =
+    GraftJsonSink.withCommitLock(tableDir) {
+      val m = Manifest.read(tableDir)
+      if (m.files.size <= 1 && m.dvs.isEmpty) (m.files.size, m.files.size)
+      else {
+        val sch = schema.orElse(tableSchemaAt(tableDir))
+        val stats = sch.fold(Map.empty[String, GraftStats.FileStats])(GraftStats.read(tableDir, _))
+        val bin = s"part-compact-${java.util.UUID.randomUUID().toString.take(8)}." +
+          GraftFormat.at(tableDir).ext
+        val binStats = GraftDv.writeBin(tableDir, bin, m.files, m.dvs, sch, stats)
+        // superseded files are about to go, so prior snapshots would
+        // dangle: history restarts at the compacted state
+        Manifest.dropSnapshots(tableDir, Manifest.listSnapshots(tableDir))
+        Manifest.commit(tableDir, Manifest.Head, m.copy(files = Seq(bin)))
+        // drop every superseded data file — both the manifest's own list
+        // and any copy-on-write orphans older MERGE commits left behind
+        // for VERSION AS OF reads — but not what a branch head references
+        val keep = Manifest.branchFiles(tableDir) + bin
+        val all = Files.list(tableDir)
+        try all.iterator().asScala.toList
+          .filter { p =>
+            val n = p.getFileName.toString
+            n.startsWith("part-") && !keep(n)
           }
+          .foreach(Files.deleteIfExists(_))
+        finally all.close()
+        sch match {
+          case Some(s) => GraftStats.write(tableDir,
+            stats.filter { case (f, _) => keep(f) } ++ binStats.map(bin -> _), s)
+          case None => Files.deleteIfExists(tableDir.resolve(GraftStats.StatsName))
         }
-        finally out.close()
-      case _ =>
-        // columnar files never concatenate byte-wise: stream live rows
-        // through one writer (needs the schema — catalog tables carry it
-        // in their sidecar when the caller didn't pass one)
-        val sch = schema.orElse(tableSchemaAt(tableDir)).getOrElse(
-          sys.error(s"compacting a ${format.name} table requires its schema"))
-        val aliases = renamesAt(tableDir)
-        val w = format.newWriter(target, sch)
-        try files.foreach { f =>
-          val rows = GraftFormat.liveRows(format, tableDir, f,
-            dvs.getOrElse(f, Array.empty), sch, aliases)
-          try rows.foreach(w.write) finally rows.close()
-        }
-        finally w.close()
-    }
-    // streaming-txn markers survive compaction: a restarted stream must
-    // still see its last applied batch id after maintenance runs
-    val manifest =
-      s"""{"rows":$rows,"files":["${target.getFileName}"]""" +
-        GraftJsonSink.renderTxn(GraftJsonSink.readTxn(tableDir)) + "}\n"
-    val tmp = tableDir.resolve(GraftJsonSink.ManifestName + ".tmp")
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, tableDir.resolve(GraftJsonSink.ManifestName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // drop every superseded data file — both the manifest's own list and
-    // any copy-on-write orphans older MERGE commits left behind for
-    // VERSION AS OF reads (their snapshots are vacuumed just below)
-    val keep = target.getFileName.toString
-    val all = Files.list(tableDir)
-    try all.iterator().asScala.toList
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n != keep
+        // the compacted file concatenates every partition value, so the
+        // grouped (storage-partitioned) layout no longer holds — drop the
+        // sidecar; scans degrade to the flat per-file plan
+        Files.deleteIfExists(tableDir.resolve(GraftParts.PartsName))
+        // every indexed file was just deleted; the bloom sidecar would be
+        // all-stale (advisory, so merely useless — but drop it for hygiene)
+        Files.deleteIfExists(tableDir.resolve(GraftBloom.BloomName))
+        // history reset: streaming offsets from the old snapshot numbering
+        // must not alias the new one — a fresh epoch makes them fail loudly
+        Files.deleteIfExists(tableDir.resolve(GraftTableStream.EpochFileName))
+        (m.files.size, 1)
       }
-      .foreach(Files.deleteIfExists(_))
-    finally all.close()
-    // superseded files are gone, so prior snapshots would dangle: compaction
-    // vacuums history and restarts it at the compacted state
-    GraftJsonSink.listSnapshots(tableDir).foreach(v =>
-      Files.deleteIfExists(tableDir.resolve(s"${GraftJsonSink.SnapshotPrefix}$v.json")))
-    GraftJsonSink.snapshotManifest(tableDir)
-    // the compacted file is exactly the concatenation of its inputs, so
-    // its stats are the fold of theirs — skipping survives compaction
-    // when every input had stats; otherwise the sidecar resets (advisory).
-    // When vectors were materialized the fold would describe rows that no
-    // longer exist (its row/null counts feed IsNotNull skipping), so the
-    // stats recollect from the live lines just written.
-    schema match {
-      case Some(sch) if dvs.nonEmpty =>
-        val aliases = renamesAt(tableDir)
-        val c = new GraftStats.Collector(sch)
-        val rows = format.readRows(target, sch, sch, aliases)
-        try rows.foreach(c.observe) finally rows.close()
-        GraftStats.write(tableDir, Map(keep -> c.result()), sch)
-      case Some(sch) =>
-        val prev = GraftStats.read(tableDir, sch)
-        val inputs = files.flatMap(prev.get)
-        val folded =
-          if (inputs.size == files.size) Map(keep -> inputs.reduce(GraftStats.merge))
-          else Map.empty[String, GraftStats.FileStats]
-        GraftStats.write(tableDir, folded, sch)
-      case None =>
-        Files.deleteIfExists(tableDir.resolve(GraftStats.StatsName))
     }
-    // the compacted file concatenates every partition value, so the
-    // grouped (storage-partitioned) layout no longer holds — drop the
-    // sidecar; scans degrade to the flat per-file plan
-    Files.deleteIfExists(tableDir.resolve(GraftParts.PartsName))
-    // every indexed file was just deleted; the bloom sidecar would be
-    // all-stale (advisory, so merely useless — but drop it for hygiene)
-    Files.deleteIfExists(tableDir.resolve(GraftBloom.BloomName))
-    // history reset: streaming offsets from the old snapshot numbering
-    // must not alias the new one — a fresh epoch makes them fail loudly
-    Files.deleteIfExists(tableDir.resolve(GraftTableStream.EpochFileName))
-    (files.size, 1)
-  }
 
   /** Incremental small-file maintenance — the steady-state sibling of
     * compact(). Streaming appends and trickle inserts leave a long tail
@@ -526,10 +476,10 @@ object GraftCatalog {
       schema: StructType,
       minBytes: Long,
       targetBytes: Long): (Int, Int) = GraftJsonSink.withCommitLock(tableDir) {
-    val (rows, files, dvs) = GraftJsonSink.readState(tableDir)
+    val m = Manifest.read(tableDir)
     val parts = GraftParts.read(tableDir)
     val partitioned = parts.nonEmpty
-    val small = files
+    val small = m.files
       .filter(f => Files.size(tableDir.resolve(f)) < minBytes)
       .sorted
     // greedy name-ordered bin packing within each partition value; only
@@ -551,92 +501,28 @@ object GraftCatalog {
         if (cur.size >= 2) acc += (pv -> cur)
         acc.toList
       }
-    if (bins.isEmpty) (files.size, files.size)
+    if (bins.isEmpty) (m.files.size, m.files.size)
     else {
       val prevStats = GraftStats.read(tableDir, schema)
-      var newStats = Map.empty[String, GraftStats.FileStats]
-      var newParts = Map.empty[String, Option[String]]
-      val replaced = bins.flatMap(_._2).toSet
-      val aliases = renamesAt(tableDir)
-      val format = GraftFormat.at(tableDir)
-      val newFiles = bins.map { case (pv, members) =>
-        val name =
-          s"part-merged-${java.util.UUID.randomUUID().toString.take(8)}.${format.ext}"
-        // a member with a deletion vector contributes only its live
-        // rows — the merge materializes the vector
-        format match {
-          case JsonFormat => // byte-level concatenation, no parse needed
-            val out = Files.newOutputStream(tableDir.resolve(name))
-            try members.foreach { f =>
-              dvs.get(f) match {
-                case None => out.write(Files.readAllBytes(tableDir.resolve(f)))
-                case Some(dv) =>
-                  GraftDv.liveLines(tableDir, f, dv).foreach { l =>
-                    out.write(l.getBytes(StandardCharsets.UTF_8)); out.write('\n')
-                  }
-              }
-            }
-            finally out.close()
-          case _ => // columnar: stream live rows through one writer
-            val w = format.newWriter(tableDir.resolve(name), schema)
-            try members.foreach { f =>
-              val rows = GraftFormat.liveRows(format, tableDir, f,
-                dvs.getOrElse(f, Array.empty), schema, aliases)
-              try rows.foreach(w.write) finally rows.close()
-            }
-            finally w.close()
-        }
-        val memberStats = members.flatMap(prevStats.get)
-        if (members.exists(dvs.contains)) {
-          // the fold would count materialized-away rows; recollect
-          val c = new GraftStats.Collector(schema)
-          val merged = format.readRows(tableDir.resolve(name), schema, schema, aliases)
-          try merged.foreach(c.observe) finally merged.close()
-          newStats += name -> c.result()
-        } else if (memberStats.size == members.size)
-          newStats += name -> memberStats.reduce(GraftStats.merge)
-        newParts += name -> pv
-        name
+      val ext = GraftFormat.at(tableDir).ext
+      val merged = bins.map { case (pv, members) =>
+        val name = s"part-merged-${java.util.UUID.randomUUID().toString.take(8)}.$ext"
+        (name, pv, GraftDv.writeBin(tableDir, name, members, m.dvs, Some(schema), prevStats))
       }
-      val keptFiles = (files.filterNot(replaced) ++ newFiles).sorted
-      // vectors on replaced members materialized into the bins; vectors
-      // on untouched files must survive the new manifest
-      val keptDvs = dvs.filter { case (f, _) => !replaced(f) }
-      val manifest =
-        s"""{"rows":$rows,"files":[${keptFiles.map("\"" + _ + "\"").mkString(",")}]""" +
-          GraftDv.render(keptDvs) +
-          GraftJsonSink.renderTxn(GraftJsonSink.readTxn(tableDir)) + "}\n"
-      val tmp = tableDir.resolve(GraftJsonSink.ManifestName + ".tmp")
-      Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, tableDir.resolve(GraftJsonSink.ManifestName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      GraftJsonSink.snapshotManifest(tableDir)
+      val replaced = bins.flatMap(_._2).toSet
+      // vectors on replaced members materialized into the bins and drop
+      // with their files; vectors on untouched files survive
+      val keptFiles = m.files.filterNot(replaced) ++ merged.map(_._1)
+      Manifest.commit(tableDir, Manifest.Head, m.copy(files = keptFiles))
       // replaced originals keep their stats/parts entries: retained
       // snapshots still read them, and both sidecars are advisory
-      GraftStats.write(tableDir, prevStats ++ newStats, schema)
-      if (partitioned) GraftParts.write(tableDir, parts ++ newParts)
-      (files.size, keptFiles.size)
+      GraftStats.write(tableDir,
+        prevStats ++ merged.collect { case (name, _, Some(fs)) => name -> fs }, schema)
+      if (partitioned) GraftParts.write(tableDir, parts ++ merged.map(b => b._1 -> b._2))
+      (m.files.size, keptFiles.size)
     }
   }
 
-  /** Time-based snapshot retention — compact()'s vacuum nukes ALL
-    * history; this is the bounded-history maintenance op a table at a
-    * real commit rate needs. Expires every snapshot whose commit time
-    * (file mtime) is older than `olderThanMillis` ago — except the
-    * latest, which always stays time-travelable — then deletes data
-    * files referenced by NO retained snapshot and not the live manifest
-    * (copy-on-write orphans kept alive only for expired history).
-    *
-    * Runs under the table commit lock, same discipline as compact():
-    * a concurrent writer's manifest read-merge-swap never interleaves
-    * with the reference scan, so a file committed mid-expire cannot be
-    * swept. Expired versions fail loudly on VERSION AS OF (the version
-    * check rejects them); retained versions keep reading because every
-    * file they reference survives the sweep by construction.
-    *
-    * Returns (expired versions, deleted orphan data files).
-    */
   /** Write-audit-publish: fork a branch at the current main head. Writers
     * stage onto it with `df.writeTo(t).option("branch", name).append()`,
     * auditors read it with `VERSION AS OF '<name>'`, and [[publishBranch]]
@@ -645,16 +531,10 @@ object GraftCatalog {
     * publish can prove main has not advanced since the fork.
     */
   def createBranch(tableDir: Path, branch: String): Unit = {
-    GraftJsonSink.requireBranchName(branch)
+    val b = Manifest.Branch(branch)
     GraftJsonSink.withCommitLock(tableDir) {
-      val head = tableDir.resolve(GraftJsonSink.ManifestName)
-      val bm = tableDir.resolve(GraftJsonSink.branchManifest(branch))
-      require(!Files.exists(bm), s"branch '$branch' already exists in $tableDir")
-      val forkState =
-        if (Files.exists(head)) Files.readAllBytes(head)
-        else "{\"rows\":0,\"files\":[]}\n".getBytes(StandardCharsets.UTF_8)
-      Files.write(bm, forkState)
-      Files.write(tableDir.resolve(GraftJsonSink.branchFork(branch)), forkState)
+      require(!Manifest.exists(tableDir, b), s"branch '$branch' already exists in $tableDir")
+      Manifest.fork(tableDir, b)
     }
   }
 
@@ -663,50 +543,29 @@ object GraftCatalog {
     * concurrent commit landed; the branch must be re-staged against the
     * new head), the WAP contract that makes audit results trustworthy:
     * what was audited is exactly what main becomes. Returns the snapshot
-    * version the publish recorded. The branch is consumed.
+    * version the publish recorded. The branch is consumed, and its
+    * snapshots fold into main history.
     */
   def publishBranch(tableDir: Path, branch: String): Long = {
-    GraftJsonSink.requireBranchName(branch)
+    val b = Manifest.Branch(branch)
     GraftJsonSink.withCommitLock(tableDir) {
-      val head = tableDir.resolve(GraftJsonSink.ManifestName)
-      val bm = tableDir.resolve(GraftJsonSink.branchManifest(branch))
-      val fork = tableDir.resolve(GraftJsonSink.branchFork(branch))
-      require(Files.exists(bm),
+      require(Manifest.exists(tableDir, b),
         s"no branch '$branch' in $tableDir " +
-          s"(have: ${GraftJsonSink.listBranches(tableDir).mkString(", ")})")
-      val headNow =
-        if (Files.exists(head)) new String(Files.readAllBytes(head), StandardCharsets.UTF_8)
-        else "{\"rows\":0,\"files\":[]}\n"
-      val atFork =
-        if (Files.exists(fork)) new String(Files.readAllBytes(fork), StandardCharsets.UTF_8)
-        else "{\"rows\":0,\"files\":[]}\n"
-      require(headNow == atFork,
+          s"(have: ${Manifest.listBranches(tableDir).mkString(", ")})")
+      require(Manifest.read(tableDir) == Manifest.forkOf(tableDir, b),
         s"cannot publish branch '$branch': main advanced since the fork " +
           "(concurrent commit) — re-create the branch from the new head and re-stage")
-      Files.move(bm, head,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Files.deleteIfExists(fork)
-      // fold the branch's snapshots into main history (fast-forward:
-      // its commit chain is now literally main's ancestry), then record
-      // the published head as the next main snapshot
-      GraftJsonSink.promoteBranchSnapshots(tableDir, branch)
-      GraftJsonSink.snapshotManifest(tableDir)
+      Manifest.publish(tableDir, b)
     }
   }
 
-  /** Drop an unpublished branch; its staged data files become orphans
-    * that [[expireSnapshots]] sweeps once their snapshots age out.
+  /** Drop an unpublished branch: it leaves no trace in numbered history,
+    * and its staged data files become orphans that [[expireSnapshots]]
+    * sweeps once their snapshots age out.
     */
   def dropBranch(tableDir: Path, branch: String): Unit = {
-    GraftJsonSink.requireBranchName(branch)
-    GraftJsonSink.withCommitLock(tableDir) {
-      Files.deleteIfExists(tableDir.resolve(GraftJsonSink.branchManifest(branch)))
-      Files.deleteIfExists(tableDir.resolve(GraftJsonSink.branchFork(branch)))
-      // a rejected branch leaves no trace in numbered history; its data
-      // files become orphans that expireSnapshots sweeps
-      GraftJsonSink.dropBranchSnapshots(tableDir, branch)
-    }
+    val b = Manifest.Branch(branch)
+    GraftJsonSink.withCommitLock(tableDir)(Manifest.drop(tableDir, b))
   }
 
   /** Auto-maintenance policy for a catalog table — the trigger a
@@ -737,7 +596,7 @@ object GraftCatalog {
     def confL(k: String, d: Long): Long =
       spark.conf.getOption(k).map(_.toLong).getOrElse(d)
     val maxFiles = confL("spark.graft.catalog.maintainMaxFiles", 64L).toInt
-    val live = GraftJsonSink.readManifest(tableDir)._2.size
+    val live = Manifest.read(tableDir).files.size
     val (before, after) =
       if (live > maxFiles)
         compactSmall(tableDir, schema,
@@ -749,31 +608,43 @@ object GraftCatalog {
     (before, after, expired.size)
   }
 
+  /** Time-based snapshot retention — compact()'s vacuum nukes ALL
+    * history; this is the bounded-history maintenance op a table at a
+    * real commit rate needs. Expires every snapshot whose commit time
+    * (file mtime) is older than `olderThanMillis` ago — except the
+    * latest, which always stays time-travelable — then deletes data
+    * files referenced by NO retained snapshot and not the live manifest
+    * (copy-on-write orphans kept alive only for expired history).
+    *
+    * Runs under the table commit lock, same discipline as compact():
+    * a concurrent writer's manifest read-merge-swap never interleaves
+    * with the reference scan, so a file committed mid-expire cannot be
+    * swept. Expired versions fail loudly on VERSION AS OF (the version
+    * check rejects them); retained versions keep reading because every
+    * file they reference survives the sweep by construction.
+    *
+    * Returns (expired versions, deleted orphan data files).
+    */
   def expireSnapshots(tableDir: Path, olderThanMillis: Long): (Seq[Long], Seq[String]) =
     GraftJsonSink.withCommitLock(tableDir) {
       val cutoff = System.currentTimeMillis() - olderThanMillis
-      val all = GraftJsonSink.listSnapshots(tableDir)
+      val all = Manifest.listSnapshots(tableDir)
       // the latest MAIN snapshot is always retained (branch-staged
       // snapshots are expirable like any other; their data files are
       // still pinned by the live branch head below)
-      val keepLatest = GraftJsonSink.listMainSnapshots(tableDir).lastOption
+      val keepLatest = Manifest.listMainSnapshots(tableDir).lastOption
         .orElse(all.lastOption)
-      val expired = all.filterNot(keepLatest.contains).filter { v =>
-        Files.getLastModifiedTime(
-          tableDir.resolve(s"${GraftJsonSink.SnapshotPrefix}$v.json")).toMillis < cutoff
-      }
-      expired.foreach(v =>
-        Files.deleteIfExists(tableDir.resolve(s"${GraftJsonSink.SnapshotPrefix}$v.json")))
+      val expired = all.filterNot(keepLatest.contains)
+        .filter(Manifest.committedAt(tableDir, _) < cutoff)
+      Manifest.dropSnapshots(tableDir, expired)
       // sweep data files only history kept alive: referenced-by-nothing =
       // not in the live manifest, not in any retained snapshot, and not
       // staged on any live branch head (an unpublished branch's files
       // must survive however old its snapshots are)
-      val referenced = (GraftJsonSink.readManifest(tableDir)._2 ++
-        GraftJsonSink.listBranches(tableDir)
-          .flatMap(b => GraftJsonSink.readManifestAt(
-            tableDir, GraftJsonSink.branchManifest(b))._2) ++
-        GraftJsonSink.listSnapshots(tableDir)
-          .flatMap(v => GraftJsonSink.readManifestVersion(tableDir, v)._2)).toSet
+      val referenced = Manifest.read(tableDir).files.toSet ++
+        Manifest.branchFiles(tableDir) ++
+        Manifest.listSnapshots(tableDir)
+          .flatMap(v => Manifest.read(tableDir, Manifest.Version(v)).files)
       val files = Files.list(tableDir)
       val orphans = try files.iterator().asScala
         .map(_.getFileName.toString)
@@ -811,7 +682,7 @@ object GraftCatalog {
         s"bloom index on '$c': ${f.dataType.simpleString} is not indexable " +
           "(STRING / BIGINT / INT only)")
     }
-    val (_, files, dvs) = GraftJsonSink.readState(tableDir)
+    val Manifest(_, files, dvs, _, _) = Manifest.read(tableDir)
     val aliases = renamesAt(tableDir)
     val existing = GraftBloom.read(tableDir)
     val idx = columns.map(c => c -> schema.fieldIndex(c))
@@ -823,7 +694,7 @@ object GraftCatalog {
       // deleted rows would only add safe false positives, but indexing
       // live rows keeps the filter as selective as the data
       val live = GraftFormat.liveRows(format, tableDir, f,
-        dvs.getOrElse(f, Array.empty), schema, aliases)
+        dvs.getOrElse(f, Nil), schema, aliases)
       val rows = try live.toVector finally live.close()
       val builders = idx.map { case (c, _) =>
         c -> new GraftBloom.Builder(rows.size.toLong, bitsPerKey)
@@ -860,9 +731,8 @@ object GraftCatalog {
   */
 private[sources] class GraftCatalogTable(
     tableName: String, dir: Path, tableSchema: StructType,
-    version: Option[Long] = None,
+    at: Manifest.At = Manifest.Head,
     partitionCol: Option[String] = None,
-    branch: Option[String] = None,
     format: GraftFormat = JsonFormat)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
@@ -882,8 +752,7 @@ private[sources] class GraftCatalogTable(
       TableCapability.MICRO_BATCH_READ, TableCapability.TRUNCATE)
 
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    version.isEmpty && branch.isEmpty &&
-      filters.forall(FilterEval.evaluable(_, tableSchema))
+    at == Manifest.Head && filters.forall(FilterEval.evaluable(_, tableSchema))
 
   /** SQL `DELETE FROM t WHERE p` as a copy-on-write commit: files whose
     * stats prove no row can match survive untouched (the skip layer
@@ -897,24 +766,23 @@ private[sources] class GraftCatalogTable(
     * same manifest swap.
     */
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    require(version.isEmpty, s"cannot delete from a historical version of $tableName")
-    require(branch.isEmpty, s"cannot delete from a branch of $tableName")
+    require(at == Manifest.Head, s"cannot delete from $tableName: it reads $at")
     // merge-on-read mode: record deleted ordinals in the manifest instead
     // of rewriting data files — see [[GraftDv]]. At 100 TB this turns a
     // terabyte of copy-on-write rewrite into a few KB of manifest.
     val mor = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.delete.mode", "cow") == "mor"
     GraftJsonSink.withCommitLock(dir) {
-    val (_, files, dvs) = GraftJsonSink.readState(dir)
+    val m = Manifest.read(dir)
     val stats = GraftStats.read(dir, tableSchema)
     val writeId = java.util.UUID.randomUUID().toString.take(8)
     var newStats = Map.empty[String, GraftStats.FileStats]
-    var keptDvs = Map.empty[String, Array[Int]]
+    var keptDvs = Map.empty[String, Seq[Int]]
     var keptRows = 0L
     val keptFiles = Vector.newBuilder[String]
     val rewriteLog = Vector.newBuilder[(String, String)]
-    files.zipWithIndex.foreach { case (f, idx) =>
-      val dv = dvs.getOrElse(f, Array.empty[Int])
+    m.files.zipWithIndex.foreach { case (f, idx) =>
+      val dv = m.dvs.getOrElse(f, Nil)
       val fileStats = stats.get(f)
       // stats describe the physical file (deleted rows included) — a
       // superset range, so the skip stays conservative under vectors
@@ -942,7 +810,7 @@ private[sources] class GraftCatalogTable(
           } else {
             keptFiles += f
             keptRows += rows.size - merged.length
-            if (merged.nonEmpty) keptDvs += f -> merged.toArray
+            if (merged.nonEmpty) keptDvs += f -> merged
           }
         } else {
           val collector = new GraftStats.Collector(tableSchema)
@@ -975,20 +843,8 @@ private[sources] class GraftCatalogTable(
         }
       }
     }
-    val manifest = new java.lang.StringBuilder()
-      .append("{\"rows\":").append(keptRows)
-      .append(",\"files\":[")
-      .append(keptFiles.result().map(f => "\"" + f + "\"").sorted.mkString(","))
-      .append("]")
-      .append(GraftDv.render(keptDvs))
-      .append(GraftJsonSink.renderTxn(GraftJsonSink.readTxn(dir)))
-      .append("}\n").toString
-    val tmp = dir.resolve(GraftJsonSink.ManifestName + ".tmp")
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(GraftJsonSink.ManifestName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    GraftJsonSink.snapshotManifest(dir)
+    Manifest.commit(dir, Manifest.Head,
+      m.copy(rows = keptRows, files = keptFiles.result(), dvs = keptDvs))
     if (newStats.nonEmpty) GraftStats.write(dir, stats ++ newStats, tableSchema)
     // a rewritten file holds exactly the survivors of ONE original file,
     // so it inherits that file's partition value — the grouped layout
@@ -1034,13 +890,7 @@ private[sources] class GraftCatalogTable(
           Option[GraftAggPushdown.Result] =
         if (hadFilters) None
         else {
-          val (_, files, dvMap) = (branch, version) match {
-            case (Some(b), _) =>
-              GraftJsonSink.readStateAt(dir, GraftJsonSink.branchManifest(b))
-            case (None, Some(v)) => GraftJsonSink.readStateVersion(dir, v)
-            case (None, None) => GraftJsonSink.readState(dir)
-          }
-          GraftAggPushdown.compute(agg, dir, tableSchema, files, dvMap)
+          GraftAggPushdown.compute(agg, dir, tableSchema, Manifest.read(dir, at))
         }
       override def supportCompletePushDown(
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -1066,18 +916,10 @@ private[sources] class GraftCatalogTable(
         // files and deletion vectors parse from ONE manifest read: two
         // reads could straddle a DV-materialize commit and pair an old
         // file list with a manifest that no longer carries its vectors
-        private lazy val committedState: (Seq[String], Map[String, Array[Int]]) = {
-          val (_, files, dvMap) = (branch, version) match {
-            case (Some(b), _) =>
-              GraftJsonSink.readStateAt(dir, GraftJsonSink.branchManifest(b))
-            case (None, Some(v)) => GraftJsonSink.readStateVersion(dir, v)
-            case (None, None) => GraftJsonSink.readState(dir)
-          }
-          (files, dvMap)
-        }
-        private lazy val dvs: Map[String, Array[Int]] = committedState._2
+        private lazy val committed: Manifest = Manifest.read(dir, at)
+        private lazy val dvs: Map[String, Seq[Int]] = committed.dvs
         private lazy val keptFiles: Seq[String] = {
-          val files = committedState._1
+          val files = committed.files
           if (skippingFilters.isEmpty) files
           else {
             // two advisory layers compose: min/max ranges answer the
@@ -1118,10 +960,9 @@ private[sources] class GraftCatalogTable(
         override def toBatch: Batch = this
         override def toMicroBatchStream(checkpointLocation: String):
             org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-          require(version.isEmpty,
-            s"cannot stream from a historical version of $tableName")
-          require(branch.isEmpty,
-            s"cannot stream from a branch of $tableName — publish it first")
+          require(at == Manifest.Head,
+            s"cannot stream from $tableName: it reads $at — stream the table head " +
+              "(publish a branch first)")
           new GraftTableStream(dir, tableSchema, required, format)
         }
         override def planInputPartitions(): Array[InputPartition] =
@@ -1171,8 +1012,7 @@ private[sources] class GraftCatalogTable(
           val rows =
             if (rowsKnown)
               files.iterator
-                .map(f => sidecar(f).rows -
-                  dvs.getOrElse(f, Array.empty[Int]).length)
+                .map(f => sidecar(f).rows - dvs.get(f).fold(0)(_.length))
                 .sum
             else 0L
           val sizeFinal = bytes
@@ -1204,9 +1044,8 @@ private[sources] class GraftCatalogTable(
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(version.isEmpty, s"cannot write to a historical version of $tableName")
-    require(branch.isEmpty,
-      s"write to a branch via .option(\"branch\", ...) on the main table handle")
+    require(at == Manifest.Head, s"cannot write to $tableName: it reads $at — " +
+      "write to a branch via .option(\"branch\", ...) on the main table handle")
     // write-audit-publish staging: df.writeTo(t).option("branch", b).append()
     // commits to the branch head only — invisible to main readers until
     // GraftCatalog.publishBranch fast-forwards main to the audited state
@@ -1265,7 +1104,7 @@ private case class JsonFilesPartition(
 
 private class JsonFileReaderFactory(fileSchema: StructType, required: StructType,
     aliases: Map[String, Set[String]] = Map.empty,
-    dvs: Map[String, Array[Int]] = Map.empty,
+    dvs: Map[String, Seq[Int]] = Map.empty,
     format: GraftFormat = JsonFormat,
     columnar: Boolean = true,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
@@ -1311,7 +1150,7 @@ private class JsonFileReaderFactory(fileSchema: StructType, required: StructType
           val p = Paths.get(pathIt.next())
           val all = format.readRows(p, fileSchema, required, aliases)
           rows = dvs.get(p.getFileName.toString) match {
-            case None | Some(Array()) => all
+            case None => all
             case Some(dv) =>
               val dead = dv.toSet
               all.mapRows(_.zipWithIndex.collect { case (r, i) if !dead(i) => r })

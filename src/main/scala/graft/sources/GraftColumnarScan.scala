@@ -169,7 +169,7 @@ private[sources] object GraftColumnarScan {
 private[sources] class GraftColumnarReader(paths: Seq[String],
     tableSchema: StructType, required: StructType,
     aliases: Map[String, Set[String]],
-    dvs: Map[String, Array[Int]] = Map.empty,
+    dvs: Map[String, Seq[Int]] = Map.empty,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends PartitionReader[ColumnarBatch] {
 
@@ -232,7 +232,7 @@ private[sources] class GraftColumnarReader(paths: Seq[String],
   private def openFile(p: Path): Unit = {
     // deletion vector for THIS file (ordinals = physical row index in
     // file order — the same space the decode loops below walk)
-    val dv = dvs.getOrElse(p.getFileName.toString, Array.empty[Int])
+    val dv = dvs.getOrElse(p.getFileName.toString, Nil)
     dead = if (dv.isEmpty) null
       else { val b = new java.util.BitSet; dv.foreach(b.set); b }
     fileOrdinal = 0L

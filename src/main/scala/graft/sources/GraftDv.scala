@@ -39,114 +39,105 @@ import org.apache.spark.sql.types.StructType
   */
 object GraftDv {
 
-  /** Deletion vectors of the live manifest: file name → sorted deleted
-    * ordinals. Empty map when none.
+  /** Write `members`' live rows, in order, as ONE new data file `name` —
+    * the bin writer of compaction, small-file bin packing and vector
+    * materialize. JSON-lines files concatenate byte-wise (no parse, no
+    * schema); columnar files stream rows through one writer and need
+    * `schema`. A member's deletion vector materializes: only its live
+    * rows are written. Returns the new file's stats when `schema` is
+    * known: the fold of the members' `prevStats` (concatenation
+    * preserves ranges) when every member has an entry and none had a
+    * vector, else — a fold would count materialized-away rows, and its
+    * null counts feed IsNotNull skipping — recollected from the file
+    * just written when a member had a vector; None otherwise.
     */
-  def read(dir: Path): Map[String, Array[Int]] =
-    parse(manifestText(dir.resolve(GraftJsonSink.ManifestName)))
-
-  /** Deletion vectors as of snapshot `version`. */
-  def readVersion(dir: Path, version: Long): Map[String, Array[Int]] =
-    parse(manifestText(dir.resolve(s"${GraftJsonSink.SnapshotPrefix}$version.json")))
-
-  private def manifestText(m: Path): String =
-    if (!Files.exists(m)) ""
-    else new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-
-  /** Parse the `"dvs":{...}` fragment. The object nests brackets (the
-    * ordinal arrays) but never braces, so the brace-bounded group is
-    * exact.
-    */
-  private[sources] def parse(text: String): Map[String, Array[Int]] =
-    "\"dvs\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-      .map(g => "\"([^\"]+)\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
-        .findAllMatchIn(g.group(1))
-        .map(p => p.group(1) ->
-          p.group(2).split(',').map(_.trim).filter(_.nonEmpty).map(_.toInt))
-        .filter(_._2.nonEmpty)
-        .toMap)
-      .getOrElse(Map.empty)
-
-  /** Render the manifest suffix fragment (empty when no vectors). */
-  private[sources] def render(dvs: Map[String, Array[Int]]): String = {
-    val nonEmpty = dvs.filter(_._2.nonEmpty)
-    if (nonEmpty.isEmpty) ""
-    else nonEmpty.toSeq.sortBy(_._1)
-      .map { case (f, ords) => "\"" + f + "\":[" + ords.mkString(",") + "]" }
-      .mkString(",\"dvs\":{", ",", "}")
-  }
-
-  /** The file's live (non-deleted) non-empty lines, in order. */
-  private[sources] def liveLines(dir: Path, file: String, dv: Array[Int]): Seq[String] = {
-    val lines = Files.readAllLines(dir.resolve(file), StandardCharsets.UTF_8)
-      .asScala.filter(_.nonEmpty).toSeq
-    if (dv.isEmpty) lines
-    else {
-      val dead = dv.toSet
-      lines.zipWithIndex.collect { case (l, i) if !dead(i) => l }
+  private[sources] def writeBin(
+      dir: Path,
+      name: String,
+      members: Seq[String],
+      dvs: Map[String, Seq[Int]],
+      schema: Option[StructType],
+      prevStats: Map[String, GraftStats.FileStats]): Option[GraftStats.FileStats] = {
+    val format = GraftFormat.at(dir)
+    val aliases = GraftCatalog.renamesAt(dir)
+    val target = dir.resolve(name)
+    format match {
+      case JsonFormat =>
+        val out = Files.newOutputStream(target)
+        try members.foreach { f =>
+          dvs.get(f) match {
+            case None => out.write(Files.readAllBytes(dir.resolve(f)))
+            case Some(dv) =>
+              val dead = dv.toSet
+              Files.readAllLines(dir.resolve(f), StandardCharsets.UTF_8).asScala
+                .filter(_.nonEmpty).zipWithIndex.foreach { case (l, i) =>
+                  if (!dead(i)) { out.write(l.getBytes(StandardCharsets.UTF_8)); out.write('\n') }
+                }
+          }
+        }
+        finally out.close()
+      case _ =>
+        val sch = schema.getOrElse(
+          sys.error(s"compacting a ${format.name} table requires its schema"))
+        val w = format.newWriter(target, sch)
+        try members.foreach { f =>
+          val rows = GraftFormat.liveRows(format, dir, f, dvs.getOrElse(f, Nil), sch, aliases)
+          try rows.foreach(w.write) finally rows.close()
+        }
+        finally w.close()
+    }
+    schema.flatMap { sch =>
+      if (members.exists(dvs.contains)) {
+        val c = new GraftStats.Collector(sch)
+        val rows = format.readRows(target, sch, sch, aliases)
+        try rows.foreach(c.observe) finally rows.close()
+        Some(c.result())
+      } else {
+        val inputs = members.flatMap(prevStats.get)
+        if (inputs.size == members.size) Some(inputs.reduce(GraftStats.merge)) else None
+      }
     }
   }
 
   /** Rewrite `targets` (files that carry a vector) as live-only files,
-    * committing the swap as a normal snapshot: data files change names,
-    * their vector entries drop, row count is unchanged. Callers that
-    * re-read data files OUTSIDE the vector-aware scan (UPDATE's staging
-    * read) materialize first so a deleted row can never resurrect.
-    * Must run under the table commit lock (re-entrant for callers that
-    * already hold it). Returns old name → new name.
+    * one bin each, committing the swap as a normal snapshot: data files
+    * change names, their vector entries drop, row count is unchanged.
+    * Callers that re-read data files OUTSIDE the vector-aware scan
+    * (UPDATE's staging read) materialize first so a deleted row can
+    * never resurrect. Must run under the table commit lock (re-entrant
+    * for callers that already hold it). Returns old name → new name.
     */
   private[sources] def materialize(
       dir: Path, schema: StructType, targets: Seq[String]): Map[String, String] =
     GraftJsonSink.withCommitLock(dir) {
-      val (rows, files) = GraftJsonSink.readManifest(dir)
-      val dvs = read(dir)
-      val todo = targets.filter(f => dvs.get(f).exists(_.nonEmpty))
+      val m = Manifest.read(dir)
+      val todo = targets.filter(m.dvs.contains)
       if (todo.isEmpty) Map.empty
       else {
-      val stats = GraftStats.read(dir, schema)
-      val aliases = GraftCatalog.renamesAt(dir)
-      val format = GraftFormat.at(dir)
-      val writeId = java.util.UUID.randomUUID().toString.take(8)
-      var renamed = Map.empty[String, String]
-      var newStats = Map.empty[String, GraftStats.FileStats]
-      todo.zipWithIndex.foreach { case (f, i) =>
-        val nf = f"part-$writeId-dv$i%05d.${format.ext}"
-        val c = new GraftStats.Collector(schema)
-        val w = format.newWriter(dir.resolve(nf), schema)
-        val live = GraftFormat.liveRows(format, dir, f, dvs(f), schema, aliases)
-        try live.foreach { r => w.write(r); c.observe(r) }
-        finally { try live.close() finally w.close() }
-        newStats += nf -> c.result()
-        renamed += f -> nf
-      }
-      val kept = (files.filterNot(renamed.contains) ++ renamed.values).sorted
-      val manifest = new java.lang.StringBuilder()
-        .append("{\"rows\":").append(rows)
-        .append(",\"files\":[")
-        .append(kept.map(f => "\"" + f + "\"").mkString(","))
-        .append("]")
-        .append(render(dvs -- renamed.keys))
-        .append(GraftJsonSink.renderTxn(GraftJsonSink.readTxn(dir)))
-        .append("}\n").toString
-      val tmp = dir.resolve(GraftJsonSink.ManifestName + ".tmp")
-      Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, dir.resolve(GraftJsonSink.ManifestName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      GraftJsonSink.snapshotManifest(dir)
-      GraftStats.write(dir, stats ++ newStats, schema)
-      // a materialized file holds exactly the live rows of ONE original,
-      // so it inherits that file's partition value — grouped layout holds
-      val parts = GraftParts.read(dir)
-      if (parts.nonEmpty) {
-        val inherited = renamed.collect {
-          case (orig, nf) if parts.contains(orig) => nf -> parts(orig)
+        val stats = GraftStats.read(dir, schema)
+        val ext = GraftFormat.at(dir).ext
+        val writeId = java.util.UUID.randomUUID().toString.take(8)
+        val written = todo.zipWithIndex.map { case (f, i) =>
+          val nf = f"part-$writeId-dv$i%05d.$ext"
+          (f, nf, writeBin(dir, nf, Seq(f), m.dvs, Some(schema), stats))
         }
-        if (inherited.size == renamed.size)
-          GraftParts.write(dir, parts ++ inherited)
-        else Files.deleteIfExists(dir.resolve(GraftParts.PartsName))
-      }
-      renamed
+        val renamed = written.map { case (f, nf, _) => f -> nf }.toMap
+        Manifest.commit(dir, Manifest.Head,
+          m.copy(files = m.files.filterNot(renamed.contains) ++ renamed.values))
+        GraftStats.write(dir,
+          stats ++ written.collect { case (_, nf, Some(fs)) => nf -> fs }, schema)
+        // a materialized file holds exactly the live rows of ONE original,
+        // so it inherits that file's partition value — grouped layout holds
+        val parts = GraftParts.read(dir)
+        if (parts.nonEmpty) {
+          val inherited = renamed.collect {
+            case (orig, nf) if parts.contains(orig) => nf -> parts(orig)
+          }
+          if (inherited.size == renamed.size)
+            GraftParts.write(dir, parts ++ inherited)
+          else Files.deleteIfExists(dir.resolve(GraftParts.PartsName))
+        }
+        renamed
       }
     }
 }

@@ -198,10 +198,10 @@ object GraftFormat {
         format.name.getBytes(StandardCharsets.UTF_8))
 
   /** The file's live rows (deletion vector subtracted), in order — the
-    * row-level successor of the JSON-era `liveLines`, shared by every
-    * maintenance path (compaction, vector materialize, bloom build).
+    * row-level read shared by the maintenance paths (columnar bins,
+    * bloom build).
     */
-  def liveRows(format: GraftFormat, dir: Path, file: String, dv: Array[Int],
+  def liveRows(format: GraftFormat, dir: Path, file: String, dv: Seq[Int],
       schema: StructType, aliases: Map[String, Set[String]]): Rows = {
     val all = format.readRows(dir.resolve(file), schema, schema, aliases)
     if (dv.isEmpty) all

@@ -52,111 +52,8 @@ class GraftJsonSink extends TableProvider with DataSourceRegister {
     new GraftJsonSinkTable(schema)
 }
 
-/** The path-based sink's write options, shared with the catalog table's
-  * write builder. `format` selects the data-file format (json/parquet)
-  * for paths written outside a catalog (catalog tables carry it in
-  * their CREATE-time sidecar instead).
-  */
-
 object GraftJsonSink {
 
-  val ManifestName = "_graft_manifest.json"
-  val SnapshotPrefix = "_graft_manifest.v"
-  val BranchPrefix = "_graft_branch_"
-
-  /** Branch head manifest (write-audit-publish). A branch is a named
-    * manifest alongside the main one: branch commits fold into it and
-    * snapshot into the shared NUMBERING tagged with their branch ref,
-    * invisible to main's numeric/timestamp time travel until publish
-    * folds them in; main readers never consult the branch head. See
-    * [[GraftCatalog.createBranch]] / `publishBranch`.
-    */
-  def branchManifest(branch: String): String = s"$BranchPrefix$branch.json"
-
-  /** Frozen copy of the main manifest at branch-fork time — publish
-    * compares it against the then-current main head to enforce
-    * fast-forward-only publication.
-    */
-  def branchFork(branch: String): String = s"$BranchPrefix$branch.fork.json"
-
-  private[sources] def requireBranchName(branch: String): Unit =
-    require(branch.nonEmpty &&
-      branch.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"branch name must be [A-Za-z0-9_-]+, got '$branch'")
-
-  /** Branches present on the table, by their head-manifest files. */
-  def listBranches(dir: Path): Seq[String] = {
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith(BranchPrefix) && n.endsWith(".json") &&
-        !n.endsWith(".fork.json"))
-      .map(n => n.substring(BranchPrefix.length, n.length - 5))
-      .toSeq.sorted
-    finally s.close()
-  }
-
-  /** (total rows, file names) of the committed state; (0, Nil) if none. */
-  def readManifest(dir: Path): (Long, Seq[String]) =
-    parseManifest(dir.resolve(ManifestName))
-
-  /** readManifest of an arbitrary manifest file (branch heads). */
-  def readManifestAt(dir: Path, manifestName: String): (Long, Seq[String]) =
-    parseManifest(dir.resolve(manifestName))
-
-  /** readState of an arbitrary manifest file (branch heads). */
-  def readStateAt(dir: Path, manifestName: String): (Long, Seq[String], Map[String, Array[Int]]) =
-    parseState(dir.resolve(manifestName))
-
-  /** The committed state as of snapshot `version`. */
-  def readManifestVersion(dir: Path, version: Long): (Long, Seq[String]) = {
-    val m = dir.resolve(s"$SnapshotPrefix$version.json")
-    require(Files.exists(m),
-      s"no snapshot version $version in $dir (have: ${listSnapshots(dir).mkString(",")})")
-    parseManifest(m)
-  }
-
-  /** (live rows, files, deletion vectors) parsed from ONE read of the
-    * manifest — scans must plan their file list and the vectors that
-    * apply to it from the same committed state; two separate reads could
-    * straddle a materialize commit and resurrect deleted rows.
-    */
-  def readState(dir: Path): (Long, Seq[String], Map[String, Array[Int]]) =
-    parseState(dir.resolve(ManifestName))
-
-  /** readState as of snapshot `version`. */
-  def readStateVersion(dir: Path, version: Long): (Long, Seq[String], Map[String, Array[Int]]) = {
-    val m = dir.resolve(s"$SnapshotPrefix$version.json")
-    require(Files.exists(m),
-      s"no snapshot version $version in $dir (have: ${listSnapshots(dir).mkString(",")})")
-    parseState(m)
-  }
-
-  private def parseState(m: Path): (Long, Seq[String], Map[String, Array[Int]]) = {
-    if (!Files.exists(m)) return (0L, Nil, Map.empty)
-    val text = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    val (rows, files) = parseManifestText(text)
-    (rows, files, GraftDv.parse(text))
-  }
-
-  /** Snapshot versions present, ascending. */
-  def listSnapshots(dir: Path): Seq[Long] = {
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith(SnapshotPrefix) && n.endsWith(".json"))
-      .map(n => n.substring(SnapshotPrefix.length, n.length - 5).toLong)
-      .toSeq.sorted
-    finally s.close()
-  }
-
-  /** Record the freshly committed manifest as the next immutable snapshot
-    * version (history for VERSION AS OF reads). Called after the manifest
-    * swap — the swap remains the single commit point; a crash between
-    * swap and snapshot loses only the history entry, never data.
-    */
   /** Commit mutex: serialize the manifest read-merge-swap critical
     * section across concurrent writers in this or any other process on
     * the same filesystem. `Files.createDirectory` is atomic (POSIX
@@ -188,8 +85,14 @@ object GraftJsonSink {
       t
     })
 
+  private def lockPath(dir: Path): Path = dir.resolve("_graft_commit.lock")
+
+  /** Whether this thread holds `dir`'s commit lock. */
+  private[sources] def holdsCommitLock(dir: Path): Boolean =
+    heldLocks.get().contains(lockPath(dir).toAbsolutePath.toString)
+
   private[graft] def withCommitLock[A](dir: Path)(body: => A): A = {
-    val lock = dir.resolve("_graft_commit.lock")
+    val lock = lockPath(dir)
     val key = lock.toAbsolutePath.toString
     // reentrant per thread: MERGE holds the table lock around its whole
     // read-merge-write, and the inner replace-commit locks the same dir
@@ -254,131 +157,6 @@ object GraftJsonSink {
     Files.deleteIfExists(p)
   }
 
-  private[sources] def snapshotManifest(dir: Path): Long =
-    snapshotManifest(dir, ManifestName)
-
-  /** Snapshot `sourceName`'s current content into the numbered version
-    * sequence. Branch commits share main's NUMBERING but not its
-    * HISTORY: a snapshot taken from a branch manifest is tagged with a
-    * `"ref":"<branch>"` field, and every main read path (numeric
-    * VERSION AS OF, TIMESTAMP AS OF, the streaming tailer) consults
-    * only untagged snapshots — staged-but-unpublished branch states are
-    * never observable through main, the WAP contract. Publish folds the
-    * branch's snapshots into main history ([[promoteBranchSnapshots]]);
-    * drop deletes them ([[dropBranchSnapshots]]).
-    */
-  private[sources] def snapshotManifest(dir: Path, sourceName: String): Long = {
-    val next = listSnapshots(dir).lastOption.getOrElse(0L) + 1
-    val target = dir.resolve(s"$SnapshotPrefix$next.json")
-    if (sourceName == ManifestName) {
-      Files.copy(dir.resolve(sourceName), target,
-        StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val branch =
-        sourceName.substring(BranchPrefix.length, sourceName.length - 5)
-      val text = new String(
-        Files.readAllBytes(dir.resolve(sourceName)), StandardCharsets.UTF_8)
-      Files.write(target,
-        tagRef(text, branch).getBytes(StandardCharsets.UTF_8))
-    }
-    next
-  }
-
-  /** Insert `"ref":"<branch>"` before the manifest's closing brace. */
-  private def tagRef(manifestText: String, branch: String): String = {
-    val i = manifestText.lastIndexOf('}')
-    require(i >= 0, "malformed manifest (no closing brace)")
-    manifestText.substring(0, i) + ",\"ref\":\"" + branch + "\"" +
-      manifestText.substring(i)
-  }
-
-  private val RefRe = "\"ref\"\\s*:\\s*\"([^\"]+)\"".r
-
-  /** The branch a snapshot was staged on, or None for a main snapshot
-    * (legacy untagged files are main by construction).
-    */
-  def snapshotRef(dir: Path, version: Long): Option[String] = {
-    val m = dir.resolve(s"$SnapshotPrefix$version.json")
-    if (!Files.exists(m)) return None
-    RefRe.findFirstMatchIn(
-      new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-      .map(_.group(1))
-  }
-
-  /** Snapshot versions belonging to MAIN history, ascending — the only
-    * versions numeric VERSION AS OF / TIMESTAMP AS OF / streaming
-    * offsets may resolve to.
-    */
-  def listMainSnapshots(dir: Path): Seq[Long] =
-    listSnapshots(dir).filter(v => snapshotRef(dir, v).isEmpty)
-
-  /** Publish-time fold: re-tag `branch`'s snapshots as main history.
-    * Sound because publish is fast-forward-only — the branch forked at
-    * main's then-head and main has not advanced since, so the branch's
-    * commit chain IS main's ancestry once published (the Iceberg
-    * fast-forward model). Returns the promoted versions.
-    */
-  private[sources] def promoteBranchSnapshots(dir: Path, branch: String): Seq[Long] = {
-    val promoted = listSnapshots(dir).filter(v => snapshotRef(dir, v).contains(branch))
-    promoted.foreach { v =>
-      val m = dir.resolve(s"$SnapshotPrefix$v.json")
-      val text = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-      val cleaned = text.replaceFirst(",\"ref\"\\s*:\\s*\"" +
-        java.util.regex.Pattern.quote(branch) + "\"", "")
-      Files.write(m, cleaned.getBytes(StandardCharsets.UTF_8))
-    }
-    promoted
-  }
-
-  /** Drop-time sweep: a rejected branch's snapshots leave history
-    * entirely (its data files become orphans for expireSnapshots).
-    */
-  private[sources] def dropBranchSnapshots(dir: Path, branch: String): Unit =
-    listSnapshots(dir).filter(v => snapshotRef(dir, v).contains(branch))
-      .foreach(v => Files.deleteIfExists(
-        dir.resolve(s"$SnapshotPrefix$v.json")))
-
-  /** Streaming-transaction markers committed with the manifest swap:
-    * appId → highest applied writer version (e.g. foreachBatch batchId).
-    * Readers use this to make micro-batch re-delivery after a crash
-    * idempotent — see [[graft.streaming.CdcMergeStream]].
-    */
-  private[graft] def readTxn(dir: Path): Map[String, Long] =
-    readTxnAt(dir, ManifestName)
-
-  private[graft] def readTxnAt(dir: Path, manifestName: String): Map[String, Long] = {
-    val m = dir.resolve(manifestName)
-    if (!Files.exists(m)) return Map.empty
-    val text = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    "\"txn\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-      .map(g => "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(g.group(1))
-        .map(p => p.group(1) -> p.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-  }
-
-  /** Render a txn map as the manifest suffix fragment (empty when none). */
-  private[sources] def renderTxn(txnMap: Map[String, Long]): String =
-    if (txnMap.isEmpty) ""
-    else txnMap.toSeq.sorted
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString(",\"txn\":{", ",", "}")
-
-  private def parseManifest(m: Path): (Long, Seq[String]) = {
-    if (!Files.exists(m)) return (0L, Nil)
-    parseManifestText(new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-  }
-
-  private def parseManifestText(text: String): (Long, Seq[String]) = {
-    val rows = "\"rows\":(\\d+)".r.findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(0L)
-    // scope to the files array: deletion-vector entries ("dvs") key on
-    // the same part-* names, and a whole-text match would read them as
-    // extra data files
-    val filesSection = "\"files\"\\s*:\\s*\\[([^\\]]*)\\]".r
-      .findFirstMatchIn(text).map(_.group(1)).getOrElse("")
-    val files = "\"(part-[^\"]+)\"".r.findAllMatchIn(filesSection).map(_.group(1)).toSeq
-    (rows, files)
-  }
-
   private[sources] def renderRow(row: InternalRow, schema: StructType): String = {
     val sb = new java.lang.StringBuilder(64)
     sb.append('{')
@@ -441,6 +219,11 @@ private class GraftJsonSinkTable(writeSchema: StructType)
         .map(GraftFormat.forName).getOrElse(JsonFormat))
 }
 
+/** The path-based sink's write options, shared with the catalog table's
+  * write builder. `format` selects the data-file format (json/parquet)
+  * for paths written outside a catalog (catalog tables carry it in
+  * their CREATE-time sidecar instead).
+  */
 private[sources] class GraftJsonWriteBuilder(
     path: String,
     schema: StructType,
@@ -452,7 +235,7 @@ private[sources] class GraftJsonWriteBuilder(
     format: GraftFormat = JsonFormat) extends WriteBuilder with SupportsTruncate {
 
   require(path != null && path.nonEmpty, "graft-json requires a path")
-  branch.foreach(GraftJsonSink.requireBranchName)
+  branch.foreach(Manifest.Branch(_)) // validates the name
   txn.foreach { case (appId, _) =>
     require(appId.nonEmpty && appId.forall(c => c.isLetterOrDigit || c == '_' || c == '-')
       && !appId.contains("part-"),
@@ -513,7 +296,7 @@ private[sources] class GraftJsonBatchWrite(
     branch: Option[String] = None,
     format: GraftFormat = JsonFormat) extends BatchWrite {
 
-  branch.foreach(GraftJsonSink.requireBranchName)
+  branch.foreach(Manifest.Branch(_)) // validates the name
   require(branch.isEmpty || !(truncateFirst || replaceMode),
     "branch writes are append-only: stage rows on the branch, audit, then publish")
 
@@ -538,36 +321,27 @@ private[sources] class GraftJsonBatchWrite(
     val dir = Paths.get(path)
     Files.createDirectories(dir)
     GraftJsonSink.withCommitLock(dir) {
-    if (truncateFirst && !replaceMode) {
+    val plainOverwrite = truncateFirst && !replaceMode
+    if (plainOverwrite) {
       // overwrite resets history: data files, manifest, snapshots, and the
       // stats sidecar go (the format's contract — unlike append, which
       // extends history)
       listFiles(dir).filter { p =>
         val n = p.getFileName.toString
-        n.startsWith("part-") || n == GraftJsonSink.ManifestName ||
+        n.startsWith("part-") || n == Manifest.FileName ||
           n == GraftStats.StatsName || n == GraftParts.PartsName ||
-          n == GraftTableStream.EpochFileName ||
-          n.startsWith(GraftJsonSink.SnapshotPrefix)
+          n == GraftTableStream.EpochFileName
       }.foreach(Files.deleteIfExists(_))
+      Manifest.dropSnapshots(dir, Manifest.listSnapshots(dir))
     }
-    // replaceMode ("copy-on-write" truncate, the MERGE commit): the new
-    // manifest lists only this write's files, but superseded data files
-    // and prior snapshots stay on disk, so VERSION AS OF keeps serving
-    // pre-merge states until compact() vacuums them.
     // branch commits fold into and swap the BRANCH head manifest — the
     // main head is untouched, so main readers cannot observe staged rows
-    val manifestTarget = branch.map(GraftJsonSink.branchManifest)
-      .getOrElse(GraftJsonSink.ManifestName)
+    val at = branch.fold[Manifest.At](Manifest.Head)(Manifest.Branch)
     branch.foreach { b =>
-      require(Files.exists(dir.resolve(manifestTarget)),
+      require(Manifest.exists(dir, at),
         s"no branch '$b' on this table — call createBranch first " +
-          s"(have: ${GraftJsonSink.listBranches(dir).mkString(", ")})")
+          s"(have: ${Manifest.listBranches(dir).mkString(", ")})")
     }
-    // append semantics: fold the previous committed state into the new
-    // manifest (the manifest swap below is still the single commit point)
-    val (prevRows, prevFiles) =
-      if (truncateFirst) (0L, Seq.empty[String])
-      else GraftJsonSink.readManifestAt(dir, manifestTarget)
     // publish exactly the committed attempts' files
     val published = messages.flatMap { case m: GraftJsonCommitMessage =>
       m.entries.zipWithIndex.map { case (e, i) =>
@@ -577,45 +351,28 @@ private[sources] class GraftJsonBatchWrite(
         (target.getFileName.toString, e.rows, e.stats, e.partValue)
       }
     }
-    // streaming-transaction markers ride IN the manifest so they commit
-    // atomically with the swap (the Delta txn pattern): a writer that
-    // dies after the swap has its version durably recorded, and one that
-    // dies before it recorded nothing — no window for a double-apply.
-    // Markers survive replace (copy-on-write) commits; a plain overwrite
-    // resets them with the rest of history.
-    val prevTxn =
-      if (truncateFirst && !replaceMode) Map.empty[String, Long]
-      else GraftJsonSink.readTxnAt(dir, manifestTarget)
-    val txnJson = GraftJsonSink.renderTxn(prevTxn ++ txn.toMap)
-    // deletion vectors survive appends (their files stay committed);
-    // truncate and replace drop every prior file from the manifest, and
-    // a vector keyed on an absent file has no meaning — filter to kept
-    val keptFileSet = prevFiles.toSet
-    val dvJson =
-      if (truncateFirst) ""
-      else GraftDv.render(
-        GraftJsonSink.readStateAt(dir, manifestTarget)._3
-          .filter { case (f, _) => keptFileSet(f) })
-    // manifest last, via atomic rename: the commit point
-    val manifest = new java.lang.StringBuilder()
-      .append("{\"rows\":").append(prevRows + published.map(_._2).sum)
-      .append(",\"files\":[")
-      .append((prevFiles ++ published.map(_._1)).map(f => "\"" + f + "\"")
-        .sorted.mkString(","))
-      .append("]").append(dvJson).append(txnJson).append("}\n").toString
-    val tmpManifest = dir.resolve(manifestTarget + ".tmp")
-    Files.write(tmpManifest, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmpManifest, dir.resolve(manifestTarget),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // history entry for VERSION AS OF (branch commits are tagged with
-    // their ref and stay invisible to main time travel until publish)
-    GraftJsonSink.snapshotManifest(dir, manifestTarget)
+    // append semantics: fold the previous committed state into the new
+    // manifest. replaceMode ("copy-on-write" truncate, the MERGE commit)
+    // lists only this write's files, but superseded data files and prior
+    // snapshots stay on disk, so VERSION AS OF keeps serving pre-merge
+    // states until compact() vacuums them. Streaming-transaction markers
+    // ride IN the manifest so they commit atomically with the swap (the
+    // Delta txn pattern): a writer that dies after the swap has its
+    // version durably recorded, and one that dies before it recorded
+    // nothing. They survive replace commits; a plain overwrite resets
+    // them with the rest of history.
+    val prev = if (plainOverwrite) Manifest.Empty else Manifest.read(dir, at)
+    val base = if (truncateFirst) prev.copy(rows = 0L, files = Nil) else prev
+    Manifest.commit(dir, at, base.copy(
+      rows = base.rows + published.map(_._2).sum,
+      files = base.files ++ published.map(_._1),
+      txn = base.txn ++ txn))
     // stats sidecar AFTER the commit point: advisory skipping metadata —
     // prior entries are kept (filenames are write-unique; replace-mode
     // leaves superseded files on disk for VERSION AS OF reads, and their
     // stats must keep serving those historical scans)
     val prevStats =
-      if (truncateFirst && !replaceMode) Map.empty[String, GraftStats.FileStats]
+      if (plainOverwrite) Map.empty[String, GraftStats.FileStats]
       else GraftStats.read(dir, schema)
     GraftStats.write(dir,
       prevStats ++ published.map(p => p._1 -> p._3), schema)
@@ -626,7 +383,7 @@ private[sources] class GraftJsonBatchWrite(
     // a wrong join
     if (partitionCol.isDefined) {
       val prevParts =
-        if (truncateFirst && !replaceMode) Map.empty[String, Option[String]]
+        if (plainOverwrite) Map.empty[String, Option[String]]
         else GraftParts.read(dir)
       GraftParts.write(dir,
         prevParts ++ published.collect { case (f, _, _, Some(v)) => f -> v })

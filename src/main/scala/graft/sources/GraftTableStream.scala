@@ -44,9 +44,8 @@ private[sources] class GraftTableStream(
     o.v
   }
 
-  private def stateAt(v: Long): (Seq[String], Map[String, Array[Int]]) =
-    if (v <= 0L) (Nil, Map.empty)
-    else { val (_, fs, dvs) = GraftJsonSink.readStateVersion(dir, v); (fs, dvs) }
+  private def stateAt(v: Long): Manifest =
+    if (v <= 0L) Manifest.Empty else Manifest.read(dir, Manifest.Version(v))
 
   override def initialOffset(): Offset = SnapshotOffset(epoch, 0L)
 
@@ -55,7 +54,7 @@ private[sources] class GraftTableStream(
     // would make the tailer emit unpublished rows (or fail the append-
     // only check against branch-only files)
     SnapshotOffset(epoch,
-      GraftJsonSink.listMainSnapshots(dir).lastOption.getOrElse(0L))
+      Manifest.listMainSnapshots(dir).lastOption.getOrElse(0L))
 
   override def deserializeOffset(json: String): Offset = {
     val idx = json.lastIndexOf('/')
@@ -66,8 +65,8 @@ private[sources] class GraftTableStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = checkEpoch(start.asInstanceOf[SnapshotOffset])
     val e = checkEpoch(end.asInstanceOf[SnapshotOffset])
-    val (before, dvBefore) = stateAt(s)
-    val (after, dvAfter) = stateAt(e)
+    val Manifest(_, before, dvBefore, _, _) = stateAt(s)
+    val Manifest(_, after, dvAfter, _, _) = stateAt(e)
     val removed = before.toSet.diff(after.toSet)
     require(removed.isEmpty,
       s"streaming source requires append-only commits, but snapshots " +
@@ -77,11 +76,8 @@ private[sources] class GraftTableStream(
     // the range means rows this stream may already have emitted were
     // deleted — not expressible as an append, so fail loudly (the same
     // contract as file removals)
-    val dvChanged = (dvBefore.keySet ++ dvAfter.keySet).filter { f =>
-      !java.util.Arrays.equals(
-        dvBefore.getOrElse(f, Array.empty[Int]),
-        dvAfter.getOrElse(f, Array.empty[Int]))
-    }
+    val dvChanged = (dvBefore.keySet ++ dvAfter.keySet)
+      .filter(f => dvBefore.get(f) != dvAfter.get(f))
     require(dvChanged.isEmpty,
       s"streaming source requires append-only commits, but snapshots " +
         s"$s..$e changed deletion vectors on: ${dvChanged.take(3).mkString(", ")} — " +

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{col, when}
@@ -57,20 +54,20 @@ object GraftUpdate {
     // reader, which has no row ordinals — without materializing, a
     // MOR-deleted row would resurrect into the rewritten file
     locally {
-      val (_, files0, dvs0) = GraftJsonSink.readState(dir)
-      if (dvs0.nonEmpty) {
+      val m0 = Manifest.read(dir)
+      if (m0.dvs.nonEmpty) {
         val stats0 = GraftStats.read(dir, schema)
-        GraftDv.materialize(dir, schema, files0.filter { f =>
-          dvs0.contains(f) && stats0.get(f).forall(fs =>
+        GraftDv.materialize(dir, schema, m0.files.filter { f =>
+          m0.dvs.contains(f) && stats0.get(f).forall(fs =>
             skipFilters.forall(GraftStats.mayMatch(_, fs, schema)))
         })
       }
     }
-    val (_, files, dvs) = GraftJsonSink.readState(dir)
+    val m = Manifest.read(dir)
     val stats = GraftStats.read(dir, schema)
     // a file is touched unless its stats PROVE no row matches; files
     // without stats always count as touched (sound, never lossy)
-    val (touched, untouched) = files.partition { f =>
+    val (touched, untouched) = m.files.partition { f =>
       stats.get(f).forall(fs =>
         skipFilters.forall(GraftStats.mayMatch(_, fs, schema)))
     }
@@ -119,7 +116,7 @@ object GraftUpdate {
       try {
       updated.write.format("graft-json").option("format", format.name)
         .mode("overwrite").save(staging.toString)
-      val (_, newFiles) = GraftJsonSink.readManifest(staging)
+      val newFiles = Manifest.read(staging).files
       val newStats = GraftStats.read(staging, schema)
       newFiles.foreach(f => Files.move(staging.resolve(f), dir.resolve(f)))
 
@@ -128,28 +125,13 @@ object GraftUpdate {
       // parquet reads the footer record count, no page decode
       def fileRows(f: String): Long = allStats.get(f).map(_.rows).getOrElse(
         format.countRows(dir.resolve(f), schema, aliases))
-      val allFiles = (untouched ++ newFiles).sorted
+      val allFiles = untouched ++ newFiles
       // untouched files may still carry deletion vectors (touched ones
       // were materialized above): their vectors survive the commit and
       // their live count subtracts the vector
       val keptRows = allFiles.map(f =>
-        fileRows(f) - dvs.get(f).map(_.length.toLong).getOrElse(0L)).sum
-      // streaming-txn markers survive row-level rewrites (same contract
-      // as the sink's replace commit)
-      val manifest = new java.lang.StringBuilder()
-        .append("{\"rows\":").append(keptRows)
-        .append(",\"files\":[")
-        .append(allFiles.map(f => "\"" + f + "\"").mkString(","))
-        .append("]")
-        .append(GraftDv.render(dvs.filter { case (f, _) => untouched.contains(f) }))
-        .append(GraftJsonSink.renderTxn(GraftJsonSink.readTxn(dir)))
-        .append("}\n").toString
-      val tmp = dir.resolve(GraftJsonSink.ManifestName + ".tmp")
-      Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, dir.resolve(GraftJsonSink.ManifestName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      GraftJsonSink.snapshotManifest(dir)
+        fileRows(f) - m.dvs.get(f).fold(0L)(_.length.toLong)).sum
+      Manifest.commit(dir, Manifest.Head, m.copy(rows = keptRows, files = allFiles))
       GraftStats.write(dir, allStats, schema)
       } finally GraftJsonSink.deleteRecursively(staging)
     }

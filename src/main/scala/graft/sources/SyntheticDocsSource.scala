@@ -128,20 +128,28 @@ private class SyntheticDocsScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new Scan with Batch {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] = {
-      val per = math.max(1L, (rows + partitions - 1) / partitions)
-      (0 until partitions).flatMap { p =>
-        val start = p * per
-        val end = math.min(rows, start + per)
-        if (start < end) Some(DocsPartition(start, end): InputPartition) else None
-      }.toArray
-    }
-    override def createReaderFactory(): PartitionReaderFactory =
-      new DocsReaderFactory(required, seed, vocabSize, dupRate)
+  override def build(): Scan =
+    SyntheticDocsScan(required, rows, partitions, seed, vocabSize, dupRate)
+}
+
+/** A case class, so two reads of one corpus compare equal and Spark can
+  * reuse one exchange for both (`ReusedExchangeExec`).
+  */
+private case class SyntheticDocsScan(
+    required: StructType, rows: Long, partitions: Int, seed: Long,
+    vocabSize: Int, dupRate: Double) extends Scan with Batch {
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] = {
+    val per = math.max(1L, (rows + partitions - 1) / partitions)
+    (0 until partitions).flatMap { p =>
+      val start = p * per
+      val end = math.min(rows, start + per)
+      if (start < end) Some(DocsPartition(start, end): InputPartition) else None
+    }.toArray
   }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new DocsReaderFactory(required, seed, vocabSize, dupRate)
 }
 
 private case class DocsPartition(start: Long, end: Long) extends InputPartition

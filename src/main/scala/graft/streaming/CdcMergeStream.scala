@@ -4,7 +4,7 @@ import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.sources.{GraftJsonSink, GraftMerge}
+import graft.sources.{GraftJsonSink, GraftMerge, Manifest}
 
 /** Streaming MERGE: a CDC feed applied to a graft catalog table one
   * micro-batch at a time through foreachBatch — the standard pattern for
@@ -53,7 +53,7 @@ object CdcMergeStream {
     val root = batch.sparkSession.conf.get(s"spark.sql.catalog.${parts.head}.root")
     val dir = parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
     GraftJsonSink.withCommitLock(dir) {
-      val applied = GraftJsonSink.readTxn(dir).get(appId)
+      val applied = Manifest.read(dir).txn.get(appId)
       if (applied.forall(_ < batchId)) {
         GraftMerge.into(batch.sparkSession, tableFqn, batch, keyCols, opCol,
           txn = Some(appId -> batchId))

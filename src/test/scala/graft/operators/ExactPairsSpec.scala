@@ -59,9 +59,9 @@ class ExactPairsSpec extends AnyFunSuite {
     * input that carries the shingle arrays `sh` and has no join below it.
     * The shuffle is of `sets` itself, or of the corpus `sets` is derived
     * from. A reused exchange counts as a read: Spark reuses an identical
-    * shuffle of the parquet fixture, but not of a source whose scans it
-    * cannot prove equal (the synthetic scale corpus), where every read is
-    * a shuffle of its own.
+    * shuffle of any source whose scans compare equal (the parquet
+    * fixture, the synthetic scale corpus); a source whose scans do not
+    * compare equal makes every read a shuffle of its own.
     */
   private def setsReads(nodes: Seq[SparkPlan]): Seq[SparkPlan] =
     nodes.collect { case j: BaseJoinExec => j }.flatMap(_.children.filter(c =>

@@ -80,7 +80,7 @@ class GraftSqlParserSpec extends AnyFunSuite {
 
     run("ALTER TABLE sqlcat.ns.w CREATE BRANCH scratch")
     run("ALTER TABLE sqlcat.ns.w DROP BRANCH scratch")
-    assert(graft.sources.GraftJsonSink.listBranches(
+    assert(graft.sources.Manifest.listBranches(
       java.nio.file.Paths.get(root, "ns", "w")).isEmpty)
 
     // plain ALTER TABLE statements still reach the stock parser

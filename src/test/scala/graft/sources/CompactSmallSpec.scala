@@ -39,16 +39,16 @@ class CompactSmallSpec extends AnyFunSuite {
         .toDF("id", "grp").coalesce(1).writeTo("cscat.ns.c1").append()
     }
     val dir = tableDir("c1")
-    val (rowsBefore, filesBefore) = GraftJsonSink.readManifest(dir)
+    val Manifest(rowsBefore, filesBefore, _, _, _) = Manifest.read(dir)
     assert(filesBefore.size == 12)
-    val preSnapshot = GraftJsonSink.listSnapshots(dir).last
+    val preSnapshot = Manifest.listSnapshots(dir).last
 
     val (before, after) =
       GraftCatalog.compactSmall(dir, schemaOf("c1"), minBytes = 10000, targetBytes = 100000)
     assert(before == 12 && after == 2, s"expected 12 -> 2, got $before -> $after")
 
     // content identical, partition grouping intact
-    val (rowsAfter, filesAfter) = GraftJsonSink.readManifest(dir)
+    val Manifest(rowsAfter, filesAfter, _, _, _) = Manifest.read(dir)
     assert(rowsAfter == rowsBefore && filesAfter.size == 2)
     assert(spark.table("cscat.ns.c1").count() == 12)
     assert(spark.sql("SELECT CAST(SUM(id) AS BIGINT) FROM cscat.ns.c1")
@@ -90,10 +90,10 @@ class CompactSmallSpec extends AnyFunSuite {
     }
     val dir = tableDir("c2")
     // minBytes below any file size -> nothing qualifies -> no-op commit
-    val snaps = GraftJsonSink.listSnapshots(dir).size
+    val snaps = Manifest.listSnapshots(dir).size
     val (b0, a0) = GraftCatalog.compactSmall(dir, schemaOf("c2"), minBytes = 1, targetBytes = 1000)
     assert(b0 == 3 && a0 == 3)
-    assert(GraftJsonSink.listSnapshots(dir).size == snaps, "no-op must not commit")
+    assert(Manifest.listSnapshots(dir).size == snaps, "no-op must not commit")
     // all three are small -> one merged file
     val (b1, a1) = GraftCatalog.compactSmall(dir, schemaOf("c2"), minBytes = 10000, targetBytes = 100000)
     assert(b1 == 3 && a1 == 1)

@@ -22,9 +22,9 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   private def tdir(table: String) = Paths.get(root, "ns", table)
   private def dataFiles(table: String): Seq[String] =
-    GraftJsonSink.readManifest(tdir(table))._2
-  private def dvsOf(table: String): Map[String, Array[Int]] =
-    GraftDv.read(tdir(table))
+    Manifest.read(tdir(table)).files
+  private def dvsOf(table: String): Map[String, Seq[Int]] =
+    Manifest.read(tdir(table)).dvs
 
   private def withMor[A](body: => A): A = {
     spark.conf.set("spark.graft.delete.mode", "mor")

@@ -190,7 +190,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.table("graftcat.ns.ing").count() == expected)
     val root = spark.conf.get("spark.sql.catalog.graftcat.root")
     val tableDir = java.nio.file.Paths.get(root, "ns", "ing")
-    val versions = GraftJsonSink.listSnapshots(tableDir)
+    val versions = Manifest.listSnapshots(tableDir)
     assert(versions.size == 3, s"one snapshot per microbatch, got $versions")
     // history is monotone: per-version counts grow to the final total
     val counts = versions.map(v =>

@@ -50,8 +50,8 @@ class GraftExpireSpec extends AnyFunSuite {
     GraftUpdate.update(spark, "expcat.ns.e1",
       col("id") === 250, Map("bal" -> lit(-1.0d)))
     val dir = tableDir("e1")
-    assert(GraftJsonSink.listSnapshots(dir) == Seq(1L, 2L, 3L, 4L))
-    val live = GraftJsonSink.readManifest(dir)._2.toSet
+    assert(Manifest.listSnapshots(dir) == Seq(1L, 2L, 3L, 4L))
+    val live = Manifest.read(dir).files.toSet
     assert(partFiles("e1").size > live.size) // superseded file still on disk
 
     Thread.sleep(20) // snapshot mtimes strictly before the cutoff

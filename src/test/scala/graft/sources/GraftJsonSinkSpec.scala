@@ -29,7 +29,7 @@ class GraftJsonSinkSpec extends AnyFunSuite {
     val df = ordersDf.repartition(4)
     df.write.format("graft-json").mode("overwrite").save(out)
 
-    val manifest = Files.readString(Paths.get(out, GraftJsonSink.ManifestName))
+    val manifest = Files.readString(Paths.get(out, Manifest.FileName))
     assert(manifest.contains(s""""rows":${df.count()}"""), manifest)
 
     val back = spark.read.schema(schema).json(out)
@@ -49,7 +49,7 @@ class GraftJsonSinkSpec extends AnyFunSuite {
       .write.format("graft-json").mode("overwrite").save(out)
     val back = spark.read.schema(schema).json(out)
     assert(back.count() == 10)
-    val manifest = Files.readString(Paths.get(out, GraftJsonSink.ManifestName))
+    val manifest = Files.readString(Paths.get(out, Manifest.FileName))
     assert(manifest.contains("\"rows\":10"), manifest)
   }
 
@@ -76,7 +76,7 @@ class GraftJsonSinkSpec extends AnyFunSuite {
     intercept[Exception] {
       df.write.format("graft-json").mode("overwrite").save(out)
     }
-    assert(!Files.exists(Paths.get(out, GraftJsonSink.ManifestName)))
+    assert(!Files.exists(Paths.get(out, Manifest.FileName)))
     val published = if (Files.isDirectory(Paths.get(out))) {
       val s = Files.list(Paths.get(out))
       try s.iterator().asScala.count(_.getFileName.toString.startsWith("part-"))

@@ -89,7 +89,7 @@ class GraftMergeSpec extends AnyFunSuite {
     while (partFiles.hasNext) names += partFiles.next().getFileName.toString
     assert(names.count(_.startsWith("part-")) == 1, names.mkString(","))
     assert(state("SELECT * FROM graftmerge.ns.m2") == Set((2L, 21L), (3L, 30L)))
-    assert(GraftJsonSink.listSnapshots(dir) == Seq(1L))
+    assert(Manifest.listSnapshots(dir) == Seq(1L))
   }
 
   test("schema evolution: a wider change feed ADDs columns; off by default") {

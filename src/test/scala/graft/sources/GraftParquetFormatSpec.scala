@@ -32,7 +32,7 @@ class GraftParquetFormatSpec extends AnyFunSuite {
   private def tableDir(name: String) = Paths.get(root, "ns", name)
 
   private def dataFiles(name: String): Seq[String] =
-    GraftJsonSink.readManifest(tableDir(name))._2
+    Manifest.read(tableDir(name)).files
 
   private def assertParquetFiles(name: String): Unit = {
     val fs = dataFiles(name)
@@ -125,12 +125,12 @@ class GraftParquetFormatSpec extends AnyFunSuite {
     try spark.sql("DELETE FROM pqcat.ns.mor WHERE id >= 30 AND id < 40")
     finally spark.conf.set("spark.graft.delete.mode", "cow")
     assert(dataFiles("mor").toSet == before, "MOR must not rewrite data files")
-    assert(GraftDv.read(tableDir("mor")).nonEmpty)
+    assert(Manifest.read(tableDir("mor")).dvs.nonEmpty)
     val live = spark.table("pqcat.ns.mor").collect().map(_.getLong(0)).toSet
     assert(live.size == 90 && !live.exists(i => i >= 30 && i < 40))
     // compaction materializes the vector into one parquet file
     GraftCatalog.compact(tableDir("mor"), None)
-    assert(GraftDv.read(tableDir("mor")).isEmpty)
+    assert(Manifest.read(tableDir("mor")).dvs.isEmpty)
     assertParquetFiles("mor")
     assert(spark.table("pqcat.ns.mor").collect().map(_.getLong(0)).toSet == live)
     spark.sql("DROP TABLE pqcat.ns.mor")

@@ -23,7 +23,7 @@ class GraftUpdateSpec extends AnyFunSuite {
   }
 
   private def dataFiles(table: String): Seq[String] =
-    GraftJsonSink.readManifest(Paths.get(root, "ns", table))._2
+    Manifest.read(Paths.get(root, "ns", table)).files
 
   private def mkTable(name: String): Unit = {
     import spark.implicits._

@@ -104,9 +104,9 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     spark.sql("INSERT INTO evocat.ns.w VALUES (1, 10), (2, 20)")
     val dir = java.nio.file.Paths.get(
       spark.conf.get("spark.sql.catalog.evocat.root"), "ns", "w")
-    val filesBefore = GraftJsonSink.readManifest(dir)._2.toSet
+    val filesBefore = Manifest.read(dir).files.toSet
     spark.sql("ALTER TABLE evocat.ns.w ALTER COLUMN qty TYPE BIGINT")
-    assert(GraftJsonSink.readManifest(dir)._2.toSet == filesBefore) // metadata-only
+    assert(Manifest.read(dir).files.toSet == filesBefore) // metadata-only
     // old int literals re-parse as long; new 64-bit values append fine
     spark.sql("INSERT INTO evocat.ns.w VALUES (3, 4000000000)")
     val rows = spark.sql("SELECT id, qty FROM evocat.ns.w ORDER BY id")
@@ -138,7 +138,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     spark.sql("INSERT INTO evocat.ns.ws VALUES (3, 4000000000)")
     val dir = java.nio.file.Paths.get(
       spark.conf.get("spark.sql.catalog.evocat.root"), "ns", "ws")
-    val nFiles = GraftJsonSink.readManifest(dir)._2.size
+    val nFiles = Manifest.read(dir).files.size
     val t = spark.table("evocat.ns.ws")
     assert(plannedFiles(t) == nFiles) // no filter: all files
     // every pre-widen file's int stats, re-typed long, prune it; only

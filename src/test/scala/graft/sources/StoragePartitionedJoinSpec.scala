@@ -71,7 +71,7 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       .repartition(4).writeTo("spjcat.ns.f").append()
     val dir = java.nio.file.Paths.get(
       spark.conf.get("spark.sql.catalog.spjcat.root"), "ns", "f")
-    val files = GraftJsonSink.readManifest(dir)._2
+    val files = Manifest.read(dir).files
     assert(files.size <= 8, s"expected <=8 files, got ${files.size}")
     assert(spark.table("spjcat.ns.f").count() == 800)
   }

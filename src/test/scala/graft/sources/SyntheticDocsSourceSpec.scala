@@ -62,4 +62,26 @@ class SyntheticDocsSourceSpec extends AnyFunSuite {
     assert(stats.getLong(0) == 2000)
     assert(stats.getLong(1) > 1500) // deterministic corpus, mostly unique
   }
+
+  test("two reads of one corpus compare equal, so Spark reuses one exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      def side(name: String) =
+        read(2000, 4).repartition(8, col("doc_id")).select(col("doc_id"), col("text").as(name))
+      val joined = side("a").join(side("b"), "doc_id")
+      assert(joined.collect().length == 2000)
+      val plan = nodes(joined.queryExecution.executedPlan)
+      assert(plan.exists(_.isInstanceOf[ReusedExchangeExec]),
+        joined.queryExecution.executedPlan.toString)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  }
 }

@@ -45,7 +45,7 @@ class WapBranchSpec extends AnyFunSuite {
     assert(rows(spark.table(t)) ==
       Set((1L, "base"), (2L, "base"), (3L, "staged"), (4L, "staged")))
     // the branch is consumed by publish
-    assert(GraftJsonSink.listBranches(dir).isEmpty)
+    assert(Manifest.listBranches(dir).isEmpty)
   }
 
   test("publish fails atomically when main advanced since the fork") {
@@ -65,7 +65,7 @@ class WapBranchSpec extends AnyFunSuite {
     assert(e.getMessage.contains("main advanced"))
     // nothing changed: main keeps both its commits, branch still exists
     assert(rows(spark.table(t)) == Set((1L, "base"), (9L, "concurrent")))
-    assert(GraftJsonSink.listBranches(dir) == Seq("audit"))
+    assert(Manifest.listBranches(dir) == Seq("audit"))
     // recovery: re-fork from the new head and re-stage
     GraftCatalog.dropBranch(dir, "audit")
     GraftCatalog.createBranch(dir, "audit2")
@@ -109,10 +109,10 @@ class WapBranchSpec extends AnyFunSuite {
     // main count unchanged
     assert(spark.table(t).count() == 2L)
     // the staged snapshot is ref-tagged and NOT part of main history
-    val staged = GraftJsonSink.listSnapshots(dir)
-      .filter(v => GraftJsonSink.snapshotRef(dir, v).contains("audit"))
+    val staged = Manifest.listSnapshots(dir)
+      .filter(v => Manifest.snapshotRef(dir, v).contains("audit"))
     assert(staged.nonEmpty)
-    assert(GraftJsonSink.listMainSnapshots(dir).intersect(staged).isEmpty)
+    assert(Manifest.listMainSnapshots(dir).intersect(staged).isEmpty)
     // numeric VERSION AS OF of a staged snapshot refuses loudly instead
     // of leaking unaudited rows to a main reader
     val e = intercept[Exception] {
@@ -128,8 +128,8 @@ class WapBranchSpec extends AnyFunSuite {
       .head().getLong(0) == 2L)
     // publish folds the staged snapshot into main history
     GraftCatalog.publishBranch(dir, "audit")
-    assert(GraftJsonSink.snapshotRef(dir, staged.head).isEmpty)
-    assert(GraftJsonSink.listMainSnapshots(dir).contains(staged.head))
+    assert(Manifest.snapshotRef(dir, staged.head).isEmpty)
+    assert(Manifest.listMainSnapshots(dir).contains(staged.head))
     assert(spark.sql(s"SELECT count(*) AS n FROM $t VERSION AS OF ${staged.head}")
       .head().getLong(0) == 3L)
   }
@@ -141,14 +141,14 @@ class WapBranchSpec extends AnyFunSuite {
     GraftCatalog.createBranch(dir, "audit")
     Seq((2L, "staged")).toDF("k", "v")
       .writeTo(t).option("branch", "audit").append()
-    val staged = GraftJsonSink.listSnapshots(dir)
-      .filter(v => GraftJsonSink.snapshotRef(dir, v).contains("audit"))
+    val staged = Manifest.listSnapshots(dir)
+      .filter(v => Manifest.snapshotRef(dir, v).contains("audit"))
     assert(staged.nonEmpty)
     GraftCatalog.dropBranch(dir, "audit")
     // the staged snapshots are gone; main history is exactly its own commits
-    assert(GraftJsonSink.listSnapshots(dir).intersect(staged).isEmpty)
-    assert(GraftJsonSink.listSnapshots(dir) ==
-      GraftJsonSink.listMainSnapshots(dir))
+    assert(Manifest.listSnapshots(dir).intersect(staged).isEmpty)
+    assert(Manifest.listSnapshots(dir) ==
+      Manifest.listMainSnapshots(dir))
   }
 
   test("branch names with path separators are rejected before path resolution") {
@@ -164,5 +164,19 @@ class WapBranchSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { GraftCatalog.dropBranch(dir, "../x") }
     intercept[IllegalArgumentException] { GraftCatalog.publishBranch(dir, "a/b") }
     intercept[IllegalArgumentException] { GraftCatalog.createBranch(dir, "a/../b") }
+  }
+
+  test("compacting main keeps the files a live branch references") {
+    import spark.implicits._
+    val (t, dir) = freshTable()
+    Seq((1L, "base")).toDF("k", "v").coalesce(1).writeTo(t).append()
+    Seq((2L, "base")).toDF("k", "v").coalesce(1).writeTo(t).append()
+    GraftCatalog.createBranch(dir, "audit")
+    Seq((3L, "staged")).toDF("k", "v").writeTo(t).option("branch", "audit").append()
+
+    GraftCatalog.compact(dir)
+    assert(rows(spark.table(t)) == Set((1L, "base"), (2L, "base")))
+    assert(rows(spark.sql(s"SELECT * FROM $t VERSION AS OF 'audit'")) ==
+      Set((1L, "base"), (2L, "base"), (3L, "staged")))
   }
 }

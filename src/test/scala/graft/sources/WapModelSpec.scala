@@ -68,7 +68,7 @@ class WapModelSpec extends AnyFunSuite {
       branches.foreach { case (b, (rows, _)) =>
         assert(readBranch(b) == rows, s"[$label] branch $b mismatch")
       }
-      assert(GraftJsonSink.listBranches(dir).toSet == branches.keySet,
+      assert(Manifest.listBranches(dir).toSet == branches.keySet,
         s"[$label] branch listing mismatch")
     }
 

@@ -87,11 +87,11 @@ class CdcMergeStreamSpec extends AnyFunSuite {
     // restarted query re-delivers batch 0. Blind re-merge would
     // resurrect key 1's delete as a no-op but re-run I/U on the new
     // base; the txn marker must make the replay a no-op instead.
-    val versionsBefore = graft.sources.GraftJsonSink.listSnapshots(
+    val versionsBefore = graft.sources.Manifest.listSnapshots(
       java.nio.file.Paths.get(spark.conf.get("spark.sql.catalog.cdcm.root"), "ns", "crash"))
     CdcMergeStream.applyBatch("cdcm.ns.crash", b0, Seq("id"), "op", appId, 0L)
     assert(state() == afterB0) // no state change
-    assert(graft.sources.GraftJsonSink.listSnapshots(
+    assert(graft.sources.Manifest.listSnapshots(
       java.nio.file.Paths.get(spark.conf.get("spark.sql.catalog.cdcm.root"), "ns", "crash"))
       == versionsBefore) // and no snapshot committed — the replay was a true no-op
 
