@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
@@ -9,6 +7,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import graft.sources.GraftCatalog.tableDir
 
 /** SQL surface for the engine's table-maintenance operations, injected
   * via `SparkSessionExtensions.injectParser` — the deployment path for
@@ -60,13 +59,6 @@ object GraftSqlParser {
     """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+PUBLISH\s+BRANCH\s+([\w-]+)\s*;?\s*""".r
   private val DropBranch =
     """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+BRANCH\s+([\w-]+)\s*;?\s*""".r
-
-  private def tableDir(s: SparkSession, fqn: String) = {
-    val parts = fqn.split('.')
-    require(parts.length >= 2, s"expected catalog.[ns.]table, got $fqn")
-    val root = s.conf.get(s"spark.sql.catalog.${parts.head}.root")
-    parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
-  }
 
   private def out(names: String*): Seq[Attribute] =
     names.map(n => AttributeReference(n, LongType, nullable = false)())

@@ -756,20 +756,11 @@ object SourceRoundtrip {
           slice.filter(col("o_orderkey") >= lo && col("o_orderkey") < lo + 2000)
             .writeTo(s"$cat.g.orders").append()
         }
-        val name = s"tsq${System.nanoTime()}"
-        val q = s.readStream.table(s"$cat.g.orders")
+        graft.streaming.Streams.drain(s.readStream.table(s"$cat.g.orders")
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"),
             sum(col("o_totalprice").cast(dec6)).cast(DoubleType).as("total"),
-            sum(col("o_orderkey")).as("key_sum"))
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation", TempDirs("graft_tstr_ckpt"))
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        val out = s.table(name).cache()
-        out.count()
-        out
+            sum(col("o_orderkey")).as("key_sum")), "complete")
       },
       Some("SELECT o_orderstatus, count(*) AS n, " +
         "CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total, " +

@@ -345,6 +345,16 @@ object GraftCatalog {
   val DroppedFileName = "_graft_dropped.txt"
   val RenamesFileName = "_graft_renames.txt"
 
+  /** The directory of catalog table `catalog.[ns.]table`: the catalog's
+    * `root` conf resolved by each namespace part and the table name.
+    */
+  def tableDir(spark: org.apache.spark.sql.SparkSession, fqn: String): Path = {
+    val parts = fqn.split('.')
+    require(parts.length >= 2, s"expected catalog.[ns.]table, got $fqn")
+    val root = spark.conf.get(s"spark.sql.catalog.${parts.head}.root")
+    parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
+  }
+
   /** current column name → every former name it has carried (RENAME
     * COLUMN history). Data files written before a rename keep the old
     * key; readers accept any former name at the column's position.

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,6 +38,8 @@ object GraftMerge {
   /** Optional `txn` = (appId, version): recorded inside the manifest the
     * merge commits, atomically with the swap — the idempotence handle
     * for streaming re-delivery (see [[graft.streaming.CdcMergeStream]]).
+    * When the table's marker for appId already covers the version, the
+    * merge commits nothing and returns the current row count.
     */
   /** With `evolveSchema = true`, change-feed columns the table lacks are
     * ADDed (nullable, atomic types, appended — the catalog's append-only
@@ -56,53 +56,56 @@ object GraftMerge {
       opCol: String = "op",
       txn: Option[(String, Long)] = None,
       evolveSchema: Boolean = false): Long = {
-    val parts = tableFqn.split('.')
-    require(parts.length >= 2, s"expected catalog.[ns.]table, got $tableFqn")
-    val root = spark.conf.get(s"spark.sql.catalog.${parts.head}.root")
-    val dir = parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
-    // Pin the feed to ONE evaluation for the whole merge: the dup-key
-    // validation, the anti-join, and the upsert branch each trigger a
-    // job over `changes`, and a non-deterministic feed could otherwise
-    // validate one set of rows and merge another.
-    val pinned = changes.cache()
+    val dir = GraftCatalog.tableDir(spark, tableFqn)
     // table lock for the whole read-merge-write: an append committing
     // between the survivors read and the replace swap would otherwise
     // vanish from the merged manifest (the inner commit re-enters)
     GraftJsonSink.withCommitLock(dir) {
-    try {
-      val dupKeys = pinned.groupBy(keyCols.map(col): _*)
-        .count().filter(col("count") > 1)
-        .select(keyCols.map(col): _*).head(3)
-      require(dupKeys.isEmpty,
-        s"MERGE change feed has multiple rows per key on (${keyCols.mkString(", ")}); " +
-          s"e.g. ${dupKeys.mkString(", ")} — collapse to one change per key first")
-      // schema evolution: feed columns the table lacks ADD (through the
-      // catalog's ALTER path, so tombstone/alias/type rules all apply)
-      // BEFORE the base is resolved — base rows then null-fill them
-      val extras = pinned.schema.fields.filter(f =>
-        f.name != opCol && !spark.table(tableFqn).columns.contains(f.name))
-      if (extras.nonEmpty) {
-        require(evolveSchema,
-          s"MERGE change feed carries columns the table lacks: " +
-            s"${extras.map(_.name).mkString(", ")} — pass evolveSchema = true " +
-            "to add them, or drop them from the feed")
-        extras.foreach(f => spark.sql(
-          s"ALTER TABLE $tableFqn ADD COLUMN ${f.name} ${f.dataType.sql}"))
+      // a re-delivered streaming batch: this stream's marker already
+      // covers the version, so the batch committed once and is skipped
+      val applied = txn.exists { case (appId, v) =>
+        Manifest.read(dir).txn.get(appId).exists(_ >= v) }
+      if (!applied) {
+        // Pin the feed to ONE evaluation for the whole merge: the dup-key
+        // validation, the anti-join, and the upsert branch each trigger a
+        // job over `changes`, and a non-deterministic feed could otherwise
+        // validate one set of rows and merge another.
+        val pinned = changes.cache()
+        try {
+          val dupKeys = pinned.groupBy(keyCols.map(col): _*)
+            .count().filter(col("count") > 1)
+            .select(keyCols.map(col): _*).head(3)
+          require(dupKeys.isEmpty,
+            s"MERGE change feed has multiple rows per key on (${keyCols.mkString(", ")}); " +
+              s"e.g. ${dupKeys.mkString(", ")} — collapse to one change per key first")
+          // schema evolution: feed columns the table lacks ADD (through the
+          // catalog's ALTER path, so tombstone/alias/type rules all apply)
+          // BEFORE the base is resolved — base rows then null-fill them
+          val extras = pinned.schema.fields.filter(f =>
+            f.name != opCol && !spark.table(tableFqn).columns.contains(f.name))
+          if (extras.nonEmpty) {
+            require(evolveSchema,
+              s"MERGE change feed carries columns the table lacks: " +
+                s"${extras.map(_.name).mkString(", ")} — pass evolveSchema = true " +
+                "to add them, or drop them from the feed")
+            extras.foreach(f => spark.sql(
+              s"ALTER TABLE $tableFqn ADD COLUMN ${f.name} ${f.dataType.sql}"))
+          }
+          val base = spark.table(tableFqn)
+          val survivors = base.join(
+            pinned.select(keyCols.map(col): _*), keyCols, "left_anti")
+          val upserts = pinned.filter(col(opCol) =!= "D")
+            .select(base.columns.map(col).toIndexedSeq: _*)
+          val merged = survivors.unionByName(upserts)
+          val w = merged.write.format("graft-json")
+            .option("format", GraftFormat.at(dir).name)
+            .option("replace", "true").mode("overwrite")
+          txn.fold(w) { case (appId, v) =>
+            w.option("txnAppId", appId).option("txnVersion", v.toString)
+          }.save(dir.toString)
+        } finally pinned.unpersist(blocking = false)
       }
-      val base = spark.table(tableFqn)
-      val survivors = base.join(
-        pinned.select(keyCols.map(col): _*), keyCols, "left_anti")
-      val upserts = pinned.filter(col(opCol) =!= "D")
-        .select(base.columns.map(col).toIndexedSeq: _*)
-      val merged = survivors.unionByName(upserts)
-      val w = merged.write.format("graft-json")
-        .option("format", GraftFormat.at(dir).name)
-        .option("replace", "true").mode("overwrite")
-      txn.fold(w) { case (appId, v) =>
-        w.option("txnAppId", appId).option("txnVersion", v.toString)
-      }.save(dir.toString)
-    } finally pinned.unpersist(blocking = false)
-    } // withCommitLock
+    }
     spark.table(tableFqn).count()
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -29,10 +27,7 @@ object GraftOptimize {
       xCol: String,
       yCol: String,
       numFiles: Int): Long = {
-    val parts = tableFqn.split('.')
-    require(parts.length >= 2, s"expected catalog.[ns.]table, got $tableFqn")
-    val root = spark.conf.get(s"spark.sql.catalog.${parts.head}.root")
-    val dir = parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
+    val dir = GraftCatalog.tableDir(spark, tableFqn)
     // the lock spans the scan through the replace swap (the inner
     // replace-commit reenters it): an append committing between the
     // scan's manifest read and the swap would otherwise vanish from the

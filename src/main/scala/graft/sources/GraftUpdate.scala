@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{col, when}
@@ -35,10 +35,7 @@ object GraftUpdate {
       tableFqn: String,
       where: Column,
       set: Map[String, Column]): Long = {
-    val parts = tableFqn.split('.')
-    require(parts.length >= 2, s"expected catalog.[ns.]table, got $tableFqn")
-    val root = spark.conf.get(s"spark.sql.catalog.${parts.head}.root")
-    val dir = parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
+    val dir = GraftCatalog.tableDir(spark, tableFqn)
     val table = spark.table(tableFqn)
     val schema = table.schema
     val unknown = set.keySet.diff(schema.fieldNames.toSet)

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.sources.{GraftJsonSink, GraftMerge, Manifest}
+import graft.sources.GraftMerge
 
 /** Streaming MERGE: a CDC feed applied to a graft catalog table one
   * micro-batch at a time through foreachBatch — the standard pattern for
@@ -37,10 +35,10 @@ object CdcMergeStream {
       .digest(checkpoint.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  /** Apply one micro-batch exactly once: skip if this stream's marker
-    * already covers `batchId`, else merge with the marker riding in the
-    * same manifest commit. Public for crash-recovery tests, which replay
-    * batches the way a restarted query would.
+  /** Apply one micro-batch exactly once: GraftMerge skips it when this
+    * stream's marker already covers `batchId`, else merges with the
+    * marker riding in the same manifest commit. Public for crash-recovery
+    * tests, which replay batches the way a restarted query would.
     */
   def applyBatch(
       tableFqn: String,
@@ -48,19 +46,9 @@ object CdcMergeStream {
       keyCols: Seq[String],
       opCol: String,
       appId: String,
-      batchId: Long): Unit = {
-    val parts = tableFqn.split('.')
-    val root = batch.sparkSession.conf.get(s"spark.sql.catalog.${parts.head}.root")
-    val dir = parts.tail.foldLeft(Paths.get(root))(_.resolve(_))
-    GraftJsonSink.withCommitLock(dir) {
-      val applied = Manifest.read(dir).txn.get(appId)
-      if (applied.forall(_ < batchId)) {
-        GraftMerge.into(batch.sparkSession, tableFqn, batch, keyCols, opCol,
-          txn = Some(appId -> batchId))
-        ()
-      }
-    }
-  }
+      batchId: Long): Unit =
+    GraftMerge.into(batch.sparkSession, tableFqn, batch, keyCols, opCol,
+      txn = Some(appId -> batchId))
 
   /** Start applying `changes` (a streaming DataFrame carrying `keyCols`,
     * the table's columns, and `opCol` with U/I/D) to `tableFqn`.

@@ -61,60 +61,25 @@ object EventStream {
         (unix_timestamp(col("window.start")) / 3600L).cast("long").as("hour_bucket"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Streaming exact dedup: drop duplicate event_ids within the
-    * watermark horizon — the streaming flavor of the training-data
-    * dedup primitive. Uses dropDuplicatesWithinWatermark so each key's
-    * state carries an expiry derived from the event time and is evicted
-    * once the watermark passes it — with plain dropDuplicates("event_id")
-    * the event-time column is not part of the dedup key, so state would
-    * grow without bound on an unbounded stream.
-    */
-  def dedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val stream = readRaw(spark, dir)
-    val name = s"ev_dedup_${System.nanoTime()}"
-    val q = withEventTs(stream)
-      .withWatermark("event_ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_id"), col("event_type"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
-  }
-
   /** Streaming dedup under genuine at-least-once delivery: the event
     * stream UNIONED WITH ITSELF (every event delivered twice, the way a
     * replayed Kafka partition or a retried file listing duplicates a
     * feed), then dropDuplicatesWithinWatermark restores exactly-once.
     * Late second copies are equivalent whether the watermark drops them
     * or the dedup state does — both copies carry the same event time, so
-    * exactly one survives on every path. Returns the deduped rows from
-    * the memory sink; the gate aggregates them and compares against the
-    * batch DISTINCT of the single-copy table.
+    * exactly one survives on every path. Each key's state carries an
+    * expiry derived from the event time and is evicted once the
+    * watermark passes it; plain dropDuplicates("event_id") would keep
+    * state without bound on an unbounded stream. Returns the deduped
+    * rows; the gate aggregates them and compares against the batch
+    * DISTINCT of the single-copy table.
     */
   def dedupUnionStream(spark: SparkSession, dir: String): DataFrame = {
     def src = readRaw(spark, dir)
-    val name = s"ev_dedup_union_${System.nanoTime()}"
-    val q = withEventTs(src.union(src))
+    Streams.drain(withEventTs(src.union(src))
       .withWatermark("event_ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
+      .select(col("event_id"), col("event_type"), col("value")), "append")
   }
 
   /** Streaming → external sink with exactly-once semantics: each
@@ -155,28 +120,13 @@ object EventStream {
     val stream = readRaw(spark, dir)
     val dim = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val name = s"ev_enrich_${System.nanoTime()}"
-    val q = stream
+    Streams.drain(stream
       .join(broadcast(dim), Seq("user_id"), "left")
       .groupBy(coalesce(col("segment"), lit("UNKNOWN")).as("segment"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(38, 6))).cast(DoubleType).as("total_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // hand back a self-contained local relation and drop the memory
-    // sink's temp view — caching the sink table and leaving the view
-    // registered would leak per call into the shared session
-    val sink = spark.table(name)
-    val outSchema = sink.schema
-    val rows = java.util.Arrays.asList(sink.collect(): _*)
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(rows, outSchema)
+        sum(col("value").cast(DecimalType(38, 6))).cast(DoubleType).as("total_value")),
+      "complete")
   }
 
   /** Batch twin of [[enrichedAgg]] for exact comparison. */
@@ -202,9 +152,7 @@ object EventStream {
     * SessionWindowStreamSpec.
     */
   def sessionWindowStream(spark: SparkSession, dir: String): DataFrame = {
-    val stream = readRaw(spark, dir)
-    val name = s"ev_sess_${System.nanoTime()}"
-    val q = withEventTs(stream)
+    Streams.drain(withEventTs(readRaw(spark, dir))
       .withWatermark("event_ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("event_ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
@@ -212,17 +160,7 @@ object EventStream {
         col("user_id"),
         unix_micros(col("w.start")).as("start_us"),
         unix_micros(col("w.end")).as("end_us"),
-        col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
+        col("n_events")), "append")
   }
 
   /** Stream-stream interval join: purchases joined to clicks of the
@@ -248,43 +186,18 @@ object EventStream {
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts_evt").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    val name = s"ev_ssj_${System.nanoTime()}"
-    val q = purchases.join(clicks,
+    Streams.drain(purchases.join(clicks,
         col("p_user") === col("c_user") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"))
-      .select(col("purchase_id"), col("click_id"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
+      .select(col("purchase_id"), col("click_id")), "append")
   }
 
   /** Run the streaming flavor to completion over the finite input and
-    * return the materialized result. availableNow + memory sink: the
-    * stream consumes every file, then the in-memory table is the answer.
+    * return the materialized result.
     */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val stream = readRaw(spark, dir)
-    val name = s"ev_stream_${System.nanoTime()}"
-    val q = hourlyAgg(stream).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // copy out of the memory sink so the result outlives the query
-    val out = spark.table(name).cache()
-    out.count()
-    out
-  }
+  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
+    Streams.drain(hourlyAgg(readRaw(spark, dir)), "complete")
 
   /** Sliding (hopping) windows: 1-hour windows advancing every 15
     * minutes, so each event lands in FOUR overlapping windows — the
@@ -304,18 +217,6 @@ object EventStream {
         col("event_type"), col("n_events"), col("total_value"))
 
   /** `slidingAgg` driven through Structured Streaming to completion. */
-  def runSlidingToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val stream = readRaw(spark, dir)
-    val name = s"ev_slide_${System.nanoTime()}"
-    val q = slidingAgg(stream).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
-  }
+  def runSlidingToCompletion(spark: SparkSession, dir: String): DataFrame =
+    Streams.drain(slidingAgg(readRaw(spark, dir)), "complete")
 }

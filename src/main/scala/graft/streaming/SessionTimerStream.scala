@@ -78,12 +78,9 @@ object SessionTimerStream {
   /** Drive over the finite events fixture; returns all emitted sessions. */
   def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val name = s"ev_timer_${System.nanoTime()}"
     val raw = EventStream.readRaw(spark, dir)
     val tsType = raw.schema("ts").dataType
-    val q = raw
+    Streams.drain(raw
       .withColumn("ts_evt", timestamp_micros(graft.Tables.eventTsMicros(tsType)))
       .withWatermark("ts_evt", "1 second")
       .select(col("user_id"), graft.Tables.eventTsMillis(tsType).as("ts_ms"))
@@ -91,11 +88,6 @@ object SessionTimerStream {
       .groupByKey(_.user_id)
       .transformWithState(new TimerSessionProcessor,
         TimeMode.EventTime(), OutputMode.Append())
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
+      .toDF(), "append")
   }
 }

@@ -50,24 +50,13 @@ object SessionizeStream {
         graft.Tables.eventTsMicros(raw.schema("ts").dataType).as("ts_us"),
         col("event_id"))
       .as[UserEvent]
-    val name = s"sessionize_${System.nanoTime()}"
-    val q = stream
+    val updates = Streams.drain(stream
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.NoTimeout)(updateState)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      .toDF(), "update")
     // keep only each user's final (latest) summary
-    val out = spark.table(name)
-      .groupBy(col("user_id"))
+    updates.groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("n_sessions"), max(col("n_events")).as("n_events"))
-      .cache()
-    out.count()
-    out
   }
 }

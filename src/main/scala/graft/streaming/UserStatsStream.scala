@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * per user; each micro-batch emits the user's updated totals, so the
   * final row per user equals the batch aggregate.
   *
-  * transformWithState requires the RocksDB state store provider —
-  * the method sets it for the session.
+  * transformWithState requires the RocksDB state store provider;
+  * [[Streams.drain]] sets it for this query alone.
   */
 object UserStatsStream {
 
@@ -45,24 +45,11 @@ object UserStatsStream {
     */
   def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = EventStream.readRaw(spark, dir)
-    val name = s"ev_tws_${System.nanoTime()}"
-    val q = stream
+    Streams.drain(EventStream.readRaw(spark, dir)
       .select(col("user_id"), col("value"))
       .as[EventIn]
       .groupByKey(_.user_id)
       .transformWithState(new StatsProcessor, TimeMode.None(), OutputMode.Append())
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    out
+      .toDF(), "append")
   }
 }

@@ -67,7 +67,8 @@ object ManifestGuardSpec {
 
   private val Comment = "(?s:/\\*.*?\\*/)|(?m:^\\s*//[^\n]*$)".r
 
-  private def code(src: String): String = Comment.replaceAllIn(src, "")
+  /** `src` without its comments. */
+  def code(src: String): String = Comment.replaceAllIn(src, "")
 
   // a key inside a string literal: escaped (\"rows\":) or bare ("rows":
   // in a triple-quoted or interpolated literal); the file names as quoted

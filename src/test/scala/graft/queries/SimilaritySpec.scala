@@ -151,12 +151,15 @@ class SimilaritySpec extends AnyFunSuite {
   test("ANN paths leave nothing in the block manager") {
     // the 100 TB contract: every inline ANN flavor recomputes from scan
     // — a full-corpus cache() would evict chaotically at scale, and a
-    // leaked entry here means some path quietly reintroduced one
+    // leaked entry here means some path quietly reintroduced one.
+    // Other suites' checkpointed RDDs stay until a GC, so only the ids
+    // the ANN queries add count.
     spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     Seq("sim_lsh_ann", "sim_ivf_ann", "sim_ivf_persisted", "sim_ivfpq_ann")
       .filter(graft.SparkEntry.queries.contains)
       .foreach(n => graft.SparkEntry.queries(n)(spark, dir).count())
-    val cached = spark.sparkContext.getPersistentRDDs
+    val cached = spark.sparkContext.getPersistentRDDs -- before
     assert(cached.isEmpty,
       s"leaked block-manager entries: ${cached.values.map(_.name).mkString(", ")}")
   }

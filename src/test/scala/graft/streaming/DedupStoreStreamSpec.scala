@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.sources.Manifest
 
 /** Streaming store-mediated dedup across MANY micro-batches: with the
   * corpus split into four files and maxFilesPerTrigger=1, duplicate
@@ -55,5 +56,23 @@ class DedupStoreStreamSpec extends AnyFunSuite {
       checkpoint = ckpt, maxFilesPerTrigger = Some(1), glob = "*.parquet")
     assert(spark.table("dscat.ns.store").count() == 20)
     spark.sql("DROP TABLE dscat.ns.store")
+  }
+
+  test("a re-delivered batch commits nothing and changes no row") {
+    val sp = spark
+    import sp.implicits._
+    spark.sql("CREATE TABLE dscat.ns.replay (sig STRING, doc_id BIGINT, text STRING)")
+    val dir = graft.sources.GraftCatalog.tableDir(spark, "dscat.ns.replay")
+    val batch = (0 until 6).map(i => (i.toLong, s"text of doc ${i % 3}", "en", "synth", 10L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def rows = spark.table("dscat.ns.replay").collect().toSet
+    DedupStoreStream.applyBatch(spark, "dscat.ns.replay", "app", 0L, batch)
+    val snapshots = Manifest.listSnapshots(dir)
+    val stored = rows
+    assert(stored.size == 3)
+    DedupStoreStream.applyBatch(spark, "dscat.ns.replay", "app", 0L, batch)
+    assert(Manifest.listSnapshots(dir) == snapshots)
+    assert(rows == stored)
+    spark.sql("DROP TABLE dscat.ns.replay")
   }
 }

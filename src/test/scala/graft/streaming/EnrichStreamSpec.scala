@@ -24,9 +24,10 @@ class EnrichStreamSpec extends AnyFunSuite {
   }
 
   test("enrichedAgg leaves no memory-sink temp view or cached table behind") {
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
     EventStream.enrichedAgg(spark, dir).count()
-    val leaked = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("ev_enrich_"))
+    val leaked = views -- before
     assert(leaked.isEmpty, leaked.mkString(","))
   }
 
