@@ -205,21 +205,21 @@ object ScaleWorkloads {
     val incBatch = r.recrawl("batch", col("doc_id") % 100 === 0, nDocs * 10)
     val idx = r.dir("ppjoin")
     val build = r.time(operators.PrefixFilterJoin.writeIndex(r.dupDocs, idx, num = 4, den = 5))
-    def serve() = r.time(operators.PrefixFilterJoin.pairsAgainstIndex(
-      r.spark, incBatch, idx, num = 4, den = 5).count())
+    // (pair count, the candidate bound the serve's guard computed)
+    def serve() = r.time(operators.PrefixFilterJoin.pairsAgainstIndexWithBound(
+      r.spark, incBatch, idx, num = 4, den = 5) match { case (df, b) => (df.count(), b) })
     val serves = (1 to 3).map(_ => serve())
-    val nPpIdxInc = serves.head.value
+    val nPpIdxInc = serves.head.value._1
     // every batch doc is a re-crawl of a standing doc (jaccard 1.0), and
     // the exact serve may not miss a single one
     require(nPpIdxInc >= nDocs / 100,
       s"exact incremental serve lost standing twins: $nPpIdxInc")
     // the bound the guard computed on the steady serve — evidence the
-    // pstats arithmetic engaged at this scale
-    val candBound = r.spark.conf
-      .getOption("spark.graft.ppjoin.debug.lastServeCandidateBound").getOrElse("absent")
-    r.spark.conf.set("spark.graft.ppjoin.serveCandidateBroadcastMaxRows", "1")
+    // pstats arithmetic engaged at this scale ("inf" = guard voided)
+    val candBound = serves.last.value._2.fold("inf")(_.toString)
+    r.spark.conf.set(Tunables.PpjoinServeCandidateBroadcastMaxRows.key, "1")
     val guard = serve()
-    val nPpIncGuard = guard.value
+    val nPpIncGuard = guard.value._1
     require(nPpIncGuard == nPpIdxInc,
       s"guarded exact serve diverged: $nPpIncGuard vs $nPpIdxInc")
     Seq("ppjoin_index_build_sec" -> build.wallSec,
@@ -279,7 +279,7 @@ object ScaleWorkloads {
     require(nIncGuard == nInc,
       s"guarded incremental must drop the clique and ONLY the clique: $nIncGuard vs $nInc")
     val bigBatch = r.recrawl("big_batch", col("doc_id") % 10 === 3, nDocs * 20)
-    spark.conf.set("spark.graft.index.serveBroadcastMaxRows", "100000")
+    spark.conf.set(Tunables.ServeBroadcastMaxRows.key, "100000")
     val big = r.time(operators.NearDupLsh.pairsAgainstIndexAt(
       spark, bigBatch, idx, 0.8d, Some(hotKeys)).count())
     val nIncBig = big.value
@@ -429,7 +429,7 @@ object ScaleWorkloads {
     create("docs_pq", "TBLPROPERTIES('format'='parquet')")
     rows.writeTo("smokecat.s.docs_pq").append()
     create("docs_rg", "TBLPROPERTIES('format'='parquet')")
-    spark.conf.set("spark.graft.parquet.rowGroupBytes", (64L << 10).toString)
+    spark.conf.set(Tunables.ParquetRowGroupBytes.key, (64L << 10).toString)
     rows.sortWithinPartitions(col("doc_id")).writeTo("smokecat.s.docs_rg").append()
     def plannedFiles(df: DataFrame): Int =
       PlanWalk.nodes(df.queryExecution.executedPlan).collect {
@@ -456,7 +456,7 @@ object ScaleWorkloads {
     // file stats keep 1-2 files either way, so the A/B isolates the groups
     // decoded inside them
     val noRg = spark.newSession()
-    (cat :+ ("spark.graft.catalog.rowGroupSkip" -> "false")).foreach {
+    (cat :+ (Tunables.RowGroupSkip.key -> "false")).foreach {
       case (k, v) => noRg.conf.set(k, v)
     }
     val rgHi = lo + math.max(1L, r.nDocs / 2048) - 1

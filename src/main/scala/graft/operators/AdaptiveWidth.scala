@@ -33,14 +33,9 @@ import org.apache.spark.sql.DataFrame
   */
 object AdaptiveWidth {
 
-  val DefaultBytesPerPartition: Long = 8L << 20
-
   /** Plan-stat-derived width, clamped to [1, maxWidth]. */
   def of(df: DataFrame, maxWidth: Int): Int = {
-    val budget = df.sparkSession.conf
-      .getOption("spark.graft.repartitionBytesPerPartition")
-      .map(_.toLong).getOrElse(DefaultBytesPerPartition)
-    require(budget > 0, s"spark.graft.repartitionBytesPerPartition must be > 0: $budget")
+    val budget = graft.Tunables.RepartitionBytesPerPartition(df.sparkSession)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val w = (bytes + budget - 1) / budget
     if (w >= maxWidth) maxWidth else math.max(1L, w.toLong).toInt

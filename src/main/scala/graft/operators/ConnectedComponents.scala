@@ -20,16 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Row ceiling for broadcasting [[incremental]]'s relabel map (one
-    * (component, next) long pair per contracted vertex, so ~16 payload
-    * bytes → ~64 B/row hashed-relation footprint → ~256 MB at the
-    * default, inside a broadcast budget sized for multi-GB executors).
-    * Above it the relabel join degrades to a shuffle join — identical
-    * answer, one extra exchange on the standing labels. Tunable via
-    * `spark.graft.cc.relabelBroadcastMaxRows` (docs/TUNABLES.md).
-    */
-  val DefaultRelabelBroadcastMaxRows: Long = 4000000L
-
   /** Incremental update: fold a new batch's edges into STANDING
     * component assignments without re-running propagation over the
     * standing graph — the crawl-ingest shape, where yesterday's corpus
@@ -58,6 +48,8 @@ object ConnectedComponents {
     */
   def incremental(standing: DataFrame, newEdges: DataFrame,
       maxIter: Int = 20): DataFrame = {
+    // read before any job runs, so a malformed value fails fast
+    val relabelMaxRows = graft.Tunables.CcRelabelBroadcastMaxRows(standing.sparkSession)
     val lbl = standing.select(col("id"), col("component"))
       .localCheckpoint(true)
     val contractedEdges = newEdges.select(col("src"), col("dst"))
@@ -78,9 +70,6 @@ object ConnectedComponents {
     // degenerate mega-batch falls back to a shuffle join.
     val relabel0 = contracted
       .select(col("id").as("component"), col("component").as("next"))
-    val relabelMaxRows = standing.sparkSession.conf
-      .getOption("spark.graft.cc.relabelBroadcastMaxRows").map(_.toLong)
-      .getOrElse(DefaultRelabelBroadcastMaxRows)
     val relabel =
       if (contracted.count() <= relabelMaxRows) broadcast(relabel0) else relabel0
     val updatedStanding = lbl.join(relabel, Seq("component"), "left")

@@ -34,11 +34,10 @@ object ExactPairs {
     // bench-scale corpus) skips the pin and lets dropDuplicates' own
     // exchange coalesce under AQE. True pair volume is invisible to
     // static stats; AQE's byte-based sizing of the downstream exchanges
-    // stays the guard. The breadcrumb conf records the width for probes
-    // and never feeds planning.
+    // stays the guard. The width is readable from the plan: the
+    // repartition keyed on (doc_a, doc_b), absent when w = 1.
     val w = math.max(AdaptiveWidth.of(docs, shufflePartitions),
       AdaptiveWidth.of(candidates, shufflePartitions))
-    docs.sparkSession.conf.set("spark.graft.debug.lastCandidateWidth", w.toString)
     val pinned =
       if (w > 1) candidates.repartition(w, col("doc_a"), col("doc_b")) else candidates
     // Stacked rescore: each pair becomes two (doc_a, doc_b, role, doc_id)

@@ -64,23 +64,7 @@ import org.apache.spark.sql.SparkSession
   */
 object IndexGenerations {
 
-  /** Streams run a maintenance tick per micro-batch only when this is
-    * `true` — default off: ingest behavior is byte-identical to the
-    * pre-generations layout unless an operator opts in.
-    */
-  val ConfKey = "spark.graft.index.autoMaintain"
-
   private val Marker = "_ADOPTED"
-
-  def enabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(ConfKey).exists { raw =>
-      raw.toLowerCase match {
-        case "true" => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"$ConfKey must be true or false, got '$other'")
-      }
-    }
 
   def genPath(root: String, id: Long): String = s"$root/_gen=$id"
 
@@ -146,11 +130,14 @@ object IndexGenerations {
     * micro-batch `batchId` to `active`: `index.maintain(active, target,
     * batchId - 1)` returns true only when it compacted into `target`.
     * Returns the adopted generation path, or None (conf off / not due /
-    * redelivery-after-adoption).
+    * redelivery-after-adoption). Streams tick only when
+    * `spark.graft.index.autoMaintain` is `true` — default off: ingest
+    * behavior is byte-identical to the pre-generations layout unless an
+    * operator opts in.
     */
   def maintainTick(spark: SparkSession, root: String, active: String,
       batchId: Long, index: PersistedIndex): Option[String] = {
-    if (!enabled(spark)) None
+    if (!graft.Tunables.AutoMaintain(spark)) None
     else {
       val target = genPath(root, batchId)
       if (target == active) None // redelivery: this id's gen is already live

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{broadcast, col}
+import graft.Tunables
 
 /** The shared mechanics of the five persisted-index lifecycles
   * (PrefixFilterJoin, NearDupLsh, Bm25Index, IvfIndex, LshAnnIndex —
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *    gates on.
   *  - [[serveGuard]] / [[serveKeyPruneLimit]]: the batch-size guards of
   *    the LSH, ppjoin and BM25 serves, under one knob family
-  *    (`spark.graft.index.*`, every numeric knob parsed by `knob`).
+  *    (`spark.graft.index.*`, declared in [[graft.Tunables]]).
   */
 object IndexLifecycle {
 
@@ -108,26 +109,19 @@ object IndexLifecycle {
     ids
   }
 
-  /** Compaction trigger for the auto-maintenance layer
-    * ([[PersistedIndex.maintain]]): fold only when the committed
-    * batch-dir count under a long-running ingest exceeds this, so
-    * directory-listing cost per serve stays bounded without an operator
-    * remembering to compact. Tunable via
-    * `spark.graft.index.compactMinBatches`.
-    */
-  val DefaultCompactMinBatches: Int = 16
-
-  /** True when `dir` holds more than the conf'd number of committed
-    * (id ≤ `throughBatch`, bootstrap included) batch directories — the
-    * cheap (one listing, no data read) check `maintain` gates its
-    * compaction on. Off-contract file-bearing dirs fail fast exactly
-    * like [[tailIds]]: a maintenance decision must not silently miscount
-    * the layout it is about to rewrite.
+  /** True when `dir` holds more than `spark.graft.index.compactMinBatches`
+    * committed (id ≤ `throughBatch`, bootstrap included) batch
+    * directories — the cheap (one listing, no data read) check
+    * [[PersistedIndex.maintain]] gates its compaction on, so
+    * directory-listing cost per serve stays bounded under a long-running
+    * ingest without an operator remembering to compact. Off-contract
+    * file-bearing dirs fail fast exactly like [[tailIds]]: a maintenance
+    * decision must not silently miscount the layout it is about to
+    * rewrite.
     */
   def compactDue(spark: SparkSession, dir: String,
       throughBatch: Long): Boolean = {
-    val threshold = knob(spark, "spark.graft.index.compactMinBatches",
-      DefaultCompactMinBatches, min = 1, max = Int.MaxValue)
+    val threshold = Tunables.CompactMinBatches(spark)
     checkedIds(spark, dir).count(_ <= throughBatch) > threshold
   }
 
@@ -144,50 +138,16 @@ object IndexLifecycle {
       case _ => df
     }
 
-  /** Row budget for the serve paths' forced broadcasts (LSH and ppjoin):
-    * when the BATCH exceeds this many documents, the serve joins fall
-    * back to `shuffle_hash` hints on the same keys instead of
-    * broadcasting — the plan degrades to a (pruned-column) corpus
-    * shuffle rather than dying at Spark's 8 GB broadcast ceiling when a
-    * crawl batch arrives oversized. Measured with a limit-bounded count
-    * (one O(min(batch, budget)) probe job per serve call) because
-    * plan-stat estimates don't discount filters with CBO off: a batch
-    * carved from a large relation by a filter LOOKS relation-sized and
-    * would misroute the common small-batch case onto the corpus-shuffle
-    * path (observed: a 1% batch of a 10M corpus shuffling 5.4 GB of
-    * corpus sh for nothing). 2M docs ⇒ ~16M band rows (or ~16 prefix
-    * rows per doc at t = 0.8), comfortably inside the ceiling. Tunable
-    * via `spark.graft.index.serveBroadcastMaxRows`.
+  /** Largest key In-list a serve pushes into an index scan
+    * (`spark.graft.index.serveKeyPruneLimit`): the LSH band keys, the
+    * ppjoin prefix shingles and the BM25 query terms of a batch are
+    * collected (bounded) and pushed into the sorted artifact scans as an
+    * `isInCollection` filter only while they number at most this many;
+    * bigger batches skip the prune (or, in BM25, move it to a broadcast
+    * semi-join).
     */
-  val DefaultServeBroadcastMaxRows: Long = 2000000L
-
-  /** Largest key In-list a serve pushes into an index scan: the LSH band
-    * keys, the ppjoin prefix shingles and the BM25 query terms of a
-    * batch are collected (bounded) and pushed into the sorted artifact
-    * scans as an `isInCollection` filter only while they number at most
-    * this many; bigger batches skip the prune (or, in BM25, move it to a
-    * broadcast semi-join). Tunable via
-    * `spark.graft.index.serveKeyPruneLimit`.
-    */
-  val DefaultServeKeyPruneLimit: Int = 10000
-
   def serveKeyPruneLimit(spark: SparkSession): Int =
-    knob(spark, "spark.graft.index.serveKeyPruneLimit",
-      DefaultServeKeyPruneLimit, min = 0, max = Int.MaxValue).toInt
-
-  /** A numeric `spark.graft.index.*` knob: `default` when unset, else
-    * the value parsed as an integer in [`min`, `max`]. A malformed or
-    * out-of-range value fails fast with a message naming the key — not
-    * a bare NumberFormatException, nor a negative value reaching a
-    * `limit` or a count comparison.
-    */
-  private def knob(spark: SparkSession, key: String, default: Long,
-      min: Long, max: Long): Long =
-    spark.conf.getOption(key).fold(default) { raw =>
-      scala.util.Try(raw.toLong).toOption.filter(n => n >= min && n <= max)
-        .getOrElse(throw new IllegalArgumentException(
-          s"$key must be an integer in [$min, $max], got '$raw'"))
-    }
+    Tunables.ServeKeyPruneLimit(spark).toInt
 
   /** A serve's broadcast decision: `probedRows` (the batch row count,
     * capped at `maxRows` + 1) against the row budget `maxRows`. Under
@@ -202,15 +162,19 @@ object IndexLifecycle {
   }
 
   /** The guard for serving `batch`: a limit-bounded row probe against
-    * [[DefaultServeBroadcastMaxRows]] (conf'd), skipped when the caller
+    * `spark.graft.index.serveBroadcastMaxRows`, skipped when the caller
     * already knows the batch size (`batchRows`, e.g. a stream that
-    * materialized and counted the batch).
+    * materialized and counted the batch). The probe is a count (one
+    * O(min(batch, budget)) job per serve call) because plan-stat
+    * estimates don't discount filters with CBO off: a batch carved from
+    * a large relation by a filter LOOKS relation-sized and would
+    * misroute the common small-batch case onto the corpus-shuffle path
+    * (observed: a 1% batch of a 10M corpus shuffling 5.4 GB of corpus sh
+    * for nothing).
     */
   def serveGuard(spark: SparkSession, batch: DataFrame,
       batchRows: Option[Long]): ServeGuard = {
-    // max leaves room for the probe's + 1
-    val maxRows = knob(spark, "spark.graft.index.serveBroadcastMaxRows",
-      DefaultServeBroadcastMaxRows, min = 0, max = Long.MaxValue - 1)
+    val maxRows = Tunables.ServeBroadcastMaxRows(spark)
     val probeCap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
     ServeGuard(maxRows, batchRows.getOrElse(batch.limit(probeCap).count()))
   }

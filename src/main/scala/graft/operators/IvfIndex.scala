@@ -178,18 +178,16 @@ object IvfIndex extends PersistedIndex {
 
   /** Quantizer-drift alarm thresholds (see [[driftReport]]): an append
     * batch is flagged `drifted` when its mean squared assignment
-    * distortion exceeds `driftDistortionRatio` × the build-time mean,
-    * OR its cell-occupancy distribution sits further than `driftTvMax`
+    * distortion exceeds `DriftDistortionRatio` × the build-time mean,
+    * OR its cell-occupancy distribution sits further than `DriftTvMax`
     * total-variation distance from the build-time distribution. The
-    * defaults separate the measured failure mode cleanly: the planted
+    * bars separate the measured failure mode cleanly: the planted
     * half-cluster drift fixture posts ratio ≈ 3–6 and TV ≈ 0.7–0.9,
     * while representative appends (the sim_ivf_stream split) stay near
-    * ratio 1.0 / TV ≤ 0.2. Tunable via
-    * `spark.graft.ivf.driftDistortionRatio` /
-    * `spark.graft.ivf.driftTvMax`.
+    * ratio 1.0 / TV ≤ 0.2.
     */
-  val DefaultDriftDistortionRatio: Double = 2.0
-  val DefaultDriftTvMax: Double = 0.5
+  val DriftDistortionRatio: Double = 2.0
+  val DriftTvMax: Double = 0.5
 
   /** Deterministic id-hash training sample: the same vectors train on
     * any partitioning or file layout (a seeded .sample() is
@@ -316,7 +314,7 @@ object IvfIndex extends PersistedIndex {
     *    and candidate starvation for the crowded queries).
     *
     * `drifted` ORs the two threshold tests (see
-    * [[DefaultDriftDistortionRatio]]/[[DefaultDriftTvMax]]). The inputs
+    * [[DriftDistortionRatio]]/[[DriftTvMax]]). The inputs
     * are the metadata-tiny drift sidecars (≤ nlist rows per batch), so
     * the report costs a listing-scale read — cheap enough to run per
     * append or per maintenance cycle; `rebuildIndex` is the response
@@ -340,11 +338,6 @@ object IvfIndex extends PersistedIndex {
       s"no drift reference (drift/batch=-1) under $path — appends carry " +
         "sidecars but the build-time baseline is missing; compactIndex " +
         "derives it from the build bootstrap, rebuildIndex resets it")
-    val ratioMax = spark.conf
-      .getOption("spark.graft.ivf.driftDistortionRatio")
-      .map(_.toDouble).getOrElse(DefaultDriftDistortionRatio)
-    val tvMax = spark.conf.getOption("spark.graft.ivf.driftTvMax")
-      .map(_.toDouble).getOrElse(DefaultDriftTvMax)
     val stats = IndexLifecycle.cutBatches(
       spark.read.parquet(s"$path/drift"), maxBatchExclusive)
     val totals = stats.groupBy(col("batch"))
@@ -375,7 +368,7 @@ object IvfIndex extends PersistedIndex {
         (col("mean_d2") / col("ref_mean_d2")).as("distortion_ratio"),
         col("tv"))
       .withColumn("drifted",
-        col("distortion_ratio") > ratioMax || col("tv") > tvMax)
+        col("distortion_ratio") > DriftDistortionRatio || col("tv") > DriftTvMax)
       .orderBy(col("batch"))
   }
 

@@ -82,21 +82,6 @@ object NearDupLsh extends PersistedIndex {
     */
   val MinSampleCount = 25L
 
-  /** Input-size floor for the sampled catastrophe tier. The tier exists
-    * to keep degenerate MULTI-GB corpora from funneling tens of
-    * millions of rows into single reduce tasks (an 8 GB heap OOM,
-    * observed at 10M docs); below this plan-stat size the exact capped
-    * aggregate alone is already safe and the tier's two extra stages
-    * are pure fixed overhead (~+16% on the sub-second sf0.1 bench
-    * row). Output is unchanged either way: any key the sampler would
-    * drop (est > 5·cap with >= 25 sampled rows) is over the cap with
-    * overwhelming probability, so the exact tier drops it too. Sources
-    * that report no statistics (e.g. in-memory or synthetic relations)
-    * default to huge and keep the tier on — the safe direction.
-    * Tunable via `spark.graft.lsh.sampledTierMinBytes`.
-    */
-  val DefaultSampledTierMinBytes: Long = 256L << 20
-
   /** Word-3-gram shingle array of a text column. */
   def shingles(text: Column): Column = {
     val toks = split(text, " ")
@@ -581,7 +566,7 @@ object NearDupLsh extends PersistedIndex {
     // overrides autoBroadcastJoinThreshold unconditionally, so one
     // oversized crawl batch would die at Spark's 8 GB broadcast ceiling
     // instead of degrading. Decide with a limit-bounded ROW COUNT of
-    // the batch (see IndexLifecycle.DefaultServeBroadcastMaxRows for
+    // the batch (see IndexLifecycle.serveGuard for
     // why plan stats can't be trusted here; the candidate relation
     // scales with the batch in every non-degenerate corpus, and the
     // degenerate ones are exactly what `skipBuckets` bounds): under the
@@ -678,10 +663,9 @@ object NearDupLsh extends PersistedIndex {
     //      build side — deliberately NOT broadcast: CollectMetrics
     //      under a broadcast build never reaches observedMetrics).
     // the sampled tier only engages above the input-size floor (see
-    // DefaultSampledTierMinBytes): small corpora skip its two stages
+    // Tunables.LshSampledTierMinBytes): small corpora skip its two stages
     // entirely — same output, none of the fixed overhead
-    val tierMin = spark.conf.getOption("spark.graft.lsh.sampledTierMinBytes")
-      .map(_.toLong).getOrElse(DefaultSampledTierMinBytes)
+    val tierMin = graft.Tunables.LshSampledTierMinBytes(spark)
     val useSampledTier = docs.queryExecution.optimizedPlan.stats.sizeInBytes > tierMin
     val estOver = bandRows(docs.sample(SampleFrac, SampleSeed))
       .groupBy(col("band"), col("band_hash"))

@@ -184,20 +184,6 @@ object PrefixFilterJoin extends PersistedIndex {
   // fat, exactly like recompacting the LSH index.
   // ------------------------------------------------------------------
 
-  /** Broadcast budget for the serve path's CANDIDATE relation. Candidate
-    * cardinality is batch-size × prefix-collision fanout — unbounded by
-    * batch size (a boilerplate-heavy corpus can fan a tiny batch into
-    * hundreds of millions of candidate rows), so the batch-row probe
-    * alone cannot authorize this broadcast. The serve computes the EXACT
-    * pre-filter candidate row count from the `pstats` sidecar
-    * (Σ over batch prefix rows of the corpus posting count for that
-    * shingle — one tiny aggregate against a key-pruned scan) and falls
-    * back to `shuffle_hash` above the budget. 8M pairs ≈ 128 MB — far
-    * inside the broadcast ceiling, far above any benign serve. Tunable
-    * via `spark.graft.ppjoin.serveCandidateBroadcastMaxRows`.
-    */
-  val DefaultServeCandidateBroadcastMaxRows: Long = 8000000L
-
   /** Posting-count floor separating the `pstats` sidecar's HOT shingles
     * (stored exactly) from the cold tail (charged this value
     * arithmetically in the serve's candidate bound — once per SERVED
@@ -587,8 +573,8 @@ object PrefixFilterJoin extends PersistedIndex {
     * broadcast guard: its cardinality is batch × prefix-collision
     * fanout — unbounded by batch size — so the serve computes the exact
     * pre-filter candidate count from the pstats sidecar and degrades
-    * that join to shuffle_hash above the budget (see
-    * DefaultServeCandidateBroadcastMaxRows). No skip list: unlike the
+    * that join to shuffle_hash above the budget
+    * (`Tunables.PpjoinServeCandidateBroadcastMaxRows`). No skip list: unlike the
     * LSH serve's hot-bucket guard, dropping keys here would break the
     * zero-false-negative contract, so hot fanout changes the PLAN,
     * never the answer.
@@ -607,12 +593,8 @@ object PrefixFilterJoin extends PersistedIndex {
   /** [[pairsAgainstIndex]] plus the candidate upper bound the serve's
     * broadcast guard computed, BY VALUE — `None` means the bound was
     * voided (oversized/off-contract layout ⇒ shuffle_hash candidates).
-    * This is the race-free channel for callers that plan serves
-    * concurrently on one session: the
-    * `spark.graft.ppjoin.debug.lastServeCandidateBound` conf is still written
-    * as a best-effort observability breadcrumb, but it is session-global
-    * and two concurrent serves race on it, so programmatic consumers
-    * must read THIS return value.
+    * Returned by value, so serves planned concurrently on one session
+    * each see their own bound.
     */
   def pairsAgainstIndexWithBound(spark: SparkSession, newDocs: DataFrame,
       path: String, num: Int, den: Int,
@@ -706,9 +688,7 @@ object PrefixFilterJoin extends PersistedIndex {
     // bound = ∞, candidates take shuffle_hash outright. Legacy indexes
     // without the sidecar keep the pre-sidecar behavior (batch-probe-only
     // guard).
-    val candCap = spark.conf
-      .getOption("spark.graft.ppjoin.serveCandidateBroadcastMaxRows")
-      .map(_.toLong).getOrElse(DefaultServeCandidateBroadcastMaxRows)
+    val candCap = graft.Tunables.PpjoinServeCandidateBroadcastMaxRows(spark)
     val pstatsPath = new org.apache.hadoop.fs.Path(s"$path/pstats")
     val hasPstats = pstatsPath
       .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pstatsPath)
@@ -770,15 +750,6 @@ object PrefixFilterJoin extends PersistedIndex {
           case _ => Long.MaxValue
         }
       }
-    // observability breadcrumb: the bound the serve just computed, "inf"
-    // when the guard was voided. BEST-EFFORT DEBUG ONLY — the conf is
-    // session-global, so two serves planned concurrently on one
-    // SparkSession race on it and a reader can observe the other serve's
-    // bound. The bound never feeds back into planning (candSide captures
-    // `candBound` by value) and programmatic consumers get it from this
-    // method's return value, so the race affects the breadcrumb alone.
-    spark.conf.set("spark.graft.ppjoin.debug.lastServeCandidateBound",
-      if (candBound == Long.MaxValue) "inf" else candBound.toString)
     def candSide(df: DataFrame): DataFrame =
       if (!guard.oversized && candBound <= candCap) broadcast(df)
       else df.hint("shuffle_hash")

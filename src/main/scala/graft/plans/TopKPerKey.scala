@@ -110,8 +110,7 @@ case class TopKPerKeyExec(
     val keyExprs = keys
     val sortOrder = order
     val limit = k
-    val maxKeys = session.sessionState.conf
-      .getConfString("spark.graft.topk.maxKeysInMemory", "4194304").toInt
+    val maxKeys = graft.Tunables.TopkMaxKeysInMemory(session.sessionState.conf)
     if (partial) {
       child.execute().mapPartitions { iter =>
         val keyProj = UnsafeProjection.create(keyExprs, childOutput)

@@ -199,13 +199,13 @@ object SourceRoundtrip {
           .writeTo(s"$cat.g.orders").append()
         val tdir = java.nio.file.Paths.get(root, "g", "orders")
         val before = graft.sources.Manifest.read(tdir).files.toSet
-        s.conf.set("spark.graft.delete.mode", "mor")
+        s.conf.set(graft.Tunables.DeleteMode.key, "mor")
         try {
           s.sql(s"DELETE FROM $cat.g.orders " +
             "WHERE o_orderkey >= 1000 AND o_orderkey < 3000")
           s.sql(s"DELETE FROM $cat.g.orders " +
             "WHERE o_orderstatus = 'F' AND o_orderkey >= 4000 AND o_orderkey < 5000")
-        } finally s.conf.set("spark.graft.delete.mode", "cow")
+        } finally s.conf.set(graft.Tunables.DeleteMode.key, "cow")
         val after = graft.sources.Manifest.read(tdir).files.toSet
         val morOnly = after.subsetOf(before) &&
           graft.sources.Manifest.read(tdir).dvs.nonEmpty

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.{DataType, StructType, StringType, LongType, I
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+import graft.Tunables
 
 /** DataSource V2 TableCatalog over the graft-json table format — the
   * piece that turns the sink into a full SQL-addressable format:
@@ -583,7 +584,7 @@ object GraftCatalog {
     * as the index lifecycles' `maintain`): when the live manifest holds
     * more than `spark.graft.catalog.maintainMaxFiles` data files,
     * `compactSmall` bin-packs the files under `maintainSmallBytes`
-    * into ~`maintainTargetBytes` merges (history-preserving); snapshots
+    * into ~128 MB merges (history-preserving); snapshots
     * older than `spark.graft.catalog.snapshotRetentionMs` then expire
     * (the latest main snapshot is always retained, so a freshly
     * maintained table keeps its readable head). Not-due compaction =
@@ -603,18 +604,18 @@ object GraftCatalog {
     */
   def maintain(spark: org.apache.spark.sql.SparkSession, tableDir: Path,
       schema: StructType): (Int, Int, Int) = {
-    def confL(k: String, d: Long): Long =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(d)
-    val maxFiles = confL("spark.graft.catalog.maintainMaxFiles", 64L).toInt
+    // every knob is read before any I/O, so a malformed one fails fast
+    // whether or not compaction is due
+    val maxFiles = Tunables.MaintainMaxFiles(spark)
+    val smallBytes = Tunables.MaintainSmallBytes(spark)
+    val retentionMs = Tunables.SnapshotRetentionMs(spark)
     val live = Manifest.read(tableDir).files.size
     val (before, after) =
       if (live > maxFiles)
-        compactSmall(tableDir, schema,
-          minBytes = confL("spark.graft.catalog.maintainSmallBytes", 8L << 20),
-          targetBytes = confL("spark.graft.catalog.maintainTargetBytes", 128L << 20))
+        // the target: the row-group-sized read unit the columnar scan wants
+        compactSmall(tableDir, schema, minBytes = smallBytes, targetBytes = 128L << 20)
       else (live, live)
-    val (expired, _) = expireSnapshots(tableDir,
-      confL("spark.graft.catalog.snapshotRetentionMs", 7L * 24 * 3600 * 1000))
+    val (expired, _) = expireSnapshots(tableDir, retentionMs)
     (before, after, expired.size)
   }
 
@@ -780,8 +781,7 @@ private[sources] class GraftCatalogTable(
     // merge-on-read mode: record deleted ordinals in the manifest instead
     // of rewriting data files — see [[GraftDv]]. At 100 TB this turns a
     // terabyte of copy-on-write rewrite into a few KB of manifest.
-    val mor = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.delete.mode", "cow") == "mor"
+    val mor = Tunables.DeleteMode(org.apache.spark.sql.internal.SQLConf.get) == "mor"
     GraftJsonSink.withCommitLock(dir) {
     val m = Manifest.read(dir)
     val stats = GraftStats.read(dir, tableSchema)
@@ -1041,15 +1041,12 @@ private[sources] class GraftCatalogTable(
         override def createReaderFactory(): PartitionReaderFactory =
           new JsonFileReaderFactory(tableSchema, required, renameAliases, dvs, format,
             // kill switch + A/B probe handle for the columnar path
-            columnar = org.apache.spark.sql.internal.SQLConf.get
-              .getConfString("spark.graft.catalog.columnarRead", "true") == "true",
+            columnar = Tunables.ColumnarRead(org.apache.spark.sql.internal.SQLConf.get),
             // the same understood filters that pruned whole files prune
             // row groups inside the kept ones (GraftColumnarScan); the
             // conf is the kill switch + A/B probe handle
-            filters = if (org.apache.spark.sql.internal.SQLConf.get
-                .getConfString("spark.graft.catalog.rowGroupSkip", "true") == "true")
-              skippingFilters
-            else Array.empty)
+            filters = if (Tunables.RowGroupSkip(org.apache.spark.sql.internal.SQLConf.get))
+              skippingFilters else Array.empty)
       }
     }
 

@@ -126,19 +126,8 @@ object GraftFormat {
     * "knob off"). Callers resolve once per write and plumb the value to
     * task writers via the 3-arg `newWriter`.
     */
-  def resolvedParquetRowGroupBytes(): Long = {
-    val key = "spark.graft.parquet.rowGroupBytes"
-    val raw = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(key, ParquetWriter.DEFAULT_BLOCK_SIZE.toString)
-    val n =
-      try raw.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$key must be a plain byte count (no unit suffixes), got '$raw'")
-      }
-    require(n > 0, s"$key must be positive, got $n")
-    n
-  }
+  def resolvedParquetRowGroupBytes(): Long =
+    graft.Tunables.ParquetRowGroupBytes(org.apache.spark.sql.internal.SQLConf.get)
 
   trait RowWriter {
     def write(row: InternalRow): Unit
@@ -291,7 +280,7 @@ case object ParquetFormat extends GraftFormat {
     */
   override def newWriter(path: Path, schema: StructType): GraftFormat.RowWriter = {
     require(org.apache.spark.TaskContext.get() == null,
-      "2-arg newWriter resolves spark.graft.parquet.rowGroupBytes from the " +
+      s"2-arg newWriter resolves ${graft.Tunables.ParquetRowGroupBytes.key} from the " +
         "driver SQLConf; executor-side writers must receive the " +
         "driver-resolved value via the 3-arg overload")
     newWriter(path, schema, GraftFormat.resolvedParquetRowGroupBytes())

@@ -16,7 +16,6 @@ class AdaptiveWidthSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
   private val budgetKey = "spark.graft.repartitionBytesPerPartition"
-  private val crumbKey = "spark.graft.debug.lastCandidateWidth"
 
   private def docs = graft.Tables.table(spark, dir, "documents")
     .select(col("doc_id"), col("text"))
@@ -32,6 +31,20 @@ class AdaptiveWidthSpec extends AnyFunSuite {
         r.optNumPartitions.get
     }
 
+  /** The width of the candidate pin: the explicit-width repartition
+    * keyed on (doc_a, doc_b), or 1 when the pin was skipped.
+    */
+  private def pinWidth(df: org.apache.spark.sql.DataFrame): Int = {
+    val pins = df.queryExecution.optimizedPlan.collect {
+      case r: RepartitionByExpression if r.optNumPartitions.isDefined &&
+          r.partitionExpressions.flatMap(_.references.map(_.name)) ==
+            Seq("doc_a", "doc_b") =>
+        r.optNumPartitions.get
+    }
+    assert(pins.size <= 1, s"one candidate pin expected, got $pins")
+    pins.headOption.getOrElse(1)
+  }
+
   test("of() clamps into [1, maxWidth] under the byte budget") {
     val d = docs
     val bytes = d.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -44,8 +57,7 @@ class AdaptiveWidthSpec extends AnyFunSuite {
   }
 
   test("bench regime: default budget skips the candidate pin (width 1)") {
-    PrefixFilterJoin.pairs(docs, 4, 5) // building the frame derives the width
-    assert(spark.conf.get(crumbKey).toInt == 1)
+    assert(pinWidth(PrefixFilterJoin.pairs(docs, 4, 5)) == 1)
   }
 
   test("candidate pin width responds to the candidate subtree's bytes") {
@@ -56,7 +68,7 @@ class AdaptiveWidthSpec extends AnyFunSuite {
     // candidate bytes demand width
     withBudget(64L) {
       val df = PrefixFilterJoin.pairs(docs, 4, 5)
-      val w = spark.conf.get(crumbKey).toInt
+      val w = pinWidth(df)
       assert(w == spark.conf.get("spark.sql.shuffle.partitions").toInt,
         s"tiny budget must clamp the pin to full width, got $w")
       assert(pinWidths(df).contains(w),
@@ -75,8 +87,7 @@ class AdaptiveWidthSpec extends AnyFunSuite {
     withBudget(budget) {
       val corpusW = AdaptiveWidth.of(docs, 32)
       assert(corpusW >= 2, s"fixture too small for the floor check: $corpusW")
-      PrefixFilterJoin.pairs(docs, 4, 5)
-      val w = spark.conf.get(crumbKey).toInt
+      val w = pinWidth(PrefixFilterJoin.pairs(docs, 4, 5))
       assert(w >= corpusW,
         s"combined width $w fell below the corpus floor $corpusW")
     }
@@ -84,8 +95,7 @@ class AdaptiveWidthSpec extends AnyFunSuite {
 
   test("LSH candidate pin keys on its candidate subtree too") {
     withBudget(64L) {
-      NearDupLsh.pairs(docs, threshold = 0.5d)
-      assert(spark.conf.get(crumbKey).toInt ==
+      assert(pinWidth(NearDupLsh.pairs(docs, threshold = 0.5d)) ==
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
     }
   }

@@ -10,8 +10,9 @@ import graft.SparkTestSession
   * compaction tail FAILS FAST on file-bearing off-contract dirs under
   * every batched artifact (a silent string flip of the inferred
   * partition column would drop committed rows), appends never touch the
-  * build's `batch=-1`, the numeric knobs fail fast naming their key, and
-  * the strictly-earlier serve cut tolerates legacy layouts.
+  * build's `batch=-1`, every numeric tunable fails fast naming its key
+  * at the engine's own read, and the strictly-earlier serve cut tolerates
+  * legacy layouts.
   */
 class IndexLifecycleSpec extends AnyFunSuite {
 
@@ -182,31 +183,54 @@ class IndexLifecycleSpec extends AnyFunSuite {
   test("numeric spark.graft.index knobs: malformed or out-of-range values " +
       "fail naming the key") {
     import spark.implicits._
+    import graft.Tunables._
     val root = tmp()
     writeBatch(root, -1, 1)
     val batch = Seq(1L).toDF("doc_id")
-    // (key, smallest legal value, first value above the range, reader)
-    val readers: Seq[(String, Long, BigInt, () => Any)] = Seq(
-      ("spark.graft.index.compactMinBatches", 1L, BigInt(Int.MaxValue) + 1,
-        () => IndexLifecycle.compactDue(spark, root, 0L)),
-      // Long.MaxValue would overflow the guard's limit-bounded probe
-      ("spark.graft.index.serveBroadcastMaxRows", 0L, BigInt(Long.MaxValue),
-        () => IndexLifecycle.serveGuard(spark, batch, Some(1L))),
-      ("spark.graft.index.serveKeyPruneLimit", 0L, BigInt(Int.MaxValue) + 1,
-        () => IndexLifecycle.serveKeyPruneLimit(spark)))
-    readers.foreach { case (key, min, above, read) =>
-      try {
-        val bads = Seq("abc", "1.5", "-1", (min - 1).toString, above.toString)
-        bads.foreach { bad =>
-          spark.conf.set(key, bad)
-          val ex = intercept[IllegalArgumentException](read())
-          assert(ex.getMessage.contains(key) && ex.getMessage.contains(bad),
-            s"$key=$bad: ${ex.getMessage}")
-        }
-        spark.conf.set(key, min.toString)
-        read() // the smallest allowed value parses
-      } finally spark.conf.unset(key)
-    }
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+    val ppIdx = s"${tmp()}/pp"
+    PrefixFilterJoin.writeIndex(docs, ppIdx, 4, 5)
+    val catRoot = tmp()
+    spark.conf.set("spark.sql.catalog.lccat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.lccat.root", catRoot)
+    spark.sql("CREATE TABLE lccat.ns.t (id BIGINT)")
+    Seq(1L).toDF("id").writeTo("lccat.ns.t").append()
+    def maintain() = graft.sources.GraftCatalog.maintain(spark,
+      java.nio.file.Paths.get(catRoot, "ns", "t"), spark.table("lccat.ns.t").schema)
+    // every numeric tunable, read where the engine reads it
+    val readers: Map[Num, () => Any] = Map(
+      CompactMinBatches -> (() => IndexLifecycle.compactDue(spark, root, 0L)),
+      ServeBroadcastMaxRows -> (() => IndexLifecycle.serveGuard(spark, batch, Some(1L))),
+      ServeKeyPruneLimit -> (() => IndexLifecycle.serveKeyPruneLimit(spark)),
+      PpjoinServeCandidateBroadcastMaxRows -> (() =>
+        PrefixFilterJoin.pairsAgainstIndexWithBound(spark, docs, ppIdx, 4, 5)),
+      CcRelabelBroadcastMaxRows -> (() => ConnectedComponents.incremental(
+        Seq((1L, 1L)).toDF("id", "component"), Seq((1L, 2L)).toDF("src", "dst"))),
+      LshSampledTierMinBytes -> (() => NearDupLsh.pairs(docs, 0.8d)),
+      TopkMaxKeysInMemory -> (() => org.apache.spark.sql.graft.GraftPlans
+        .topKPerKey(batch, Seq(col("doc_id")), Seq(col("doc_id").asc), 1).collect()),
+      RepartitionBytesPerPartition -> (() => AdaptiveWidth.of(batch, 32)),
+      ParquetRowGroupBytes -> (() => graft.sources.GraftFormat.resolvedParquetRowGroupBytes()),
+      MaintainMaxFiles -> (() => maintain()),
+      MaintainSmallBytes -> (() => maintain()),
+      SnapshotRetentionMs -> (() => maintain()))
+    try {
+      assert(readers.keySet == graft.Tunables.all.collect { case n: Num => n }.toSet)
+      readers.foreach { case (entry, read) =>
+        val key = entry.key
+        try {
+          val bads = Seq("abc", "1.5", "-1", (entry.min - 1).toString,
+            (BigInt(entry.max) + 1).toString)
+          bads.foreach { bad =>
+            spark.conf.set(key, bad)
+            val ex = graft.TunablesSpec.failure(key)(read())
+            assert(ex.getMessage.contains(bad), s"$key=$bad: ${ex.getMessage}")
+          }
+          spark.conf.set(key, entry.min.toString)
+          read() // the smallest allowed value parses
+        } finally spark.conf.unset(key)
+      }
+    } finally spark.sql("DROP TABLE lccat.ns.t")
   }
 
   test("cutBatches: strictly-earlier filter; legacy frame without the column serves whole") {

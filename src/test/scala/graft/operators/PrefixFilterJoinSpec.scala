@@ -269,10 +269,6 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
     assert(served.count() == 24L, "every corpus doc shares 2 of 3 shingles (j=2/3)")
     assert(boundOpt.nonEmpty, "this serve is broadcastable — the guard must engage")
     val bound = boundOpt.get
-    // the session-global breadcrumb mirrors the returned value when
-    // serves run one-at-a-time (the only regime where reading it is valid)
-    assert(spark.conf.get("spark.graft.ppjoin.debug.lastServeCandidateBound")
-      == bound.toString)
     // independently computed upper bound the formula claims: Σ_h m_h·n_h
     // with m_h over ALL batch shingle occurrences and n_h the corpus
     // PREFIX posting count across every partition
@@ -353,7 +349,6 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
       "off-contract layout must degrade, never change the answer")
     assert(boundOpt.isEmpty,
       "unparseable batch dir must void the bound (shuffle_hash), not crash")
-    assert(spark.conf.get("spark.graft.ppjoin.debug.lastServeCandidateBound") == "inf")
   }
 
   test("legacy flat-layout indexes (no batch dirs, no pstats) serve unchanged") {
@@ -376,11 +371,12 @@ class PrefixFilterJoinSpec extends AnyFunSuite {
       fs.delete(batchDir, true)
     }
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/pstats"), true)
-    val served = pairSet(PrefixFilterJoin.pairsAgainstIndex(
-      spark, docs.filter(col("doc_id") % 10 === 7), idx, 4, 5))
+    val (servedDf, bound) = PrefixFilterJoin.pairsAgainstIndexWithBound(
+      spark, docs.filter(col("doc_id") % 10 === 7), idx, 4, 5)
+    val served = pairSet(servedDf)
     assert(served == truth,
       s"legacy serve diverged: missing=${truth -- served}, extra=${served -- truth}")
-    assert(spark.conf.get("spark.graft.ppjoin.debug.lastServeCandidateBound") == "0",
+    assert(bound == Some(0L),
       "no pstats sidecar → the pre-sidecar batch-probe-only guard (bound 0)")
   }
 

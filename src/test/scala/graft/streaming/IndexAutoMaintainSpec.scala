@@ -30,11 +30,11 @@ class IndexAutoMaintainSpec extends AnyFunSuite {
     .select(col("doc_id"), col("text"))
 
   private def withAutoMaintain[T](trigger: Int)(body: => T): T = {
-    spark.conf.set(IndexGenerations.ConfKey, "true")
+    spark.conf.set(graft.Tunables.AutoMaintain.key, "true")
     spark.conf.set("spark.graft.index.compactMinBatches", trigger.toString)
     try body
     finally {
-      spark.conf.unset(IndexGenerations.ConfKey)
+      spark.conf.unset(graft.Tunables.AutoMaintain.key)
       spark.conf.unset("spark.graft.index.compactMinBatches")
     }
   }
