@@ -67,10 +67,12 @@ final case class RunMetrics(
   * requires exactly this decomposition).
   *
   * Unlike the reference — which re-reads the CSV ~15 times because every
-  * metric is an eager `count()` — the run parses the input once,
-  * hash-partitions it by `fecha_proceso` (the run's only shuffle) and
-  * caches it deduplicated (`DataQuality.grouped`). The quality counters,
-  * the filtered rows and Load's write and partition counts all read that
+  * metric is an eager `count()` — the run parses the input once and
+  * caches it deduplicated and hash-partitioned by `fecha_proceso`
+  * (`DataQuality.grouped`). That cache costs the run's only shuffle, and
+  * the dedup's combine runs below it: each scan split ships its distinct
+  * rows with their counts, not every row. The quality counters, the
+  * filtered rows and Load's write and partition counts all read that
   * cache: same numbers, O(1) scans.
   */
 final class EntregasEtl(val config: EtlConfig, val spark: SparkSession) {
@@ -90,8 +92,7 @@ final class EntregasEtl(val config: EtlConfig, val spark: SparkSession) {
     // AQE-coalesced, so a width beyond the input's runs idle tasks.
     val width = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
       raw.rdd.getNumPartitions)
-    val grouped =
-      DataQuality.grouped(raw.repartition(width, col("fecha_proceso")), config).cache()
+    val grouped = DataQuality.grouped(raw, config, col("fecha_proceso"), width).cache()
     try {
       val quality = DataQuality.counters(grouped, config)
       val filtered = applyFilters(DataQuality.keep(grouped, config))

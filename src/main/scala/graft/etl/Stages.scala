@@ -2,11 +2,12 @@ package graft.etl
 
 import java.util.concurrent.TimeoutException
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftPlans
 import org.apache.spark.sql.types._
 
 /** Quality-stage counters, defined exactly as the reference's sequential
@@ -73,6 +74,20 @@ object DataQuality {
     if (cfg.dataQuality.removeDuplicates)
       df.groupBy(df.columns.toSeq.map(col): _*).agg(count(lit(1)).as(N))
     else df.withColumn(N, lit(1L))
+
+  /** The rows and partitioning of `grouped(df.repartition(width,
+    * clusterBy), cfg)`: hash-partitioned on `clusterBy` into `width`
+    * partitions (one at width 1) by the one exchange. With dedup on, the
+    * combine runs BELOW that exchange (`GraftPlans.clusteredAggregate`),
+    * so each input split ships its distinct rows with their counts, not
+    * every row; the final aggregate above the exchange adds up the
+    * counts. With dedup off, the repartitioned input with `__dq_n = 1`.
+    */
+  def grouped(df: DataFrame, cfg: EtlConfig, clusterBy: Column, width: Int): DataFrame =
+    if (cfg.dataQuality.removeDuplicates)
+      GraftPlans.clusteredAggregate(df, Seq(clusterBy), width,
+        df.columns.toSeq.map(col), Seq(count(lit(1)).as(N)))
+    else grouped(df.repartition(width, clusterBy), cfg)
 
   /** The rows that pass every enabled filter, one per group. Every
     * predicate is row-local, so a group passes if and only if its rows
@@ -270,10 +285,12 @@ object Load {
     * back-fills cores the write's tail leaves idle. Values are
     * unchanged — the aggregate reads the DataFrame, not the sink.
     *
-    * In `EntregasEtl.run()` both jobs read one cached upstream: the
-    * input hash-partitioned by `fecha_proceso`, then `DataQuality.grouped`.
-    * The write gets one file per date directory and the counts aggregate
-    * is already clustered on its key, so neither job shuffles. A cache
+    * In `EntregasEtl.run()` both jobs read one cached upstream,
+    * `DataQuality.grouped`: the deduplicated input, hash-partitioned by
+    * `fecha_proceso` by the run's one exchange, below which each scan
+    * split has already combined its duplicate rows. The write gets one
+    * file per date directory and the counts aggregate is already
+    * clustered on its key, so neither job shuffles. A cache
     * hashed on all nine columns lost: Spark does not AQE-coalesce a
     * cached plan, so it kept `spark.sql.shuffle.partitions` partitions,
     * every task wrote every date, and the file count quadrupled. For the
@@ -284,7 +301,8 @@ object Load {
     * options for this write only, so a host without native Hadoop does
     * not fork a `chmod` per created file and directory.
     *
-    * Failure paths: the counts job runs in its own job group. If the
+    * Failure paths: the counts job runs in its own job group, on its own
+    * thread, so no pooled thread keeps the group afterwards. If the
     * write throws, that group is cancelled (jobs already running and any
     * it has yet to submit), the counts job is given up to
     * `CountsTimeout` to wind down, and the write's exception is rethrown.
@@ -305,15 +323,24 @@ object Load {
     }
     val sc = df.sparkSession.sparkContext
     val group = CountsGroupPrefix + java.util.UUID.randomUUID()
-    val countsF = Future {
-      sc.setJobGroup(group, s"ETL Load: partition counts for $outputBase",
-        interruptOnCancel = true)
-      try df.groupBy("fecha_proceso").agg(count(lit(1)).as("n"))
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
-      finally sc.clearJobGroup()
-    }(ExecutionContext.global)
+    // A dedicated thread, not a pooled one: a thread started while the
+    // group is set inherits it as a local property, and a pooled thread
+    // (or one a pool spawns to compensate for a blocked worker) would
+    // carry it into later, unrelated jobs, which the cancel below kills.
+    val counts = Promise[Map[String, Long]]()
+    val countsThread = new Thread(() =>
+      try {
+        sc.setJobGroup(group, s"ETL Load: partition counts for $outputBase",
+          interruptOnCancel = true)
+        counts.success(df.groupBy("fecha_proceso").agg(count(lit(1)).as("n"))
+          .collect()
+          .map(r => r.getString(0) -> r.getLong(1))
+          .toMap)
+      } catch { case t: Throwable => counts.failure(t) },
+      "graft-etl-load-counts")
+    countsThread.setDaemon(true)
+    countsThread.start()
+    val countsF = counts.future
     def cancelCounts(reason: String): Unit =
       sc.cancelJobGroupAndFutureJobs(group, reason)
     try doWrite()

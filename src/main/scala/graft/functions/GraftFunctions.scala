@@ -70,10 +70,8 @@ object GraftFunctions {
     // plan hygiene that should hold wherever the engine's expressions are
     // in use: inferred size(array(...)) generate-guards fold away instead
     // of re-running the array construction at the scan (idempotent)
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(graft.plans.FoldKnownArraySizeGuards))
-      spark.experimental.extraOptimizations =
-        opts :+ graft.plans.FoldKnownArraySizeGuards
+    org.apache.spark.sql.graft.GraftPlans.addOptimizations(
+      spark, graft.plans.FoldKnownArraySizeGuards)
   }
 
   /** 64-bit polynomial rolling hash of a string column. */

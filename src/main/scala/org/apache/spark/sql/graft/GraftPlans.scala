@@ -3,7 +3,9 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.classic.ClassicConversions
-import graft.plans.{TopKPerKey, TopKPerKeyStrategy, TopKRewriteRule}
+import org.apache.spark.sql.catalyst.rules.Rule
+import graft.plans.{ClusteredAggregate, ClusteredAggregateStrategy, TopKPerKey,
+  TopKPerKeyStrategy, TopKRewriteRule}
 
 /** Column-API surface for the engine's custom operators. Lives inside the
   * `org.apache.spark.sql` namespace because constructing a Dataset from a
@@ -13,23 +15,38 @@ import graft.plans.{TopKPerKey, TopKPerKeyStrategy, TopKRewriteRule}
   */
 object GraftPlans {
 
-  /** Ensure the planner knows the custom strategy (idempotent; the
-    * sanctioned runtime hook for session-scoped strategies).
+  /** Every planner strategy of the engine's custom logical nodes. */
+  private val strategies = Seq(TopKPerKeyStrategy, ClusteredAggregateStrategy)
+
+  /** Ensure the planner knows every custom strategy (idempotent; the
+    * sanctioned runtime hook for session-scoped strategies). The
+    * read-modify-write of the session's strategy list holds the
+    * session's experimental-methods lock, so concurrent installs (one
+    * per query built) never drop each other's update; every graft
+    * strategy goes in with one assignment.
     */
-  def install(spark: SparkSession): Unit = {
+  def install(spark: SparkSession): Unit = spark.experimental.synchronized {
     val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKPerKeyStrategy
+    val missing = strategies.filterNot(cur.contains)
+    if (missing.nonEmpty) spark.experimental.extraStrategies = cur ++ missing
   }
+
+  /** Add `rules` to the session's extra optimizer rules, each once, under
+    * the same lock as [[install]].
+    */
+  def addOptimizations(spark: SparkSession, rules: Rule[logical.LogicalPlan]*): Unit =
+    spark.experimental.synchronized {
+      val cur = spark.experimental.extraOptimizations
+      val missing = rules.filterNot(cur.contains)
+      if (missing.nonEmpty) spark.experimental.extraOptimizations = cur ++ missing
+    }
 
   /** Additionally enable the automatic `row_number() <= k` → TopKPerKey
     * rewrite (opt-in; see graft.plans.TopKRewriteRule).
     */
   def installOptimizations(spark: SparkSession): Unit = {
     install(spark)
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations = cur :+ TopKRewriteRule
+    addOptimizations(spark, TopKRewriteRule)
   }
 
   /** Wrap a Catalyst expression as a public Column (`ExpressionUtils
@@ -87,6 +104,42 @@ object GraftPlans {
     val plan = TopKPerKey(keyPlan.partitionExpressions, sortPlan.order, k, sortPlan.child)
     org.apache.spark.sql.classic.Dataset.ofRows(
       ClassicConversions.castToImpl(spark), plan)
+  }
+
+  /** `df.groupBy(grouping).agg(aggs)`, hash-partitioned on `clusterBy`
+    * into exactly `width` partitions (one at width 1) by one exchange,
+    * with the partial aggregate below it: the rows and partitioning of
+    * `df.repartition(width, clusterBy).groupBy(grouping).agg(aggs)`,
+    * but each input split ships its distinct groups instead of its rows.
+    * See graft.plans.ClusteredAggregate. `clusterBy` must be non-empty
+    * grouping columns, the aggregates must have no DISTINCT, and `df`
+    * must not be streaming; anything else throws
+    * `IllegalArgumentException`.
+    */
+  def clusteredAggregate(df: DataFrame, clusterBy: Seq[Column], width: Int,
+      grouping: Seq[Column], aggs: Seq[Column]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    require(clusterBy.nonEmpty, "clusteredAggregate requires at least one cluster key")
+    require(aggs.nonEmpty, "clusteredAggregate requires at least one aggregate")
+    require(width >= 1, s"width must be >= 1, got $width")
+    require(!df.isStreaming, "clusteredAggregate does not plan streaming aggregates")
+    val spark = df.sparkSession
+    install(spark)
+    val agg = ClassicConversions.castToImpl(df.groupBy(grouping: _*).agg(aggs.head, aggs.tail: _*))
+      .queryExecution.analyzed.asInstanceOf[logical.Aggregate]
+    val keys = ClassicConversions.castToImpl(df.repartition(clusterBy: _*))
+      .queryExecution.analyzed.asInstanceOf[logical.RepartitionByExpression]
+      .partitionExpressions
+    for (k <- keys) require(k.isInstanceOf[Attribute] &&
+      agg.groupingExpressions.exists(_.semanticEquals(k)),
+      s"cluster key $k is not a grouping column of ${agg.groupingExpressions.mkString(", ")}")
+    require(!agg.aggregateExpressions.exists(_.exists {
+      case a: AggregateExpression => a.isDistinct
+      case _ => false
+    }), "clusteredAggregate does not plan DISTINCT aggregates")
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      ClassicConversions.castToImpl(spark), ClusteredAggregate(keys, width, agg))
   }
 
   /** Translate a `Column` predicate over `df` into data-source `Filter`s

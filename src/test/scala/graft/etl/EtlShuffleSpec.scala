@@ -4,6 +4,9 @@ import java.io.File
 
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,4 +59,32 @@ class EtlShuffleSpec extends AnyFunSuite {
       for (d <- dirs)
         assert(d.listFiles().count(_.getName.startsWith("part-")) == 1, d)
     }
+
+  test("each scan split combines its duplicates below the date exchange: on the " +
+    "one-file fixture it writes one record per distinct row") {
+    val fixture = "src/test/resources/etl/data_entrega_productos.csv"
+    val out = graft.TestDirs("graft_etl_combine").resolve("out").toString
+    val cfg = ConfigLoader.load("config", env = Some("nonexistent"),
+      overrides = Seq(s"paths.input_file=$fixture", s"paths.output_base=$out"))
+    val raw = Extract(spark, fixture)
+    assert(raw.rdd.getNumPartitions == 1)
+    val (rows, distinct) = (raw.count(), raw.distinct().count())
+    assert(rows == 379L && distinct < rows)
+
+    val rec = StageRecorder.record(spark)(EntregasEtl(cfg, Some(spark)).run())
+    // the date exchange is the one below the cache; one split means width 1
+    val dateExchanges = rec.executions.flatMap(qe => PlanWalk.nodes(qe.executedPlan))
+      .collect { case (_, m: InMemoryTableScanExec) => m.relation.cachedPlan }
+      .flatMap(PlanWalk.nodes(_).collect { case (_, e: ShuffleExchangeExec) => e })
+      .foldLeft(List.empty[ShuffleExchangeExec])((seen, e) =>
+        if (seen.exists(_ eq e)) seen else e :: seen)
+    assert(dateExchanges.size == 1, dateExchanges.mkString("\n"))
+    val exchange = dateExchanges.head
+    assert(exchange.outputPartitioning == SinglePartition, exchange)
+    assert(exchange.metrics("shuffleRecordsWritten").value == distinct)
+    // the partial aggregate, directly below the exchange
+    assert(exchange.child.asInstanceOf[WholeStageCodegenExec].child
+      .isInstanceOf[HashAggregateExec], exchange)
+    assert(rec.value.quality.inputRows == rows)
+  }
 }

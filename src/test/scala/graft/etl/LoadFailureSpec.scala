@@ -3,7 +3,10 @@ package graft.etl
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.Failure
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, concat, lit, udf}
@@ -54,6 +57,23 @@ class LoadFailureSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       Files.deleteIfExists(file)
     }
+  }
+
+  test("after a failed write, jobs that Futures on the global pool submit all succeed") {
+    val file = graft.TestDirs.file("graft_load_fail_pool", ".txt")
+    val slow = udf { (id: Long) => Thread.sleep(50); id }
+    val df = spark.range(0, 40, 1, 4)
+      .select(lit("20250101").as("fecha_proceso"), slow(col("id")).as("x"))
+    try intercept[Exception](Load(df, file.resolve("out").toString))
+    finally Files.deleteIfExists(file)
+    // more Futures than the pool has workers, each blocking in a job, so
+    // every worker thread, spawned or compensating, submits some of them
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val jobs = (0 until 64).map(i => Future(spark.range(0, 10 + i, 1, 2).count()))
+    val failed = jobs.map(f => Await.ready(f, 5.minutes).value.get).collect {
+      case Failure(t) => t
+    }
+    assert(failed.size == 0, failed.headOption.map(_.toString).getOrElse(""))
   }
 
   test("the success path is unchanged") {
